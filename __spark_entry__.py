@@ -3702,7 +3702,7 @@ def _mp_wav(i: int) -> bytes:
     )
 
 
-def _mp_halfrow(w: int, invert: bool, bgr_irrelevant: bool = True):
+def _mp_halfrow(w: int, invert: bool):
     """One half-white/half-black RGB row (the pattern is channel-
     symmetric, so BGR == RGB here), as a uint8 array of length w*3."""
     import numpy as _np

@@ -39,10 +39,11 @@ import os
 import re
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import config as CF
+from .streaming.pipeline import WatermarkStore
 
 __all__ = ["main"]
 
@@ -194,7 +195,7 @@ def cmd_import(args) -> None:
     for pat, repl in cfg.id_search_replace:
         expr, ci = _php_regex(pat)
         local_id = F.regexp_replace(local_id, ("(?i)" if ci else "") + expr, repl)
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    now = _utc_now()
     batch = parts.select(
         F.concat(
             F.lit(cfg.effective_id_prefix + "."), local_id
@@ -206,10 +207,11 @@ def cmd_import(args) -> None:
         F.lit(now).alias("created"),
         F.lit(now).alias("updated"),
     )
-    if os.path.exists(args.records):
+    existing = read_store(spark, args.records, missing_ok=True)
+    merged = batch
+    if existing is not None:
         from .sources.upsert import upsert_records
 
-        existing = spark.read.parquet(args.records)
         merged = upsert_records(existing, batch, now)
         if hierarchical and not cfg.keep_missing_hierarchy_members:
             # StoreRecordTrait.php:294-310: members of a re-imported
@@ -248,11 +250,7 @@ def cmd_import(args) -> None:
                     )
                     .drop("__fresh")
                 )
-        # parquet cannot overwrite its own scan input in place
-        n = _rewrite_records(spark, args.records, merged)
-    else:
-        batch.write.mode("overwrite").parquet(args.records)
-        n = batch.count()
+    n = commit_store(spark, args.records, merged)
     print(f"imported {args.file}: records table now {n} rows")
 
 
@@ -263,7 +261,6 @@ def cmd_harvest(args) -> None:
     spark = _spark("rm-harvest")
     cfg = _load_config(args.config, args.source)
     from .sources.oaipmh import harvest_records
-    from .sources.upsert import upsert_records
 
     pages = spark.read.text(args.pages, wholetext=True).withColumnRenamed(
         "value", "xml"
@@ -284,7 +281,7 @@ def cmd_harvest(args) -> None:
         id_replace=id_replace,
         id_prefix=cfg.effective_id_prefix,
     )
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    now = _utc_now()
     batch = recs.select(
         "_id",
         F.lit(cfg.id).alias("source_id"),
@@ -294,13 +291,12 @@ def cmd_harvest(args) -> None:
         F.lit(now).alias("created"),
         F.lit(now).alias("updated"),
     )
-    if os.path.exists(args.records):
-        existing = spark.read.parquet(args.records)
-        merged = upsert_records(existing, batch, now)
-        n = _rewrite_records(spark, args.records, merged)
-    else:
-        batch.write.mode("overwrite").parquet(args.records)
-        n = batch.count()
+    existing = read_store(spark, args.records, missing_ok=True)
+    if existing is not None:
+        from .sources.upsert import upsert_records
+
+        batch = upsert_records(existing, batch, now)
+    n = commit_store(spark, args.records, batch)
     print(f"harvested {args.pages}: records table now {n} rows")
 
 
@@ -308,7 +304,7 @@ def cmd_deduplicate(args) -> None:
     spark = _spark("rm-dedup")
     from .operators.dedup import deduplicate, with_dedup_keys
 
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     if not args.format:
         fmts = [r[0] for r in records.select("format").distinct().collect()]
         if len(fmts) != 1:
@@ -428,11 +424,12 @@ def cmd_update_index(args) -> None:
     if args.from_date is not None:
         if args.from_date:  # '' = full reindex (getStartTimestamp)
             from_ts = _utc_ts(args.from_date)
-    elif args.state_file and os.path.exists(args.state_file):
-        from_ts = json.load(open(args.state_file)).get(state_key)
-    records = spark.read.parquet(args.records).where(
-        (F.col("source_id") == cfg.id) & (~F.col("deleted"))
+    elif args.state_file:
+        from_ts = WatermarkStore(args.state_file).get(state_key)
+    source = read_store(spark, args.records).where(
+        F.col("source_id") == cfg.id
     )
+    records = source.where(~F.col("deleted"))
     if from_ts is not None:
         from .operators.incremental import changed_since
 
@@ -559,9 +556,7 @@ def cmd_update_index(args) -> None:
     # Python UDF extraction cannot cross lambda-bearing subtrees
     final = normalize_fields(out.select(*payload_cols), barrier=True)
     write_update_batches(final, args.out, max_update_records=args.batch_size)
-    deleted = spark.read.parquet(args.records).where(
-        (F.col("source_id") == cfg.id) & F.col("deleted")
-    )
+    deleted = source.where(F.col("deleted"))
     if from_ts is not None:
         from .operators.incremental import changed_since
 
@@ -570,13 +565,7 @@ def cmd_update_index(args) -> None:
     if args.state_file and args.from_date is None:
         # store the run-START time so records updated DURING the run
         # are re-examined next time (never lost to the gap)
-        state = (
-            json.load(open(args.state_file))
-            if os.path.exists(args.state_file)
-            else {}
-        )
-        state[state_key] = run_start
-        json.dump(state, open(args.state_file, "w"), sort_keys=True)
+        WatermarkStore(args.state_file).set(state_key, run_start)
     print(f"wrote update batches for {cfg.id} -> {args.out}")
 
 
@@ -584,7 +573,7 @@ def cmd_export(args) -> None:
     spark = _spark("rm-export")
     from .sinks.export import export_records, write_export
 
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     out = export_records(
         records,
         skip=args.skip,
@@ -601,7 +590,7 @@ def cmd_count_values(args) -> None:
     spark = _spark("rm-count-values")
     from .operators.count_values import count_values
 
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     if args.field in records.columns:
         df = records
     else:
@@ -617,29 +606,50 @@ def cmd_count_values(args) -> None:
         print(f"{row['count']:8d}  {row['value']}")
 
 
-def _rewrite_records(spark, path: str, df) -> int:
-    """Replace the records table (parquet cannot overwrite its own scan
-    input in place: write tmp, re-read, overwrite, clean up).
+def _utc_now() -> _dt.datetime:
+    return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
-    If the process dies between the two writes, the live path may be
-    partially rewritten — ``<path>.tmp`` holds the complete new table and
-    IS the recovery copy; it is removed only after the final overwrite
-    succeeds, so a crash never leaks a stale copy silently AND never
-    leaves the data unrecoverable.
-    """
-    import shutil
 
-    tmp = path + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    out = spark.read.parquet(tmp)
-    try:
-        out.write.mode("overwrite").parquet(path)
-    except BaseException:
-        print(f"records overwrite failed — recovery copy left at {tmp}")
-        raise
-    n = spark.read.parquet(path).count()
-    shutil.rmtree(tmp, ignore_errors=True)
-    return n
+def read_store(spark, path: str, missing_ok: bool = False):
+    """The record store at ``path`` (a plain parquet directory). First
+    finishes a commit_store swap that a crash interrupted: a missing
+    store with a fully written ``<path>.new`` is the committed version,
+    and an ``<path>.old`` beside a live store is the superseded one. A
+    partial ``<path>.new`` beside a live store was never committed; it
+    is never read and the next commit overwrites it. ``missing_ok``
+    returns None when no store exists yet (the first import/harvest)."""
+    new, old = path + ".new", path + ".old"
+    exists = _location_exists(spark, path)
+    if not exists and _location_exists(spark, new + "/_SUCCESS"):
+        _rename_location(spark, new, path)
+        exists = True
+    if exists:
+        _delete_location(spark, old)
+    elif missing_ok:
+        return None
+    return spark.read.parquet(path)
+
+
+def commit_store(spark, path: str, df) -> int:
+    """Replace the record store at ``path`` with ``df`` and return its
+    row count. ``df`` may scan the live store (parquet cannot overwrite
+    its own scan input), so it is written once to ``<path>.new`` — the
+    row count observed on that same write — then swapped in by rename:
+    ``<path>`` -> ``<path>.old``, ``<path>.new`` -> ``<path>``, delete
+    ``.old``. A crash at any point leaves either the old or the new
+    version readable through read_store, which finishes the swap."""
+    new, old = path + ".new", path + ".old"
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(new)
+    if _location_exists(spark, path):
+        # a leftover .old would turn the rename into a move INTO it
+        _delete_location(spark, old)
+        _rename_location(spark, path, old)
+    _rename_location(spark, new, path)
+    _delete_location(spark, old)
+    return obs.get["rows"]
 
 
 def _id_filter(args):
@@ -654,20 +664,28 @@ def _id_filter(args):
     return cond
 
 
+def _flag_rows(spark, path: str, cond, flags: dict) -> int:
+    """Set each ``flags`` column to its value and stamp ``updated`` on
+    the rows matching ``cond``; a flag column the store lacks starts at
+    False. Commits and returns the table's row count."""
+    records = read_store(spark, path)
+    cols = {
+        c: F.when(cond, F.lit(v)).otherwise(
+            F.col(c) if c in records.columns else F.lit(False)
+        )
+        for c, v in flags.items()
+    }
+    cols["updated"] = F.when(cond, F.lit(_utc_now())).otherwise(
+        F.col("updated")
+    )
+    return commit_store(spark, path, records.withColumns(cols))
+
+
 def cmd_mark_deleted(args) -> None:
     """Records/MarkDeleted.php: flip deleted=true (kept in the table so
     deletions propagate to the index; purge-deleted removes them)."""
     spark = _spark("rm-mark-deleted")
-    records = spark.read.parquet(args.records)
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    cond = _id_filter(args)
-    updated = records.withColumns(
-        {
-            "deleted": F.when(cond, F.lit(True)).otherwise(F.col("deleted")),
-            "updated": F.when(cond, F.lit(now)).otherwise(F.col("updated")),
-        }
-    )
-    n = _rewrite_records(spark, args.records, updated)
+    n = _flag_rows(spark, args.records, _id_filter(args), {"deleted": True})
     print(f"marked deleted where matched; table {n} rows")
 
 
@@ -675,20 +693,8 @@ def cmd_suppress(args, value: bool = True) -> None:
     """Records/{Suppress,Unsuppress}.php: set the suppressed flag; the
     filter DSL's suppressOnField keeps suppressed rows out of serving."""
     spark = _spark("rm-suppress")
-    records = spark.read.parquet(args.records)
-    if "suppressed" not in records.columns:
-        records = records.withColumn("suppressed", F.lit(False))
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
     cond = _id_filter(args)
-    updated = records.withColumns(
-        {
-            "suppressed": F.when(cond, F.lit(value)).otherwise(
-                F.col("suppressed")
-            ),
-            "updated": F.when(cond, F.lit(now)).otherwise(F.col("updated")),
-        }
-    )
-    n = _rewrite_records(spark, args.records, updated)
+    n = _flag_rows(spark, args.records, cond, {"suppressed": value})
     print(("suppressed" if value else "unsuppressed") + f"; table {n} rows")
 
 
@@ -696,16 +702,8 @@ def cmd_delete_source(args) -> None:
     """Sources/Delete.php semantics on the record store: every record of
     the source is marked deleted (index deletions flow from there)."""
     spark = _spark("rm-delete-source")
-    records = spark.read.parquet(args.records)
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
     cond = F.col("source_id") == args.source
-    updated = records.withColumns(
-        {
-            "deleted": F.when(cond, F.lit(True)).otherwise(F.col("deleted")),
-            "updated": F.when(cond, F.lit(now)).otherwise(F.col("updated")),
-        }
-    )
-    n = _rewrite_records(spark, args.records, updated)
+    n = _flag_rows(spark, args.records, cond, {"deleted": True})
     print(f"source {args.source} marked deleted; table {n} rows")
 
 
@@ -713,14 +711,13 @@ def cmd_purge_deleted(args) -> None:
     """Records/PurgeDeleted.php: physically drop deleted rows, optionally
     only those deleted before --older-than (ISO date)."""
     spark = _spark("rm-purge")
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     cond = F.col("deleted")
     if args.older_than:
         cond = cond & (
             F.col("updated") < F.lit(_dt.datetime.fromisoformat(args.older_than))
         )
-    kept = records.where(~cond)
-    n = _rewrite_records(spark, args.records, kept)
+    n = commit_store(spark, args.records, records.where(~cond))
     print(f"purged; table {n} rows")
 
 
@@ -730,20 +727,8 @@ def cmd_mark_for_update(args) -> None:
     matched rows; with --set-update-needed also flips the dirty flag the
     incremental dedup pipeline consumes."""
     spark = _spark("rm-mark-for-update")
-    records = spark.read.parquet(args.records)
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    cond = _id_filter(args)
-    updates = {
-        "updated": F.when(cond, F.lit(now)).otherwise(F.col("updated")),
-    }
-    if args.set_update_needed:
-        base = (
-            F.col("update_needed")
-            if "update_needed" in records.columns
-            else F.lit(False)
-        )
-        updates["update_needed"] = F.when(cond, F.lit(True)).otherwise(base)
-    n = _rewrite_records(spark, args.records, records.withColumns(updates))
+    flags = {"update_needed": True} if args.set_update_needed else {}
+    n = _flag_rows(spark, args.records, _id_filter(args), flags)
     print(f"marked for update; table {n} rows")
 
 
@@ -758,7 +743,7 @@ def cmd_renormalize(args) -> None:
     from .operators.renormalize import renormalize_records
 
     spark = _spark("rm-renormalize")
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     cfgs = CF.parse_datasources_ini(open(args.config).read())
     stylesheets = {}
     for sid, cfg in cfgs.items():
@@ -776,17 +761,17 @@ def cmd_renormalize(args) -> None:
     elif args.source:
         srcs = [s.strip() for s in args.source.split(",") if s.strip()]
         cond = cond & F.col("source_id").isin(srcs)
-    now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    now = _utc_now()
     target = records.where(cond)
     rest = records.where(~cond)
     done = renormalize_records(
         target, cfgs, stylesheets=stylesheets or None, now=now
     )
     merged = done.unionByName(rest, allowMissingColumns=True)
-    # count the processed subset BEFORE the rewrite: `done` scans the
-    # live path, which _rewrite_records replaces
+    # count the processed subset BEFORE the commit: `done` scans the
+    # live store, which commit_store swaps out
     n_proc = done.count() if args.verbose else None
-    n = _rewrite_records(spark, args.records, merged)
+    n = commit_store(spark, args.records, merged)
     print(
         f"renormalized; table {n} rows"
         + (f" ({n_proc} processed)" if n_proc is not None else "")
@@ -799,7 +784,7 @@ def cmd_check_dedup(args) -> None:
     spark = _spark("rm-check-dedup")
     from .operators.dedup import check_dedup_consistency
 
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     assignment = spark.read.parquet(args.dedup).withColumnRenamed(
         "id", "_id"
     )
@@ -814,7 +799,7 @@ def cmd_check_dedup(args) -> None:
 def cmd_dump(args) -> None:
     """Records/Dump.php: print a record's stored row(s) as JSON."""
     spark = _spark("rm-dump")
-    records = spark.read.parquet(args.records).where(F.col("_id").isin(args.id))
+    records = read_store(spark, args.records).where(F.col("_id").isin(args.id))
     for r in records.collect():
         json.dump(
             {k: v for k, v in r.asDict().items()},
@@ -1041,6 +1026,12 @@ def _delete_location(spark, uri: str) -> None:
     fs, path = _hadoop_fs(spark, uri)
     if fs.exists(path):
         fs.delete(path, True)
+
+
+def _rename_location(spark, src: str, dst: str) -> None:
+    fs, path = _hadoop_fs(spark, src)
+    if not fs.rename(path, _hadoop_fs(spark, dst)[1]):
+        raise OSError(f"rename {src} -> {dst} failed")
 
 
 _BUCKET_ID_RE = re.compile(r"_(\d{5})\.c\d{3}")
@@ -1276,7 +1267,7 @@ def cmd_compare_records(args) -> None:
     spark = _spark("rm-compare-records")
     from .operators.index_compare import compare_index_docs
 
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     indexed = spark.read.parquet(args.index)
     if args.single_id:
         records = records.where(
@@ -1324,7 +1315,7 @@ def cmd_check_index(args) -> None:
     from .operators.index_compare import check_index
 
     indexed = spark.read.parquet(args.index)
-    records = spark.read.parquet(args.records)
+    records = read_store(spark, args.records)
     dedup = spark.read.parquet(args.dedup) if args.dedup else None
     orphans = check_index(
         indexed,
@@ -1433,7 +1424,7 @@ def cmd_sources_delete(args) -> None:
         raise SystemExit("sources-delete: no source ids given")
     if args.records:
         spark = _spark("rm-sources-delete")
-        records = spark.read.parquet(args.records)
+        records = read_store(spark, args.records)
         present = {
             r["source_id"]
             for r in records.where(F.col("source_id").isin(sources))
@@ -1496,10 +1487,7 @@ def cmd_get_state_timestamp(args) -> None:
     key = _solr_state_key(
         args.date_per_server, args.update_url, args.source
     )
-    state = {}
-    if os.path.exists(args.state_file):
-        state = json.load(open(args.state_file))
-    ts = state.get(key)
+    ts = WatermarkStore(args.state_file).get(key)
     if ts is None:
         print("not stored")
     else:
@@ -1517,19 +1505,16 @@ def cmd_set_state_timestamp(args) -> None:
     key = _solr_state_key(
         args.date_per_server, args.update_url, args.source
     )
-    state = {}
-    if os.path.exists(args.state_file):
-        state = json.load(open(args.state_file))
+    store = WatermarkStore(args.state_file)
     if args.clear:
-        state.pop(key, None)
+        store.clear(key)
         print(f"cleared {key!r}")
     else:
         if args.timestamp is None:
             raise SystemExit("--timestamp required unless --clear")
         ts = _utc_ts(args.timestamp)
-        state[key] = ts
+        store.set(key, ts)
         print(f"set {key!r} = {ts}")
-    json.dump(state, open(args.state_file, "w"), sort_keys=True)
 
 
 def cmd_solr_delete_source(args) -> None:

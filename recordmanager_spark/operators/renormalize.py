@@ -415,7 +415,7 @@ def renormalize_records(
     # form converted EVERY column both ways per batch — profiled at
     # ~24 s core-time of ``arrow_to_pandas`` + 8 s of PySpark's
     # Python-level struct→dict converter against ~2.6 s of actual
-    # serialize+json work (tools/probe_udf_profile.py, sf0.1).
+    # serialize+json work (UDF profile probe at sf0.1, in git history).
     out = (
         out.withColumn("__marc_norm", norm)
         .withColumn("__is_marc", is_marc)

@@ -1025,7 +1025,7 @@ def winnow_near_duplicates(
     # slower than UTF8String's optimized comparators, and the pair join
     # is comparator-bound, not byte-bound, at this scale.
     # NOT a long-decoded key either (opt r13, 5th negative result,
-    # tools/probe_winnow_structkey.py): decoding the hex into native
+    # probe script in git history): decoding the hex into native
     # longs — struct<h1,h2 bigint> 20.9 s, two top-level bigint columns
     # 15.8 s vs 14.0 s hex median, slower in EVERY interleaved round
     # (parity-gated: 179,843 identical pairs). The 4x conv(8-hex) +
@@ -1037,7 +1037,7 @@ def winnow_near_duplicates(
     # checkpointing `capped` (chain runs once per join side) benched
     # 11.29 s vs 11.07 s, checkpointing `posts` AND `capped` 10.23 s —
     # both inside the ±1 s noise band of 5 interleaved rounds
-    # (tools/probe_winnow_ckpt.py). The warm cost is the ~83M-row
+    # (probe script in git history). The warm cost is the ~83M-row
     # semantic pair volume (sum of capped n_h² — the exact pair set the
     # oracle models), not the duplicated hash chain.
     posts = fp.select("id", F.explode_outer("fp").alias("h"))

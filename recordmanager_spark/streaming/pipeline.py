@@ -25,27 +25,37 @@ from pyspark.sql import functions as F
 class WatermarkStore:
     """Tiny key->timestamp state store (the reference's ``state`` table,
     dbscripts/mysql.sql:53-56). JSON file locally; a Delta table on a
-    cluster — the interface is the contract."""
+    cluster — the interface is the contract. Every write goes to a
+    sibling tmp file and is swapped in with ``os.replace``, so a crash
+    mid-write leaves the previous state, never a truncated file."""
 
     def __init__(self, path: str):
         self.path = path
 
-    def get(self, key: str, default=None):
+    def _load(self) -> dict:
         if not os.path.exists(self.path):
-            return default
+            return {}
         with open(self.path) as f:
-            return json.load(f).get(key, default)
+            return json.load(f)
 
-    def set(self, key: str, value) -> None:
-        data = {}
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                data = json.load(f)
-        data[key] = value
+    def _save(self, data: dict) -> None:
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(data, f)
+            json.dump(data, f, sort_keys=True)
         os.replace(tmp, self.path)
+
+    def get(self, key: str, default=None):
+        return self._load().get(key, default)
+
+    def set(self, key: str, value) -> None:
+        data = self._load()
+        data[key] = value
+        self._save(data)
+
+    def clear(self, key: str) -> None:
+        data = self._load()
+        data.pop(key, None)
+        self._save(data)
 
 
 def incremental_run(

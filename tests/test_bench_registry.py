@@ -1,37 +1,9 @@
-"""bench.py's query list must stay a subset of the driver registry, and
-every registered query must have an oracle (the round-9 lesson: a
-registered query without an oracle puts a permanent err row in the
-external correctness record)."""
+"""Every registered driver query must have an oracle (the round-9
+lesson: a registered query without an oracle puts a permanent err row
+in the external correctness record)."""
 
-import bench
 import __spark_entry__ as entry
-
-
-def test_bench_queries_are_registered():
-    qs = entry.queries()
-    missing = [n for n in bench.BENCH_QUERIES if n not in qs]
-    assert not missing, missing
 
 
 def test_every_query_has_an_oracle():
     assert set(entry.queries()) == set(entry.oracle_sql())
-
-
-def test_every_query_benched_or_justified():
-    """A registered query must be in the headline bench OR carry a
-    committed exclusion reason (r10 verdict: no silent bench gaps) —
-    and never both, and never a stale exclusion for a query that no
-    longer exists."""
-    registered = set(entry.queries())
-    benched = set(bench.BENCH_QUERIES)
-    excluded = set(bench.BENCH_EXCLUSIONS)
-    assert not benched & excluded, sorted(benched & excluded)
-    unaccounted = registered - benched - excluded
-    assert not unaccounted, sorted(unaccounted)
-    stale = excluded - registered
-    assert not stale, sorted(stale)
-    # reasons are real sentences, not empty placeholders
-    assert all(
-        isinstance(r, str) and len(r) >= 10
-        for r in bench.BENCH_EXCLUSIONS.values()
-    )

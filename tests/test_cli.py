@@ -227,24 +227,126 @@ def test_cli_mark_for_update_and_check_dedup(tmp_path, spark, capsys):
 
 
 def test_cli_rewrite_cleans_tmp(workspace, spark):
-    """Mutating commands clean up the <records>.tmp recovery copy after
-    a successful final write (a crash mid-overwrite would leave it as
-    the recovery copy; success must not leak a stale full table)."""
+    """Mutating commands commit through a <records>.new write swapped in
+    by rename; a successful commit leaves neither the .new write nor the
+    superseded .old version behind (and no .tmp copy of any kind)."""
     records = str(workspace / "records")
     base = [
         "--config", str(workspace / "conf" / "datasources.ini"),
         "--records", records,
     ]
+
+    def leftovers():
+        return [p for p in (".new", ".old", ".tmp")
+                if os.path.exists(records + p)]
+
     main(["import", *base, "--source", "libA", "--file",
           str(workspace / "a.xml")])
-    # second import goes through the upsert + _rewrite_records path
+    assert leftovers() == []
+    # second import goes through the upsert + swap path
     main(["import", *base, "--source", "libB", "--file",
           str(workspace / "b.xml")])
     assert os.path.exists(records)
-    assert not os.path.exists(records + ".tmp")
-    # a mark-deleted pass also rewrites in place
+    assert leftovers() == []
     main(["mark-deleted", "--records", records, "--id", "B.b2"])
-    assert not os.path.exists(records + ".tmp")
+    assert leftovers() == []
+    assert spark.read.parquet(records).count() == 4
+
+
+def test_cli_first_import_count_is_observed(workspace, spark, capsys,
+                                            monkeypatch):
+    """The printed row count comes from the commit write itself: no
+    DataFrame.count() pass runs on the first import or on an upsert."""
+    records = str(workspace / "records")
+    base = [
+        "--config", str(workspace / "conf" / "datasources.ini"),
+        "--records", records,
+    ]
+
+    def no_count(self):
+        raise AssertionError("import must not run a separate count")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    main(["import", *base, "--source", "libA", "--file",
+          str(workspace / "a.xml")])
+    assert "records table now 2 rows" in capsys.readouterr().out
+    main(["import", *base, "--source", "libB", "--file",
+          str(workspace / "b.xml")])
+    assert "records table now 4 rows" in capsys.readouterr().out
+    monkeypatch.undo()
+    assert spark.read.parquet(records).count() == 4
+
+
+def _store_rows(df):
+    return sorted((r.asDict() for r in df.collect()), key=lambda d: d["_id"])
+
+
+@pytest.mark.parametrize(
+    "step", ["after_new_write", "between_renames", "before_old_delete"]
+)
+def test_commit_store_crash_heals_on_read(workspace, spark, monkeypatch,
+                                          step):
+    """A kill at each step of commit_store's swap leaves the store
+    readable as exactly the old or exactly the new version, with no
+    manual repair; the next command leaves no .new/.old behind."""
+    from recordmanager_spark import cli
+
+    records = str(workspace / "records")
+    base = [
+        "--config", str(workspace / "conf" / "datasources.ini"),
+        "--records", records, "--id-tag", "recordID",
+    ]
+    main(["import", *base, "--source", "libA", "--file",
+          str(workspace / "a.xml")])
+    old = _store_rows(spark.read.parquet(records))
+
+    real_rename, real_delete = cli._rename_location, cli._delete_location
+    renames = []
+
+    def rename(sp, src, dst):
+        renames.append((src, dst))
+        if (step, len(renames)) in (
+            ("after_new_write", 1), ("between_renames", 2)
+        ):
+            raise KeyboardInterrupt
+        real_rename(sp, src, dst)
+
+    def delete(sp, uri):
+        if step == "before_old_delete" and len(renames) == 2:
+            raise KeyboardInterrupt
+        real_delete(sp, uri)
+
+    monkeypatch.setattr(cli, "_rename_location", rename)
+    monkeypatch.setattr(cli, "_delete_location", delete)
+    with pytest.raises(KeyboardInterrupt):
+        main(["import", *base, "--source", "libB", "--file",
+              str(workspace / "b.xml")])
+    monkeypatch.undo()
+    assert os.path.exists(records + ".new") == (step != "before_old_delete")
+    assert os.path.exists(records + ".old") == (step != "after_new_write")
+    # the fully written new version, captured before anything heals it
+    new = _store_rows(spark.read.parquet(
+        records if step == "before_old_delete" else records + ".new"
+    ))
+    assert {r["_id"] for r in new} == {
+        "libA.a1", "libA.a2", "B.b1", "B.b2"
+    }
+
+    got = _store_rows(cli.read_store(spark, records))
+    assert got == (old if step == "after_new_write" else new)
+    if step != "after_new_write":
+        # the swap was past its commit point: reading finished it
+        assert not os.path.exists(records + ".new")
+        assert not os.path.exists(records + ".old")
+
+    # re-running the interrupted command commits cleanly
+    main(["import", *base, "--source", "libB", "--file",
+          str(workspace / "b.xml")])
+    assert not os.path.exists(records + ".new")
+    assert not os.path.exists(records + ".old")
+    assert {r["_id"] for r in _store_rows(spark.read.parquet(records))} == {
+        "libA.a1", "libA.a2", "B.b1", "B.b2"
+    }
 
 
 def test_cli_curate_end_to_end(spark, tmp_path):

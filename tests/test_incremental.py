@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 
 from recordmanager_spark.operators import incremental as INC
@@ -60,3 +61,26 @@ def test_watermark_store(tmp_path):
     assert ws.get("k") is None
     ws.set("k", "2024-01-01T00:00:00")
     assert ws.get("k") == "2024-01-01T00:00:00"
+
+
+def test_watermark_store_clear_and_atomic_write(tmp_path, monkeypatch):
+    import json
+
+    from recordmanager_spark.streaming import pipeline as P
+
+    path = str(tmp_path / "state.json")
+    ws = P.WatermarkStore(path)
+    ws.set("a", 1)
+    ws.set("b", 2)
+    ws.clear("a")
+    ws.clear("missing")
+    assert json.load(open(path)) == {"b": 2}
+
+    def crash(*_a, **_k):
+        raise KeyboardInterrupt
+
+    # a crash before the swap leaves the previous state intact
+    monkeypatch.setattr(P.os, "replace", crash)
+    with pytest.raises(KeyboardInterrupt):
+        ws.set("b", 3)
+    assert json.load(open(path)) == {"b": 2}

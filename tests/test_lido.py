@@ -231,3 +231,19 @@ def test_eaccpf_engines_agree(spark):
         for r in eaccpf.to_solr_columns(df, engine="xpath").select(cols).collect()
     ]
     assert a == b
+
+
+def test_local_name_cache_is_bounded():
+    """Hostile input can carry a fresh namespace on every element; the
+    local-name memo must stay correct and never grow past its cap."""
+    import random
+
+    rng = random.Random(7)
+    n = 5000
+    names = [(f"{{urn:x-{rng.getrandbits(64):016x}}}tag{i}", f"tag{i}")
+             for i in range(n)]
+    assert len({q for q, _ in names}) == n
+    for qname, local in names:
+        assert lido._local(qname) == local
+    assert lido._local("plain") == "plain"
+    assert lido._local.cache_info().currsize <= 4096
