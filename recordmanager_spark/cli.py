@@ -302,7 +302,7 @@ def cmd_harvest(args) -> None:
 
 def cmd_deduplicate(args) -> None:
     spark = _spark("rm-dedup")
-    from .operators.dedup import deduplicate, with_dedup_keys
+    from .operators.dedup import deduplicate, verify_frame, with_dedup_keys
 
     records = read_store(spark, args.records)
     if not args.format:
@@ -310,41 +310,9 @@ def cmd_deduplicate(args) -> None:
         if len(fmts) != 1:
             raise SystemExit(f"--format required (table has {sorted(fmts)})")
         args.format = fmts[0]
-    wide = extract_wide(records, args.format)
-    types = dict(wide.dtypes)
-
-    def scalar(name, *alts):
-        for n in (name, *alts):
-            if n in types:
-                c = F.col(n)
-                if types[n].startswith("array"):
-                    c = F.element_at(c, 1)
-                return F.nullif(F.trim(c.cast("string")), F.lit(""))
-        return F.lit(None).cast("string")
-
-    def arr(name):
-        if name in types and types[name].startswith("array"):
-            return F.col(name)
-        return F.array().cast("array<string>")
-
-    # the matchRecords verifier reads a fixed field battery
-    # (operators/dedup._VERIFY_FIELDS); normalize whatever the driver
-    # produced into that shape, with absent fields as null/empty
-    verify = wide.select(
-        "_id",
-        "source_id",
-        F.coalesce(scalar("format"), F.lit("")).alias("format"),
-        scalar("access_restrictions").alias("access_restrictions"),
-        arr("isbn").alias("isbn"),
-        arr("unique_ids").alias("unique_ids"),
-        arr("issn").alias("issn"),
-        scalar("publish_year", "publishDate").alias("publish_year"),
-        scalar("page_count").alias("page_count"),
-        scalar("series_issn").alias("series_issn"),
-        scalar("series_numbering").alias("series_numbering"),
-        F.coalesce(scalar("title"), F.lit("")).alias("title"),
-        F.coalesce(scalar("author"), F.lit("")).alias("author"),
-    )
+    # the matchRecords verifier reads a fixed field battery; normalize
+    # whatever the extractor produced into that shape
+    verify = verify_frame(extract_wide(records, args.format))
     keyed = with_dedup_keys(
         verify, title_col="title", author_col="author", isbn_col="isbn"
     )

@@ -118,24 +118,31 @@ def energy_delta_fp64(samples: np.ndarray) -> int:
     the samples), gain-invariant (energies scale together). Returns a
     SIGNED 64-bit int so the value fits a Spark LONG.
 
-    The 65 window energies come from one cumulative-sum pass over the
+    The 65 window sums come from one ``np.add.reduceat`` pass over the
     squared samples instead of 65 ``np.array_split`` slices each paying
-    a tiny ``np.mean`` (profiled at ~1.5 s core-time per 1 k segments
-    before the r13 rewrite). Window boundaries replicate array_split:
-    the first ``n % 65`` windows get the extra sample. Summation order
-    inside a window changes (sequential vs pairwise) — a ≤1-ulp effect
-    on the energies; parity over randomized inputs is pinned in
+    a tiny ``np.mean`` (profiled at ~1.5 s core-time per 1 k segments).
+    Window boundaries replicate array_split: the first ``n % 65``
+    windows get the extra sample, and windows left empty (``n < 65``)
+    have energy 0. ``reduceat`` sums each window on its own with the
+    same pairwise reduction ``np.mean`` uses, so the energies are the
+    array_split/mean ones bit for bit; a prefix-sum difference would
+    instead carry rounding error that scales with the whole segment's
+    running total and flips bits between near-equal windows. Parity
+    over randomized and near-constant inputs is pinned in
     tests/test_audio_fingerprint_example.py."""
     n = int(samples.size)
     div, rem = divmod(n, 65)
     sizes = np.full(65, div, dtype=np.int64)
     sizes[:rem] += 1
-    ends = np.cumsum(sizes)
+    starts = np.cumsum(sizes) - sizes
     sq = samples * samples
-    cs = np.concatenate([[0.0], np.cumsum(sq, dtype=np.float64)])
-    sums = cs[ends] - cs[ends - sizes]
+    # the non-empty windows are a prefix, and each starts below n
+    full = sizes > 0
+    sums = np.zeros(65, dtype=np.float64)
+    if n:
+        sums[full] = np.add.reduceat(sq, starts[full])
     with np.errstate(invalid="ignore"):
-        e = np.where(sizes > 0, np.sqrt(sums / np.maximum(sizes, 1)), 0.0)
+        e = np.where(full, np.sqrt(sums / np.maximum(sizes, 1)), 0.0)
     bits = e[1:] > e[:-1]
     fp = 0
     for i, b in enumerate(bits):

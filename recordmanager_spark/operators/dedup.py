@@ -368,9 +368,8 @@ def match_condition(a: str = "a", b: str = "b") -> Column:
     """The matchRecords decision as one boolean Column over a joined pair
     of record structs aliased ``a`` and ``b``.
 
-    Expected columns per side: format, access_restrictions, isbn (array),
-    unique_ids (array), issn (array), publish_year, page_count,
-    series_issn, series_numbering, title, author.
+    Expected columns per side: the :data:`_VERIFY_FIELDS` battery, in
+    the shapes it records (:func:`verify_frame` builds them).
     """
     return _match_condition_expr(a, b)
 
@@ -407,19 +406,56 @@ def _match_condition_expr(
     return F.expr(sql)
 
 
-_VERIFY_FIELDS = [
-    "format",
-    "access_restrictions",
-    "isbn",
-    "unique_ids",
-    "issn",
-    "publish_year",
-    "page_count",
-    "series_issn",
-    "series_numbering",
-    "title",
-    "author",
-]
+# The matchRecords field battery, the one definition of the verify
+# fields: name -> (shape, fallback source column). "array" fields are
+# string arrays (empty when absent); "scalar" fields are trimmed strings,
+# null when absent or blank; "text" fields are scalars that default to "".
+_VERIFY_FIELDS: dict[str, tuple[str, str | None]] = {
+    "format": ("text", None),
+    "access_restrictions": ("scalar", None),
+    "isbn": ("array", None),
+    "unique_ids": ("array", None),
+    "issn": ("array", None),
+    "publish_year": ("scalar", "publishDate"),
+    "page_count": ("scalar", None),
+    "series_issn": ("scalar", None),
+    "series_numbering": ("scalar", None),
+    "title": ("text", None),
+    "author": ("text", None),
+}
+
+
+def verify_frame(wide: DataFrame) -> DataFrame:
+    """(_id, source_id, *_VERIFY_FIELDS) from an extractor's wide frame,
+    shaped per :data:`_VERIFY_FIELDS` whatever the format produced: the
+    first element of an array column stands in for a scalar, a scalar
+    column missing from ``wide`` falls back to its fallback column, and
+    array fields that are absent or not arrays become empty arrays."""
+    types = dict(wide.dtypes)
+
+    def scalar(*names):
+        for n in names:
+            if n in types:
+                c = F.col(n)
+                if types[n].startswith("array"):
+                    c = F.element_at(c, 1)
+                return F.nullif(F.trim(c.cast("string")), F.lit(""))
+        return F.lit(None).cast("string")
+
+    cols = []
+    for name, (shape, fallback) in _VERIFY_FIELDS.items():
+        if shape == "array":
+            c = (
+                F.col(name)
+                if types.get(name, "").startswith("array")
+                else F.array().cast("array<string>")
+            )
+        else:
+            c = scalar(name, fallback)
+            if shape == "text":
+                c = F.coalesce(c, F.lit(""))
+        cols.append(c.alias(name))
+    return wide.select("_id", "source_id", *cols)
 
 
 def blocking_verified_edges(
@@ -428,19 +464,16 @@ def blocking_verified_edges(
     id_col: str = "_id",
     source_col: str = "source_id",
     candidates_per_key: int = 101,
-    verify_fields: list[str] | None = None,
-    key_fold=None,
     distinct: bool = True,
 ) -> DataFrame:
     """Blocking + pairwise verification fused into ONE key shuffle.
 
     ``distinct=False`` skips the final edge-set dedup exchange: a pair
-    sharing several blocking keys is emitted once per key. Every
-    component resolver downstream is idempotent under duplicate edges
-    (driver/task union-find, min-label propagation), so
-    :func:`deduplicate` opts out and saves one corpus-pair shuffle +
-    one sequential AQE stage; keep the default when the edge SET itself
-    is the product.
+    sharing several blocking keys is emitted once per key. The
+    component pass downstream is idempotent under duplicate edges
+    (union-find, min-label propagation), so :func:`deduplicate` opts
+    out and saves one corpus-pair shuffle + one sequential AQE stage;
+    keep the default when the edge SET itself is the product.
 
     The verification payload rides inside the per-key candidate structs,
     so pair generation runs in-partition on the grouped array. Compared to
@@ -458,23 +491,18 @@ def blocking_verified_edges(
     codegen — the shape that stays fast when a hot key emits its capped
     ~5000 pairs per group at 100 TB.
     """
-    fields = verify_fields or _VERIFY_FIELDS
-    if key_fold is None:
-        # default fold: compile the normalize_key trees through the
-        # SQL-text twin (one parse each instead of per-node py4j chatter)
-        from .. import sqlalg as SA
-        from .. import sqltwin
+    # compile the normalize_key trees through the SQL-text twin (one
+    # parse each instead of per-node py4j chatter)
+    from .. import sqlalg as SA
+    from .. import sqltwin
 
-        ktw = sqltwin.keys_twin()
-        nk_title = F.expr(str(ktw.normalize_key(SA.col("title"))))
-        nk_author = F.expr(str(ktw.normalize_key(SA.col("author"))))
-    else:
-        nk_title = key_fold(F.col("title"))
-        nk_author = key_fold(F.col("author"))
+    ktw = sqltwin.keys_twin()
+    nk_title = F.expr(str(ktw.normalize_key(SA.col("title"))))
+    nk_author = F.expr(str(ktw.normalize_key(SA.col("author"))))
     member = F.struct(
         F.col(id_col).alias("id"),
         F.col(source_col).alias("source"),
-        *[F.col(f) for f in fields if f not in ("title", "author")],
+        *[F.col(f) for f in _VERIFY_FIELDS if f not in ("title", "author")],
         nk_title.alias("__nk_title"),
         nk_author.alias("__nk_author"),
     )
@@ -554,7 +582,6 @@ def verified_edges(
     records: DataFrame,
     pairs: DataFrame,
     id_col: str = "_id",
-    fields: list[str] | None = None,
 ) -> DataFrame:
     """Join candidate pairs back to their payloads and keep matches.
 
@@ -562,20 +589,7 @@ def verified_edges(
     the (pruned) record projection; Catalyst prunes the record scan to the
     verification columns only.
     """
-    fields = fields or [
-        "format",
-        "access_restrictions",
-        "isbn",
-        "unique_ids",
-        "issn",
-        "publish_year",
-        "page_count",
-        "series_issn",
-        "series_numbering",
-        "title",
-        "author",
-    ]
-    proj = records.select(F.col(id_col).alias("id"), *fields)
+    proj = records.select(F.col(id_col).alias("id"), *_VERIFY_FIELDS)
     a = proj.alias("a")
     b = proj.alias("b")
     joined = (
@@ -590,123 +604,68 @@ def verified_edges(
 # Connected components (small-diameter label propagation)
 # ---------------------------------------------------------------------------
 
+# Edge sets up to this many rows resolve in one driver union-find; larger
+# ones take the distributed label propagation. 2M edges = 4M Python string
+# refs: at ~100 bytes per realistic record id (object header + text) the
+# fetched rows plus the union-find dict peak around 1-2 GB of driver heap,
+# inside the default driver memory, and the distributed path takes over
+# where that stops being true.
+_DRIVER_EDGE_LIMIT = 2_000_000
+
+
+def _driver_edges(edges: DataFrame) -> list | None:
+    """The edge rows when they fit the driver union-find, else None.
+
+    One ``take`` both sizes the edge set and fetches it: verified match
+    edges are tiny relative to the corpus (even 10^9 records rarely
+    verify more than 10^7-10^8 pairs), so the common case runs ONE job
+    with no checkpoint write. It is an eager action, so components
+    resolve when the query is built, and past the limit the distributed
+    path takes over instead of failing at materialization."""
+    rows = edges.take(_DRIVER_EDGE_LIMIT + 1)
+    return rows if len(rows) <= _DRIVER_EDGE_LIMIT else None
+
 
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    driver_threshold: int = 2_000_000,
     report: dict | None = None,
 ) -> DataFrame:
-    """Min-label propagation over undirected edges (id_a, id_b).
+    """Components of the undirected edges (id_a, id_b).
 
-    Returns (id, component) where component = min id reachable.
-
-    Adaptive strategy: the verified-match edge set is tiny relative to the
-    corpus (even 10^9 records rarely verify more than 10^7-10^8 pairs), so
-    when it fits ``driver_threshold`` rows the components come from a
-    driver-side union-find — one collect, zero iterative jobs. Beyond the
-    threshold, distributed min-label propagation: dedup graphs have tiny
-    diameter (groups of 2-10 records), so it converges in 2-4 iterations;
-    each iteration is one join + one groupBy on the current labels, with
-    ``localCheckpoint`` truncating lineage.
-
-    Memory math for the default threshold: 2M edges = 4M Python string
-    refs; at ~100 bytes per realistic record id (object header + text)
-    the collected rows plus the union-find dict peak around 1-2 GB of
-    driver heap — comfortably inside the default driver memory, with the
-    distributed path taking over exactly where that stops being true.
+    Returns (id, component) where component = min id reachable. Edge
+    sets within ``_DRIVER_EDGE_LIMIT`` resolve in a driver union-find
+    (:func:`_driver_edges`); larger ones by distributed min-label
+    propagation (:func:`_cc_distributed`). ``report`` gets the path
+    taken and the driver edge count or the propagation rounds.
     """
-    # optimistic single action: take(threshold+1) both sizes the edge set
-    # and fetches it when it fits the driver — the common case (verified
-    # match edges are tiny relative to the corpus) runs ONE job with no
-    # checkpoint write. Only the distributed fallback materializes.
     edges = edges.select("id_a", "id_b")
-    pairs = _take_all_partitions(edges, driver_threshold + 1)
-    if not pairs:
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "id string, component string")
-    if len(pairs) <= driver_threshold:
+    rows = _driver_edges(edges)
+    if rows is None:
         if report is not None:
-            report.update(path="driver", edges=len(pairs))
-        parent = _union_find(pairs)
-        members = set()
-        for r in pairs:
-            members.add(r.id_a)
-            members.add(r.id_b)
-        rows = [(m, _uf_find(parent, m)) for m in members]
-        return _local_string_df(edges.sparkSession, rows, ["id", "component"])
-    # distributed fallback: materialize the edge set once — the iterative
-    # propagation reads it every round and must not re-run verification.
-    # localCheckpoint blocks are non-resilient (executor loss fails the
-    # job rather than recomputing) — acceptable for within-job iteration
-    # state; re-run the job on preemptible-executor loss (ADVICE r12).
+            report.update(path="distributed")
+        return _cc_distributed(edges, max_iterations, report=report)
     if report is not None:
-        report.update(path="distributed")
-    return _cc_distributed(
-        edges.localCheckpoint(eager=True), max_iterations, report=report
+        report.update(path="driver", edges=len(rows))
+    return _local_string_df(
+        edges.sparkSession, list(_union_find(rows).items()), ["id", "component"]
     )
 
 
-def _take_all_partitions(df: DataFrame, n: int) -> list:
-    """``df.take(n)`` with the limit scan starting on EVERY partition.
-
-    Spark's take/CollectLimit probes partitions incrementally (1, then
-    4x more per retry — ``spark.sql.limit.initialNumPartitions`` = 1,
-    ``spark.sql.limit.scaleUpFactor`` = 4). For the adaptive-CC sizing
-    take the threshold (2M edges) almost always exceeds the edge count,
-    so the final-stage probe would always walk the full retry ladder;
-    pinning initialNumPartitions for the one action removes it,
-    semantics identical. Honest measurement note: under AQE (the
-    session default) the construction wall-clock is dominated by the
-    SEQUENTIAL materialization of the pipeline's query stages (one job
-    per shuffle stage, ~2 s executor CPU vs ~4 s wall at sf0.1), which
-    this conf does not and cannot collapse — the win here is bounded
-    to the post-stage limit probe and to non-AQE deployments.
-
-    Concurrency scope (r9, was an r8 ADVICE item): the pin lives in a
-    ``newSession()`` clone — isolated SQLConf, shared SparkContext /
-    catalog / shuffle state — and the ALREADY-ANALYZED plan is rebound
-    to the clone via ``Dataset.ofRows``, so queries submitted
-    concurrently on the parent session never observe the conf (re-using
-    the analyzed plan also means no re-analysis under the clone's
-    defaults — Cast eval modes etc. stay exactly as the parent resolved
-    them). If the JVM internals ever move, the fallback is a plain
-    ``take`` on the parent session with NO conf mutation (the retry
-    ladder costs ~0.4 s at sf0.1; correctness identical)."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    try:
-        sub = spark.newSession()
-        # a large constant, NOT df.rdd.getNumPartitions(): accessing
-        # .rdd on an AQE plan materializes its query stages (a whole
-        # extra execution); the limit executor clamps to the actual
-        # partition count
-        sub.conf.set(key, "1000000")
-        jvm = spark._jvm
-        try:
-            ds_cls = jvm.org.apache.spark.sql.classic.Dataset
-        except Exception:  # pragma: no cover - Spark < 4 layout
-            ds_cls = jvm.org.apache.spark.sql.Dataset
-        jdf = ds_cls.ofRows(
-            sub._jsparkSession, df._jdf.queryExecution().analyzed()
-        )
-        return DataFrame(jdf, sub).take(n)
-    except Exception:
-        # never mutate the shared session conf; eat the retry ladder
-        return df.take(n)
-
-
 def _union_find(pairs) -> dict:
-    """Union-find over edge rows; min id becomes each root so the
-    component label = smallest member id (the reference's group id pick,
-    DedupHandler.php:559-627 smallest-id tie-break, made deterministic)."""
+    """id -> component over (id_a, id_b) pairs, for every id in a pair.
+    The min id becomes each root, so the component label = smallest
+    member id (the reference's group id pick, DedupHandler.php:559-627
+    smallest-id tie-break, made deterministic)."""
     parent: dict = {}
-    for r in pairs:
-        ra, rb = _uf_find(parent, r.id_a), _uf_find(parent, r.id_b)
+    for id_a, id_b in pairs:
+        parent.setdefault(id_a, id_a)
+        parent.setdefault(id_b, id_b)
+        ra, rb = _uf_find(parent, id_a), _uf_find(parent, id_b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    return parent
+    return {m: _uf_find(parent, m) for m in list(parent)}
 
 
 def _uf_find(parent: dict, x):
@@ -720,25 +679,23 @@ def _uf_find(parent: dict, x):
 
 def _assignment_core(quads) -> list[tuple[str, str | None]]:
     """Components + one-per-source + min-group-size-2 over an iterable of
-    (id_a, id_b, src_a, src_b) tuples — the shared core of the driver-side
-    and task-side assignment paths.
+    (id_a, id_b, src_a, src_b) tuples.
 
     Within a component, the smallest id per source is kept (the batch form
     of the reference's greedy one-per-source insert, addToDedupRecord
     :1221-1242, ordered by id); extras get a null component, and groups
     left with < 2 members dissolve (removeFromDedupRecord :672-741)."""
-    parent: dict = {}
     srcs: dict = {}
-    for id_a, id_b, src_a, src_b in quads:
-        ra, rb = _uf_find(parent, id_a), _uf_find(parent, id_b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-        srcs[id_a] = src_a
-        srcs[id_b] = src_b
+
+    def pairs():
+        for id_a, id_b, src_a, src_b in quads:
+            srcs[id_a] = src_a
+            srcs[id_b] = src_b
+            yield id_a, id_b
+
     groups: dict = {}
-    for m in srcs:
-        groups.setdefault(_uf_find(parent, m), []).append(m)
+    for m, root in _union_find(pairs()).items():
+        groups.setdefault(root, []).append(m)
     out: list[tuple[str, str | None]] = []
     for root, members in groups.items():
         best: dict = {}
@@ -753,113 +710,32 @@ def _assignment_core(quads) -> list[tuple[str, str | None]]:
     return out
 
 
-def _driver_assignment(pairs) -> list[tuple[str, str | None]]:
-    """Driver-side assignment over collected edge Rows."""
-    return _assignment_core(
-        (r.id_a, r.id_b, r.src_a, r.src_b) for r in pairs
-    )
-
-
-def _assign_components_task(
-    edges: DataFrame, task_threshold: int = 2_000_000
-) -> DataFrame:
-    """LAZY single-task assignment: the union-find + invariants run inside
-    an Arrow task over the (small) verified-edge set instead of on the
-    driver at CONSTRUCTION time.
-
-    Why: the driver-side take() is an eager action — registering or
-    submitting a dedup query paid the full blocking+verify pipeline
-    before the job even started (the round-5/6 construction census showed
-    dedup_er ~6 s of pure build time), and every noop-bench run conflated
-    that construction with execution. This shape defers everything to
-    materialization: ``repartition(1)`` (an explicit exchange carrying
-    ONLY edge rows, so the upstream verify stage keeps its parallelism —
-    ``coalesce(1)`` would collapse it) feeds one Arrow task that streams
-    the edge batches through the same union-find core.
-
-    Memory contract: state is O(nodes) (the parent/source dicts), bounded
-    by ``task_threshold`` edges — the same 2M default as the driver path,
-    same ~1-2 GB peak, now in an executor instead of the driver. Past the
-    threshold the task raises a LOUD error naming the fix
-    (``cc_strategy='distributed'``) rather than silently degrading."""
-    import pandas as pd
-
-    def assign(batches):
-        total = 0
-
-        def quads():
-            nonlocal total
-            for b in batches:
-                total += len(b)
-                if total > task_threshold:
-                    raise RuntimeError(
-                        f"verified-edge set exceeds {task_threshold} rows — "
-                        "the single-task union-find would hold O(nodes) "
-                        "state past its memory contract; re-run with "
-                        "cc_strategy='distributed' (label propagation + "
-                        "windowed invariant enforcement)"
-                    )
-                yield from zip(
-                    b["id_a"], b["id_b"], b["src_a"], b["src_b"]
-                )
-
-        out = _assignment_core(quads())
-        yield pd.DataFrame(out or None, columns=["id", "component"])
-
-    return edges.select("id_a", "id_b", "src_a", "src_b").repartition(
-        1
-    ).mapInPandas(assign, "id string, component string")
-
-
 def _assign_components(
     edges: DataFrame,
     records: DataFrame,
     id_col: str = "_id",
     source_col: str = "source_id",
-    driver_threshold: int = 2_000_000,
-    strategy: str = "task",
+    strategy: str = "adaptive",
 ) -> DataFrame:
     """(id_a, id_b, src_a, src_b) edges -> (id, component) with the group
     invariants enforced.
 
-    ``strategy``:
-    - ``"adaptive"`` (alias ``"driver"``, the default reached through
-      :func:`deduplicate`): one take() both sizes the edge set and
-      fetches it when it fits (components resolve driver-side at
-      CONSTRUCTION time), automatically falling back to the distributed
-      path past the threshold — never fails at materialization.
-    - ``"task"``: fully LAZY — the union-find + invariants run in one
-      Arrow task over the edge set at materialization time
-      (:func:`_assign_components_task`). Registering/submitting the query
-      costs zero Spark jobs; the edge-count memory contract raises loudly
-      past ``driver_threshold``. Opt-in where submission latency matters
-      and the edge count is known to fit.
-    - ``"distributed"``: label propagation + windowed invariant
-      enforcement — the unbounded-edge-set path.
+    The same one component pass as :func:`connected_components`: edge
+    sets within ``_DRIVER_EDGE_LIMIT`` resolve driver-side through
+    :func:`_assignment_core`; larger ones take the distributed label
+    propagation followed by the windowed :func:`enforce_one_per_source`
+    over ``records``. ``"adaptive"`` is the only ``strategy``.
     """
-    if strategy == "task":
-        return _assign_components_task(edges, driver_threshold)
-    if strategy == "adaptive":
-        strategy = "driver"
-    if strategy == "driver":
-        rows = _take_all_partitions(edges, driver_threshold + 1)
-        spark = edges.sparkSession
-        if not rows:
-            return spark.createDataFrame([], "id string, component string")
-        if len(rows) <= driver_threshold:
-            return _local_string_df(
-                spark, _driver_assignment(rows), ["id", "component"]
-            )
-        strategy = "distributed"
-    if strategy != "distributed":
-        raise ValueError(
-            f"strategy must be 'adaptive', 'task', 'driver', or 'distributed': {strategy!r}"
-        )
-    # distributed: materialize the edge set once (the iterative
-    # propagation reads it every round and must not re-run verification),
-    # then enforce invariants with the windowed pass over the records.
-    comps = _cc_distributed(edges.select("id_a", "id_b").localCheckpoint(eager=True))
-    return enforce_one_per_source(comps, records, id_col, source_col)
+    if strategy != "adaptive":
+        raise ValueError(f"strategy must be 'adaptive': {strategy!r}")
+    edges = edges.select("id_a", "id_b", "src_a", "src_b")
+    rows = _driver_edges(edges)
+    if rows is None:
+        comps = _cc_distributed(edges)
+        return enforce_one_per_source(comps, records, id_col, source_col)
+    return _local_string_df(
+        edges.sparkSession, _assignment_core(rows), ["id", "component"]
+    )
 
 
 def _cc_distributed(
@@ -876,7 +752,14 @@ def _cc_distributed(
     ``max_iterations=20`` covers diameters past 10^6. Converged = a
     fixpoint round with no label change; running out of iterations
     raises (better a loud error than silently-split dedup groups).
+
+    The edge set is materialized once first: the propagation reads it
+    every round and must not re-run verification. localCheckpoint
+    blocks are non-resilient (executor loss fails the job rather than
+    recomputing), which is acceptable for within-job iteration state;
+    re-run the job on preemptible-executor loss.
     """
+    edges = edges.select("id_a", "id_b").localCheckpoint(eager=True)
     sym = edges.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
@@ -989,61 +872,42 @@ def deduplicate(
     id_col: str = "_id",
     source_col: str = "source_id",
     key_cols: list[str] | None = None,
-    verify_fields: list[str] | None = None,
     candidates_per_key: int = 101,
-    key_fold=None,
-    cc_strategy: str = "adaptive",
 ) -> DataFrame:
     """End-to-end dedup: records (with key columns) -> (id, dedup_id).
 
     dedup_id is the smallest member id of the group; null for singletons.
 
     One corpus pass: the fused blocking+verify shuffle emits
-    (id_a, id_b, src_a, src_b) edges; ``cc_strategy`` picks how
-    components + group invariants resolve:
-
-    - ``"adaptive"`` (default): one take() both sizes the edge set and
-      fetches it when it fits (driver union-find), automatically falling
-      back to distributed label propagation past 2M edges — NEVER fails
-      at materialization, whatever the edge count turns out to be. The
-      sizing take() is an eager action at construction (the census
-      prices it ~2-3 s at sf0.01). This was re-pinned as the default per
-      the round-6 ADVICE: at 100 TB edge counts are unpredictable, and a
-      default that can turn a formerly-working job into a RuntimeError
-      is the wrong trade for construction latency.
-    - ``"task"``: FULLY LAZY — components + invariants resolve inside
-      one Arrow task at materialization; building the query runs zero
-      Spark jobs. Opt in where submission latency matters AND the
-      verified-edge set is known to fit the 2M-edge task contract
-      (past it the task raises a loud error naming the fix rather than
-      silently degrading).
-    - ``"distributed"``: forced label propagation + windowed invariant
-      enforcement — the unbounded-edge-set path.
+    (id_a, id_b, src_a, src_b) edges, then one component pass
+    (:func:`_assign_components`) resolves groups and their invariants.
+    One ``take`` both sizes the edge set and fetches it when it fits
+    ``_DRIVER_EDGE_LIMIT`` (driver union-find); past it, distributed
+    label propagation and windowed one-per-source enforcement take over,
+    so the command never fails at materialization whatever the edge
+    count turns out to be. The sizing ``take`` is an eager action at
+    construction.
 
     No persist — the pruned projection is scanned once (column-pruned
     parquet read).
     """
-    proj_cols = {id_col, source_col}
-    proj_cols.update(key_cols or ["isbn_keys", "id_keys", "title_keys"])
-    proj_cols.update(verify_fields or _VERIFY_FIELDS)
+    key_cols = key_cols or ["isbn_keys", "id_keys", "title_keys"]
+    proj_cols = {id_col, source_col, *key_cols, *_VERIFY_FIELDS}
     records = records.select(*[c for c in records.columns if c in proj_cols])
     edges = blocking_verified_edges(
         records,
-        key_cols or ["isbn_keys", "id_keys", "title_keys"],
+        key_cols,
         id_col,
         source_col,
         candidates_per_key,
-        verify_fields,
-        key_fold,
-        # every CC strategy below is idempotent under duplicate edges —
+        # the component pass is idempotent under duplicate edges —
         # skipping the edge-set distinct saves one shuffle + one
-        # sequential AQE stage; the adaptive sizing threshold then
-        # counts raw pair emissions (strictly conservative: it can only
-        # switch to the distributed path EARLIER)
+        # sequential AQE stage; the driver edge limit then counts raw
+        # pair emissions (strictly conservative: it can only switch to
+        # the distributed path EARLIER)
         distinct=False,
     )
-    comps = _assign_components(edges, records, id_col, source_col,
-                               strategy=cc_strategy)
+    comps = _assign_components(edges, records, id_col, source_col)
     return comps.withColumnRenamed("component", "dedup_id")
 
 
@@ -1060,7 +924,6 @@ def component_part_edges(
     comp_host_col: str = "host_id",
     source_col: str = "source_id",
     dedup_col: str = "dedup_id",
-    verify_fields: list[str] | None = None,
 ) -> DataFrame:
     """Match edges between component parts of duplicate hosts.
 
@@ -1097,17 +960,12 @@ def component_part_edges(
         F.count(F.lit(1)).alias("__n")
     )
 
-    fields = verify_fields or [
-        "format", "access_restrictions", "isbn", "unique_ids", "issn",
-        "publish_year", "page_count", "series_issn", "series_numbering",
-        "title", "author",
-    ]
     proj = comp.select(
         F.col(comp_id_col).alias("id"),
         F.col(comp_host_col).alias("host"),
         F.col(source_col).alias("src"),
         F.col("__pos"),
-        *[f for f in fields if f in comp.columns],
+        *[f for f in _VERIFY_FIELDS if f in comp.columns],
     )
     a, b = proj.alias("a"), proj.alias("b")
     aligned = (
@@ -1152,12 +1010,10 @@ def dedup_component_parts(
     dedup_id = smallest member id (consistent with ``deduplicate``);
     components whose host pairs don't fully match stay ungrouped (the
     reference's zero-marked cleanup path)."""
-    cc_strategy = kwargs.pop("cc_strategy", "adaptive")
     edges = component_part_edges(hosts, components, **kwargs)
     src_col = kwargs.get("source_col", "source_id")
     id_col = kwargs.get("comp_id_col", "_id")
-    comps = _assign_components(edges, components, id_col, src_col,
-                               strategy=cc_strategy)
+    comps = _assign_components(edges, components, id_col, src_col)
     return comps.withColumnRenamed("component", "dedup_id")
 
 
@@ -1173,9 +1029,7 @@ def deduplicate_incremental(
     id_col: str = "_id",
     source_col: str = "source_id",
     key_cols: list[str] | None = None,
-    verify_fields: list[str] | None = None,
     candidates_per_key: int = 101,
-    cc_strategy: str = "adaptive",
 ) -> DataFrame:
     """Re-dedup only dirty rows against the full key index.
 
@@ -1234,7 +1088,7 @@ def deduplicate_incremental(
         )
         .distinct()
     )
-    new_edges = verified_edges(records, pairs, id_col, verify_fields)
+    new_edges = verified_edges(records, pairs, id_col)
 
     # prior groups among CLEAN members only, as star edges to the group's
     # smallest clean member
@@ -1260,8 +1114,7 @@ def deduplicate_incremental(
     )
 
     comps = _assign_components(
-        new_edges.unionByName(prior_edges), records, id_col, source_col,
-        strategy=cc_strategy,
+        new_edges.unionByName(prior_edges), records, id_col, source_col
     )
     return comps.withColumnRenamed("component", "dedup_id")
 

@@ -1197,30 +1197,28 @@ def near_dup_prune(
     pairs: DataFrame,
     id_col: str = "doc_id",
     quality_col: str | None = None,
-    broadcast_flags: bool | None = None,
-    cc_driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Keep ONE representative per near-duplicate cluster.
 
     ``pairs`` are (id_a, id_b) near-dup edges from any of this module's
     detectors (minhash / simhash / winnowing) or the embedding paths;
-    connected components resolve transitive clusters (operators/dedup's
-    adaptive CC: driver union-find under ``cc_driver_threshold`` edges,
-    distributed min-label propagation above). Within a cluster the
-    highest ``quality_col`` wins, ties break to the smallest id; with no
-    quality column the smallest id wins outright (the common
-    keep-first-seen policy). Documents in no pair keep themselves.
+    transitive clusters come from operators/dedup's one component pass
+    (:func:`~.dedup.connected_components`: a driver union-find when the
+    edges fit its edge limit, distributed min-label propagation above).
+    Within a cluster the highest ``quality_col`` wins, ties break to the
+    smallest id; with no quality column the smallest id wins outright
+    (the common keep-first-seen policy). Documents in no pair keep
+    themselves.
 
     Output = input + ``cluster_id`` (own id for singletons) + ``keep``.
 
     Scale shape: the ranking window shuffles ONLY clustered rows
     (bounded by the duplicate count, not the corpus). The keep-flag
-    table is proportional to the duplicate count, so by default NO
-    broadcast hint is planted for the final join — AQE sizes it at
-    runtime and picks broadcast vs shuffle-hash itself (at a realistic
-    LLM-corpus dup rate the flag table is a large fraction of the
-    corpus and must NOT broadcast). ``broadcast_flags=True``/``False``
-    pin the strategy; output is identical either way.
+    table is proportional to the duplicate count, so NO broadcast hint
+    is planted for the final join — AQE sizes it at runtime and picks
+    broadcast vs shuffle-hash itself (at a realistic LLM-corpus dup
+    rate the flag table is a large fraction of the corpus and must NOT
+    broadcast).
     """
     from .dedup import connected_components
 
@@ -1230,8 +1228,7 @@ def near_dup_prune(
         pairs.select(
             F.col(pairs.columns[0]).cast("string").alias("id_a"),
             F.col(pairs.columns[1]).cast("string").alias("id_b"),
-        ),
-        driver_threshold=cc_driver_threshold,
+        )
     ).withColumnsRenamed({"id": "__nd_id", "component": "__nd_comp"})
     sid = F.col(id_col).cast("string")
     clustered = df.join(comps, sid == F.col("__nd_id"), "inner")
@@ -1246,10 +1243,6 @@ def near_dup_prune(
         F.col("__nd_comp"),
         (F.col("__nd_rn") == 1).alias("__nd_keep"),
     )
-    if broadcast_flags is True:
-        flags = F.broadcast(flags)
-    elif broadcast_flags is False:
-        flags = flags.hint("shuffle_hash")
     out = df.join(
         flags, df[id_col].cast("string") == F.col("__nd_id"), "left"
     )

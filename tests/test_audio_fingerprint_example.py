@@ -207,3 +207,10 @@ def test_energy_delta_fp64_matches_reference():
     )
     sgn = np.where(np.arange(amp.size) % 2 == 0, 1.0, -1.0)
     assert energy_delta_fp64(amp * sgn) == ref(amp * sgn)
+    # near-constant energy: windows differ in the 13th digit, so the
+    # window sums must not carry error from the running total
+    for m in (300, 977, 2500):
+        for _ in range(5):
+            k = rng.integers(-3, 4, size=65)
+            s = np.repeat(0.7 * (1 + 1e-13 * k), m)
+            assert energy_delta_fp64(s) == ref(s), f"diverges at m={m}"

@@ -220,3 +220,53 @@ def test_blocking_candidate_cap(spark):
     pairs = DD.blocking_pairs(df, ["title_keys"], candidates_per_key=4)
     # only 4 records survive per key -> at most C(4,2) cross-source pairs
     assert pairs.count() <= 6
+
+
+def test_verify_frame_marc_and_dc_shapes(spark):
+    """verify_frame lands any extractor's wide frame on the one field
+    battery: exactly (_id, source_id, *_VERIFY_FIELDS), array fields as
+    string arrays, the rest as trimmed strings."""
+    marc = spark.createDataFrame(
+        [("m1", "a", ["Book", "eBook"], None, ["9780306406157"],
+          ["(OCoLC)1"], [], [" 1999 "], "120", " ", ["3"], " A title ",
+          [], "dropped")],
+        "_id string, source_id string, format array<string>, "
+        "access_restrictions string, isbn array<string>, "
+        "unique_ids array<string>, issn array<string>, "
+        "publish_year array<string>, page_count string, series_issn string, "
+        "series_numbering array<string>, title string, "
+        "author array<string>, extra string",
+    )
+    # DC: scalars only, publishDate for the year, no page_count/series_*
+    dc = spark.createDataFrame(
+        [("d1", "b", "Text", "123", "2001", "T", "Jones"),
+         ("d2", "b", " ", None, None, None, None)],
+        "_id string, source_id string, format string, isbn string, "
+        "publishDate string, title string, author string",
+    )
+    arrays = {"isbn", "unique_ids", "issn"}
+    want_types = [("_id", "string"), ("source_id", "string")] + [
+        (f, "array<string>" if f in arrays else "string")
+        for f in DD._VERIFY_FIELDS
+    ]
+    none = dict.fromkeys(
+        ["access_restrictions", "publish_year", "page_count",
+         "series_issn", "series_numbering"]
+    )
+    empty = {"isbn": [], "unique_ids": [], "issn": []}
+    want = {
+        "m1": dict(none, _id="m1", source_id="a", format="Book",
+                   isbn=["9780306406157"], unique_ids=["(OCoLC)1"], issn=[],
+                   publish_year="1999", page_count="120",
+                   series_numbering="3", title="A title", author=""),
+        "d1": dict(none, **empty, _id="d1", source_id="b", format="Text",
+                   publish_year="2001", title="T", author="Jones"),
+        "d2": dict(none, **empty, _id="d2", source_id="b", format="",
+                   title="", author=""),
+    }
+    for wide in (marc, dc):
+        out = DD.verify_frame(wide)
+        assert out.columns == ["_id", "source_id", *DD._VERIFY_FIELDS]
+        assert out.dtypes == want_types
+        for r in out.collect():
+            assert r.asDict() == want[r["_id"]]

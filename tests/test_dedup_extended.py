@@ -207,43 +207,44 @@ def test_check_dedup_consistency_clean(spark):
 
 
 # ---------------------------------------------------------------------------
-# Distributed connected-components fallback (driver_threshold=0 forces it)
+# Distributed connected-components fallback (_DRIVER_EDGE_LIMIT=0 forces it)
 # ---------------------------------------------------------------------------
 
 
-def _cc_both_paths(spark, edges):
+def _cc_both_paths(spark, monkeypatch, edges):
     df = spark.createDataFrame(edges, "id_a string, id_b string")
     driver = sorted(
         map(tuple, DD.connected_components(df).collect())
     )
+    monkeypatch.setattr(DD, "_DRIVER_EDGE_LIMIT", 0)
     distributed = sorted(
-        map(tuple, DD.connected_components(df, driver_threshold=0).collect())
+        map(tuple, DD.connected_components(df).collect())
     )
     return driver, distributed
 
 
-def test_cc_distributed_star_matches_driver(spark):
+def test_cc_distributed_star_matches_driver(spark, monkeypatch):
     """Skewed star graph (one hub, 300 leaves): the distributed
     label-propagation fallback must produce component-identical output
     to the driver union-find."""
     edges = [("hub", f"leaf{i:03d}") for i in range(300)]
-    driver, distributed = _cc_both_paths(spark, edges)
+    driver, distributed = _cc_both_paths(spark, monkeypatch, edges)
     assert driver == distributed
     assert all(c == "hub" for _, c in distributed)
 
 
-def test_cc_distributed_long_chain_matches_driver(spark):
+def test_cc_distributed_long_chain_matches_driver(spark, monkeypatch):
     """200-node chain — label propagation's worst case. Pointer jumping
     must converge within the default max_iterations (one-hop-only
     propagation would need 200 rounds and fail)."""
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(199)]
-    driver, distributed = _cc_both_paths(spark, edges)
+    driver, distributed = _cc_both_paths(spark, monkeypatch, edges)
     assert driver == distributed
     assert all(c == "n000" for _, c in distributed)
     assert len(distributed) == 200
 
 
-def test_cc_distributed_mixed_components(spark):
+def test_cc_distributed_mixed_components(spark, monkeypatch):
     """Several disjoint components of mixed shapes resolve identically
     on both paths."""
     edges = (
@@ -252,11 +253,11 @@ def test_cc_distributed_mixed_components(spark):
         + [(f"c{i}", f"c{i + 1}") for i in range(10)]  # short chain
         + [("z9", "z1"), ("z9", "z2"), ("z9", "z3")]  # star, hub not min
     )
-    driver, distributed = _cc_both_paths(spark, edges)
+    driver, distributed = _cc_both_paths(spark, monkeypatch, edges)
     assert driver == distributed
 
 
-def test_cc_distributed_nonnullable_edges(spark):
+def test_cc_distributed_nonnullable_edges(spark, monkeypatch):
     """Edges built from range() (non-nullable columns) used to trip
     Spark's Union constraint rewrite inside the propagation loop
     ("key not found" in UnionBase.rewriteConstraints) — found by the
@@ -273,7 +274,8 @@ def test_cc_distributed_nonnullable_edges(spark):
         )
     )
     report = {}
-    comp = DD.connected_components(edges, driver_threshold=0, report=report)
+    monkeypatch.setattr(DD, "_DRIVER_EDGE_LIMIT", 0)
+    comp = DD.connected_components(edges, report=report)
     rows = {r["id"]: r["component"] for r in comp.collect()}
     assert report["path"] == "distributed"
     assert len(rows) == 96
@@ -281,7 +283,7 @@ def test_cc_distributed_nonnullable_edges(spark):
         assert rows[f"r{i:09d}"] == f"r{(i // 8) * 8:09d}"
 
 
-def test_cc_distributed_nonconvergence_raises(spark):
+def test_cc_distributed_nonconvergence_raises(spark, monkeypatch):
     """Running out of iterations is a loud error, not silent wrong
     components."""
     import pytest
@@ -290,13 +292,14 @@ def test_cc_distributed_nonconvergence_raises(spark):
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(99)],
         "id_a string, id_b string",
     )
+    monkeypatch.setattr(DD, "_DRIVER_EDGE_LIMIT", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        DD.connected_components(edges, max_iterations=1, driver_threshold=0)
+        DD.connected_components(edges, max_iterations=1)
 
 
-def test_near_dup_prune_distributed_cc(spark):
+def test_near_dup_prune_distributed_cc(spark, monkeypatch):
     """near_dup_prune inherits the distributed CC fallback; forcing it
-    (cc_driver_threshold=0) must not change the output."""
+    (_DRIVER_EDGE_LIMIT=0) must not change the output."""
     from recordmanager_spark.operators.text_dedup import near_dup_prune
 
     docs = spark.createDataFrame(
@@ -310,18 +313,14 @@ def test_near_dup_prune_distributed_cc(spark):
     default = sorted(
         map(tuple, near_dup_prune(docs, pairs, quality_col="q").collect())
     )
+    monkeypatch.setattr(DD, "_DRIVER_EDGE_LIMIT", 0)
     forced = sorted(
-        map(
-            tuple,
-            near_dup_prune(
-                docs, pairs, quality_col="q", cc_driver_threshold=0
-            ).collect(),
-        )
+        map(tuple, near_dup_prune(docs, pairs, quality_col="q").collect())
     )
     assert default == forced
 
 
-def test_assign_components_distributed_matches_driver(spark):
+def test_assign_components_distributed_matches_driver(spark, monkeypatch):
     """_assign_components' distributed branch (CC + windowed
     one-per-source enforcement) agrees with the driver-side assignment
     on conflicts and dissolving groups."""
@@ -344,87 +343,33 @@ def test_assign_components_distributed_matches_driver(spark):
         ],
         "_id string, source_id string",
     )
-    task = sorted(
-        map(tuple, DD._assign_components(edges, records).collect())
-    )
-    driver = sorted(
-        map(
-            tuple,
-            DD._assign_components(
-                edges, records, strategy="driver"
-            ).collect(),
+
+    def assign():
+        return sorted(
+            map(
+                tuple,
+                DD._assign_components(
+                    edges, records, strategy="adaptive"
+                ).collect(),
+            )
         )
-    )
-    distributed = sorted(
-        map(
-            tuple,
-            DD._assign_components(
-                edges, records, strategy="distributed"
-            ).collect(),
-        )
-    )
-    assert task == driver == distributed
+
+    driver = assign()
+    monkeypatch.setattr(DD, "_DRIVER_EDGE_LIMIT", 0)
+    distributed = assign()
+    assert driver == distributed
+    assert ("a2", None) in driver and ("e1", None) in driver
 
 
-def test_assign_components_task_threshold_is_loud(spark):
-    """The lazy single-task path must REFUSE (loudly, at materialization)
-    past its edge-count memory contract instead of degrading silently."""
+def test_assign_components_rejects_other_strategies(spark):
     import pytest
-    from pyspark.errors.exceptions.captured import PythonException
 
     edges = spark.createDataFrame(
-        [("a1", "b1", "s1", "s2"), ("c1", "c2", "s1", "s2")],
+        [("a1", "b1", "s1", "s2")],
         "id_a string, id_b string, src_a string, src_b string",
     )
     records = spark.createDataFrame(
-        [("a1", "s1"), ("b1", "s2"), ("c1", "s1"), ("c2", "s2")],
-        "_id string, source_id string",
+        [("a1", "s1"), ("b1", "s2")], "_id string, source_id string"
     )
-    lazy = DD._assign_components(edges, records, driver_threshold=1)
-    with pytest.raises(PythonException, match="cc_strategy='distributed'"):
-        lazy.collect()
-
-
-def test_take_all_partitions_conf_isolated_from_parent(spark):
-    """The initialNumPartitions pin must be invisible to concurrent
-    queries on the parent session: the take runs in a newSession()
-    clone with its own SQLConf (r8 ADVICE / r9 verdict item)."""
-    import threading
-
-    key = "spark.sql.limit.initialNumPartitions"
-    assert spark.conf.get(key, None) is None
-
-    df = spark.range(0, 10_000, numPartitions=8).selectExpr(
-        "cast(id as string) AS id_a",
-        "cast(id + 1 as string) AS id_b",
-    )
-    seen: list[str] = []
-    stop = threading.Event()
-
-    def watch():
-        while not stop.is_set():
-            v = spark.conf.get(key, None)
-            if v is not None:
-                seen.append(v)
-
-    t = threading.Thread(target=watch)
-    t.start()
-    try:
-        rows = DD._take_all_partitions(df, 20_000)
-    finally:
-        stop.set()
-        t.join()
-    assert len(rows) == 10_000
-    assert rows[0].id_a is not None
-    # the parent session's conf was never mutated, not even transiently
-    assert seen == []
-    assert spark.conf.get(key, None) is None
-
-
-def test_take_all_partitions_matches_plain_take(spark):
-    df = spark.range(0, 57, numPartitions=5).selectExpr(
-        "cast(id as string) AS id_a", "cast(id * 2 as string) AS id_b"
-    )
-    got = sorted((r.id_a, r.id_b) for r in DD._take_all_partitions(df, 1000))
-    want = sorted((r.id_a, r.id_b) for r in df.collect())
-    assert got == want
+    with pytest.raises(ValueError, match="adaptive"):
+        DD._assign_components(edges, records, strategy="task")

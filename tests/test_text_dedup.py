@@ -215,30 +215,6 @@ def test_near_dup_prune_no_quality_min_id(spark):
     assert out["x"].keep is True and out["y"].keep is False
 
 
-def test_near_dup_prune_flag_strategy_identical(spark):
-    """broadcast / forced-shuffle / AQE-default keep-flag joins agree."""
-    from recordmanager_spark.operators.text_dedup import near_dup_prune
-
-    docs = spark.createDataFrame(
-        [(f"d{i}", float(i % 3)) for i in range(12)], "doc_id string, q double"
-    )
-    pairs = spark.createDataFrame(
-        [(f"d{i}", f"d{i + 4}") for i in range(8)], "id_a string, id_b string"
-    )
-
-    def rows(**kw):
-        return sorted(
-            map(
-                tuple,
-                near_dup_prune(docs, pairs, quality_col="q", **kw).collect(),
-            )
-        )
-
-    default = rows()
-    assert default == rows(broadcast_flags=True)
-    assert default == rows(broadcast_flags=False)
-
-
 def test_minhash_incremental_batch_vs_index(spark):
     from recordmanager_spark.operators import text_dedup as TD
 

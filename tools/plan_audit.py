@@ -160,12 +160,11 @@ AUDITS = [
     ("geocode_customers", 0, True, False,
      "cache join broadcasts; record side stays narrow"),
     ("dedup_er", 3, False, False,
-     "ADAPTIVE default re-pinned per r6 ADVICE: the sizing take() at "
-     "construction runs the one blocking-key shuffle (101-cap) + pair "
-     "distinct and resolves components driver-side, auto-falling back "
-     "to distributed label propagation past 2M edges — the registered "
-     "plan is then the local assignment relation (0-3 exchanges "
-     "depending on path); cc_strategy='task' remains the lazy opt-in"),
+     "one component pass: the sizing take() at construction runs the "
+     "one blocking-key shuffle (101-cap) + pair distinct and resolves "
+     "components driver-side, falling back to distributed label "
+     "propagation past 2M edges — the registered plan is then the local "
+     "assignment relation (0-3 exchanges depending on path)"),
     ("exact_dup_docs", 3, False, False,
      "fingerprint canonical-id via map-side-combinable groupBy(fp) + "
      "join-back (AQE-skew-eligible), NOT a window on the unbounded fp "
