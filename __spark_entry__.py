@@ -948,7 +948,7 @@ def qdc_extract(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def lido_extract(spark: SparkSession, sf: str) -> DataFrame:
-    """LIDO museum-object extraction via xpath expressions."""
+    """LIDO museum-object extraction (one ElementTree pass per record)."""
     p = _t(spark, sf, "part", spread=True)
     year = (F.lit(1800) + F.pmod(F.col("p_partkey"), F.lit(200))).cast("string")
     xml = F.format_string(
@@ -1032,7 +1032,7 @@ def copy_down_merged(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def ead_extract(spark: SparkSession, sf: str) -> DataFrame:
-    """EAD component extraction via namespace-agnostic xpath expressions."""
+    """EAD component extraction (one from_xml parse per component)."""
     s = _t(spark, sf, "supplier")
     k = F.col("s_suppkey").cast("string")
     xml = F.format_string(
@@ -1163,7 +1163,7 @@ def work_keys_marc(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def dc_extract(spark: SparkSession, sf: str) -> DataFrame:
-    """DC XML round-trip through the xpath-based extractor (Record/Dc.php)."""
+    """DC XML round-trip through the DC extractor (Record/Dc.php)."""
     c = _t(spark, sf, "customer")
     year = (F.lit(2000) + F.pmod(F.col("c_custkey"), F.lit(20))).cast("string")
     xml = F.format_string(
@@ -1176,11 +1176,7 @@ def dc_extract(spark: SparkSession, sf: str) -> DataFrame:
         "<type>Text</type></dc>",
         F.col("c_custkey").cast("string"), F.col("c_name"), year,
     )
-    # pins the XPATH engine: this query is the parity/fallback baseline;
-    # dc_extract_struct covers the struct default (10x faster honest)
-    out = DC.to_solr_columns(
-        c.select("c_custkey", xml.alias("xml")), "xml", engine="xpath"
-    )
+    out = DC.to_solr_columns(c.select("c_custkey", xml.alias("xml")), "xml")
     return out.select(
         "c_custkey",
         "id",
@@ -1195,7 +1191,7 @@ def dc_extract(spark: SparkSession, sf: str) -> DataFrame:
 
 def pipeline_end_to_end(spark: SparkSession, sf: str) -> DataFrame:
     """The §3 lifecycle in one query: OAI-PMH pages from two overlapping
-    sources → harvest parse → DC extraction (single-parse engine) → dedup
+    sources → harvest parse → DC extraction (one from_xml parse) → dedup
     keys → blocking + verification + connected components → group merge.
     One row per dedup group with the merged title and member ids."""
     from recordmanager_spark.sources import oaipmh as OAI
@@ -1225,7 +1221,7 @@ def pipeline_end_to_end(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     recs = pages("pa").unionByName(pages("pb"))
-    extracted = DC.to_solr_columns(recs, "metadata_xml", engine="struct")
+    extracted = DC.to_solr_columns(recs, "metadata_xml")
     empty = F.array().cast("array<string>")
     records = extracted.select(
         "_id",
@@ -1540,8 +1536,8 @@ def marc_holdings_normalize(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def dc_extract_struct(spark: SparkSession, sf: str) -> DataFrame:
-    """DC extraction via the single-parse from_xml engine (the scale path:
-    one StAX parse per record instead of one DOM parse per xpath column)."""
+    """DC extraction through the single from_xml parse per record (one
+    StAX parse feeds every column)."""
     c = _t(spark, sf, "customer")
     year = (F.lit(2000) + F.pmod(F.col("c_custkey"), F.lit(20))).cast("string")
     xml = F.format_string(
@@ -1554,9 +1550,7 @@ def dc_extract_struct(spark: SparkSession, sf: str) -> DataFrame:
         "<type>Text</type></dc>",
         F.col("c_custkey").cast("string"), F.col("c_name"), year,
     )
-    out = DC.to_solr_columns(
-        c.select("c_custkey", xml.alias("xml")), "xml", engine="struct"
-    )
+    out = DC.to_solr_columns(c.select("c_custkey", xml.alias("xml")), "xml")
     return out.select(
         "c_custkey",
         "id",

@@ -71,21 +71,20 @@ def _php_regex(pat: str) -> tuple[str, bool]:
     return m.group(1), "i" in m.group(2)
 
 
-def extract_wide(
-    df: DataFrame, fmt: str, xml_col: str = "original_data", **kwargs
-) -> DataFrame:
-    """Route a record frame to its format driver (Record/PluginManager
-    analogue). ``marc`` sniffs MARC-in-JSON vs MARCXML from the payload's
-    first byte; the rest dispatch on the reference's format names."""
+def extract_wide(df: DataFrame, fmt: str) -> DataFrame:
+    """Route a record frame's ``original_data`` payload to its format
+    driver (Record/PluginManager analogue). ``marc`` sniffs MARC-in-JSON
+    vs MARCXML from the payload's first byte; the rest dispatch on the
+    reference's format names."""
     fmt = (fmt or "").lower()
     if fmt in ("marc", "marcxml"):
         from .extractors import marc as M
 
-        probe = df.select(xml_col).first()
+        probe = df.select("original_data").first()
         is_json = bool(probe and (probe[0] or "").lstrip().startswith("{"))
         parse = M.parse_marc_in_json if is_json else M.parse_marcxml
-        parsed = df.withColumn("__m", parse(F.col(xml_col)))
-        wide = M.to_solr_columns(parsed, "__m", **kwargs)
+        parsed = df.withColumn("__m", parse(F.col("original_data")))
+        wide = M.to_solr_columns(parsed, "__m")
         return wide.drop("__m")
     from .extractors import (  # noqa: PLC0415
         dc, doaj, eaccpf, ead, ead3, ese, forward, forward_authority,
@@ -104,10 +103,10 @@ def extract_wide(
         raise SystemExit(f"unknown format {fmt!r} (have: {sorted(table)})")
     if fmt in ("ead", "ead3"):
         return mod.to_solr_columns(
-            df, xml_col, archive_id_col=None, archive_title_col=None,
-            sequence_col=None, **kwargs,
+            df, "original_data", archive_id_col=None, archive_title_col=None,
+            sequence_col=None,
         )
-    return mod.to_solr_columns(df, xml_col, **kwargs)
+    return mod.to_solr_columns(df, "original_data")
 
 
 def _apply_xslt_chain(df, col, names, cfg, xsl_dir, setting):

@@ -6,84 +6,22 @@ Behavioral spec: Record/Dc.php:153-223 in the reference. Distinctive ops:
 - identifier/description classified as url when matching ^https?
 - everything runs through trailing-punctuation strip.
 
-Spark-first: all element access uses the built-in ``xpath`` SQL function with
-local-name() tests (namespace-agnostic, matches SimpleXML's lax access), so
-the whole projection is JVM-side; no Python UDF at all for DC.
+Spark-first: one JVM ``from_xml`` parse per record (namespace prefixes
+stripped first, so access is as lax as SimpleXML's) feeds every column;
+the whole projection is JVM-side, with no Python UDF for DC.
 """
 
 from __future__ import annotations
 
-import xml.etree.ElementTree as _ET
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 from ..functions import keys as K
 from recordmanager_spark.sparkcompat import try_element_at
 
 
-@pandas_udf(BooleanType())
-def well_formed_xml(xml: pd.Series) -> pd.Series:
-    """True when the string parses as XML.
-
-    Spark's ``xpath`` expression RAISES on malformed XML (it would kill a
-    whole stage on one dirty record at scale), so extraction masks invalid
-    documents to NULL first. The reference rejects malformed records at
-    harvest time (StoreRecordTrait) — same contract, enforced here.
-    """
-
-    def ok(s):
-        if not s:
-            return False
-        try:
-            _ET.fromstring(s)
-            return True
-        except _ET.ParseError:
-            return False
-
-    return xml.map(ok)
-
-
-def _els(xml: Column, name: str) -> Column:
-    """All text values of elements with the given local name."""
-    return F.xpath(xml, F.lit(f'//*[local-name()="{name}"]/text()'))
-
-
-def _el(xml: Column, name: str) -> Column:
-    return F.coalesce(try_element_at(_els(xml, name), 1), F.lit(""))
-
-
 def _strip_trail_all(arr: Column) -> Column:
     return F.transform(arr, lambda v: K.strip_trailing_punctuation(F.trim(v)))
-
-
-def dc_languages(xml: Column) -> Column:
-    """Split language strings on whitespace, then into 3-char codes."""
-    words = F.flatten(
-        F.transform(_els(xml, "language"), lambda v: F.split(F.trim(v), "\\s+"))
-    )
-    # str_split($language, 3): chunk each word into 3-char pieces
-    chunks = F.flatten(
-        F.transform(
-            words,
-            lambda w: F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(
-                        (F.ceil(F.length(w) / F.lit(3)) - 1).cast("int"), F.lit(0)
-                    ),
-                ),
-                lambda i: F.substring(w, i * 3 + 1, 3),
-            ),
-        )
-    )
-    # normalizeLanguageStrings: lowercase + trim, drop empties
-    return F.filter(
-        F.transform(chunks, lambda c: F.lower(F.trim(c))), lambda c: c != ""
-    )
 
 
 _DC_STRUCT_SCHEMA = (
@@ -103,16 +41,13 @@ def _strip_ns_prefixes(xml: Column) -> Column:
 def dc_struct(xml: Column) -> Column:
     """Single-parse projection of a flat DC record into a struct of arrays.
 
-    The scale path: ONE JVM StAX parse per record (``from_xml``) instead of
-    one DOM parse per xpath column (~12 for the full projection), no Python
-    gate (malformed input yields null fields instead of raising), and the
+    ONE JVM StAX parse per record (``from_xml``), no Python gate
+    (malformed input yields null fields instead of raising), and the
     whole projection stays inside whole-stage codegen.
 
     Contract: the record root's DIRECT children are the DC elements —
     callers unwrap OAI envelopes first (the splitter already emits bare
-    records). Namespace prefixes are stripped before the parse; the xpath
-    engine remains the fallback for exotic layouts (nested metadata,
-    prefix collisions inside text).
+    records). Namespace prefixes are stripped before the parse.
     """
     return F.from_xml(
         _strip_ns_prefixes(xml),
@@ -122,8 +57,8 @@ def dc_struct(xml: Column) -> Column:
 
 
 def _struct_els(parsed: Column, name: str) -> Column:
-    # malformed records (corrupt marker set) yield NULL like the gated
-    # xpath path; missing elements in valid records yield []
+    # malformed records (corrupt marker set) yield NULL; missing
+    # elements in valid records yield []
     return F.when(
         parsed["_corrupt_record"].isNull(),
         F.transform(
@@ -138,71 +73,13 @@ def _struct_el(parsed: Column, name: str) -> Column:
 
 
 def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    id_prefix: str | None = None,
-    validate: bool = True,
-    engine: str = "struct",
+    df: DataFrame, xml_col: str = "xml", id_prefix: str | None = None
 ) -> DataFrame:
-    if engine == "struct":
-        return _to_solr_columns_struct(df, xml_col, id_prefix)
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-    title = K.strip_trailing_punctuation(F.trim(_el(x, "title")))
-    identifiers = F.transform(_els(x, "identifier"), lambda v: F.trim(v))
-    descriptions = F.transform(_els(x, "description"), lambda v: F.trim(v))
-    urls = F.concat(
-        F.filter(identifiers, lambda v: v.rlike("^https?")),
-        F.filter(descriptions, lambda v: v.rlike("^https?")),
-    )
-    isbn_digits = F.transform(identifiers, lambda v: K.normalize_isbn(v))
-    local_id = F.trim(_el(x, "recordID"))
-    return df.withColumns(
-        {
-            "id": F.concat(F.lit(id_prefix + "."), local_id) if id_prefix else local_id,
-            "record_format": F.lit("dc"),
-            "ctrlnum": local_id,
-            "allfields": _strip_trail_all(
-                F.xpath(x, F.lit("//*[not(*)]/text()"))
-            ),
-            "language": dc_languages(x),
-            "format": F.trim(_el(x, "type")),
-            "author": K.strip_trailing_punctuation(F.trim(_el(x, "creator"))),
-            "author2": _strip_trail_all(_els(x, "contributor")),
-            "title": title,
-            "title_full": title,
-            "title_short": try_element_at(F.split(title, " : ", 2), 1),
-            "title_sub": F.coalesce(
-                try_element_at(F.split(title, " : ", 2), 2), F.lit("")
-            ),
-            "title_sort": K.create_sort_title(title),
-            "publisher": F.array(
-                K.strip_trailing_punctuation(F.trim(_el(x, "publisher")))
-            ),
-            "publishDate": F.regexp_extract(_el(x, "date"), "(\\d{4})", 1),
-            "isbn": F.array_distinct(
-                F.filter(isbn_digits, lambda v: v.isNotNull() & (v != ""))
-            ),
-            "topic": _strip_trail_all(_els(x, "subject")),
-            "url": urls,
-            "contents": F.filter(
-                descriptions,
-                lambda v: ~v.rlike("^https?") & ~v.rlike("^\\d+\\.\\d+$") & (v != ""),
-            ),
-        }
-    )
+    """Project a DC record into the wide Solr columns.
 
-
-def _to_solr_columns_struct(
-    df: DataFrame, xml_col: str, id_prefix: str | None
-) -> DataFrame:
-    """Struct-engine projection — same output columns as the xpath path.
-
-    Known divergence: ``allfields`` concatenates fields in schema order
-    (title, creator, …) rather than document order — the struct parse
-    doesn't retain element positions across names. Everything else is
-    value-identical for flat DC records.
+    ``allfields`` concatenates fields in schema order (recordID, title,
+    creator, …) rather than document order: the struct parse does not
+    keep element positions across names.
     """
     # Materialize the parse ONCE in its own projection and reference the
     # struct column from the field expressions. Inlining dc_struct(...)

@@ -25,37 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import keys as K
-from .dc import _el, _els, well_formed_xml
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
-
-
-def doaj_languages(xml: Column) -> Column:
-    """First ``language`` element split on spaces, then into 3-char chunks
-    (Doaj.php:174-181 — unlike DC this reads only the first element)."""
-    words = F.split(F.trim(_el(xml, "language")), " ")
-    chunks = F.flatten(
-        F.transform(
-            words,
-            lambda w: F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(
-                        (F.ceil(F.length(w) / F.lit(3)) - 1).cast("int"), F.lit(0)
-                    ),
-                ),
-                lambda i: F.substring(w, i * 3 + 1, 3),
-            ),
-        )
-    )
-    return F.filter(
-        F.transform(chunks, lambda c: F.lower(F.trim(c))), lambda c: c != ""
-    )
-
-
-def _first_per_block(xml: Column, block: str, *path: str) -> Column:
-    """For each <block>, the text of its first nested path element."""
-    steps = "".join(f'/*[local-name()="{p}"][1]' for p in path)
-    return F.xpath(xml, F.lit(f'//*[local-name()="{block}"]{steps}/text()'))
 
 
 def fulltext_column(xml: Column, xpaths: list[str]) -> Column:
@@ -71,8 +42,6 @@ def fulltext_column(xml: Column, xpaths: list[str]) -> Column:
     return F.regexp_replace(joined, r"([^\s]+)-\s*[\n\r]+\s*", r"$1")
 
 
-# --- single-parse struct engine (the scale path, and the default) ----------
-
 _DOAJ_STRUCT_SCHEMA = (
     "recordID array<string>, title array<string>, language array<string>, "
     "publisher array<string>, publicationDate array<string>, "
@@ -83,14 +52,12 @@ _DOAJ_STRUCT_SCHEMA = (
 )
 
 
-def _to_solr_columns_struct(
+def to_solr_columns(
     df: DataFrame,
-    xml_col: str,
-    oai_id_col: str | None,
-    fulltext_xpaths: list[str] | None,
+    xml_col: str = "xml",
+    oai_id_col: str | None = None,
+    fulltext_xpaths: list[str] | None = None,
 ) -> DataFrame:
-    from .dc import _strip_ns_prefixes
-
     df = df.withColumn(
         "__dj_parsed",
         F.from_xml(
@@ -114,6 +81,7 @@ def _to_solr_columns_struct(
 
     record_id = F.trim(first("recordID"))
     if oai_id_col is not None:
+        # oai:<prefix>:<local> → <local>; otherwise the raw oai id
         oai = F.col(oai_id_col)
         parts = F.split(oai, ":", 3)
         fallback = F.when(
@@ -173,6 +141,8 @@ def _to_solr_columns_struct(
         ),
         lambda v: v != "",
     )
+    # only the first language element (unlike DC), split on spaces, then
+    # into 3-char chunks (Doaj.php:174-181)
     words = F.split(F.trim(first("language")), " ")
     chunks = F.flatten(
         F.transform(
@@ -229,71 +199,3 @@ def _to_solr_columns_struct(
         cols["fulltext"] = fulltext_column(gated, fulltext_xpaths)
     return df.withColumns(cols).drop("__dj_parsed")
 
-
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    oai_id_col: str | None = None,
-    fulltext_xpaths: list[str] | None = None,
-    validate: bool = True,
-    engine: str = "struct",
-) -> DataFrame:
-    if engine == "struct":
-        return _to_solr_columns_struct(
-            df, xml_col, oai_id_col, fulltext_xpaths
-        )
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-    record_id = F.trim(_el(x, "recordID"))
-    if oai_id_col is not None:
-        # oai:<prefix>:<local> → <local>; otherwise the raw oai id
-        oai = F.col(oai_id_col)
-        parts = F.split(oai, ":", 3)
-        fallback = F.when(
-            (try_element_at(parts, 1) == "oai")
-            & (F.coalesce(try_element_at(parts, 3), F.lit("")) != ""),
-            try_element_at(parts, 3),
-        ).otherwise(oai)
-        record_id = F.when(record_id != "", record_id).otherwise(fallback)
-    title = K.strip_trailing_punctuation(F.trim(_el(x, "title")))
-    cols = {
-        "id": record_id,
-        "record_format": F.lit("doaj"),
-        "ctrlnum": record_id,
-        "allfields": F.filter(
-            F.transform(
-                F.xpath(x, F.lit("/*/*/text()")),
-                lambda v: K.strip_trailing_punctuation(F.trim(v)),
-            ),
-            lambda v: v != "",
-        ),
-        "language": doaj_languages(x),
-        "format": F.lit("Article"),
-        "author": F.filter(
-            F.transform(
-                _first_per_block(x, "authors", "author", "name"), lambda v: F.trim(v)
-            ),
-            lambda v: v != "",
-        ),
-        "title": title,
-        "title_full": title,
-        "title_short": try_element_at(F.split(title, " : ", 2), 1),
-        "title_sub": F.coalesce(try_element_at(F.split(title, " : ", 2), 2), F.lit("")),
-        "title_sort": K.create_sort_title(F.trim(_el(x, "title"))),
-        "publisher": F.array(K.strip_trailing_punctuation(F.trim(_el(x, "publisher")))),
-        "publishDate": F.when(
-            F.substring(F.trim(_el(x, "publicationDate")), 1, 4).rlike("^[0-9]{4}$"),
-            F.substring(F.trim(_el(x, "publicationDate")), 1, 4),
-        ).otherwise(F.lit("")),
-        "topic": F.filter(
-            F.transform(
-                _first_per_block(x, "keywords", "keyword"), lambda v: F.trim(v)
-            ),
-            lambda v: v != "",
-        ),
-        "url": F.trim(_el(x, "fullTextUrl")),
-    }
-    if fulltext_xpaths:
-        cols["fulltext"] = fulltext_column(x, fulltext_xpaths)
-    return df.withColumns(cols)

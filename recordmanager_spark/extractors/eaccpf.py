@@ -16,7 +16,7 @@ Behavioral spec (reference, NOT code): Record/Eaccpf.php:70-383 —
 - source = maintenance agency name
 - allfields = agency name + biogHist paragraphs + heading + use_for.
 
-xpath expressions behind the shared XML gate, like the other drivers.
+One ``from_xml`` parse per record feeds every column.
 Replayed against the reference's eaccpf1.xml golden fixture in
 tests/test_golden_authority.py.
 """
@@ -26,52 +26,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dc import well_formed_xml
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
 
 _RDA_BIRTH_DATE = "http://rdaregistry.info/Elements/a/P50121"
 _RDA_DEATH_DATE = "http://rdaregistry.info/Elements/a/P50120"
 _RDA_BIRTH_PLACE = "http://rdaregistry.info/Elements/a/P50119"
 _RDA_DEATH_PLACE = "http://rdaregistry.info/Elements/a/P50118"
-
-# nameEntryParallel / function nodes probed positionally (records carry a
-# handful; 6 covers the corpus)
-_MAX_PARALLEL = 6
-
-
-def _els(xml: Column, path: str) -> Column:
-    steps = "/".join(f'*[local-name()="{p}"]' for p in path.split("/"))
-    return F.xpath(xml, F.lit(f"//{steps}/text()"))
-
-
-def _el(xml: Column, path: str) -> Column:
-    return F.coalesce(try_element_at(_els(xml, path), 1), F.lit(""))
-
-
-def _typed_year(xml: Column, localtype: str) -> Column:
-    dates = F.xpath(
-        xml,
-        F.lit(
-            f'//*[local-name()="date" and @localType="{localtype}"]'
-            "/@standardDate"
-        ),
-    )
-    years = F.filter(
-        F.transform(dates, lambda d: F.regexp_extract(d, "(\\d{4})", 1)),
-        lambda y: y != "",
-    )
-    return F.coalesce(try_element_at(years, 1), F.lit(""))
-
-
-def _typed_place(xml: Column, localtype: str) -> Column:
-    vals = F.xpath(
-        xml,
-        F.lit(
-            f'//*[local-name()="place"][@localType="{localtype}"]'
-            '/*[local-name()="placeEntry"][1]/text()'
-        ),
-    )
-    return F.coalesce(try_element_at(vals, 1), F.lit(""))
 
 
 def _name_pair(name1: Column, name2: Column) -> Column:
@@ -85,14 +46,9 @@ def _name_pair(name1: Column, name2: Column) -> Column:
     )
 
 
-# --- single-parse struct engine (the scale path, and the default) ----------
-#
-# The xpath engine issues ~20 XPath calls per record (73+ evaluator
-# objects after inlining) and probes nameEntryParallel / function nodes
-# POSITIONALLY up to _MAX_PARALLEL — a cap the struct engine removes
-# (arrays are natural in from_xml). One JVM parse; the corrupt-record
-# marker doubles as the validity gate; struct access mirrors the
-# reference's direct chains ($doc->cpfDescription->identity->nameEntry).
+# One JVM parse; the corrupt-record marker doubles as the validity gate;
+# struct access mirrors the reference's direct chains
+# ($doc->cpfDescription->identity->nameEntry).
 
 _PARTS = "array<struct<_localType:string,_VALUE:string>>"
 _NE = f"array<struct<part:{_PARTS}>>"
@@ -147,9 +103,7 @@ def _last_typed_part(parts: Column, toni: str) -> Column:
     return F.coalesce(try_element_at(vals, -1), F.lit(""))
 
 
-def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
-    from .dc import _strip_ns_prefixes
-
+def to_solr_columns(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     df = df.withColumn(
         "__ec_parsed",
         F.from_xml(
@@ -197,51 +151,21 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
         _last_typed_part(direct_parts, "TONI4"),
     )
     # one "TONI1 TONI4" heading per nameEntryParallel, from its FIRST
-    # nameEntry — no positional cap in struct land
+    # nameEntry
     neps = _seg(
         identity, "nameEntryParallel", f"array<struct<nameEntry:{_NE}>>"
     )
+
+    def parallel_heading(nep: Column) -> Column:
+        parts = F.coalesce(
+            try_element_at(nep["nameEntry"], 1)["part"], _empty(_PARTS)
+        )
+        return _name_pair(
+            _last_typed_part(parts, "TONI1"), _last_typed_part(parts, "TONI4")
+        )
+
     use_for = F.filter(
-        F.coalesce(
-            F.transform(
-                neps,
-                lambda nep: F.trim(
-                    F.concat_ws(
-                        " ",
-                        F.nullif(
-                            F.trim(
-                                _last_typed_part(
-                                    F.coalesce(
-                                        try_element_at(nep["nameEntry"], 1)[
-                                            "part"
-                                        ],
-                                        _empty(_PARTS),
-                                    ),
-                                    "TONI1",
-                                )
-                            ),
-                            F.lit(""),
-                        ),
-                        F.nullif(
-                            F.trim(
-                                _last_typed_part(
-                                    F.coalesce(
-                                        try_element_at(nep["nameEntry"], 1)[
-                                            "part"
-                                        ],
-                                        _empty(_PARTS),
-                                    ),
-                                    "TONI4",
-                                )
-                            ),
-                            F.lit(""),
-                        ),
-                    )
-                ),
-            ),
-            es,
-        ),
-        lambda v: v != "",
+        F.coalesce(F.transform(neps, parallel_heading), es), lambda v: v != ""
     )
     heading = F.when(heading_names != "", heading_names).otherwise(
         F.coalesce(try_element_at(use_for, 1), F.lit(""))
@@ -350,8 +274,8 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
         ),
         lambda v: v.isNotNull() & (v != ""),
     )
-    # the xpath engine's //occupation/term matches occupations-wrapped
-    # AND bare occupation elements under description; accept both
+    # occupation terms from occupations-wrapped AND bare occupation
+    # elements under description
     occ_nodes = F.concat(
         _seg(
             _seg(
@@ -439,6 +363,8 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
             "language": F.trim(first(langs)),
             "source": agency,
             "agency": agency,
+            # getAllFields (Eaccpf.php:113-130): agency + biogHist
+            # paragraphs + heading + use_for, in that order
             "allfields": F.when(
                 ok,
                 F.filter(
@@ -454,123 +380,3 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
         }
     ).drop("__ec_parsed")
 
-
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    validate: bool = True,
-    engine: str = "struct",
-) -> DataFrame:
-    if engine == "struct":
-        return _to_solr_columns_struct(df, xml_col)
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-
-    def last_part(scope: str, toni: str) -> Column:
-        vals = F.xpath(
-            x,
-            F.lit(f'{scope}/*[local-name()="part"][@localType="{toni}"]/text()'),
-        )
-        return F.coalesce(try_element_at(vals, -1), F.lit(""))
-
-    direct_entry = (
-        '//*[local-name()="identity"]/*[local-name()="nameEntry"]'
-    )
-    heading_names = _name_pair(
-        last_part(direct_entry, "TONI1"), last_part(direct_entry, "TONI4")
-    )
-
-    use_for_parts = []
-    for i in range(1, _MAX_PARALLEL + 1):
-        scope = (
-            f'(//*[local-name()="nameEntryParallel"])[{i}]'
-            '/*[local-name()="nameEntry"][1]'
-        )
-        use_for_parts.append(
-            _name_pair(last_part(scope, "TONI1"), last_part(scope, "TONI4"))
-        )
-    use_for = F.filter(F.array(*use_for_parts), lambda v: v != "")
-
-    heading = F.when(heading_names != "", heading_names).otherwise(
-        F.coalesce(try_element_at(use_for, 1), F.lit(""))
-    )
-
-    # functions typed TJ37: descriptiveNote paragraphs joined with '. '
-    activity_parts = []
-    for i in range(1, _MAX_PARALLEL + 1):
-        ps = F.xpath(
-            x,
-            F.lit(
-                f'(//*[local-name()="function"][@localType="TJ37"])[{i}]'
-                '/*[local-name()="descriptiveNote"]/*[local-name()="p"]/text()'
-            ),
-        )
-        activity_parts.append(F.array_join(ps, ". "))
-    field_of_activity = F.filter(
-        F.array(*activity_parts), lambda v: v.isNotNull() & (v != "")
-    )
-
-    related = F.xpath(
-        x,
-        F.lit(
-            '//*[local-name()="place"]'
-            f'[not(@localType="{_RDA_BIRTH_PLACE}")]'
-            f'[not(@localType="{_RDA_DEATH_PLACE}")]'
-            '/*[local-name()="placeEntry"][1]/text()'
-        ),
-    )
-
-    agency = F.trim(_el(x, "maintenanceAgency/agencyName"))
-    biog = F.filter(
-        F.transform(_els(x, "biogHist/p"), lambda v: F.trim(v)),
-        lambda v: v != "",
-    )
-    lang = F.coalesce(
-        try_element_at(
-            F.xpath(
-                x,
-                F.lit(
-                    '//*[local-name()="languageDeclaration"]'
-                    '/*[local-name()="language"]/@languageCode'
-                ),
-            ),
-            1,
-        ),
-        F.lit(""),
-    )
-
-    return df.withColumns(
-        {
-            "record_format": F.lit("eaccpf"),
-            "record_type": F.coalesce(
-                F.nullif(F.trim(_el(x, "identity/entityType")), F.lit("")),
-                F.lit("undefined"),
-            ),
-            "heading": heading,
-            "use_for": use_for,
-            "birth_date": _typed_year(x, _RDA_BIRTH_DATE),
-            "death_date": _typed_year(x, _RDA_DEATH_DATE),
-            "birth_place": _typed_place(x, _RDA_BIRTH_PLACE),
-            "death_place": _typed_place(x, _RDA_DEATH_PLACE),
-            "related_place": F.filter(
-                F.transform(related, lambda v: F.trim(v)), lambda v: v != ""
-            ),
-            "occupation": F.filter(
-                F.transform(_els(x, "occupation/term"), lambda v: F.trim(v)),
-                lambda v: v != "",
-            ),
-            "field_of_activity": field_of_activity,
-            "language": F.trim(lang),
-            "source": agency,
-            "agency": agency,
-            # getAllFields (Eaccpf.php:113-130): agency + biogHist
-            # paragraphs + heading + use_for, in that order
-            "allfields": F.filter(
-                F.concat(
-                    F.array(agency), biog, F.array(heading), use_for
-                ),
-                lambda v: v != "",
-            ),
-        }
-    )

@@ -13,17 +13,12 @@ Behavioral spec (reference, NOT code): Record/Ead.php:159-281 —
   splitter's archive metadata — our splitter carries them as columns
   (archive_id / archive_title / sequence) instead of injected XML.
 
-Two engines:
-- ``struct`` (default, the scale path): ONE JVM from_xml parse plus one
-  gated xpath for the document-order allfields leaf walk — fully JVM,
-  from_xml's corrupt-record marker doubling as the validity gate. Struct
-  field access mirrors the reference's direct-child addressing
-  (``$doc->did->repository->corpname``), where the xpath engine's ``//``
-  descendant search could over-match; description reads the FIRST
-  scopecontent only, like ``$doc->scopecontent->p`` (Ead.php:169-180).
-- ``xpath``: the original multi-xpath engine (26 evaluator objects in
-  the optimized plan — tools/plan_audit.py SIZE_AUDITS), kept as the
-  fallback and parity baseline.
+One JVM from_xml parse per component plus one gated xpath for the
+document-order allfields leaf walk; from_xml's corrupt-record marker
+doubles as the validity gate. Struct field access mirrors the
+reference's direct-child addressing (``$doc->did->repository->corpname``);
+description reads the FIRST scopecontent only, like
+``$doc->scopecontent->p`` (Ead.php:169-180).
 """
 
 from __future__ import annotations
@@ -32,24 +27,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import keys as K
-from .dc import _strip_ns_prefixes, well_formed_xml
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
 
-
-def _els(xml: Column, path: str) -> Column:
-    steps = "/".join(f'*[local-name()="{p}"]' for p in path.split("/"))
-    return F.xpath(xml, F.lit(f"//{steps}/text()"))
-
-
-def _el(xml: Column, path: str) -> Column:
-    return F.coalesce(try_element_at(_els(xml, path), 1), F.lit(""))
-
-
-def _attr(xml: Column, expr: str) -> Column:
-    return F.coalesce(try_element_at(F.xpath(xml, F.lit(expr)), 1), F.lit(""))
-
-
-# --- single-parse struct engine ---------------------------------------------
 
 _EAD_STRUCT_SCHEMA = (
     "_id string, _level string, "
@@ -85,7 +65,7 @@ def _struct_columns(p: Column, gated_xml: Column, ok: Column) -> dict[str, Colum
     es = F.array().cast("array<string>")
 
     def arr_out(col: Column) -> Column:
-        # malformed -> NULL (xpath-on-null semantics), valid-but-missing -> []
+        # malformed -> NULL, valid-but-missing -> []
         return F.when(ok, F.coalesce(col, es))
 
     def first(col: Column) -> Column:
@@ -207,98 +187,26 @@ def _struct_columns(p: Column, gated_xml: Column, ok: Column) -> dict[str, Colum
     }
 
 
-def _xpath_columns(x: Column) -> dict[str, Column]:
-    title_short = F.trim(_el(x, "did/unittitle"))
-    return {
-        "record_format": F.lit("ead"),
-        "ctrlnum": _attr(x, "/*/@id"),
-        "level": F.coalesce(
-            F.when(_attr(x, "/*/@level") != "", _attr(x, "/*/@level")),
-            F.lit(""),
-        ),
-        "description": F.when(
-            F.size(_els(x, "scopecontent/p")) > 0,
-            F.array_join(
-                F.transform(_els(x, "scopecontent/p"), lambda v: F.trim(v)), "   /   "
-            ),
-        ).otherwise(F.trim(_el(x, "scopecontent"))),
-        "author": F.filter(
-            F.transform(_els(x, "controlaccess/persname"), lambda v: F.trim(v)),
-            lambda v: (v != "-") & (v != ""),
-        ),
-        "author_corporate": F.when(
-            _el(x, "did/origination/corpname") != "",
-            F.array(F.trim(_el(x, "did/origination/corpname"))),
-        ).otherwise(
-            F.transform(_els(x, "controlaccess/corpname"), lambda v: F.trim(v))
-        ),
-        "topic": F.transform(_els(x, "controlaccess/subject"), lambda v: F.trim(v)),
-        "institution": F.coalesce(
-            F.when(
-                _el(x, "did/repository/corpname") != "",
-                _el(x, "did/repository/corpname"),
-            ),
-            F.trim(_el(x, "did/repository")),
-        ),
-        "title_short": title_short,
-        "title": title_short,
-        "title_full": title_short,
-        "title_sort": F.lower(K.strip_punctuation(title_short)),
-        "language": F.filter(
-            F.transform(
-                F.concat(
-                    F.xpath(
-                        x,
-                        F.lit(
-                            '//*[local-name()="langmaterial"]/*[local-name()="language"]/@langcode'
-                        ),
-                    ),
-                    _els(x, "langmaterial/language"),
-                ),
-                lambda v: F.lower(F.trim(v)),
-            ),
-            lambda v: v != "",
-        ),
-        "physical": F.filter(
-            F.transform(_els(x, "physdesc/extent"), lambda v: F.trim(v)),
-            lambda v: (v != "-") & (v != ""),
-        ),
-        "allfields": F.filter(
-            F.transform(F.xpath(x, F.lit("//*[not(*)]/text()")), lambda v: F.trim(v)),
-            lambda v: v != "",
-        ),
-        "hierarchytype": F.lit("Default"),
-    }
-
-
 def to_solr_columns(
     df: DataFrame,
     xml_col: str = "part_xml",
     archive_id_col: str | None = "archive_id",
     archive_title_col: str | None = "archive_title",
     sequence_col: str | None = "sequence",
-    validate: bool = True,
-    engine: str = "struct",
 ) -> DataFrame:
-    if engine == "struct":
-        out = df.withColumn(
-            "__ead_parsed",
-            F.from_xml(
-                _strip_ns_prefixes(F.col(xml_col)),
-                _EAD_STRUCT_SCHEMA,
-                {"columnNameOfCorruptRecord": "_corrupt_record"},
-            ),
-        )
-        p = F.col("__ead_parsed")
-        ok = F.col(xml_col).isNotNull() & p["_corrupt_record"].isNull()
-        out = out.withColumns(
-            _struct_columns(p, F.when(ok, F.col(xml_col)), ok)
-        ).drop("__ead_parsed")
-    else:
-        x = F.col(xml_col)
-        if validate:
-            x = F.when(well_formed_xml(x), F.col(xml_col))
-        out = df.withColumns(_xpath_columns(x))
+    out = df.withColumn(
+        "__ead_parsed",
+        F.from_xml(
+            _strip_ns_prefixes(F.col(xml_col)),
+            _EAD_STRUCT_SCHEMA,
+            {"columnNameOfCorruptRecord": "_corrupt_record"},
+        ),
+    )
+    p = F.col("__ead_parsed")
+    ok = F.col(xml_col).isNotNull() & p["_corrupt_record"].isNull()
+    out = out.withColumns(
+        _struct_columns(p, F.when(ok, F.col(xml_col)), ok)
+    ).drop("__ead_parsed")
     if archive_id_col and archive_id_col in df.columns:
         out = out.withColumn("hierarchy_top_id", F.col(archive_id_col))
     if archive_title_col and archive_title_col in df.columns:

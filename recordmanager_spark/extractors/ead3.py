@@ -23,20 +23,12 @@ Behavioral spec (reference, NOT code): Record/Ead3.php:125-589 —
   come from the EAD3 splitter's columns (Ead3.php:518-567); the
   reference injects them as <add-data> XML, we carry columns.
 
-Two engines:
-- ``struct`` (default, the scale path): ONE JVM from_xml parse plus one
-  gated xpath for the document-order allfields leaf walk. 100% JVM — the
-  from_xml corrupt-record marker doubles as the validity gate, so no
-  Python round trip at all. Also closer to the reference than the xpath
-  engine: Ead3.php addresses DIRECT children
-  (``$this->doc->controlaccess->persname``), which struct field access
-  mirrors, while ``//`` descendant search would also match nested
-  occurrences; likewise description reads the FIRST scopecontent only
-  (Ead3.php:287-298).
-- ``xpath``: the original ~20-xpath-calls-per-record engine (112
-  evaluator objects in the optimized plan after inlining — see
-  tools/plan_audit.py SIZE_AUDITS); kept as the fallback and parity
-  baseline.
+One JVM from_xml parse per component plus one gated xpath for the
+document-order allfields leaf walk; the from_xml corrupt-record marker
+doubles as the validity gate, so there is no Python round trip. Struct
+field access mirrors Ead3.php's DIRECT-child addressing
+(``$this->doc->controlaccess->persname``); description reads the FIRST
+scopecontent only (Ead3.php:287-298).
 """
 
 from __future__ import annotations
@@ -45,27 +37,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import keys as K
-from .dc import _strip_ns_prefixes, well_formed_xml
-from .ead import _attr, _el, _els
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
 
 _NO_SUBTITLE_FORMATS = ("fonds", "collection")
 _NON_SERIES_FORMATS = ("fonds", "collection", "series", "subseries", "")
 
-
-def _parts(xml: Column, *names: str) -> Column:
-    """Trimmed text of .../<names>/part elements."""
-    steps = "".join(f'/*[local-name()="{n}"]' for n in names)
-    return F.filter(
-        F.transform(
-            F.xpath(xml, F.lit(f'//{steps[1:]}/*[local-name()="part"]/text()')),
-            lambda v: F.trim(v),
-        ),
-        lambda v: v != "",
-    )
-
-
-# --- single-parse struct engine ---------------------------------------------
 
 _E3_NAMED = "array<struct<part:array<string>>>"
 _E3_DAO = "array<struct<_localtype:string,_href:string>>"
@@ -121,7 +98,7 @@ def _struct_columns(p: Column, gated_xml: Column, ok: Column) -> dict[str, Colum
         return F.filter(F.transform(cur, lambda v: F.trim(v)), lambda v: v != "")
 
     def arr_out(col: Column) -> Column:
-        # malformed -> NULL (xpath-on-null semantics), valid-but-missing -> []
+        # malformed -> NULL, valid-but-missing -> []
         return F.when(ok, F.coalesce(col, es))
 
     def first(col: Column) -> Column:
@@ -278,101 +255,6 @@ def _struct_columns(p: Column, gated_xml: Column, ok: Column) -> dict[str, Colum
     }
 
 
-def _xpath_columns(x: Column) -> dict[str, Column]:
-    fmt = F.coalesce(
-        F.when(
-            F.trim(_el(x, "controlaccess/genreform/part")) != "",
-            F.trim(_el(x, "controlaccess/genreform/part")),
-        ),
-        _attr(x, "/*/@level"),
-    )
-    title_short = F.trim(_el(x, "did/unittitle"))
-    unit_id = F.trim(_el(x, "did/unitid"))
-    title_sub = F.when(
-        fmt.isin(*_NO_SUBTITLE_FORMATS), F.lit("")
-    ).otherwise(unit_id)
-    title = F.when(
-        (title_sub != "") & (title_sub != title_short),
-        F.concat(title_sub, F.lit(" "), title_short),
-    ).otherwise(title_short)
-    authors = F.concat(
-        _parts(x, "controlaccess", "name"),
-        _parts(x, "controlaccess", "persname"),
-        _parts(x, "did", "origination", "name"),
-        _parts(x, "did", "origination", "persname"),
-    )
-    return {
-        "record_format": F.lit("ead3"),
-        "ctrlnum": _attr(x, "/*/@id"),
-        "level": _attr(x, "/*/@level"),
-        "description": F.when(
-            F.size(_els(x, "scopecontent/p")) > 0,
-            F.array_join(
-                F.transform(_els(x, "scopecontent/p"), lambda v: F.trim(v)),
-                "   /   ",
-            ),
-        ).otherwise(F.trim(_el(x, "scopecontent"))),
-        "author": authors,
-        "author_sort": F.coalesce(try_element_at(authors, 1), F.lit("")),
-        "author_corporate": F.concat(
-            _parts(x, "controlaccess", "corpname"),
-            _parts(x, "did", "origination", "corpname"),
-        ),
-        "topic": _parts(x, "controlaccess", "subject"),
-        "topic_ids": F.xpath(
-            x,
-            F.lit(
-                '//*[local-name()="controlaccess"]/*[local-name()="subject"]/@identifier'
-            ),
-        ),
-        "geographic": _parts(x, "controlaccess", "geogname"),
-        "format": fmt,
-        "institution": F.trim(_el(x, "did/repository/corpname/part")),
-        "title_short": title_short,
-        "title_sub": title_sub,
-        "title": title,
-        "title_full": title,
-        "title_sort": F.lower(K.strip_punctuation(title)),
-        "language": F.filter(
-            F.transform(
-                F.xpath(
-                    x,
-                    F.lit(
-                        '//*[local-name()="langmaterial"]/*[local-name()="language"]/@langcode'
-                    ),
-                ),
-                lambda v: F.trim(v),
-            ),
-            lambda v: v != "",
-        ),
-        "physical": F.filter(
-            F.transform(_els(x, "did/physdesc/extent"), lambda v: F.trim(v)),
-            lambda v: (v != "-") & (v != ""),
-        ),
-        "thumbnail": F.coalesce(
-            try_element_at(
-                F.xpath(
-                    x,
-                    F.lit(
-                        '//*[local-name()="did"]//*[local-name()="dao"]'
-                        '[@localtype="thumbnail"]/@href'
-                    ),
-                ),
-                1,
-            ),
-            F.lit(""),
-        ),
-        "allfields": F.filter(
-            F.transform(
-                F.xpath(x, F.lit("//*[not(*)]/text()")), lambda v: F.trim(v)
-            ),
-            lambda v: v != "",
-        ),
-        "hierarchytype": F.lit("Default"),
-        "__e3_unit_id": unit_id,
-    }
-
-
 def to_solr_columns(
     df: DataFrame,
     xml_col: str = "part_xml",
@@ -381,29 +263,21 @@ def to_solr_columns(
     sequence_col: str | None = "sequence",
     parent_id_col: str | None = "parent_id",
     parent_title_col: str | None = "parent_title",
-    validate: bool = True,
-    engine: str = "struct",
 ) -> DataFrame:
-    if engine == "struct":
-        # materialize the parse once in its own projection; inlining a
-        # multiply-referenced from_xml re-parses per consuming field
-        wide = df.withColumn(
-            "__e3_parsed",
-            F.from_xml(
-                _strip_ns_prefixes(F.col(xml_col)),
-                _EAD3_STRUCT_SCHEMA,
-                {"columnNameOfCorruptRecord": "_corrupt_record"},
-            ),
-        )
-        p = F.col("__e3_parsed")
-        ok = F.col(xml_col).isNotNull() & p["_corrupt_record"].isNull()
-        cols = _struct_columns(p, F.when(ok, F.col(xml_col)), ok)
-        out = wide.withColumns(cols).drop("__e3_parsed")
-    else:
-        x = F.col(xml_col)
-        if validate:
-            x = F.when(well_formed_xml(x), F.col(xml_col))
-        out = df.withColumns(_xpath_columns(x))
+    # materialize the parse once in its own projection; inlining a
+    # multiply-referenced from_xml re-parses per consuming field
+    wide = df.withColumn(
+        "__e3_parsed",
+        F.from_xml(
+            _strip_ns_prefixes(F.col(xml_col)),
+            _EAD3_STRUCT_SCHEMA,
+            {"columnNameOfCorruptRecord": "_corrupt_record"},
+        ),
+    )
+    p = F.col("__e3_parsed")
+    ok = F.col(xml_col).isNotNull() & p["_corrupt_record"].isNull()
+    cols = _struct_columns(p, F.when(ok, F.col(xml_col)), ok)
+    out = wide.withColumns(cols).drop("__e3_parsed")
 
     fmt = F.col("format")
     unit_id = F.col("__e3_unit_id")

@@ -13,7 +13,8 @@ Behavioral spec (reference, NOT code): Record/Ese.php:67-248 —
   matching ``description`` if any (two sequential assignment loops,
   Ese.php:107-116).
 
-Everything is JVM-side ``xpath`` + array expressions; no Python UDF.
+One JVM ``from_xml`` parse per record plus array expressions (and one
+gated xpath for allfields); no Python UDF.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import keys as K
-from .dc import _el, _els, well_formed_xml
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
 
 
@@ -30,14 +31,6 @@ def _last_url(arr: Column) -> Column:
     matches = F.filter(arr, lambda v: v.rlike("^https?"))
     return try_element_at(F.reverse(matches), 1)
 
-
-def ese_languages(xml: Column) -> Column:
-    """First language element split on spaces; lowercase, drop empties."""
-    words = F.split(F.trim(_el(xml, "language")), " ")
-    return F.filter(F.transform(words, lambda w: F.lower(F.trim(w))), lambda w: w != "")
-
-
-# --- single-parse struct engine (the scale path, and the default) ----------
 
 _ESE_STRUCT_SCHEMA = (
     "recordID array<string>, title array<string>, language array<string>, "
@@ -48,9 +41,7 @@ _ESE_STRUCT_SCHEMA = (
 )
 
 
-def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
-    from .dc import _strip_ns_prefixes
-
+def to_solr_columns(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     df = df.withColumn(
         "__ese_parsed",
         F.from_xml(
@@ -144,60 +135,3 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
     )
     return out.drop("__ese_parsed")
 
-
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    validate: bool = True,
-    engine: str = "struct",
-) -> DataFrame:
-    if engine == "struct":
-        return _to_solr_columns_struct(df, xml_col)
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-    title = F.trim(_el(x, "title"))
-    identifiers = F.transform(_els(x, "identifier"), lambda v: F.trim(v))
-    descriptions = F.transform(_els(x, "description"), lambda v: F.trim(v))
-    isbn_digits = F.transform(
-        identifiers,
-        lambda v: K.normalize_isbn(
-            F.regexp_extract(F.replace(v, F.lit("-"), F.lit("")), "([0-9]{9,12}[0-9xX])", 1)
-        ),
-    )
-    dates = F.transform(_els(x, "date"), lambda v: F.trim(v))
-    return df.withColumns(
-        {
-            "id": F.trim(_el(x, "recordID")),
-            "record_format": F.lit("ese"),
-            "ctrlnum": F.trim(_el(x, "recordID")),
-            "allfields": F.filter(
-                F.transform(F.xpath(x, F.lit("/*/*/text()")), lambda v: F.trim(v)),
-                lambda v: v != "",
-            ),
-            "language": ese_languages(x),
-            "format": F.trim(_el(x, "type")),
-            "author": F.trim(_el(x, "creator")),
-            "author2": F.filter(
-                F.transform(_els(x, "contributor"), lambda v: F.trim(v)),
-                lambda v: v != "",
-            ),
-            "title": title,
-            "title_full": title,
-            "title_short": try_element_at(F.split(title, " : ", 2), 1),
-            "title_sub": F.coalesce(try_element_at(F.split(title, " : ", 2), 2), F.lit("")),
-            "title_sort": K.create_sort_title(title),
-            "publisher": F.array(F.trim(_el(x, "publisher"))),
-            "publishDate": F.coalesce(
-                try_element_at(F.filter(dates, lambda v: v.rlike("^[0-9]{4}$")), 1),
-                F.lit(""),
-            ),
-            "isbn": F.array_distinct(
-                F.filter(isbn_digits, lambda v: v.isNotNull() & (v != ""))
-            ),
-            "topic": F.filter(
-                F.transform(_els(x, "subject"), lambda v: F.trim(v)), lambda v: v != ""
-            ),
-            "url": F.coalesce(_last_url(descriptions), _last_url(identifiers), F.lit("")),
-        }
-    )

@@ -35,7 +35,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..functions import keys as K
-from .dc import _strip_ns_prefixes, well_formed_xml
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
 
 PRIMARY_RELATORS = ("d02", "a00", "a03", "a06", "a50", "a99")
@@ -49,59 +49,6 @@ _ALLFIELDS_IGNORED = (
 
 _PRIMARY_LANGUAGE = "en"
 
-# The main metadata element (getMainElement, Forward.php:281-287): the
-# FIRST child of the exchange-set root — a Forward dump carries the film
-# plus sibling related works/persons that must NOT contribute fields.
-# The union also accepts a bare work as the document root (unit fixtures).
-_MAIN = (
-    '(/*[*[local-name()="IdentifyingTitle"]]'
-    ' | /*/*[position()=1][*[local-name()="IdentifyingTitle"]])'
-)
-
-
-def _els(xml: Column, path: str) -> Column:
-    steps = "/".join(f'*[local-name()="{p}"]' for p in path.split("/"))
-    return F.xpath(xml, F.lit(f"{_MAIN}/{steps}/text()"))
-
-
-def _el(xml: Column, path: str) -> Column:
-    return F.coalesce(try_element_at(_els(xml, path), 1), F.lit(""))
-
-
-def _agents(xml: Column) -> Column:
-    """array<struct<name, relator>> from HasAgent elements.
-
-    AgentName and Activity extract as position-aligned lists; zip_with
-    pairs them. Caveat: the pairing is positional over the flat xpath
-    result, so a HasAgent missing one of the two children shifts later
-    pairs (Forward exports carry both; agents with a null/empty name are
-    dropped rather than emitted as None).
-    """
-    names = F.xpath(
-        xml,
-        F.lit(
-            f'{_MAIN}/*[local-name()="HasAgent"]'
-            '/*[local-name()="AgentName"]/text()'
-        ),
-    )
-    acts = F.xpath(
-        xml,
-        F.lit(
-            f'{_MAIN}/*[local-name()="HasAgent"]'
-            '/*[local-name()="Activity"]/text()'
-        ),
-    )
-    zipped = F.zip_with(
-        names,
-        acts,
-        lambda n, a: F.struct(
-            F.trim(n).alias("name"), K.normalize_relator(a).alias("relator")
-        ),
-    )
-    return F.filter(
-        zipped, lambda s: s["name"].isNotNull() & (s["name"] != "")
-    )
-
 
 def _by_relators(agents: Column, relators: tuple[str, ...], field: str) -> Column:
     lits = F.array(*[F.lit(r) for r in relators])
@@ -111,35 +58,10 @@ def _by_relators(agents: Column, relators: tuple[str, ...], field: str) -> Colum
     )
 
 
-def _descriptions(xml: Column, desc_type: str) -> Column:
-    """DescriptionTexts of the given type in the primary language,
-    falling back to every language (Forward.php:177-184, 422-466)."""
-
-    def of(lang_pred: str) -> Column:
-        return F.xpath(
-            xml,
-            F.lit(
-                f'{_MAIN}/*[local-name()="ContentDescription"]'
-                f'[*[local-name()="DescriptionType"]="{desc_type}"]{lang_pred}'
-                '/*[local-name()="DescriptionText"]/text()'
-            ),
-        )
-
-    primary = of(f'[*[local-name()="Language"]="{_PRIMARY_LANGUAGE}"]')
-    any_lang = of("")
-    return F.when(F.size(primary) > 0, primary).otherwise(any_lang)
-
-
-# --- single-parse struct engine (the scale path) ---------------------------
-#
-# The xpath engine above issues ~20 XPathListEvaluator calls per record,
-# each re-parsing the XML string, and the resulting megaprojection falls
-# out of whole-stage codegen (measured 14s/2k rows at sf0.01). The struct
-# engine does ONE Python pass (main-element scoping + exact document-order
-# allfields — the two things from_xml cannot express) and ONE JVM StAX
-# parse (from_xml); every field is then a cheap struct access inside
-# codegen. Same output columns and values as the xpath engine; replayed
-# against the reference's forward1.xml golden in tests.
+# One Python pass per record does what from_xml cannot express: scoping
+# to the main element and the exact document-order allfields. One JVM
+# StAX parse (from_xml) of the main element follows, and every field is
+# then a cheap struct access inside codegen.
 
 _FW_STRUCT_SCHEMA = (
     "Identifier array<struct<_IDTypeName string, _VALUE string>>, "
@@ -174,11 +96,15 @@ _FW_MAIN_SCHEMA = StructType(
 def _fw_main_and_allfields(xml: pd.Series) -> pd.DataFrame:
     """Main-element scoping + document-order allfields, one parse per row.
 
-    Returns (None, None) for malformed/empty input (the struct twin of the
-    well_formed_xml gate), ('<__nomain/>', []) for well-formed XML without
-    a main element (xpath yields empty results there, not nulls), else the
-    serialized main element plus its leaf text outside ignored subtrees
-    (getAllFields, Forward.php:295-315). Caveat vs the xpath engine:
+    The main element (getMainElement, Forward.php:281-287) is the root
+    when it carries an IdentifyingTitle, else the root's FIRST child when
+    that one does: a Forward dump carries the film plus sibling related
+    works/persons that must NOT contribute fields.
+
+    Returns (None, None) for malformed/empty input, ('<__nomain/>', [])
+    for well-formed XML without a main element (empty fields there, not
+    nulls), else the serialized main element plus its leaf text outside
+    ignored subtrees (getAllFields, Forward.php:295-315). Caveat:
     ElementTree drops comments/PIs, so text split around a comment inside
     a leaf loses the post-comment chunk — not a shape Forward exports.
     """
@@ -203,7 +129,7 @@ def _fw_main_and_allfields(xml: pd.Series) -> pd.DataFrame:
         if main is None:
             return "<__nomain/>", []
         texts: list[str] = []
-        # ancestor-or-self in the xpath covers root and main too
+        # an ignored root or main element hides everything below it
         base_ig = _fw_local(root.tag) in ignored or (
             main is not root and _fw_local(main.tag) in ignored
         )
@@ -227,12 +153,12 @@ def _fw_main_and_allfields(xml: pd.Series) -> pd.DataFrame:
 
 
 def _s1(arr: Column) -> Column:
-    """First element of an array field, '' when missing/null — the struct
-    twin of ``_el`` (which coalesces to '' even for malformed input)."""
+    """First element of an array field, trimmed; '' when missing/null
+    (also for malformed input)."""
     return F.trim(F.coalesce(try_element_at(arr, 1), F.lit("")))
 
 
-def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
+def to_solr_columns(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     # Materialize the Python pass and the from_xml parse each ONCE in their
     # own projections; inlining a multiply-referenced from_xml would
     # re-parse per consuming field (same hazard dc_struct documents).
@@ -249,8 +175,7 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
     ok = F.col("__fw_main.main_xml").isNotNull()
 
     def arr(field_expr: Column, elem_type: str = "string") -> Column:
-        # malformed -> NULL (xpath-on-null semantics); well-formed but
-        # missing -> [] (xpath-empty-result semantics)
+        # malformed -> NULL; well-formed but missing -> []
         return F.when(
             ok, F.coalesce(field_expr, F.array().cast(f"array<{elem_type}>"))
         )
@@ -282,6 +207,8 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
             a["relator"],
         ),
     )
+    # getPrimaryAuthorsSorted: directors first, then the other primary
+    # relators, both in document order
     primary_sorted = F.concat(directors, other_primary)
 
     title = _s1(p["IdentifyingTitle"])
@@ -301,6 +228,8 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
     id_type = F.coalesce(first_ident["_IDTypeName"], F.lit(""))
 
     def descriptions(desc_type: str) -> Column:
+        # DescriptionTexts of the given type in the primary language,
+        # falling back to every language (Forward.php:177-184, 422-466)
         def of(lang: str | None) -> Column:
             matches = F.filter(
                 F.coalesce(
@@ -398,6 +327,8 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
             "author_role": F.transform(primary_sorted, lambda a: a["relator"]),
             "author2": _by_relators(agents, SECONDARY_RELATORS, "name"),
             "author2_role": _by_relators(agents, SECONDARY_RELATORS, "relator"),
+            # corporateAuthorRelators defaults to [], and an empty relator
+            # list means NO filter in getAuthorsByRelator — every agent
             "author_corporate": F.transform(agents, lambda a: a["name"]),
             "author_corporate_role": F.transform(agents, lambda a: a["relator"]),
             "author_sort": F.coalesce(
@@ -431,138 +362,3 @@ def _to_solr_columns_struct(df: DataFrame, xml_col: str) -> DataFrame:
     )
     return out.drop("__fw_main", "__fw_parsed", "__fw_agents")
 
-
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    validate: bool = True,
-    engine: str = "struct",
-) -> DataFrame:
-    if engine == "struct":
-        # the Python main-element pass validates inherently
-        return _to_solr_columns_struct(df, xml_col)
-    return _to_solr_columns_xpath(df, xml_col, validate)
-
-
-def _to_solr_columns_xpath(df: DataFrame, xml_col: str = "xml", validate: bool = True) -> DataFrame:
-    # zip_with rejects Python UDFs anywhere in its child expressions, so the
-    # well-formedness gate materializes into its own column first (multi-
-    # referenced aliases are not collapsed back into the consumers)
-    gate_col = "__fw_xml"
-    if validate:
-        df = df.withColumn(
-            gate_col, F.when(well_formed_xml(F.col(xml_col)), F.col(xml_col))
-        )
-    else:
-        df = df.withColumn(gate_col, F.col(xml_col))
-    x = F.col(gate_col)
-    agents = _agents(x)
-    # getPrimaryAuthorsSorted: directors first, then the other primary
-    # relators, both in document order
-    directors = F.filter(agents, lambda a: a["relator"] == "d02")
-    other_primary = F.filter(
-        agents,
-        lambda a: F.array_contains(
-            F.array(*[F.lit(r) for r in PRIMARY_RELATORS if r != "d02"]),
-            a["relator"],
-        ),
-    )
-    primary_sorted = F.concat(directors, other_primary)
-    title = F.trim(_el(x, "IdentifyingTitle"))
-    all_titles = F.transform(_els(x, "Title/TitleText"), lambda v: F.trim(v))
-    id_text = F.trim(
-        F.coalesce(
-            try_element_at(
-                F.xpath(
-                    x, F.lit(f'{_MAIN}/*[local-name()="Identifier"][1]/text()')
-                ), 1
-            ),
-            F.lit(""),
-        )
-    )
-    id_type = F.coalesce(
-        try_element_at(
-            F.xpath(
-                x,
-                F.lit(f'{_MAIN}/*[local-name()="Identifier"][1]/@IDTypeName'),
-            ), 1
-        ),
-        F.lit(""),
-    )
-    description = F.array_join(
-        F.concat(
-            _descriptions(x, "Synopsis"),
-            _descriptions(x, "Content description"),
-        ),
-        " ",
-    )
-    topics = F.filter(
-        F.transform(_els(x, "SubjectTerms/Term"), lambda v: F.trim(v)),
-        lambda v: v != "",
-    )
-    geographic = F.filter(
-        F.transform(
-            _els(x, "CountryOfReference/Country/RegionName"),
-            lambda v: F.trim(v),
-        ),
-        lambda v: v != "",
-    )
-    empty = F.array().cast("array<string>")
-    return df.withColumns(
-        {
-            "record_format": F.lit("forward"),
-            "title": title,
-            "title_short": title,
-            "title_full": title,
-            "title_sort": K.create_sort_title(title),
-            "title_alt": F.filter(all_titles, lambda v: (v != title) & (v != "")),
-            "publishDate": F.trim(_el(x, "YearOfReference")),
-            "author": F.transform(primary_sorted, lambda a: a["name"]),
-            "author_role": F.transform(primary_sorted, lambda a: a["relator"]),
-            "author2": _by_relators(agents, SECONDARY_RELATORS, "name"),
-            "author2_role": _by_relators(agents, SECONDARY_RELATORS, "relator"),
-            # corporateAuthorRelators defaults to [], and an empty relator
-            # list means NO filter in getAuthorsByRelator — every agent
-            "author_corporate": F.transform(agents, lambda a: a["name"]),
-            "author_corporate_role": F.transform(agents, lambda a: a["relator"]),
-            "author_sort": F.coalesce(
-                try_element_at(
-                    F.transform(primary_sorted, lambda a: a["name"]), 1
-                ),
-                F.lit(""),
-            ),
-            "description": description,
-            "topic": topics,
-            "topic_facet": topics,
-            "geographic": geographic,
-            "geographic_facet": geographic,
-            "genre": empty,
-            "genre_facet": empty,
-            "format": F.lit("MotionPicture"),
-            "publisher": empty,
-            "url": empty,
-            "thumbnail": F.lit(""),
-            "ctrlnum": F.when(
-                id_type != "", F.concat(id_type, F.lit("_"), id_text)
-            ).otherwise(id_text),
-            # leaf text under the record outside ignored subtrees, trailing
-            # punctuation stripped (getAllFields, Forward.php:295-315)
-            "allfields": F.filter(
-                F.transform(
-                    F.xpath(
-                        x,
-                        F.lit(
-                            f"{_MAIN}//*[not(*)][not(ancestor-or-self::*["
-                            + " or ".join(
-                                f'local-name()="{t}"'
-                                for t in _ALLFIELDS_IGNORED
-                            )
-                            + "])]/text()"
-                        ),
-                    ),
-                    lambda v: K.strip_trailing_punctuation(F.trim(v)),
-                ),
-                lambda v: v != "",
-            ),
-        }
-    ).drop("__fw_xml")

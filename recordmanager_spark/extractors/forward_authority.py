@@ -16,7 +16,8 @@ Behavioral spec (reference, NOT code): Record/ForwardAuthority.php:47-336 —
 - allfields = agency name (RecordSource/SourceName joined with '. ',
   else the source id) + biographical note + heading + use_for.
 
-xpath expressions behind the shared XML gate; no Python UDF.
+One Python pass picks the main element (malformed input yields NULL
+fields), then one JVM from_xml parse feeds every column.
 """
 
 from __future__ import annotations
@@ -30,71 +31,12 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from ..functions import keys as K
-from .dc import _strip_ns_prefixes, well_formed_xml
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
 
-# main element = first child of the document root
-_MAIN = "/*/*[1]"
-
-
-def _els(xml: Column, path: str) -> Column:
-    steps = "".join(f'/*[local-name()="{p}"]' for p in path.split("/"))
-    return F.xpath(xml, F.lit(f"{_MAIN}{steps}/text()"))
-
-
-def _el(xml: Column, path: str) -> Column:
-    return F.coalesce(try_element_at(_els(xml, path), 1), F.lit(""))
-
-
-def _agent_date(xml: Column, event_type: int, part: str) -> Column:
-    """DateText/LocationName of the first AgentDate with the event type."""
-    vals = F.xpath(
-        xml,
-        F.lit(
-            f'{_MAIN}/*[local-name()="AgentDate"]'
-            f'[*[local-name()="AgentDateEventType"][normalize-space(text())="{event_type}"]][1]'
-            f'/*[local-name()="{part}"]/text()'
-        ),
-    )
-    return F.coalesce(try_element_at(vals, 1), F.lit(""))
-
-
-def heading(xml: Column) -> Column:
-    person = _el(xml, "CAgentName/PersonName")
-    corporate = _el(xml, "CAgentName/CorporateName")
-    return F.when(person != "", person).otherwise(corporate)
-
-
-def agency_name(xml: Column, source: str | None) -> Column:
-    names = F.filter(
-        F.transform(_els(xml, "RecordSource/SourceName"), lambda v: F.trim(v)),
-        lambda v: v != "",
-    )
-    joined = F.array_join(names, ". ")
-    fallback = F.lit(source or "")
-    return F.when(joined != "", joined).otherwise(fallback)
-
-
-def occupations(xml: Column) -> Column:
-    affiliation = _el(xml, "ProfessionalAffiliation/Affiliation")
-    position = _el(xml, "ProfessionalAffiliation/ProfessionalPosition")
-    has_any = F.size(F.xpath(xml, F.lit(f'{_MAIN}/*[local-name()="ProfessionalAffiliation"]'))) > 0
-    label = F.when(
-        (affiliation != "") & (position != ""),
-        F.concat(affiliation, F.lit(": "), position),
-    ).otherwise(F.when(position != "", position).otherwise(affiliation))
-    return F.when(has_any, F.array(label)).otherwise(F.array().cast("array<string>"))
-
-
-# --- single-parse struct engine (the scale path) ---------------------------
-#
-# The xpath engine issues ~14 XPathListEvaluator calls per record, each
-# re-parsing the XML, and expression inlining multiplies them to ~73 in
-# the optimized plan (tools/plan_audit.py SIZE_AUDITS). The struct engine
-# serializes the main element once in Python (the `/*/*[1]` scoping
-# from_xml cannot express) and parses it once JVM-side; every field is a
-# struct access. Output-identical to the xpath engine (parity test in
-# tests/test_authority.py).
+# The main element (the envelope's first child) is serialized once in
+# Python (the scoping from_xml cannot express) and parsed once JVM-side;
+# every field is then a struct access.
 
 _FA_STRUCT_SCHEMA = (
     "AgentIdentifier array<struct<IDTypeName array<string>, "
@@ -115,8 +57,8 @@ _FA_STRUCT_SCHEMA = (
 @pandas_udf(StringType())
 def _fa_main_xml(xml: pd.Series) -> pd.Series:
     """Serialized first child of the document root; None for malformed
-    input (the struct twin of the well_formed_xml gate), a childless
-    sentinel for well-formed envelopes without a main element."""
+    input, a childless sentinel for well-formed envelopes without a main
+    element."""
 
     def one(s):
         if not s:
@@ -133,8 +75,8 @@ def _fa_main_xml(xml: pd.Series) -> pd.Series:
     return xml.map(one)
 
 
-def _to_solr_columns_struct(
-    df: DataFrame, xml_col: str, source: str | None
+def to_solr_columns(
+    df: DataFrame, xml_col: str = "xml", source: str | None = None
 ) -> DataFrame:
     df = df.withColumn(
         "__fa_parsed",
@@ -148,14 +90,15 @@ def _to_solr_columns_struct(
     es = F.array().cast("array<string>")
 
     def flat1(outer: str, inner: str) -> Column:
-        # first text across <outer><inner> pairs, '' when absent — the
-        # struct twin of _el (which coalesces to '' even on null input)
+        # first text across <outer><inner> pairs, '' when absent (also
+        # for malformed input)
         vals = F.flatten(
             F.transform(p[outer], lambda c: F.coalesce(c[inner], es))
         )
         return F.coalesce(try_element_at(vals, 1), F.lit(""))
 
     def agent_date(event_type: int, part: str) -> Column:
+        # DateText/LocationName of the first AgentDate with the event type
         matches = F.filter(
             p["AgentDate"],
             lambda c: F.array_contains(
@@ -238,46 +181,3 @@ def _to_solr_columns_struct(
         cols["datasource_str_mv"] = F.lit(source)
     return df.withColumns(cols).drop("__fa_parsed")
 
-
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    source: str | None = None,
-    validate: bool = True,
-    engine: str = "struct",
-) -> DataFrame:
-    if engine == "struct":
-        # the Python main-element pass validates inherently
-        return _to_solr_columns_struct(df, xml_col, source)
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-    h = heading(x)
-    id_type = F.trim(_el(x, "AgentIdentifier/IDTypeName"))
-    cols = {
-        "id": F.concat(id_type, F.lit("_"), F.trim(_el(x, "AgentIdentifier/IDValue"))),
-        "record_format": F.lit("forwardAuthority"),
-        "record_type": id_type,
-        "heading": h,
-        "use_for": F.array(h),
-        "birth_date": K.extract_year(_agent_date(x, 51, "DateText")),
-        "death_date": K.extract_year(_agent_date(x, 52, "DateText")),
-        "birth_place": _agent_date(x, 51, "LocationName"),
-        "death_place": _agent_date(x, 52, "LocationName"),
-        "related_place": F.filter(
-            F.array(_el(x, "AgentPlace/LocationName")), lambda v: v != ""
-        ),
-        "field_of_activity": F.array().cast("array<string>"),
-        "occupation": occupations(x),
-        "allfields": F.filter(
-            F.concat(
-                F.array(agency_name(x, source), _el(x, "BiographicalNote"), h),
-                F.array(h),
-            ),
-            lambda v: v != "",
-        ),
-    }
-    if source is not None:
-        cols["source_str_mv"] = F.lit(source)
-        cols["datasource_str_mv"] = F.lit(source)
-    return df.withColumns(cols)

@@ -20,9 +20,9 @@ with the event-type machinery :55-85, :722-805, :1101-1160:
 - collection = related work display object for collection-ish relation
   types (getCollection, relatedWorkRelationTypes :93-95)
 
-Namespace-agnostic xpath expressions behind the shared XML gate, like the
-DC/EAD extractors — fully JVM. Event-type priority becomes one xpath call
-per type, concatenated in priority order.
+One Arrow-batched Python pass per record (ElementTree, namespace-
+agnostic local names) extracts every field; event-type priority is one
+pass per type, concatenated in priority order.
 """
 
 from __future__ import annotations
@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions import keys as K
-from .dc import well_formed_xml
 from recordmanager_spark.sparkcompat import try_element_at
 
 # Event type vocabularies (Lido.php:61-85; config-overridable per source)
@@ -44,56 +43,6 @@ PLACE_EVENTS = ("usage",)
 RELATED_WORK_RELATION_TYPES = (
     "Collection", "belongs to collection", "collection",
 )
-
-_LOWER = (
-    "translate(normalize-space(.),"
-    " 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')"
-)
-
-
-def _steps(path: str) -> str:
-    out = []
-    for p in path.split("/"):
-        if p.endswith("[1]"):
-            out.append(f'*[local-name()="{p[:-3]}"][1]')
-        else:
-            out.append(f'*[local-name()="{p}"]')
-    return "/".join(out)
-
-
-def _els(xml: Column, path: str) -> Column:
-    return F.xpath(xml, F.lit(f"//{_steps(path)}/text()"))
-
-
-def _el(xml: Column, path: str) -> Column:
-    return F.coalesce(try_element_at(_els(xml, path), 1), F.lit(""))
-
-
-def _event_els(xml: Column, event_types, subpath: str) -> Column:
-    """Values under events of the given types, in priority order (one xpath
-    per type keeps getEventNodes' priority ordering)."""
-    parts = []
-    for et in event_types:
-        ev = (
-            f'*[local-name()="event"]'
-            f'[*[local-name()="eventType"]/*[local-name()="term"][{_LOWER}="{et}"]]'
-        )
-        parts.append(
-            F.xpath(xml, F.lit(f"//{ev}/{_steps(subpath)}/text()"))
-        )
-    return F.concat(*parts) if len(parts) > 1 else parts[0]
-
-
-# subjects whose @type is not an excluded classification (iconclass)
-_SUBJECT = (
-    '*[local-name()="subject"]'
-    f'[not(@type) or not({_LOWER.replace("(.)", "(@type)")}="iconclass")]'
-)
-
-
-def _subject_els(xml: Column, subpath: str, exclude_types: bool = False) -> Column:
-    subj = _SUBJECT if exclude_types else '*[local-name()="subject"]'
-    return F.xpath(xml, F.lit(f"//{subj}/{_steps(subpath)}/text()"))
 
 
 def _trimmed(arr: Column) -> Column:
@@ -149,38 +98,16 @@ def _index_tree(root):
     return by_local, parent
 
 
-def _lido_titles_one(
-    raw: str | None,
-    merge_values: bool,
-    merge_sets: bool,
-    fmt_in_title: bool,
-    default_lang: str,
+def _lido_titles_from_root(
+    root, index, merge_values, merge_sets, fmt_in_title, default_lang
 ):
     """getTitles + getAltTitles + getDescription (Lido.php:442-594,
     651-669): per-titleSet, per-language appellation grouping with pref
     and inherited lang attributes, optional value/set merging with '; ',
     work-type fallback to the description, and the description column's
     don't-repeat-the-title rule. Genuinely nested grouped state — the one
-    LIDO computation that is not a relational expression, so it runs as
-    an Arrow-batched UDF over the (small) record XML."""
-    empty = ("", [], "")
-    if not raw:
-        return empty
-    import xml.etree.ElementTree as ET
-
-    try:
-        root = ET.fromstring(raw)
-    except ET.ParseError:
-        return empty
-    return _lido_titles_from_root(
-        root, merge_values, merge_sets, fmt_in_title, default_lang
-    )
-
-
-def _lido_titles_from_root(
-    root, merge_values, merge_sets, fmt_in_title, default_lang, index=None
-):
-    by_local, parent = index if index is not None else _index_tree(root)
+    LIDO computation that is not a relational expression."""
+    by_local, parent = index
 
     def inherited(node, attr, default):
         cur = node
@@ -289,52 +216,12 @@ def _lido_titles_from_root(
     return (preferred, alternate, description)
 
 
-def lido_titles_udf(
-    merge_title_values: bool = True,
-    merge_title_sets: bool = True,
-    allow_title_to_match_format: bool = False,
-    default_display_language: str = "en",
-):
-    """Factory: driver params (mergeTitleValues/mergeTitleSets/
-    allowTitleToMatchFormat/defaultDisplayLanguage) are bound at plan
-    build like the reference's per-source driverParams."""
-
-    @pandas_udf(
-        "preferred string, alternate array<string>, description string"
-    )
-    def _f(raw: pd.Series) -> pd.DataFrame:
-        vals = raw.map(
-            lambda r: _lido_titles_one(
-                r,
-                merge_title_values,
-                merge_title_sets,
-                allow_title_to_match_format,
-                default_display_language,
-            )
-        )
-        return pd.DataFrame(
-            {
-                "preferred": vals.map(lambda v: v[0]),
-                "alternate": vals.map(lambda v: v[1]),
-                "description": vals.map(lambda v: v[2]),
-            }
-        )
-
-    return _f
-
-
-# --- single-parse engine (the scale path, and the default) ------------------
-#
-# The xpath engine issues ~20 XPath calls per record (29 evaluator
-# objects in the optimized plan), each re-parsing the XML — ON TOP of the
-# Python parse the titles UDF already pays (title grouping is genuinely
-# non-relational). The single-parse engine folds every per-record
-# extraction into that one existing Python pass: ONE ElementTree parse
-# per record total. All array post-processing (trim/strip/isbn
-# normalization/fallback whens) stays JVM-side, unchanged. Semantics
-# mirror the xpath engine exactly (`//` descendant chains, [1]
-# positional steps, ASCII-only case folds); parity-tested in
-# tests/test_lido.py.
+# One ElementTree parse per record feeds every field: title grouping is
+# genuinely nested state, and the other per-record extractions fold into
+# the same Python pass. All array post-processing (trim/strip/isbn
+# normalization/fallback whens) stays JVM-side. Path semantics follow
+# XPath: `//` descendant chains, [1] positional steps, ASCII-only case
+# folds.
 
 _ASCII_LOWER = str.maketrans(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
@@ -385,8 +272,7 @@ def _lido_extract_one(raw, merge_values, merge_sets, fmt_in_title, default_lang)
     by_local = index[0]
 
     titles = _lido_titles_from_root(
-        root, merge_values, merge_sets, fmt_in_title, default_lang,
-        index=index,
+        root, index, merge_values, merge_sets, fmt_in_title, default_lang
     )
 
     def anywhere(name):
@@ -449,6 +335,8 @@ def _lido_extract_one(raw, merge_values, merge_sets, fmt_in_title, default_lang)
                 coll = vals[0]
                 break
 
+    # repositoryWrap workID identifiers by @type (getIdentifiersByType,
+    # Lido.php:1282-1303)
     def work_ids(id_type):
         return [
             el.text
@@ -458,9 +346,9 @@ def _lido_extract_one(raw, merge_values, merge_sets, fmt_in_title, default_lang)
             if el.get("type") == id_type and el.text
         ]
 
-    # ctrlnum: xpath zips @type attrs of ALL typed recordInfoIDs with the
-    # text of typed recordInfoIDs THAT HAVE text — reproduce the zip
-    # including its null-padding on pathological docs
+    # ctrlnum "(type)value" (getRecordInfoIDs, :1258-1272): the @type of
+    # ALL typed recordInfoIDs zipped with the text of the typed ones THAT
+    # HAVE text, null-padded on pathological docs
     info_ids = _chain(anywhere("recordInfoSet"), ["recordInfoID"])
     types_list = [el.get("type") for el in info_ids if el.get("type")]
     vals_list = [el.text for el in info_ids if el.get("type") and el.text]
@@ -573,13 +461,13 @@ def lido_extract_udf(
     return _f
 
 
-def _to_solr_columns_python(
+def to_solr_columns(
     df: DataFrame,
-    xml_col: str,
-    merge_title_values: bool,
-    merge_title_sets: bool,
-    allow_title_to_match_format: bool,
-    default_display_language: str,
+    xml_col: str = "xml",
+    merge_title_values: bool = True,
+    merge_title_sets: bool = True,
+    allow_title_to_match_format: bool = False,
+    default_display_language: str = "en",
 ) -> DataFrame:
     df = df.withColumn(
         "__lido",
@@ -624,6 +512,7 @@ def _to_solr_columns_python(
         "description": p["description"],
         "format": F.trim(F.coalesce(p["format_raw"], F.lit(""))),
         "institution": F.trim(F.coalesce(p["institution_raw"], F.lit(""))),
+        # actors of MAIN events only; first appellation value per role node
         "author": _trimmed(p["authors"]),
         "topic": topics,
         "topic_facet": topics,
@@ -655,188 +544,3 @@ def _to_solr_columns_python(
         "author_sort", F.coalesce(try_element_at(F.col("author"), 1), F.lit(""))
     )
 
-
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    validate: bool = True,
-    merge_title_values: bool = True,
-    merge_title_sets: bool = True,
-    allow_title_to_match_format: bool = False,
-    default_display_language: str = "en",
-    engine: str = "single",
-) -> DataFrame:
-    if engine == "single":
-        return _to_solr_columns_python(
-            df,
-            xml_col,
-            merge_title_values,
-            merge_title_sets,
-            allow_title_to_match_format,
-            default_display_language,
-        )
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-    titles = lido_titles_udf(
-        merge_title_values=merge_title_values,
-        merge_title_sets=merge_title_sets,
-        allow_title_to_match_format=allow_title_to_match_format,
-        default_display_language=default_display_language,
-    )(F.coalesce(x, F.lit("")))
-    title = titles["preferred"]
-    urls = _trimmed(_els(x, "linkResource"))
-    subj_dates = _stripped(_subject_els(x, "subjectDate/displayDate"))
-    main_date = F.coalesce(
-        try_element_at(
-            _trimmed(_event_els(x, MAIN_EVENTS, "eventDate/displayDate")), 1
-        ),
-        F.lit(""),
-    )
-    era = F.when(F.size(subj_dates) > 0, subj_dates).otherwise(
-        F.filter(F.array(main_date), lambda v: v != "")
-    )
-    event_places = _stripped(
-        _event_els(x, PLACE_EVENTS, "eventPlace/displayPlace")
-    )
-    subj_display_places = _stripped(_subject_els(x, "subjectPlace/displayPlace"))
-    repo_locations = _trimmed(
-        _els(x, "repositorySet/repositoryLocation/namePlaceSet/appellationValue")
-    )
-    geographic = F.concat(event_places, subj_display_places, repo_locations)
-    subj_places = _stripped(
-        _subject_els(x, "subjectPlace/place/namePlaceSet/appellationValue")
-    )
-    materials = _trimmed(
-        _event_els(
-            x, MAIN_EVENTS, "eventMaterialsTech/materialsTech/termMaterialsTech/term"
-        )
-    )
-    display_materials = _trimmed(
-        _event_els(x, MAIN_EVENTS, "eventMaterialsTech/displayMaterialsTech")
-    )
-    rel = (
-        '*[local-name()="relatedWorkSet"]'
-        "[" + " or ".join(
-            f'*[local-name()="relatedWorkRelType"]/*[local-name()="term"]'
-            f'[normalize-space(.)="{t}"]'
-            for t in RELATED_WORK_RELATION_TYPES
-        ) + "]"
-    )
-    collection = F.coalesce(
-        try_element_at(
-            F.xpath(
-                x,
-                F.lit(
-                    f'//{rel}/*[local-name()="relatedWork"]'
-                    f'/*[local-name()="displayObject"]/text()'
-                ),
-            ),
-            1,
-        ),
-        F.lit(""),
-    )
-    # repositoryWrap workID identifiers by @type (getIdentifiersByType,
-    # Lido.php:1282-1303)
-    def work_ids(id_type: str) -> Column:
-        return _trimmed(
-            F.xpath(
-                x,
-                F.lit(
-                    '//*[local-name()="repositoryWrap"]'
-                    '/*[local-name()="repositorySet"]'
-                    f'/*[local-name()="workID"][@type="{id_type}"]/text()'
-                ),
-            )
-        )
-
-    isbn_raw = F.transform(
-        work_ids("isbn"),
-        lambda v: K.normalize_isbn(
-            F.regexp_extract(
-                F.regexp_replace(v, "-", ""), "^([0-9]{9,12}[0-9xX])", 1
-            )
-        ),
-    )
-    # recordInfoID @type → "(type)value" (getRecordInfoIDs, :1258-1272)
-    info_sets = F.xpath(
-        x,
-        F.lit(
-            '//*[local-name()="recordInfoSet"]'
-            '/*[local-name()="recordInfoID"][@type]/text()'
-        ),
-    )
-    info_types = F.xpath(
-        x,
-        F.lit(
-            '//*[local-name()="recordInfoSet"]'
-            '/*[local-name()="recordInfoID"]/@type'
-        ),
-    )
-    ctrlnum = F.zip_with(
-        info_types,
-        info_sets,
-        lambda t, v: F.concat(F.lit("("), t, F.lit(")"), F.trim(v)),
-    )
-    topics = _trimmed(_subject_els(x, "subjectConcept/term", exclude_types=True))
-    cols: dict[str, Column] = {
-        "record_format": F.lit("lido"),
-        "title": title,
-        "title_short": title,
-        "title_full": title,
-        "title_sort": K.create_sort_title(title),
-        "title_alt": titles["alternate"],
-        "description": titles["description"],
-        "format": F.trim(_el(x, "objectWorkTypeWrap/objectWorkType/term")),
-        "institution": F.trim(_el(x, "legalBodyName/appellationValue")),
-        # actors of MAIN events only; first appellation value per role node
-        "author": _trimmed(
-            _event_els(
-                x,
-                MAIN_EVENTS,
-                "eventActor/actorInRole/actor/nameActorSet/appellationValue[1]",
-            )
-        ),
-        "topic": topics,
-        "topic_facet": topics,
-        "material": F.when(F.size(materials) > 0, materials).otherwise(
-            display_materials
-        ),
-        "material_str_mv": F.when(F.size(materials) > 0, materials).otherwise(
-            display_materials
-        ),
-        "era": era,
-        "era_facet": era,
-        "geographic": geographic,
-        "geographic_facet": F.concat(geographic, subj_places),
-        "collection": collection,
-        "ctrlnum": ctrlnum,
-        "isbn": F.array_distinct(
-            F.filter(isbn_raw, lambda v: v.isNotNull() & (v != ""))
-        ),
-        "issn": work_ids("issn"),
-        "url": urls,
-        "thumbnail": F.coalesce(try_element_at(urls, 1), F.lit("")),
-        # leaf text outside the ignored subtrees, document order
-        # (getAllFields, Lido.php:982-1005)
-        "allfields": F.filter(
-            F.transform(
-                F.xpath(
-                    x,
-                    F.lit(
-                        "//*[not(*)][not(ancestor-or-self::*["
-                        + " or ".join(
-                            f'local-name()="{t}"' for t in _ALLFIELDS_IGNORED
-                        )
-                        + "])]/text()"
-                    ),
-                ),
-                lambda v: F.trim(v),
-            ),
-            lambda v: v != "",
-        ),
-    }
-    out = df.withColumns(cols)
-    return out.withColumn(
-        "author_sort", F.coalesce(try_element_at(F.col("author"), 1), F.lit(""))
-    )

@@ -24,32 +24,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import keys as K
-from .dc import _els, well_formed_xml
+from .dc import _strip_ns_prefixes
 from .qdc import to_solr_columns as qdc_to_solr_columns
 from recordmanager_spark.sparkcompat import try_element_at
 
 
-def _path(xml: Column, *names: str) -> Column:
-    steps = "".join(f'/*[local-name()="{n}"]' for n in names)
-    return F.xpath(xml, F.lit(f"//{steps[1:]}/text()"))
-
-
-def lrmi_languages(xml: Column) -> Column:
-    langs = F.concat(
-        _path(xml, "material", "inLanguage"),
-        F.xpath(xml, F.lit('/*/*[local-name()="inLanguage"]/text()')),
-    )
-    return F.filter(
-        F.transform(F.array_distinct(langs), lambda v: F.lower(F.trim(v))),
-        lambda v: v != "",
-    )
-
-
-# --- single-parse overlay (the default) -------------------------------------
-#
-# The LRMI-specific fields come from one additional from_xml parse over
-# the overlay schema (2 JVM parses total with the QDC base — vs ~7 more
-# per-row xpath DOM parses in the xpath engine).
+# The LRMI-specific fields come from one more from_xml parse over the
+# overlay schema (2 JVM parses in total with the QDC base).
 
 _LRMI_STRUCT_SCHEMA = (
     "title array<string>, "
@@ -64,8 +45,6 @@ _LRMI_STRUCT_SCHEMA = (
 
 
 def _overlay_struct(df: DataFrame, xml_col: str) -> DataFrame:
-    from .dc import _strip_ns_prefixes
-
     es = F.array().cast("array<string>")
     df = df.withColumn(
         "__lr_parsed",
@@ -138,7 +117,8 @@ def _overlay_struct(df: DataFrame, xml_col: str) -> DataFrame:
         "thing",
         "array<struct<name:array<string>,identifier:array<string>>>",
     )
-    # ids come only from things that also carry a name (Lrmi.php:195-197)
+    # ids come only from things that also carry a name (Lrmi.php:195-197
+    # continues before the id branch when thing->name is unset)
     named_things = F.filter(
         things, lambda t: F.size(F.coalesce(t["name"], es)) > 0
     )
@@ -180,6 +160,7 @@ def _overlay_struct(df: DataFrame, xml_col: str) -> DataFrame:
     return df.withColumns(
         {
             "record_format": F.lit("lrmi"),
+            # Lrmi.php:100-103: constant format
             "format": F.lit("LearningMaterial"),
             "title": title,
             "title_full": title,
@@ -200,70 +181,5 @@ def _overlay_struct(df: DataFrame, xml_col: str) -> DataFrame:
     ).drop("__lr_parsed")
 
 
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    validate: bool = True,
-    engine: str = "struct",
-) -> DataFrame:
-    out = qdc_to_solr_columns(
-        df, xml_col=xml_col, validate=validate, engine=engine
-    )
-    if engine == "struct":
-        return _overlay_struct(out, xml_col)
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-    title = F.trim(F.coalesce(try_element_at(_els(x, "title"), 1), F.lit("")))
-    person_names = F.filter(
-        F.transform(_path(x, "author", "person", "name"), lambda v: F.trim(v)),
-        lambda v: v != "",
-    )
-    # ids come only from things that also carry a name (Lrmi.php:195-197
-    # continues before the id branch when thing->name is unset)
-    named_thing_ids = F.xpath(
-        x,
-        F.lit(
-            '//*[local-name()="about"]/*[local-name()="thing"]'
-            '[*[local-name()="name"]]/*[local-name()="identifier"]/text()'
-        ),
-    )
-    topic_ids = F.transform(
-        F.filter(
-            F.transform(named_thing_ids, lambda v: F.trim(v)),
-            lambda v: v.rlike("^https?://"),
-        ),
-        lambda v: F.regexp_replace(v, "^https?://", "http://"),
-    )
-    topics = F.filter(
-        F.transform(_path(x, "about", "thing", "name"), lambda v: F.trim(v)),
-        lambda v: v != "",
-    )
-    return out.withColumns(
-        {
-            "record_format": F.lit("lrmi"),
-            # Lrmi.php:100-103: constant format
-            "format": F.lit("LearningMaterial"),
-            "title": title,
-            "title_full": title,
-            "title_short": title,
-            "title_sort": K.create_sort_title(title),
-            "language": lrmi_languages(x),
-            "author": F.slice(person_names, 1, 1),
-            "author_sort": F.coalesce(
-                try_element_at(person_names, 1), F.lit("")
-            ),
-            "author2": person_names,
-            "author_corporate": F.filter(
-                F.transform(
-                    _path(x, "author", "organization", "legalName"),
-                    lambda v: F.trim(v),
-                ),
-                lambda v: v != "",
-            ),
-            "topic": topics,
-            "topic_facet": topics,
-            "topic_ids": topic_ids,
-            "url": F.array().cast("array<string>"),
-        }
-    )
+def to_solr_columns(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+    return _overlay_struct(qdc_to_solr_columns(df, xml_col=xml_col), xml_col)

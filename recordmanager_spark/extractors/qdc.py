@@ -7,7 +7,8 @@ Behavioral spec (reference, NOT code): Record/Qdc.php:155-210 —
   recognized in any identifier
 - contents/description from description elements (primary = first).
 
-Shares the DC building blocks (xpath local-name access, the XML gate).
+One ``from_xml`` parse per record (namespace prefixes stripped like
+DC's) feeds every column.
 """
 
 from __future__ import annotations
@@ -16,62 +17,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import keys as K
-from .dc import _el, _els, dc_languages, well_formed_xml
+from .dc import _strip_ns_prefixes
 from recordmanager_spark.sparkcompat import try_element_at
 
 
-def _typed(xml: Column, name: str, type_test: str) -> Column:
-    return F.xpath(
-        xml, F.lit(f'//*[local-name()="{name}" and {type_test}]/text()')
-    )
-
-
 _DOI_RE = "(urn:doi:|https?://doi.org/|https?://dx.doi.org/)([^?#]+)"
-
-# getFormat examines each <type> in document order; unrolled to a fixed
-# probe depth (records carry a handful of types; 8 covers the corpus)
-_MAX_TYPE_NODES = 8
-
-
-def _format_column(x: Column, preferred_format_types) -> Column:
-    """First value per @type attribute ('no_type' when absent); a
-    preferred attribute list wins in order, else the first attribute seen;
-    'Unknown' when no types (getFormat, Qdc.php:338-368)."""
-    pairs = F.array(
-        *[
-            F.struct(
-                F.xpath_string(
-                    x, F.lit(f'(//*[local-name()="type"])[{i}]')
-                ).alias("v"),
-                F.xpath_string(
-                    x, F.lit(f'(//*[local-name()="type"])[{i}]/@type')
-                ).alias("t"),
-            )
-            for i in range(1, _MAX_TYPE_NODES + 1)
-        ]
-    )
-    norm = F.transform(
-        F.filter(pairs, lambda p: F.trim(p["v"]) != ""),
-        lambda p: F.struct(
-            F.trim(p["v"]).alias("v"),
-            F.coalesce(
-                F.nullif(F.trim(p["t"]), F.lit("")), F.lit("no_type")
-            ).alias("t"),
-        ),
-    )
-    choices = [
-        try_element_at(F.filter(norm, lambda p: p["t"] == pref), 1)["v"]
-        for pref in preferred_format_types
-    ]
-    return F.coalesce(*choices, try_element_at(norm, 1)["v"], F.lit("Unknown"))
-
-
-# --- single-parse struct engine (the scale path, and the default) ----------
-#
-# The xpath engine issues ~15 XPath calls per record and probes <type>
-# elements positionally up to _MAX_TYPE_NODES; the struct engine is one
-# JVM from_xml parse (corrupt marker = validity gate) plus a single gated
-# xpath for the descendant-text allfields, with no positional caps.
 
 _QDC_TYPED = "array<struct<_type:string,_VALUE:string>>"
 _QDC_STRUCT_SCHEMA = (
@@ -87,14 +37,14 @@ _QDC_STRUCT_SCHEMA = (
 )
 
 
-def _to_solr_columns_struct(
+def to_solr_columns(
     df: DataFrame,
-    xml_col: str,
-    preferred_format_types: tuple[str, ...],
-    default_display_language: str,
+    xml_col: str = "xml",
+    preferred_format_types: tuple[str, ...] = (),
+    default_display_language: str = "en",
 ) -> DataFrame:
-    from .dc import _strip_ns_prefixes
-
+    """One ``from_xml`` parse per record (corrupt marker = validity gate)
+    plus a single gated xpath for the descendant-text allfields."""
     df = df.withColumn(
         "__qdc_parsed",
         F.from_xml(
@@ -111,8 +61,8 @@ def _to_solr_columns_struct(
         return F.when(ok, F.coalesce(col, es))
 
     def texts(arr: Column) -> Column:
-        # the struct twin of //name/text(): empty elements have no text
-        # node, so null values are dropped, not kept as nulls
+        # empty elements have no text, so null values are dropped, not
+        # kept as nulls
         return F.filter(F.coalesce(arr, es), lambda v: v.isNotNull())
 
     def typed_vals(arr: Column, pred) -> Column:
@@ -150,6 +100,9 @@ def _to_solr_columns_struct(
         p["description"],
         F.expr("cast(array() as array<struct<_lang:string,_VALUE:string>>)"),
     )
+    # getDescriptions (Qdc.php:415-435): URL-shaped and bare-decimal
+    # entries are excluded from contents/description; the primary one is
+    # the first in the display language, else the first
     descriptions = F.filter(
         F.transform(
             F.filter(desc_all, lambda e: e["_VALUE"].isNotNull()),
@@ -191,6 +144,8 @@ def _to_solr_columns_struct(
     )
 
     def year_of(name: str) -> Column:
+        # getPublicationYear (Qdc.php:369-388): first value shaped YYYY or
+        # YYYY- / YYYY/ wins; date elements before issued
         cand = F.filter(
             F.transform(texts(p[name]), lambda v: F.trim(v)),
             lambda v: v.rlike("^\\d{4}($|[-/])"),
@@ -208,6 +163,8 @@ def _to_solr_columns_struct(
         F.transform(texts(p["subject"]), lambda v: F.trim(v)),
         lambda v: v != "",
     )
+    # getDOIs (Qdc.php:528-546): type=doi identifiers, the path after a
+    # doi-resolver prefix url-decoded, verbatim value when no prefix
     dois = F.transform(
         typed_vals(p["identifier"], lambda e: e["_type"].eqNullSafe("doi")),
         lambda v: F.when(
@@ -215,7 +172,7 @@ def _to_solr_columns_struct(
             F.url_decode(F.regexp_extract(F.trim(v), _DOI_RE, 2)),
         ).otherwise(F.trim(v)),
     )
-    # dc_languages over the parsed array (split on spaces, 3-char chunks)
+    # language: split on spaces, then into 3-char codes (Dc.php:172-179)
     words = F.flatten(
         F.transform(texts(p["language"]), lambda v: F.split(F.trim(v), "\\s+"))
     )
@@ -321,134 +278,3 @@ def _to_solr_columns_struct(
     )
     return out.drop("__qdc_parsed")
 
-
-def to_solr_columns(
-    df: DataFrame,
-    xml_col: str = "xml",
-    validate: bool = True,
-    preferred_format_types: tuple[str, ...] = (),
-    default_display_language: str = "en",
-    engine: str = "struct",
-) -> DataFrame:
-    if engine == "struct":
-        return _to_solr_columns_struct(
-            df, xml_col, preferred_format_types, default_display_language
-        )
-    x = F.col(xml_col)
-    if validate:
-        x = F.when(well_formed_xml(x), F.col(xml_col))
-    main_titles = _typed(x, "title", 'not(@type="alternative")')
-    title = K.strip_trailing_punctuation(
-        F.trim(F.coalesce(try_element_at(main_titles, 1), F.lit("")))
-    )
-    alt = F.concat(
-        F.transform(F.slice(main_titles, 2, 1000), lambda v: F.trim(v)),
-        F.transform(_typed(x, "title", '@type="alternative"'), lambda v: F.trim(v)),
-    )
-    identifiers = F.transform(_els(x, "identifier"), lambda v: F.trim(v))
-    isbn_digits = F.transform(identifiers, lambda v: K.normalize_isbn(v))
-    # getDescriptions (Qdc.php:415-435): URL-shaped and bare-decimal
-    # entries are excluded from contents/description
-    descriptions = F.filter(
-        F.transform(_els(x, "description"), lambda v: F.trim(v)),
-        lambda v: ~v.rlike("(^https?)|(^\\d+\\.\\d+$)"),
-    )
-
-    # primary description: the first filtered one in the configured
-    # display language, else the first filtered one (Qdc.php:415-441)
-    desc_lang = F.filter(
-        F.transform(
-            F.xpath(
-                x,
-                F.lit(
-                    '//*[local-name()="description" and @lang="'
-                    + default_display_language
-                    + '"]/text()'
-                ),
-            ),
-            lambda v: F.trim(v),
-        ),
-        lambda v: ~v.rlike("(^https?)|(^\\d+\\.\\d+$)"),
-    )
-
-    def _year_of(name: str) -> Column:
-        # getPublicationYear (Qdc.php:369-388): first value shaped
-        # YYYY or YYYY- / YYYY/ wins; date elements before issued
-        cand = F.filter(
-            F.transform(_els(x, name), lambda v: F.trim(v)),
-            lambda v: v.rlike("^\\d{4}($|[-/])"),
-        )
-        return F.substring(try_element_at(cand, 1), 1, 4)
-    authors = F.filter(
-        F.transform(
-            _els(x, "creator"),
-            lambda v: K.strip_trailing_punctuation(F.trim(v)),
-        ),
-        lambda v: v != "",
-    )
-    topics = F.filter(
-        F.transform(_els(x, "subject"), lambda v: F.trim(v)), lambda v: v != ""
-    )
-    # getDOIs (Qdc.php:528-546): type=doi identifiers, the path after a
-    # doi-resolver prefix url-decoded, verbatim value when no prefix
-    dois = F.transform(
-        _typed(x, "identifier", '@type="doi"'),
-        lambda v: F.when(
-            F.regexp_extract(F.trim(v), _DOI_RE, 2) != "",
-            F.url_decode(F.regexp_extract(F.trim(v), _DOI_RE, 2)),
-        ).otherwise(F.trim(v)),
-    )
-    return df.withColumns(
-        {
-            "id": F.trim(_el(x, "recordID")),
-            "record_format": F.lit("qdc"),
-            "ctrlnum": F.trim(_el(x, "recordID")),
-            # getAllFields (Qdc.php:493-500): every direct child element's
-            # text, trimmed, in document order
-            "allfields": F.transform(
-                F.xpath(x, F.lit("/*/*//text()")), lambda v: F.trim(v)
-            ),
-            "language": dc_languages(x),
-            "format": _format_column(x, preferred_format_types),
-            "author": authors,
-            "author_sort": F.coalesce(try_element_at(authors, 1), F.lit("")),
-            "author_corporate": F.array().cast("array<string>"),
-            "author2": F.filter(
-                F.transform(_els(x, "contributor"), lambda v: K.strip_trailing_punctuation(F.trim(v))),
-                lambda v: v != "",
-            ),
-            "title": title,
-            "title_full": title,
-            "title_short": try_element_at(F.split(title, " : ", 2), 1),
-            "title_sub": F.coalesce(
-                try_element_at(F.split(title, " : ", 2), 2), F.lit("")
-            ),
-            "title_alt": F.filter(alt, lambda v: v != ""),
-            "title_sort": K.create_sort_title(title),
-            "publisher": F.array(F.trim(_el(x, "publisher"))),
-            "publishDate": F.coalesce(
-                _year_of("date"), _year_of("issued"), F.lit("")
-            ),
-            "series": F.array().cast("array<string>"),
-            "isbn": F.array_distinct(
-                F.filter(isbn_digits, lambda v: v.isNotNull() & (v != ""))
-            ),
-            "issn": F.filter(
-                F.transform(
-                    _typed(x, "identifier", '@type="issn"'), lambda v: F.trim(v)
-                ),
-                lambda v: v != "",
-            ),
-            "topic": topics,
-            "topic_facet": topics,
-            "doi_str_mv": dois,
-            "url": F.filter(identifiers, lambda v: v.rlike("^https?")),
-            "contents": F.filter(descriptions, lambda v: v != ""),
-            "page_count": F.lit(""),
-            "description": F.coalesce(
-                try_element_at(desc_lang, 1),
-                try_element_at(descriptions, 1),
-                F.lit(""),
-            ),
-        }
-    )

@@ -6,6 +6,7 @@ import json
 
 from recordmanager_spark.extractors import forward_authority, marc_authority
 from recordmanager_spark.extractors.marc import parse_marc_in_json
+from tests.golden_rows import assert_golden, collect_rows
 
 PERSON = json.dumps(
     {
@@ -141,26 +142,13 @@ def test_forward_authority_occupation_position_only(spark):
 
 
 def test_forward_authority_engines_agree(spark):
-    """Struct (default, single-parse) and xpath engines produce identical
-    rows, including malformed XML and an empty envelope."""
+    """The fixture, malformed XML and an empty envelope match the rows
+    pinned when the xpath and struct engines agreed (tests/golden_rows.py)."""
     df = spark.createDataFrame(
-        [(FWD,), ("<broken",), ("<envelope/>",)], "xml string"
+        [(0, FWD), (1, "<broken"), (2, "<envelope/>")], "__i int, xml string"
     ).coalesce(1)
-    cols = sorted(
-        c
-        for c in forward_authority.to_solr_columns(df, source="fwa").columns
-        if c != "xml"
+    out = forward_authority.to_solr_columns(df, source="fwa")
+    assert_golden(
+        "forward_authority_engines_agree",
+        collect_rows(out, "xml", "__i", drop=("__i",)),
     )
-    a = [
-        tuple(r)
-        for r in forward_authority.to_solr_columns(
-            df, source="fwa", engine="struct"
-        ).select(cols).collect()
-    ]
-    b = [
-        tuple(r)
-        for r in forward_authority.to_solr_columns(
-            df, source="fwa", engine="xpath"
-        ).select(cols).collect()
-    ]
-    assert a == b

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from recordmanager_spark.extractors import doaj, ese, lrmi
+from tests.golden_rows import assert_golden, collect_rows
 
 ESE1 = """<record>
   <recordID>ese-1</recordID>
@@ -140,8 +141,9 @@ def test_malformed_xml_masked(spark):
 
 
 def test_dc_engines_agree(spark):
-    """xpath and from_xml struct engines produce identical projections
-    (flat records, namespaced records, malformed input)."""
+    """Flat records, namespaced records and malformed input match the rows
+    pinned when the xpath and struct engines agreed (tests/golden_rows.py;
+    ``allfields`` is pinned to its schema-order value)."""
     from recordmanager_spark.extractors import dc
 
     docs = [
@@ -158,17 +160,11 @@ def test_dc_engines_agree(spark):
         "<broken",
         "<dc><title>only title</title></dc>",
     ]
-    df = spark.createDataFrame([(d,) for d in docs], "xml string")
-    cols = [
-        "id", "ctrlnum", "language", "format", "author", "author2", "title",
-        "title_full", "title_short", "title_sub", "title_sort", "publisher",
-        "publishDate", "isbn", "topic", "url", "contents",
-    ]
-    a = dc.to_solr_columns(df, "xml", engine="xpath").select(*cols).collect()
-    b = dc.to_solr_columns(df, "xml", engine="struct").select(*cols).collect()
-    for ra, rb in zip(a, b):
-        for c in cols:
-            assert ra[c] == rb[c], (c, ra[c], rb[c])
+    df = spark.createDataFrame(list(enumerate(docs)), "__i int, xml string")
+    out = dc.to_solr_columns(df, "xml")
+    assert_golden(
+        "dc_engines_agree", collect_rows(out, "xml", "__i", drop=("__i",))
+    )
 
 
 def test_lrmi_topic_ids_join_ready(spark):
@@ -181,13 +177,11 @@ def test_lrmi_topic_ids_join_ready(spark):
 
 
 def test_qdc_lrmi_ese_doaj_engines_agree(spark):
-    """Struct (default, single/double from_xml parse) and xpath engines
-    produce identical rows for every DC-family driver, including
-    malformed input. Fixtures keep multi-valued elements at the root
-    level (the reference's own shape): the struct engines read DIRECT
-    children like the reference's SimpleXML chains, while the xpath
-    engines' // search would also match nested occurrences — an intended
-    faithfulness improvement, not a parity target."""
+    """Every DC-family driver's rows, including malformed input, match the
+    rows pinned when the xpath and struct engines agreed
+    (tests/golden_rows.py). Fixtures keep multi-valued elements at the
+    root level (the reference's own shape): the extractors read DIRECT
+    children like the reference's SimpleXML chains."""
     from recordmanager_spark.extractors import doaj, ese, lrmi, qdc
 
     base = (
@@ -218,29 +212,18 @@ def test_qdc_lrmi_ese_doaj_engines_agree(spark):
         "<fullTextUrl>https://ft/x</fullTextUrl>"
     )
     cases = (
-        (qdc, {}, f"<dc>{base}</dc>"),
-        (lrmi, {}, f"<dc>{base}{lrmi_extra}</dc>"),
-        (ese, {}, f"<dc>{base}</dc>"),
-        (doaj, {"oai_id_col": "oai_id"}, f"<dc>{base}{doaj_extra}</dc>"),
+        ("qdc", qdc, {}, f"<dc>{base}</dc>"),
+        ("lrmi", lrmi, {}, f"<dc>{base}{lrmi_extra}</dc>"),
+        ("ese", ese, {}, f"<dc>{base}</dc>"),
+        ("doaj", doaj, {"oai_id_col": "oai_id"}, f"<dc>{base}{doaj_extra}</dc>"),
     )
-    for mod, kwargs, xml in cases:
+    for name, mod, kwargs, xml in cases:
         df = spark.createDataFrame(
-            [(xml, "oai:x:loc1"), ("<broken", "oai:x:loc2")],
-            "xml string, oai_id string",
+            [(0, xml, "oai:x:loc1"), (1, "<broken", "oai:x:loc2")],
+            "__i int, xml string, oai_id string",
         ).coalesce(1)
-        cols = sorted(
-            c
-            for c in mod.to_solr_columns(df, "xml", **kwargs).columns
-            if c not in ("xml", "oai_id")
+        out = mod.to_solr_columns(df, "xml", **kwargs)
+        assert_golden(
+            f"dc_family_engines_agree/{name}",
+            collect_rows(out, "xml", "__i", drop=("__i",)),
         )
-        a = [
-            tuple(r)
-            for r in mod.to_solr_columns(df, "xml", engine="struct", **kwargs)
-            .select(cols).collect()
-        ]
-        b = [
-            tuple(r)
-            for r in mod.to_solr_columns(df, "xml", engine="xpath", **kwargs)
-            .select(cols).collect()
-        ]
-        assert a == b, mod.__name__

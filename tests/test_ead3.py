@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from recordmanager_spark.extractors import ead3
 from recordmanager_spark.sources import splitter as SP
+from tests.golden_rows import assert_golden, collect_rows
 
 EAD3_DOC = """<ead xmlns="http://ead3.archivists.org/schema/">
 <control><maintenanceagency><agencycode>FI-KA</agencycode></maintenanceagency></control>
@@ -111,27 +112,16 @@ def test_ead3_series_suppressed_for_series_level(spark):
 
 
 def test_ead3_engines_agree(spark):
-    """Struct (default) and xpath engines agree on the golden document's
-    components and on malformed input. (Known, intended divergences —
-    nested-element `//` matches, multi-scopecontent — don't occur in
-    well-formed split output; see the module docstring.)"""
-    parts = _parts(spark)
+    """The golden document's components and malformed input match the rows
+    pinned when the xpath and struct engines agreed (tests/golden_rows.py)."""
     bad = spark.createDataFrame(
         [("<broken", "x", 1, "p", "t", "a", "at", "l", [])],
         "part_xml string, part_id string, sequence int, parent_id string,"
         " parent_title string, archive_id string, archive_title string,"
         " level string, inherited_titles array<string>",
     )
-    for df in (parts, bad):
-        cols = sorted(ead3.to_solr_columns(df).columns)
-        a = [
-            tuple(r)
-            for r in ead3.to_solr_columns(df, engine="struct")
-            .select(cols).orderBy("part_id").collect()
-        ]
-        b = [
-            tuple(r)
-            for r in ead3.to_solr_columns(df, engine="xpath")
-            .select(cols).orderBy("part_id").collect()
-        ]
-        assert a == b
+    for name, df in (("parts", _parts(spark)), ("broken", bad)):
+        assert_golden(
+            f"ead3_engines_agree/{name}",
+            collect_rows(ead3.to_solr_columns(df), "part_xml", "part_id"),
+        )

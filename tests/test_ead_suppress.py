@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from recordmanager_spark.extractors import ead
 from recordmanager_spark.plans.filter_dsl import suppressed_condition
 from recordmanager_spark.sources import splitter as SP
+from tests.golden_rows import assert_golden, collect_rows
 
 EAD_COMPONENT = """<c01 level="series" id="S-1">
   <did>
@@ -87,8 +88,9 @@ def test_suppression_missing_field_never_suppresses(spark):
 
 
 def test_ead_engines_agree(spark):
-    """Struct (default, single from_xml parse) and xpath engines produce
-    identical rows, including malformed input."""
+    """The component, malformed input and an empty component match the
+    rows pinned when the xpath and struct engines agreed
+    (tests/golden_rows.py)."""
     df = spark.createDataFrame(
         [
             (EAD_COMPONENT, "ARCH-9", "Grand Archive", "0000002"),
@@ -97,15 +99,7 @@ def test_ead_engines_agree(spark):
         ],
         ["part_xml", "archive_id", "archive_title", "sequence"],
     ).coalesce(1)
-    cols = sorted(ead.to_solr_columns(df).columns)
-    a = [
-        tuple(r)
-        for r in ead.to_solr_columns(df, engine="struct")
-        .select(cols).orderBy("sequence").collect()
-    ]
-    b = [
-        tuple(r)
-        for r in ead.to_solr_columns(df, engine="xpath")
-        .select(cols).orderBy("sequence").collect()
-    ]
-    assert a == b
+    assert_golden(
+        "ead_engines_agree",
+        collect_rows(ead.to_solr_columns(df), "part_xml", "sequence"),
+    )

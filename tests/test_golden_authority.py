@@ -7,6 +7,7 @@ tests/RecordManagerTest/Base/Record/EaccpfTest.php (testEaccpf1).
 from __future__ import annotations
 
 from recordmanager_spark.extractors import eaccpf as EAC
+from tests.golden_rows import assert_golden, collect_rows
 
 FIXDIR = "/root/reference/tests/fixtures/Base/record"
 
@@ -101,26 +102,15 @@ def test_golden_forward1(spark):
 
 
 def test_forward_engines_agree(spark):
-    """The single-parse struct engine (default, scale path) and the xpath
-    engine produce identical rows on the reference golden fixture and on
-    degenerate inputs (malformed XML, no main element)."""
+    """Degenerate inputs (malformed XML, no main element) match the rows
+    pinned when the xpath and struct engines agreed (tests/golden_rows.py);
+    forward1.xml is pinned field by field in test_golden_forward1."""
     from recordmanager_spark.extractors import forward as FW
 
-    raw = open(f"{FIXDIR}/forward1.xml").read()
     df = spark.createDataFrame(
-        [(raw,), ("<broken",), ("<Empty/>",)], "xml string"
+        [(0, "<broken"), (1, "<Empty/>")], "__i int, xml string"
     ).coalesce(1)
-    cols = sorted(
-        c for c in FW.to_solr_columns(df, "xml").columns if c != "xml"
+    assert_golden(
+        "forward_engines_agree",
+        collect_rows(FW.to_solr_columns(df, "xml"), "xml", "__i", drop=("__i",)),
     )
-    a = [
-        tuple(r)
-        for r in FW.to_solr_columns(df, "xml", engine="struct")
-        .select(cols).collect()
-    ]
-    b = [
-        tuple(r)
-        for r in FW.to_solr_columns(df, "xml", engine="xpath")
-        .select(cols).collect()
-    ]
-    assert a == b

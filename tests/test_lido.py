@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from recordmanager_spark.extractors import lido
+from tests.golden_rows import assert_golden, collect_rows
 
 LIDO1 = """<lido xmlns="http://www.lido-schema.org">
   <descriptiveMetadata>
@@ -194,43 +195,32 @@ def test_forward_extract(spark):
 
 
 def test_lido_engines_agree(spark):
-    """Single-parse (default) and xpath engines produce identical rows on
-    the golden record, a malformed record, and an empty-ish record."""
+    """The golden record, a malformed record and an empty-ish record match
+    the rows pinned when the xpath and single-parse engines agreed
+    (tests/golden_rows.py)."""
     from recordmanager_spark.extractors import lido as LD
 
     df = spark.createDataFrame(
-        [(LIDO1,), ("<broken",), ("<lido/>",)], "xml string"
+        [(0, LIDO1), (1, "<broken"), (2, "<lido/>")], "__i int, xml string"
     ).coalesce(1)
-    cols = sorted(c for c in LD.to_solr_columns(df).columns if c != "xml")
-    a = [
-        tuple(r)
-        for r in LD.to_solr_columns(df, engine="single").select(cols).collect()
-    ]
-    b = [
-        tuple(r)
-        for r in LD.to_solr_columns(df, engine="xpath").select(cols).collect()
-    ]
-    assert a == b
+    assert_golden(
+        "lido_engines_agree",
+        collect_rows(LD.to_solr_columns(df), "xml", "__i", drop=("__i",)),
+    )
 
 
 def test_eaccpf_engines_agree(spark):
-    """Struct (default, single from_xml parse) and xpath engines produce
-    identical rows on the fixture, malformed input, and an empty doc."""
+    """The fixture, malformed input and an empty doc match the rows pinned
+    when the xpath and struct engines agreed (tests/golden_rows.py)."""
     from recordmanager_spark.extractors import eaccpf
 
     df = spark.createDataFrame(
-        [(EACCPF1,), ("<broken",), ("<eac-cpf/>",)], "xml string"
+        [(0, EACCPF1), (1, "<broken"), (2, "<eac-cpf/>")], "__i int, xml string"
     ).coalesce(1)
-    cols = sorted(c for c in eaccpf.to_solr_columns(df).columns if c != "xml")
-    a = [
-        tuple(r)
-        for r in eaccpf.to_solr_columns(df, engine="struct").select(cols).collect()
-    ]
-    b = [
-        tuple(r)
-        for r in eaccpf.to_solr_columns(df, engine="xpath").select(cols).collect()
-    ]
-    assert a == b
+    assert_golden(
+        "eaccpf_engines_agree",
+        collect_rows(eaccpf.to_solr_columns(df), "xml", "__i", drop=("__i",)),
+    )
 
 
 def test_local_name_cache_is_bounded():

@@ -65,7 +65,7 @@ def test_knn_bruteforce_broadcast_nested_loop(spark):
 
 
 def test_extraction_stays_codegen(spark):
-    """The DC struct engine's projection runs inside whole-stage codegen."""
+    """The DC extractor's projection runs inside whole-stage codegen."""
     c = E._t(spark, SF, "customer")
     from recordmanager_spark.extractors import dc as DC
 
@@ -77,7 +77,6 @@ def test_extraction_stays_codegen(spark):
             ).alias("xml")
         ),
         "xml",
-        engine="struct",
     ).select("id", "title")
     p = plan_of(df)
     # formatted mode prefixes codegen'd nodes with '*'

@@ -429,16 +429,16 @@ SIZE_AUDITS = [
     ("marc_rich_extract", 16.0, 0),
     ("linemarc_extract", 4.5, 0),
     ("forward_film_extract", 1.0, 0),
-    ("dc_extract", 0.5, 10),
+    ("dc_extract", 0.5, 0),
     ("dc_extract_struct", 0.5, 0),
-    ("lido_extract", 0.5, 0),  # single-parse engine
-    ("ead_extract", 0.5, 2),  # struct engine; 1 gated allfields xpath
-    ("ead3_split_extract", 2.0, 4),  # struct engine; 1 gated allfields xpath
-    ("qdc_extract", 0.5, 2),  # struct engine; 1 gated allfields xpath
-    ("lrmi_extract", 0.5, 2),  # struct engine (QDC base + overlay)
-    ("ese_extract", 0.6, 2),  # struct engine; 1 gated allfields xpath
-    ("doaj_extract", 0.5, 4),  # struct engine; gated allfields + fulltext
-    ("forward_authority_extract", 0.6, 0),  # struct engine
+    ("lido_extract", 0.5, 0),  # one Python pass, no xpath
+    ("ead_extract", 0.5, 2),  # 1 gated allfields xpath
+    ("ead3_split_extract", 2.0, 4),  # 1 gated allfields xpath
+    ("qdc_extract", 0.5, 2),  # 1 gated allfields xpath
+    ("lrmi_extract", 0.5, 2),  # QDC base + overlay
+    ("ese_extract", 0.6, 2),  # 1 gated allfields xpath
+    ("doaj_extract", 0.5, 4),  # gated allfields + fulltext
+    ("forward_authority_extract", 0.6, 0),
     ("marc_authority_extract", 1.0, 0),
     ("sierra_harvest_extract", 0.7, 0),
     ("genieplus_harvest_extract", 1.0, 0),

@@ -5,15 +5,6 @@ DuckDB over the same sf directory, then compares row count, column names,
 and an order-insensitive canonical value hash. Usage:
 
     python tools/verify_oracle.py [sf_dir] [query ...]
-    python tools/verify_oracle.py --perturb [driver ...]
-
-``--perturb`` runs the adversarial fixture check: for every dual-engine
-extractor (or the named ones), the FULL presence/absence lattice of its
-optional elements must produce identical struct- and xpath-engine rows.
-An oracle fixture that always emits an element cannot mask an
-engine-divergence on its absence here — every subset is exercised
-(recordmanager_spark/parity.py; the round-3 LRMI language bug is the
-motivating case).
 """
 
 from __future__ import annotations
@@ -68,38 +59,7 @@ def table_hash(cols, rows):
     return h.hexdigest()
 
 
-def perturb(drivers: list[str]) -> None:
-    from recordmanager_spark.parity import DRIVERS, sweep_driver
-
-    unknown = set(drivers) - set(DRIVERS)
-    if unknown:
-        print(f"unknown driver(s): {sorted(unknown)}; known: {sorted(DRIVERS)}")
-        sys.exit(2)
-    spark = get_spark("verify_perturb", shuffle_partitions=4)
-    failures = []
-    for driver in drivers or sorted(DRIVERS):
-        t0 = time.time()
-        diffs = sweep_driver(spark, driver)
-        if diffs:
-            print(f"FAIL  {driver}: {len(diffs)} engine disagreements "
-                  f"[{time.time()-t0:.1f}s]")
-            for i, c, a, b in diffs[:5]:
-                print(f"        combo {i} col {c}: struct={a!r} xpath={b!r}")
-            failures.append(driver)
-        else:
-            print(f"ok    {driver}: full element-subset lattice parity "
-                  f"[{time.time()-t0:.1f}s]")
-    print()
-    if failures:
-        print(f"{len(failures)} FAILURES: {failures}")
-        sys.exit(1)
-    print("all drivers hold lattice parity")
-
-
 def main():
-    if len(sys.argv) > 1 and sys.argv[1] == "--perturb":
-        perturb(sys.argv[2:])
-        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
