@@ -1163,7 +1163,9 @@ def work_keys_marc(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def dc_extract(spark: SparkSession, sf: str) -> DataFrame:
-    """DC XML round-trip through the DC extractor (Record/Dc.php)."""
+    """DC XML round-trip through the DC extractor (Record/Dc.php): one
+    from_xml parse per record feeds every column. Also served as
+    ``dc_extract_struct``, the name the struct engine once ran under."""
     c = _t(spark, sf, "customer")
     year = (F.lit(2000) + F.pmod(F.col("c_custkey"), F.lit(20))).cast("string")
     xml = F.format_string(
@@ -1187,6 +1189,20 @@ def dc_extract(spark: SparkSession, sf: str) -> DataFrame:
         F.col("publishDate").alias("publish_year"),
         F.col("format").alias("dc_type"),
     )
+
+
+# oracle for dc_extract, registered under both of its query names
+_DC_EXTRACT_SQL = """
+            SELECT c_custkey,
+                   'dc-' || CAST(c_custkey AS VARCHAR) AS id,
+                   c_name AS title_short,
+                   'extracted edition' AS title_sub,
+                   'Maker, M.' AS creator,
+                   'eng,fin' AS langs,
+                   CAST(2000 + c_custkey % 20 AS VARCHAR) AS publish_year,
+                   'Text' AS dc_type
+            FROM customer
+        """
 
 
 def pipeline_end_to_end(spark: SparkSession, sf: str) -> DataFrame:
@@ -1532,34 +1548,6 @@ def marc_holdings_normalize(spark: SparkSession, sf: str) -> DataFrame:
         F.col("h.branch").alias("branch"),
         F.col("h.callnumber").alias("callnumber"),
         F.col("h.available").alias("available"),
-    )
-
-
-def dc_extract_struct(spark: SparkSession, sf: str) -> DataFrame:
-    """DC extraction through the single from_xml parse per record (one
-    StAX parse feeds every column)."""
-    c = _t(spark, sf, "customer")
-    year = (F.lit(2000) + F.pmod(F.col("c_custkey"), F.lit(20))).cast("string")
-    xml = F.format_string(
-        "<dc><recordID>dc-%s</recordID>"
-        "<title>%s : extracted edition</title>"
-        "<creator>Maker, M.</creator>"
-        "<language>engfin</language>"
-        "<date>%s-01-01</date>"
-        "<publisher>DCPub</publisher>"
-        "<type>Text</type></dc>",
-        F.col("c_custkey").cast("string"), F.col("c_name"), year,
-    )
-    out = DC.to_solr_columns(c.select("c_custkey", xml.alias("xml")), "xml")
-    return out.select(
-        "c_custkey",
-        "id",
-        "title_short",
-        "title_sub",
-        F.col("author").alias("creator"),
-        F.array_join("language", ",").alias("langs"),
-        F.col("publishDate").alias("publish_year"),
-        F.col("format").alias("dc_type"),
     )
 
 
@@ -4893,7 +4881,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "suppression_filter": suppression_filter,
         "work_keys_marc": work_keys_marc,
         "dc_extract": dc_extract,
-        "dc_extract_struct": dc_extract_struct,
+        "dc_extract_struct": dc_extract,
         "marc_holdings_normalize": marc_holdings_normalize,
         "oai_harvest_parse": oai_harvest_parse,
         "sierra_harvest_extract": sierra_harvest_extract,
@@ -5624,17 +5612,7 @@ def oracle_sql() -> dict[str, str]:
                    1 AS n_keys
             FROM customer
         """,
-        "dc_extract": """
-            SELECT c_custkey,
-                   'dc-' || CAST(c_custkey AS VARCHAR) AS id,
-                   c_name AS title_short,
-                   'extracted edition' AS title_sub,
-                   'Maker, M.' AS creator,
-                   'eng,fin' AS langs,
-                   CAST(2000 + c_custkey % 20 AS VARCHAR) AS publish_year,
-                   'Text' AS dc_type
-            FROM customer
-        """,
+        "dc_extract": _DC_EXTRACT_SQL,
         "pipeline_end_to_end": """
             SELECT 'pa.rec' || k AS dedup_id,
                    'Chronicle ' || k || ' of ' || c_name AS title,
@@ -5708,17 +5686,7 @@ def oracle_sql() -> dict[str, str]:
                    o_orderkey % 5 <> 0 AS available
             FROM orders
         """,
-        "dc_extract_struct": """
-            SELECT c_custkey,
-                   'dc-' || CAST(c_custkey AS VARCHAR) AS id,
-                   c_name AS title_short,
-                   'extracted edition' AS title_sub,
-                   'Maker, M.' AS creator,
-                   'eng,fin' AS langs,
-                   CAST(2000 + c_custkey % 20 AS VARCHAR) AS publish_year,
-                   'Text' AS dc_type
-            FROM customer
-        """,
+        "dc_extract_struct": _DC_EXTRACT_SQL,
         "ese_extract": """
             SELECT c_custkey,
                    'e' || CAST(c_custkey AS VARCHAR) AS id,

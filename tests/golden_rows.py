@@ -11,6 +11,20 @@ A digest is the first 16 hex digits of the sha256 of the row as
 canonical sorted-key JSON. A test's key folds in a hash of its sorted
 column list, so adding or dropping an output column fails loudly. The
 file is never rewritten by the tests.
+
+Rebuilding a key after a deliberate change to an extractor's output:
+take the ``pairs`` the test passes to ``assert_golden`` (the same
+``collect_rows(...)`` call) and store, by hand,
+
+    stored[golden_key(name, sorted(pairs[0][1]))] = [
+        row_digest(row) for _, row in pairs
+    ]
+
+then write ``extractor_rows.json`` back with ``json.dumps(stored,
+indent=1, sort_keys=True)``. A digest hides what the row became, so a
+change that regenerates digests lists each changed row in CHANGES.md:
+its test, row index and new row, the text the failing assertion prints
+as ``actual row``.
 """
 
 from __future__ import annotations
