@@ -1,6 +1,6 @@
 """Audio near-duplicate detection over the banded Hamming engine — the
 audio leg of the multimodal dedup story (images: ``ahash64`` +
-``hamming_neardup_hashes``; video: ``examples/video_frames.py``).
+``hamming_neardup_hashes``).
 
 Fingerprint: per ~1 s segment, a 64-bit ENERGY-DELTA fingerprint in
 the Haitsma/Kalker (ISMIR 2002, "A Highly Robust Audio Fingerprinting
@@ -204,9 +204,9 @@ def audio_near_duplicates(
 ) -> DataFrame:
     """(id_a, id_b, n_segment_matches): audio pairs with at least
     ``min_matching_segments`` cross-audio near-duplicate segment pairs
-    (energy-delta Hamming distance <= ``max_hamming``) — the same
-    composition as :func:`examples.video_frames.video_near_duplicates`,
-    with segments where video has frames.
+    (energy-delta Hamming distance <= ``max_hamming``): segment
+    fingerprints near-dup through the banded Hamming engine, then the
+    matches count per audio pair.
 
     State bounds inherit from the banded engine: the segment-pair table
     is bucket-capped upstream and the audio-level count aggregates

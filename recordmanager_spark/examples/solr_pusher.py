@@ -22,9 +22,8 @@ Behavioral spec (reference, NOT code): ``Base/Solr/SolrUpdater.php``
   boundaries); deletions post as ``{"delete": [ids]}``; the run ends
   with ``{"commit": {}}`` unless noCommit.
 
-Like the other example clients (``examples/nominatim.py`` etc.) the
-transport is INJECTED as ``transport(url, body, headers) -> (status,
-body)`` — tests pass a fake, deployments pass a urllib/requests
+The transport is INJECTED as ``transport(url, body, headers) ->
+(status, body)`` — tests pass a fake, deployments pass a urllib/requests
 wrapper; the engine itself never opens a socket. ``sleeper``/``clock``
 are injected the same way so the retry/backoff/health-pause discipline
 is testable without wall-clock time.

@@ -8,7 +8,7 @@ one) while the ICU *shared library* itself is almost universally
 installed — Spark's own JVM ships ICU4J, and every mainstream Linux
 base image carries libicui18n. This module binds the two entry points
 the engine needs straight from the C API with ctypes, so
-``normalize_key(engine="icu")`` and the XSLT ``xsl:sort lang=``
+``normalize_key_icu`` and the XSLT ``xsl:sort lang=``
 collator run REAL ICU rules with zero third-party Python packages.
 
 Only public, versioned ICU C symbols are used (``utrans_openU``,

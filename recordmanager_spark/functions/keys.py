@@ -63,14 +63,14 @@ assert len(_CYR_1) == len(_CYR_1_TO), (len(_CYR_1), len(_CYR_1_TO))
 assert len(_GREEK_1) == len(_GREEK_1_TO), (len(_GREEK_1), len(_GREEK_1_TO))
 
 # Kana romanization (Hepburn-flavoured, PER-CHARACTER) for the table
-# engine. ICU's ``:: Latin`` also romanizes kana; without PyICU the
-# table engine folds the full hiragana syllabary (katakana derive from
+# fold. ICU's ``:: Latin`` also romanizes kana; the table fold covers
+# the full hiragana syllabary (katakana derive from
 # the fixed +0x60 block offset) so Japanese titles key to stable Latin
 # instead of raw kana. DOCUMENTED approximation vs ICU: per-character
 # folding renders digraphs letter-by-letter (きゃ -> "kiya", ICU "kya")
 # and drops sokuon gemination (っ -> "", ICU doubles the consonant) —
 # deterministic and consistent across sources, which is what dedup keys
-# need; pin ``engine="icu"`` for exact reference romanization. Han has
+# need; normalize_key_icu gives exact reference romanization. Han has
 # no bounded table and still passes through raw (stable, non-Latin).
 _KANA_BASE = {
     "あ": "a", "い": "i", "う": "u", "え": "e", "お": "o",
@@ -132,54 +132,23 @@ def _fold_kana(c: Column) -> Column:
 _KEY_STRIP_RE = r"[\x00-\x20\x21-\x2f\x3a-\x40\x5b-\x60\x7b-\x7f̀-ͯ]"
 
 
-def normalize_key(col: Column | str, engine: str | None = None) -> Column:
+def normalize_key(col: Column | str) -> Column:
     """Lowercase + fold to Latin + strip punctuation/whitespace/marks.
 
     The comparison key used everywhere the reference builds dedup keys.
 
-    ``engine``:
-    - ``None`` (default): the deterministic JVM-side TABLE fold. The
-      default is pinned, never environment-sniffed: dedup keys must be
-      byte-identical across machines and across driver/executors, and an
-      auto-selected ICU path would silently fork the key space between
-      ICU and ICU-free nodes (the folds genuinely diverge — e.g. ICU
-      strips en dashes the ASCII strip ranges keep). The reference is
-      always-ICU (MetadataUtils.php:416-433) because its whole fleet
-      shares one PHP runtime; a Spark cluster gives no such guarantee.
-    - ``"table"``: the same JVM fold, explicitly pinned (precomposed
-      Latin accents, decomposed combining marks, Cyrillic/Greek
-      romanization, per-char kana romanization — see _MULTI_FOLD and
-      _KANA_BASE notes). Zero Python hops.
-    - ``"icu"``: force the ICU transliterator — the reference's exact
-      production rules incl. Han romanization (raises when PyICU is
-      absent; every EXECUTOR must also have PyICU importable).
-    - ``"auto"``: opt-in auto-select — ICU when PyICU is importable on
-      the driver, else the table fold. Emits a RuntimeWarning naming
-      the cross-machine divergence hazard; the caller owns verifying
-      executor-side PyICU availability.
+    A deterministic JVM-side TABLE fold (precomposed Latin accents,
+    decomposed combining marks, Cyrillic/Greek romanization, per-char
+    kana romanization — see the _MULTI_FOLD and _KANA_BASE notes), with
+    zero Python hops. It never switches to ICU on its own: dedup keys
+    must be byte-identical across machines and across driver/executors,
+    and an environment-sniffed ICU path would silently fork the key
+    space between ICU and ICU-free nodes (the folds genuinely diverge —
+    e.g. ICU strips en dashes the ASCII strip ranges keep). The
+    reference is always-ICU (MetadataUtils.php:416-433) because its
+    whole fleet shares one PHP runtime; a Spark cluster gives no such
+    guarantee. :func:`normalize_key_icu` is the ICU transliterator fold.
     """
-    if engine is None:
-        engine = "table"
-    elif engine == "auto":
-        engine = "icu" if icu_available() else "table"
-        if engine == "icu":
-            import warnings
-
-            warnings.warn(
-                "normalize_key(engine='auto') selected ICU because PyICU "
-                "imports on the driver: keys will differ from ICU-free "
-                "machines, and every executor must also have PyICU "
-                "importable. Pin engine='table' or engine='icu' for a "
-                "fleet-stable choice.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    if engine == "icu":
-        return normalize_key_icu(col)
-    if engine != "table":
-        raise ValueError(
-            f"engine must be None, 'table', 'icu', or 'auto': {engine!r}"
-        )
     c0 = F.lower(F.col(col) if isinstance(col, str) else col)
     # let-bind the input through a one-element array: the kana branch
     # reads it 4x (rlike probe, fold, passthrough, split) and expression
@@ -200,13 +169,11 @@ def normalize_key(col: Column | str, engine: str | None = None) -> Column:
 
 
 def normalize_key_py(s: str | None) -> str:
-    """Driver-side Python twin of ``normalize_key(engine="table")``.
+    """Driver-side Python twin of :func:`normalize_key`.
 
     Byte-identical to the Column fold (a pytest sweep pins the parity):
-    used where a key must be computed OUTSIDE a Spark plan — building
-    external query strings (the MusicBrainz client sanitizes ids the
-    way MusicBrainzEnrichment.php:149-154 runs normalizeKey before
-    composing its Lucene query), goldens, and test oracles. Keep the
+    used where a key must be computed OUTSIDE a Spark plan — goldens
+    and test oracles. Keep the
     two implementations in lockstep when extending the fold tables.
     """
     if s is None:
@@ -232,11 +199,10 @@ def normalize_key_py(s: str | None) -> str:
 # The reference's production path folds keys through an ICU transliterator
 # (MetadataUtils.php:416-433; default rules recordmanager.ini.sample:19-25),
 # which also romanizes Han — beyond the data-driven tables above.
-# ``normalize_key`` NEVER auto-selects this path by default (see its
-# docstring: environment-sniffed key engines silently fork the key space
-# between ICU and ICU-free machines, and the pandas UDF additionally
-# requires PyICU on every executor). Pin ``engine="icu"`` to opt in, or
-# ``engine="auto"`` to accept the sniff with a RuntimeWarning.
+# ``normalize_key`` never uses this path (see its docstring:
+# environment-sniffed key engines silently fork the key space between
+# ICU and ICU-free machines, and the pandas UDF additionally requires
+# PyICU on every executor).
 
 _ICU_KEY_FOLDING_RULES = (
     ":: NFD; :: lower; :: Latin; :: [^[:letter:] [:number:]] Remove; :: NFKC;"
@@ -675,13 +641,6 @@ def normalize_relator(col: Column | str) -> Column:
     """Trim, strip all punctuation, lowercase (MetadataUtils.php:1077-1092)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.regexp_replace(F.trim(c), "\\p{P}+", ""))
-
-
-def normalize_language_strings(col: Column) -> Column:
-    """Array variant: trim + lowercase each, drop empties (:1056-1070)."""
-    return F.filter(
-        F.transform(col, lambda v: F.lower(F.trim(v))), lambda v: v != ""
-    )
 
 
 def validate_date(col: Column | str) -> Column:

@@ -65,13 +65,6 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(n > 0, p / n).otherwise(F.lit(0.0))
 
 
-def uppercase_ratio(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.length(F.regexp_replace(c, "[^A-Za-z]", ""))
-    u = F.length(F.regexp_replace(c, "[^A-Z]", ""))
-    return F.when(n > 0, u / n).otherwise(F.lit(0.0))
-
-
 def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
     sw = stopwords or LANG_PROFILES["en"]
     lit_sw = F.array(*[F.lit(s) for s in sw])

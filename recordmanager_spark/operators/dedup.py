@@ -32,12 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from recordmanager_spark.sparkcompat import try_element_at
 
-from ..functions.keys import (
-    author_match_expr,
-    create_title_key,
-    normalize_isbn,
-    normalize_key,
-)
+from ..functions.keys import author_match_expr, normalize_key
 
 # ---------------------------------------------------------------------------
 # Key generation (DedupHandler.php:313-370)
@@ -69,73 +64,45 @@ def with_dedup_keys(
     author_col: str = "author",
     isbn_col: str | None = "isbn",
     ignore_keys: list[str] | None = None,
-    key_fold=None,
 ) -> DataFrame:
     """Add title_keys / isbn_keys columns. title key = createTitleKey(title)
     + normalizeKey(author), capped at 200 chars; poison keys from the
     configurable ignore list are dropped (DedupHandler.php:1036-1079).
 
-    ``key_fold`` overrides the author-key folding function (e.g.
-    ``keys.normalize_key_icu`` for ICU Any-Latin including Han/Kana);
-    default is the JVM-side ``normalize_key``.
-
-    With the default fold, the key expressions compile through the
-    SQL-text twin (one ``F.expr`` parse instead of hundreds of py4j
-    Column-constructor round trips — see PERFORMANCE.md construction
-    census); a custom ``key_fold`` keeps the Column path since it may
-    wrap a UDF.
+    The key expressions compile through the SQL-text twin (one
+    ``F.expr`` parse instead of hundreds of py4j Column-constructor
+    round trips — see PERFORMANCE.md construction census).
     """
-    if key_fold is None:
-        from .. import sqlalg as SA
-        from .. import sqltwin
+    from .. import sqlalg as SA
+    from .. import sqltwin
 
-        ktw = sqltwin.keys_twin()
-        tk = F.expr(
-            str(
-                SA.substring(
-                    SA.concat(
-                        ktw.create_title_key(SA.col(title_col)),
-                        ktw.normalize_key(SA.col(author_col)),
-                    ),
-                    1,
-                    200,
-                )
+    ktw = sqltwin.keys_twin()
+    tk = F.expr(
+        str(
+            SA.substring(
+                SA.concat(
+                    ktw.create_title_key(SA.col(title_col)),
+                    ktw.normalize_key(SA.col(author_col)),
+                ),
+                1,
+                200,
             )
         )
-        isbn_keys = (
-            F.expr(
-                str(
-                    SA.array_distinct(
-                        SA.filter(
-                            SA.transform(
-                                SA.col(isbn_col), ktw.normalize_isbn
-                            ),
-                            lambda x: x != "",
-                        )
+    )
+    isbn_keys = (
+        F.expr(
+            str(
+                SA.array_distinct(
+                    SA.filter(
+                        SA.transform(SA.col(isbn_col), ktw.normalize_isbn),
+                        lambda x: x != "",
                     )
                 )
             )
-            if isbn_col is not None
-            else None
         )
-    else:
-        tk = F.substring(
-            F.concat(
-                create_title_key(F.col(title_col)), key_fold(F.col(author_col))
-            ),
-            1,
-            200,
-        )
-        isbn_keys = (
-            F.array_distinct(
-                F.filter(
-                    F.transform(F.col(isbn_col), normalize_isbn),
-                    lambda x: x != "",
-                )
-            )
-            if isbn_col is not None
-            else None
-        )
+        if isbn_col is not None
+        else None
+    )
     out = df.withColumn("title_keys", F.array(tk))
     if isbn_keys is not None:
         out = out.withColumn("isbn_keys", isbn_keys)

@@ -541,51 +541,6 @@ def uri_cache_upsert(
     return keep.unionByName(fetched.select(*keep.columns))
 
 
-def retrying_fetcher(
-    fetch,
-    max_tries: int = 90,
-    retry_wait: float = 5.0,
-    ignore_errors: tuple[int, ...] = (),
-    sleep=None,
-):
-    """Wrap a ``fetch(url) -> (status, body)`` callable with the
-    reference's retry discipline: on exception or a retryable status
-    (>=300, except 404 and ``ignore_errors``), wait ``retry_wait`` seconds
-    — doubling progressively, capped at 30 — and retry up to ``max_tries``
-    (AbstractEnrichment.php:243-305). Returns ``fetch2(url) -> str``: body
-    for 2xx, '' for 404/ignored statuses, raises after the last try.
-
-    ``sleep`` is injectable for tests; the default is time.sleep.
-    """
-    import time as _time
-
-    do_sleep = sleep if sleep is not None else _time.sleep
-
-    def fetch2(url: str) -> str:
-        wait = retry_wait
-        last_exc = None
-        for attempt in range(1, max_tries + 1):
-            try:
-                status, body = fetch(url)
-            except Exception as e:  # noqa: BLE001 — reference retries any error
-                last_exc = e
-                if attempt < max_tries:
-                    if wait < 30:
-                        wait *= 2
-                    do_sleep(min(wait, 30))
-                    continue
-                raise
-            if status >= 300 and status != 404 and status not in ignore_errors:
-                if attempt < max_tries:
-                    do_sleep(retry_wait)
-                    continue
-                raise RuntimeError(f"enrichment fetch failed for {url!r}: {status}")
-            return body if status < 300 else ""
-        raise last_exc  # pragma: no cover — loop always returns or raises
-
-    return fetch2
-
-
 def fetch_uris(
     misses: DataFrame,
     fetcher,
@@ -597,8 +552,8 @@ def fetch_uris(
 
     ``fetcher(url) -> str`` runs inside an Arrow-batched mapInPandas over
     the miss list ONLY (bounded by cache misses, not corpus size). This is
-    the single network boundary; pass a deterministic fake for tests or a
-    ``retrying_fetcher``-wrapped HTTP client in a connected deployment.
+    the single network boundary; pass a deterministic fake for tests or an
+    HTTP client in a connected deployment.
     """
     import pandas as pd  # noqa: PLC0415
 

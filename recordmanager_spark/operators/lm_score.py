@@ -53,16 +53,6 @@ LM_SALT2 = "lm2"
 MICRO = 1_000_000
 
 
-def _hash_bucket(col: Column, salt: str, buckets: int) -> Column:
-    """hex8-of-md5 bucket id — the engine-portable device shared with
-    the NB classifier and the sampling ops."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 8), 16, 10)
-        .cast("long")
-        % buckets
-    ).cast("int")
-
-
 def _tokens(text_col: Column) -> Column:
     """Lowercased whitespace tokens (the NB classifier's tokenization:
     trim -> split -> drop empties -> lower) — keep the two gates on one

@@ -20,10 +20,9 @@ format a pure-stdlib parser can handle:
   fingerprint (8x8 average-pool vs mean) for image near-dup
   (``bmp_pixels`` / ``ahash64``).
 
-Only kernels that REQUIRE external codecs stay stubbed: compressed
-pixel data (JPEG/PNG need libjpeg/zlib-inflate+filters → PIL/libvips
-seam) and video demux (``frame_sample_stub``, ffmpeg seam) — each an
-explicit NotImplementedError or documented fake, never silently wrong.
+Formats that need external codecs are not decoded here: JPEG pixel
+data reaches :func:`resize_images` only through its injected
+``decoder`` (e.g. PIL), and there is no video frame path.
 
 Scale notes: binary payloads dominate row size, so these operators
 (a) repartition by byte budget, not row count, before Python stages, and
@@ -578,7 +577,7 @@ def resize_images(
     partitions must be byte-bounded, not row-counted). The default
     decoder is the container's stdlib pair (PNG/BMP pixel decoders);
     ``decoder(payload) -> ndarray | None`` injects a real imaging
-    library for the remaining formats (examples/pil_images.py seam).
+    library (e.g. PIL) for the remaining formats.
     Undecodable payloads yield NULL pixel fields, never a crashed
     stage. Output pixels are C-order (height, width, 3) uint8 — the
     shape a downstream feature extractor's batch dimension expects."""
@@ -629,13 +628,6 @@ def resize_images(
     return df.mapInPandas(op, schema=RESIZE_SCHEMA)
 
 
-def decode_image_stub(payload: bytes) -> dict:
-    """STUB: real impl would use PIL/libvips. Deterministic fake derives
-    "dimensions" from the payload hash so tests are reproducible."""
-    h = hashlib.sha256(payload).digest()
-    return {"width": 64 + h[0], "height": 64 + h[1], "channels": 3}
-
-
 def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """mapInPandas feature extraction: streams Arrow batches through a
     Python stage. The "feature" is a deterministic 8-float fake (STUB for
@@ -664,20 +656,3 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             yield out
 
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling placeholder: real impl would demux + decode;
-    raises to make the gap explicit rather than silently wrong.
-
-    The production path is ``examples/video_frames.py`` (r9): an
-    INJECTED ``frame_sampler(payload, n) -> list[ndarray]`` (PyAV when
-    importable, a fake in tests) feeds sampled frames through
-    :func:`ahash64` into the banded Hamming near-dup engine — the same
-    injected-decoder pattern that closed the JPEG seam
-    (``examples/pil_images.py``)."""
-    raise NotImplementedError(
-        "video decode requires ffmpeg/pyav (not in this container); "
-        "inject a sampler via examples/video_frames.py "
-        "(video_frame_ahashes + video_near_duplicates)"
-    )

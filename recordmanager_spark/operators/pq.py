@@ -126,21 +126,6 @@ def pq_train(
     return books
 
 
-def _sq_dist_sql(vec_col: str, centroid: list, offset: int) -> str:
-    """SQL text: squared L2 distance between vec[offset..] and the
-    centroid literal — built as ONE string (the py4j-free twin rule).
-    Unrolled codegen chain; use only for SINGLE distances (the re-rank
-    L2) — per-codebook argmin over many centroids must use the HOF
-    forms below, whose generated code stays under the codegen limits."""
-    return "+".join(
-        f"(CAST(try_element_at({vec_col},{offset + d + 1}) AS DOUBLE)-"
-        f"(CAST({c!r} AS DOUBLE)))*"
-        f"(CAST(try_element_at({vec_col},{offset + d + 1}) AS DOUBLE)-"
-        f"(CAST({c!r} AS DOUBLE)))"
-        for d, c in enumerate(centroid)
-    )
-
-
 def _dists_hof(vec_col: str, cents_lit: str, sub: int, off: str) -> str:
     """SQL text: array of squared L2 distances from the vector slice at
     ``off`` (a SQL expression, 0-based element offset) to every centroid

@@ -303,11 +303,3 @@ def _collect_interpreted(spark: SparkSession, wide: DataFrame):
             if _CONF_DEPTH == 0:
                 for k, v in _CONF_SAVED.items():
                     conf.set(k, v)
-
-
-def preview_df(wide: DataFrame) -> dict[str, Any]:
-    """Preview an already-extracted 1-row DataFrame (pipeline tail only)."""
-    row = wide.limit(1).collect()
-    if not row:
-        return {}
-    return {k: v for k, v in row[0].asDict().items() if v not in (None, "", [])}

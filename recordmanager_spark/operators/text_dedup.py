@@ -98,33 +98,6 @@ def distinct_by_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.join(keep, df[id_col] == keep["__kid"], "left_semi")
 
 
-def write_fingerprint_index(
-    df: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the exact-dedup fingerprint index: ONE row per distinct
-    normalized text — (fp, canonical_id = min id ever seen) — saved as
-    a catalog table bucketed on ``fp`` (sources/bucketed.py), so every
-    future batch probe reads the index co-located with ZERO index-side
-    exchange. The daily-crawl complement of :func:`exact_duplicates`,
-    mirroring :func:`write_minhash_index` for the exact-match tier."""
-    from ..sources.bucketed import write_bucketed
-
-    idx = (
-        df.select(
-            fingerprint(text_col).alias("fp"),
-            F.col(id_col).alias("canonical_id"),
-        )
-        .groupBy("fp")
-        .agg(F.min("canonical_id").alias("canonical_id"))
-    )
-    write_bucketed(idx, table, "fp", n_buckets, mode=mode)
-
-
 def exact_dup_incremental(
     new_docs: DataFrame,
     index: DataFrame,
@@ -139,8 +112,9 @@ def exact_dup_incremental(
     within-batch first occurrences resolve among themselves (min batch
     id), exactly :func:`exact_duplicates` semantics extended across
     ingests. ``new_index_rows`` = (fp, canonical_id) for fingerprints
-    the index has not seen — append them via
-    :func:`write_fingerprint_index`'s bucket spec (``mode="append"``).
+    the index has not seen — append them to the bucketed index table
+    with ``sources.bucketed.write_bucketed(..., "fp", n, mode="append")``
+    (``cli.cmd_curate`` does this for a corpus with ``dedup_index``).
 
     Scale shape: fingerprints are a scan-stage projection; the probe is
     an equi-join on ``fp`` where a BUCKETED index side reads already
@@ -481,7 +455,7 @@ def minhash_incremental(
     # persist(): a persist registers the fragment with CacheManager,
     # which then silently substitutes InMemoryRelation into every OTHER
     # query in the session whose plan embeds the same batch-signature
-    # subtree — a cross-query plan mutation (it broke the bucketed-path
+    # subtree — a cross-query plan mutation (it broke a bucketed-index
     # exchange-count pin in tests). The lazy checkpoint keeps the reuse
     # local to this lineage (the connected_components precedent).
     # Failure semantics (ADVICE r12): localCheckpoint blocks are NOT
@@ -546,22 +520,7 @@ def minhash_incremental(
         "agreement",
         minhash_sig_agreement(F.col("__old_sig"), F.col("__new_sig")),
     )
-    annotated, keep_sigs = _rank_annotate(
-        new_docs, sigs_new, scored, id_col, est_threshold
-    )
-    return annotated, index.unionByName(keep_sigs)
-
-
-def _rank_annotate(
-    new_docs: DataFrame,
-    sigs_new: DataFrame,
-    scored: DataFrame,
-    id_col: str,
-    est_threshold: float,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared tail of the incremental probes: rank candidates per new
-    doc (best agreement, smallest old id), annotate the batch, and
-    return the signatures of the batch's NON-duplicate rows."""
+    # best candidate per new doc: highest agreement, then smallest old id
     w = Window.partitionBy("__new_id").orderBy(
         F.col("agreement").desc(), F.col("__old_id").asc()
     )
@@ -591,154 +550,7 @@ def _rank_annotate(
         sigs_new["id"] == F.col("__new_id"),
         "left_anti",
     )
-    return annotated, keep_sigs
-
-
-def banded_signatures(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
-    """(id, sig, bkey) — one row per (doc, band), ``bkey`` = the band
-    index + the band's signature slice as ONE string key. This is the
-    storage layout of the persisted minhash index: bucketing the table
-    on the single ``bkey`` column lets the daily probe join read the
-    index WITHOUT an exchange (a composite (band, band_key) join key
-    cannot carry a bucket spec). The signature rides along (×bands
-    storage, 16 longs per row) so probe matches score directly from the
-    index rows — no second join back to a signature table."""
-    return signatures.select(
-        "id",
-        "sig",
-        F.posexplode(_band_key_array(bands, rows_per_band)).alias(
-            "band", "band_key"
-        ),
-    ).select(
-        "id",
-        "sig",
-        F.concat_ws(
-            ":", F.col("band").cast("string"), F.col("band_key")
-        ).alias("bkey"),
-    )
-
-
-def write_minhash_index(
-    signatures: DataFrame,
-    table: str,
-    n_buckets: int,
-    *,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a minhash signature index as a BANDED, BUCKETED catalog
-    table keyed on ``bkey`` (see :func:`banded_signatures`). Pay the
-    band-key partitioning once at ingest; every daily
-    :func:`minhash_incremental_bucketed` probe then reads the index
-    co-located — zero index-side exchanges even when the batch is too
-    large to broadcast. Append each batch's accepted rows with
-    ``mode="append"`` (same table, same spec, still co-located)."""
-    from ..sources.bucketed import write_bucketed
-
-    write_bucketed(
-        banded_signatures(signatures, bands, rows_per_band),
-        table,
-        "bkey",
-        n_buckets,
-        sort=True,
-        mode=mode,
-    )
-
-
-def minhash_incremental_bucketed(
-    new_docs: DataFrame,
-    index_banded: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    shingle_n: int = 3,
-    est_threshold: float = 0.5,
-    max_candidates: int = 200,
-    within_batch: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Daily-ingest minhash dedup against a PERSISTED banded index —
-    the ``broadcast_batch=False`` scale path of
-    :func:`minhash_incremental` with the index side's shuffle engineered
-    away.
-
-    ``index_banded`` is the bucketed table written by
-    :func:`write_minhash_index` (read it with
-    ``sources.bucketed.read_bucketed`` — a path read loses the bucket
-    spec). The probe is an equi-join on the single ``bkey`` column: the
-    index side reads each bucket as an already-partitioned input (ZERO
-    index-side exchanges, asserted in tests/test_bucketed.py style),
-    while only the batch's banded keys — O(batch × bands) narrow rows —
-    shuffle to the bucket layout. Candidate scoring uses the signatures
-    riding IN the index rows, so the index is touched exactly once.
-
-    Same semantics as :func:`minhash_incremental` (capped ordered
-    candidate pool, within-batch self-probe, smallest-id tie-break).
-    Returns ``(annotated, new_banded_rows)`` — append
-    ``new_banded_rows`` to the index table with
-    ``write_minhash_index(..., mode="append")``-compatible layout (they
-    are already banded; write via ``write_bucketed`` on the same spec).
-    """
-    sigs_new = minhash_signature(
-        new_docs, id_col, text_col, num_perm, shingle_n
-    )
-    banded_new = banded_signatures(sigs_new, bands, rows_per_band).select(
-        F.col("id").alias("__new_id"), "bkey"
-    )
-    # index side: bucket-co-located scan; batch side: one narrow shuffle
-    cand_idx = index_banded.join(banded_new, "bkey").select(
-        "__new_id",
-        F.col("id").alias("__old_id"),
-        F.col("sig").alias("__old_sig"),
-    )
-    cand_all = cand_idx
-    if within_batch:
-        self_probe = (
-            banded_signatures(sigs_new, bands, rows_per_band)
-            .select(F.col("id").alias("__old_id"), F.col("sig").alias("__old_sig"), "bkey")
-            .join(F.broadcast(banded_new), "bkey")
-            .where(F.col("__old_id") < F.col("__new_id"))
-            .select("__new_id", "__old_id", "__old_sig")
-        )
-        cand_all = cand_all.unionByName(self_probe)
-    # capped ordered candidate pool per new doc (multi-band matches
-    # dedupe via collect_set; struct sort = old-id order, the
-    # deterministic twin of the full path's bucket cap)
-    capped = (
-        cand_all.groupBy("__new_id")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_set(F.struct("__old_id", "__old_sig"))
-                ),
-                1,
-                max_candidates,
-            ).alias("__olds")
-        )
-        .select("__new_id", F.explode("__olds").alias("__o"))
-        .select("__new_id", F.col("__o.__old_id").alias("__old_id"),
-                F.col("__o.__old_sig").alias("__old_sig"))
-    )
-    scored = capped.join(
-        F.broadcast(
-            sigs_new.select(
-                F.col("id").alias("__new_id"), F.col("sig").alias("__new_sig")
-            )
-        ),
-        "__new_id",
-    ).withColumn(
-        "agreement",
-        minhash_sig_agreement(F.col("__old_sig"), F.col("__new_sig")),
-    )
-    annotated, keep_sigs = _rank_annotate(
-        new_docs, sigs_new, scored, id_col, est_threshold
-    )
-    return annotated, banded_signatures(keep_sigs, bands, rows_per_band)
+    return annotated, index.unionByName(keep_sigs)
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, functions as F
-from pyspark.sql import types as T
+from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -74,42 +73,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the test star-schema parquet tables and register temp views.
-
-    Returns a dict name -> DataFrame. Views let operators be written in
-    either DataFrame or SQL form against the same session.
-    """
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for name in names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        for col in _NANO_TS_COLUMNS.get(name, ()):
-            if col in df.columns and isinstance(df.schema[col].dataType, T.LongType):
-                # integer div truncates nanos->micros (DuckDB-compatible);
-                # double division would lose precision above 2^53
-                df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
-# Columns written as parquet TIMESTAMP(NANOS) in the driver's testdata;
-# converted to Spark (microsecond) timestamps at load.
-_NANO_TS_COLUMNS = {
-    "orders": ("o_orderdate",),
-    "lineitem": ("l_shipdate",),
-    "events": ("ts",),
-}

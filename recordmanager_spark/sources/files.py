@@ -55,14 +55,6 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet", **options) 
     return spark.read.format(fmt).options(**options).load(path)
 
 
-def xml_supported(spark: SparkSession) -> bool:
-    try:
-        spark.read.format("xml")
-        return True
-    except Exception:
-        return False
-
-
 def read_xml_records(
     spark: SparkSession, path: str, row_tag: str = "record", schema: T.StructType | None = None
 ) -> DataFrame:

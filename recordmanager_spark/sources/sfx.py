@@ -58,16 +58,6 @@ def select_harvest_files(
     return out
 
 
-def strip_default_namespace(xml: Column) -> Column:
-    """Sfx::retrieveFile removes the MARC21 slim default namespace so the
-    splitter's plain tag matching works."""
-    return F.replace(
-        xml,
-        F.lit('<collection xmlns="http://www.loc.gov/MARC21/slim">'),
-        F.lit("<collection>"),
-    )
-
-
 def sfx_normalize_records(
     records: DataFrame,
     xml_col: str = "record_xml",

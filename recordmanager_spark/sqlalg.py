@@ -510,10 +510,6 @@ def isnan(c) -> X:
     return _fn("isnan", c)
 
 
-def isnull(c) -> X:
-    return X(f"({_x(c)} IS NULL)")
-
-
 def url_decode(c) -> X:
     return _fn("url_decode", c)
 

@@ -77,8 +77,6 @@ def dedup_twin() -> types.ModuleType:
             "try_element_at": S.try_element_at,
             "author_match_expr": kt.author_match_expr,
             "normalize_key": kt.normalize_key,
-            "create_title_key": kt.create_title_key,
-            "normalize_isbn": kt.normalize_isbn,
         },
     )
 

@@ -281,39 +281,6 @@ def test_uri_cache_split_and_upsert(spark):
     assert rows["c"] == (1000.0, "F:u/c")  # inserted
 
 
-def test_retrying_fetcher_backoff_and_statuses():
-    from recordmanager_spark.operators.enrich import retrying_fetcher
-
-    waits: list[float] = []
-    calls = {"n": 0}
-
-    def flaky(url):
-        calls["n"] += 1
-        if calls["n"] < 4:
-            raise OSError("conn reset")
-        return 200, "BODY"
-
-    f = retrying_fetcher(flaky, max_tries=10, retry_wait=5, sleep=waits.append)
-    assert f("u") == "BODY"
-    # progressive doubling capped at 30 (AbstractEnrichment.php:243-258)
-    assert waits == [10, 20, 30]
-
-    # 404 yields '' without retrying
-    f2 = retrying_fetcher(lambda u: (404, "ignored"), sleep=waits.append)
-    assert f2("u") == ""
-
-    # retryable status exhausts tries then raises
-    import pytest as _pytest
-
-    f3 = retrying_fetcher(lambda u: (500, ""), max_tries=2, sleep=lambda s: None)
-    with _pytest.raises(RuntimeError, match="500"):
-        f3("u")
-
-    # ignore_errors statuses return '' like 404
-    f4 = retrying_fetcher(lambda u: (503, "x"), ignore_errors=(503,))
-    assert f4("u") == ""
-
-
 def test_resolve_links_003_ladder_reference_golden(spark):
     """Replays Record/MarcTest.php testLinking with the marc_links.xml
     fixture semantics: a 776$w resolves through the createLinkingId

@@ -301,53 +301,17 @@ def test_normalize_key_icu_cjk_stable(spark):
         assert out and out == one(spark, K.normalize_key_icu(F.col("v")), cjk)
 
 
-def test_dedup_key_fold_override(spark):
-    """The dedup operators accept a custom key-fold function; outputs with
-    the explicit default match the implicit default (threading check that
-    runs without PyICU)."""
-    from recordmanager_spark.operators import dedup as DD
-
-    df = spark.createDataFrame(
-        [("a.1", "a", "Война и мир", "Толстой"), ("b.1", "b", "Война и мир", "Tolstoï")],
-        "_id string, source_id string, title string, author string",
-    )
-    default = DD.with_dedup_keys(df, "title", "author", isbn_col=None)
-    explicit = DD.with_dedup_keys(
-        df, "title", "author", isbn_col=None, key_fold=K.normalize_key
-    )
-    assert [r.asDict() for r in default.collect()] == [
-        r.asDict() for r in explicit.collect()
-    ]
-
-
 def test_normalize_key_default_is_deterministic_table(monkeypatch):
-    """The DEFAULT engine is the table fold even when PyICU is
-    importable: dedup keys must be byte-identical across machines, so
-    the engine is never environment-sniffed unless the caller opts into
-    engine='auto' (which warns). Explicit engines stay pinnable."""
-    import warnings
-
+    """normalize_key is the table fold even when PyICU is importable:
+    dedup keys must be byte-identical across machines, so the fold is
+    never environment-sniffed."""
     calls = []
     monkeypatch.setattr(
         K, "normalize_key_icu", lambda c: calls.append(c) or F.lit("icu")
     )
     monkeypatch.setattr(K, "_ICU_AVAILABLE", True)
     K.normalize_key(F.lit("x"))
-    assert len(calls) == 0  # default never touches ICU
-    K.normalize_key(F.lit("x"), engine="table")
-    assert len(calls) == 0
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        K.normalize_key(F.lit("x"), engine="auto")
-    assert len(calls) == 1  # opt-in auto routed to ICU...
-    assert any(issubclass(w.category, RuntimeWarning) for w in caught)
-    monkeypatch.setattr(K, "_ICU_AVAILABLE", False)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        K.normalize_key(F.lit("x"), engine="auto")
-    assert len(calls) == 1 and not caught  # auto without PyICU = table
-    with pytest.raises(ValueError):
-        K.normalize_key(F.lit("x"), engine="tables")
+    assert len(calls) == 0  # never touches ICU
 
 
 @pytest.mark.parametrize(
@@ -369,6 +333,16 @@ def test_normalize_key_kana_table_fold(spark, raw, expected):
 
 
 def test_normalize_key_table_engine_goldens(spark):
-    # the JVM fold stays pinned regardless of what auto resolves to
     for raw, expected in [("A -.*B  C", "abc"), ("ÖÄÅöäåüïé", "oaaoaauie")]:
-        assert one(spark, K.normalize_key(F.col("v"), engine="table"), raw) == expected
+        assert one(spark, K.normalize_key(F.col("v")), raw) == expected
+
+
+def test_normalize_key_py_matches_column_engine(spark):
+    vals = [
+        "PCS7088 (mono)", "Äiti järvi", "Щука", "カタカナ", None, "A-B c!",
+        "θάλασσα",
+    ]
+    df = spark.createDataFrame([(v,) for v in vals], "s string")
+    got = [r.k for r in df.select(K.normalize_key(F.col("s")).alias("k")).collect()]
+    # the Column fold null-propagates; the py twin maps None -> ""
+    assert got == [K.normalize_key_py(v) if v is not None else None for v in vals]

@@ -40,17 +40,6 @@ def test_repartition_by_bytes(spark):
     assert out.count() == 8
 
 
-def test_frame_sample_stub_raises(spark):
-    with pytest.raises(NotImplementedError):
-        MM.frame_sample_stub(_media(spark))
-
-
-def test_decode_image_stub_deterministic():
-    a = MM.decode_image_stub(b"payload")
-    assert a == MM.decode_image_stub(b"payload")
-    assert set(a) == {"width", "height", "channels"}
-
-
 # ---------------------------------------------------------------------------
 # Real decoders: crafted payloads, byte-level parses checked against the
 # generation parameters (and the WAV path against the stdlib encoder).

@@ -386,91 +386,6 @@ def test_hamming_band_bits_default_derivation(spark):
     assert [(r["id_a"], r["id_b"], r["hamming"]) for r in got] == [(1, 2, 7)]
 
 
-def test_minhash_incremental_bucketed_matches_broadcast_path(spark):
-    """The bucketed-index probe must produce the same annotation as the
-    broadcast probe, and the index side of the probe join must read
-    WITHOUT an exchange (the whole point of the persisted banded
-    layout)."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    from recordmanager_spark.sources.bucketed import read_bucketed
-
-    def _exchanges(df) -> int:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        return sum(
-            1
-            for sec in re.split(r"^\(\d+\) ", plan, flags=re.M)[1:]
-            if sec.startswith("Exchange")
-        )
-
-    corpus = [
-        (i, f"stable document number {i} about topic {i % 5} with more "
-            f"padding words {i}")
-        for i in range(40)
-    ]
-    index_docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    batch = spark.createDataFrame(
-        [
-            # near-dup of doc 3 (same text)
-            (100, corpus[3][1]),
-            # fresh content
-            (101, "completely novel content nothing like the index"),
-            # intra-batch dup pair
-            (102, "twin text appearing twice inside one batch run"),
-            (103, "twin text appearing twice inside one batch run"),
-        ],
-        "doc_id long, text string",
-    )
-    sigs_index = TD.minhash_signature(index_docs, "doc_id", "text")
-    TD.write_minhash_index(sigs_index, "t_mh_idx", 8)
-    try:
-        idx = read_bucketed(spark, "t_mh_idx")
-        ann_b, new_rows = TD.minhash_incremental_bucketed(batch, idx)
-        ann_r, _ = TD.minhash_incremental(batch, sigs_index)
-        key = lambda rows: sorted(  # noqa: E731
-            (r["doc_id"], r["is_dup"], r["matched_id"], r["agreement"])
-            for r in rows
-        )
-        assert key(ann_b.collect()) == key(ann_r.collect())
-        # accepted rows are banded: one row per (doc, band)
-        accepted = {r["id"] for r in new_rows.select("id").distinct().collect()}
-        dups = {r["doc_id"] for r in ann_b.where("is_dup").collect()}
-        assert accepted == {100, 101, 102, 103} - dups
-
-        # the probe join reads the index co-located: exactly ONE exchange
-        # (the batch side) under forced sort-merge; an unbucketed banded
-        # index pays two
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            banded_new = TD.banded_signatures(
-                TD.minhash_signature(batch, "doc_id", "text")
-            ).selectExpr("id AS __new_id", "bkey")
-            bucketed_probe = idx.join(banded_new, "bkey")
-            plain_probe = TD.banded_signatures(sigs_index).join(
-                banded_new, "bkey"
-            )
-            # bucketed: BOTH exchanges are batch-side (the batch signature
-            # groupBy + the batch join shuffle); the index scan reads
-            # co-located. The unbucketed banded index pays its own
-            # signature groupBy AND its join-side shuffle on top.
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                bucketed_probe.explain("formatted")
-            assert "Bucketed: true" in buf.getvalue()
-            assert _exchanges(bucketed_probe) == 2
-            assert _exchanges(plain_probe) >= _exchanges(bucketed_probe) + 2
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_mh_idx")
-
-
 def test_exact_dup_incremental_bucketed_index(spark):
     """Incremental exact dedup against the PERSISTED bucketed
     fingerprint index: semantics (index hits -> historical canonical,
@@ -483,18 +398,21 @@ def test_exact_dup_incremental_bucketed_index(spark):
 
     from pyspark.sql import functions as F
 
-    from recordmanager_spark.operators.text_dedup import (
-        exact_dup_incremental,
-        write_fingerprint_index,
+    from recordmanager_spark.operators.text_dedup import exact_dup_incremental
+    from recordmanager_spark.sources.bucketed import (
+        read_bucketed,
+        write_bucketed,
     )
-    from recordmanager_spark.sources.bucketed import read_bucketed
 
     hist = spark.createDataFrame(
         [(1, "Alpha text!"), (2, "alpha TEXT"), (3, "beta")],
         "doc_id long, text string",
     )
     spark.sql("DROP TABLE IF EXISTS t_fp_idx")
-    write_fingerprint_index(hist, "t_fp_idx", n_buckets=4)
+    # build the index the way cmd_curate bootstraps it: probe the first
+    # batch against an empty index and write its new rows bucketed on fp
+    empty = spark.createDataFrame([], "fp string, canonical_id long")
+    write_bucketed(exact_dup_incremental(hist, empty)[1], "t_fp_idx", "fp", 4)
     batch = spark.createDataFrame(
         [
             (10, "ALPHA text"),   # index hit -> canonical 1
