@@ -71,20 +71,23 @@ def _php_regex(pat: str) -> tuple[str, bool]:
     return m.group(1), "i" in m.group(2)
 
 
-def extract_wide(df: DataFrame, fmt: str) -> DataFrame:
+def extract_wide(
+    df: DataFrame, fmt: str, only: list[str] | None = None
+) -> DataFrame:
     """Route a record frame's ``original_data`` payload to its format
-    driver (Record/PluginManager analogue). ``marc`` sniffs MARC-in-JSON
-    vs MARCXML from the payload's first byte; the rest dispatch on the
-    reference's format names."""
+    driver (Record/PluginManager analogue). ``marc`` parses each row as
+    MARCXML or MARC-in-JSON by its first byte, so a store may mix both;
+    the rest dispatch on the reference's format names.
+
+    ``only`` names the Solr columns a caller reads. MARC builds just
+    those (each built column costs a cold parse and analysis of its
+    twin SQL); the other formats build their full frame regardless."""
     fmt = (fmt or "").lower()
     if fmt in ("marc", "marcxml"):
         from .extractors import marc as M
 
-        probe = df.select("original_data").first()
-        is_json = bool(probe and (probe[0] or "").lstrip().startswith("{"))
-        parse = M.parse_marc_in_json if is_json else M.parse_marcxml
-        parsed = df.withColumn("__m", parse(F.col("original_data")))
-        wide = M.to_solr_columns(parsed, "__m")
+        parsed = df.withColumn("__m", M.parse_marc_any(F.col("original_data")))
+        wide = M.to_solr_columns(parsed, "__m", only=only)
         return wide.drop("__m")
     from .extractors import (  # noqa: PLC0415
         dc, doaj, eaccpf, ead, ead3, ese, forward, forward_authority,
@@ -301,7 +304,9 @@ def cmd_harvest(args) -> None:
 
 def cmd_deduplicate(args) -> None:
     spark = _spark("rm-dedup")
-    from .operators.dedup import deduplicate, verify_frame, with_dedup_keys
+    from .operators.dedup import (
+        _VERIFY_FIELDS, deduplicate, verify_frame, with_dedup_keys,
+    )
 
     records = read_store(spark, args.records)
     if not args.format:
@@ -309,9 +314,14 @@ def cmd_deduplicate(args) -> None:
         if len(fmts) != 1:
             raise SystemExit(f"--format required (table has {sorted(fmts)})")
         args.format = fmts[0]
-    # the matchRecords verifier reads a fixed field battery; normalize
-    # whatever the extractor produced into that shape
-    verify = verify_frame(extract_wide(records, args.format))
+    # the matchRecords verifier reads a fixed field battery; build only
+    # those columns (and their fallbacks) and normalize whatever the
+    # extractor produced into that shape
+    only = [
+        c for name, (_, fallback) in _VERIFY_FIELDS.items()
+        for c in (name, fallback) if c
+    ]
+    verify = verify_frame(extract_wide(records, args.format, only=only))
     keyed = with_dedup_keys(
         verify, title_col="title", author_col="author", isbn_col="isbn"
     )

@@ -1300,11 +1300,13 @@ def marc_era_facets(marc: Column) -> Column:
     ))
 
 
-# Building the wide column map costs tens of seconds of py4j round trips
-# (thousands of Column-constructor calls for ~50 reference fields), so
-# construction is LAZY per column name and memoized per (marc_col,
-# id_prefix): a query that selects six columns builds six expressions.
-# Column objects are immutable and reusable across DataFrames in the JVM.
+# Each column's twin SQL renders in pure Python in milliseconds, but its
+# ``F.expr`` parse and the analysis of the projection that uses it are
+# JVM work that is seconds per process while the parser is cold
+# (PERFORMANCE.md, "Twin SQL parenthesization"), so construction is LAZY
+# per column name and memoized per (marc_col, id_prefix): a query that
+# selects six columns builds six expressions. Column objects are
+# immutable and reusable across DataFrames in the JVM.
 _SOLR_COLS_CACHE: dict = {}
 
 # Columns whose builders pass through a pandas UDF (the call-number sort
@@ -1565,9 +1567,10 @@ def to_solr_columns(
 
     Columns follow Record/Marc.php:267-596; each is a JVM expression over
     the struct column. Pass ``only`` with the column names a caller will
-    actually use — Catalyst would prune unused columns anyway, but BUILDING
-    all ~50 expressions costs tens of seconds of py4j traffic, so pruning
-    at construction time is the real win.
+    actually use — Catalyst would prune unused columns anyway, but every
+    built column is parsed and analysed in the JVM (seconds per process
+    while the parser is cold), so pruning at construction time is the
+    real win. Names that MARC does not produce are ignored.
     """
     cache_key = (marc_col, id_prefix)
     state = _SOLR_COLS_CACHE.setdefault(

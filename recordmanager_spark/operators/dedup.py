@@ -447,7 +447,9 @@ def blocking_verified_edges(
     blocking_pairs -> verified_edges (pair distinct + two record joins =
     three more corpus-sized exchanges), the corpus is shuffled once, by
     key. Title/author normalization keys are computed once per record
-    before the explode, not once per generated pair.
+    before the explode, not once per generated pair. That per-record
+    payload is local-checkpointed at construction (one eager job), so
+    the returned plan never re-reads or re-extracts ``records``.
 
     matchRecords itself is deliberately NOT evaluated inside the
     pair-generation lambda: higher-order-function lambdas are interpreted
@@ -488,8 +490,20 @@ def blocking_verified_edges(
     # explode in a parent one: Spark's analyzer drops CreateStruct field
     # aliases when a generator and a lambda-bearing struct child share a
     # projection list (the kana fold inside normalize_key is a transform
-    # lambda), which silently renames the verify payload fields
-    prepared = records.select(member.alias("m"), allkeys.alias("__blk_keys"))
+    # lambda), which silently renames the verify payload fields.
+    # The payload is materialised once: the size census, the join-back
+    # and both capped-group branches all read it, and the optimizer
+    # pushes an inferred size(__blk_keys) > 0 filter below this
+    # projection, so an unmaterialised plan re-ran the record scan, the
+    # MARC parse UDF and the whole extraction for each reader (6 parquet
+    # scans and 12 parse-UDF nodes in a MARC store's executed edge
+    # plan; PERFORMANCE.md). localCheckpoint blocks are
+    # non-resilient (executor loss fails the job rather than
+    # recomputing), which is acceptable for within-command state; re-run
+    # the command on preemptible-executor loss.
+    prepared = records.select(
+        member.alias("m"), allkeys.alias("__blk_keys")
+    ).localCheckpoint(eager=True)
     keys = prepared.select(
         F.explode("__blk_keys").alias("key"), F.col("m")
     ).where(F.col("key") != "")
@@ -855,8 +869,11 @@ def deduplicate(
     count turns out to be. The sizing ``take`` is an eager action at
     construction.
 
-    No persist — the pruned projection is scanned once (column-pruned
-    parquet read).
+    The records are read once: :func:`blocking_verified_edges`
+    materialises its per-record payload (verify fields plus blocking
+    keys) with a local checkpoint at construction, and every later
+    branch reads that. Only the distributed component path past
+    ``_DRIVER_EDGE_LIMIT`` goes back to ``records`` for the sources.
     """
     key_cols = key_cols or ["isbn_keys", "id_keys", "title_keys"]
     proj_cols = {id_col, source_col, *key_cols, *_VERIFY_FIELDS}

@@ -17,9 +17,18 @@ UNMODIFIED extractor spec modules (``extractors/marc.py``,
 module, so the reference-parity logic exists exactly once; this module
 only has to mirror the call surface those specs use. ``X`` mirrors
 ``Column`` operator semantics (``==`` builds an equality expression,
-``&``/``|``/``~`` build boolean ops, etc.). Every composite is
-parenthesized defensively so operator precedence can never differ from
-the Column tree.
+``&``/``|``/``~`` build boolean ops, etc.).
+
+Parentheses: every ``X`` carries the precedence level of its top
+operator, and an operand is parenthesized only where Spark's grammar
+(``SqlBaseParser.g4``) would otherwise group it differently, so the
+parsed tree equals the Column tree. The one deliberate extra: the left
+operand of AND/OR keeps its parentheses when it is the same operator,
+because ``AstBuilder.visitLogicalBinary`` re-balances an unparenthesized
+chain into a different tree. Fewer parentheses matter for speed, not
+looks: ANTLR builds its prediction DFA for the lookahead after every
+``(``, and that cold build was most of the cost of parsing the MARC
+trees (PERFORMANCE.md, "Twin SQL parenthesization").
 
 Parser-conf requirement (ADVICE r6): ``lit(str)``'s escaping assumes
 the DEFAULT ``spark.sql.parser.escapedStringLiterals=false``. Under
@@ -69,6 +78,21 @@ def assert_parser_conf(spark) -> None:
         )
 
 
+# Precedence levels of Spark's expression grammar, loosest first: the
+# booleanExpression alternatives (OR, AND, NOT, then the predicate
+# suffixes IS [NOT] NULL / IN / RLIKE) and the valueExpression ones
+# (comparison, ^, + -, * / %, unary minus), then primaryExpression
+# (literals, names, calls, CAST, CASE, ``x.f``, ``x[i]``, parentheses).
+_OR, _AND, _NOT, _PRED, _CMP, _XOR, _ADD, _MUL, _UNARY, _PRIMARY = range(10)
+
+_BIN_LEVEL = {
+    "OR": _OR, "AND": _AND,
+    "=": _CMP, "<>": _CMP, "<": _CMP, "<=": _CMP, ">": _CMP, ">=": _CMP,
+    "<=>": _CMP, "^": _XOR, "+": _ADD, "-": _ADD, "*": _MUL, "/": _MUL,
+    "%": _MUL,
+}
+
+
 def _fresh() -> str:
     return f"V{next(_ctr)}"
 
@@ -86,6 +110,15 @@ def _esc(s: str) -> str:
         else:
             out.append(ch)
     return "".join(out)
+
+
+def _arg(v, level: int) -> str:
+    """Render ``v`` as an operand that must bind at least as tightly as
+    ``level``; Python scalars render as literals, which are primary."""
+    text = _x(v)
+    if isinstance(v, X) and v._prec < level:
+        return f"({text})"
+    return text
 
 
 def _x(v) -> str:
@@ -112,11 +145,14 @@ def _x(v) -> str:
 class X:
     """A SQL expression fragment with Column-compatible operators."""
 
-    __slots__ = ("_sql", "_name")
+    __slots__ = ("_sql", "_name", "_prec")
 
-    def __init__(self, sql: str, name: str | None = None):
+    def __init__(
+        self, sql: str, name: str | None = None, prec: int = _PRIMARY
+    ):
         self._sql = sql
         self._name = name
+        self._prec = prec
 
     def _render(self) -> str:
         return self._sql
@@ -133,14 +169,17 @@ class X:
         )
 
     def alias(self, name: str) -> "X":
-        return X(self._render(), name)
+        return X(self._render(), name, self._prec)
 
     # --- binary / unary operators -------------------------------------
     def _bin(self, op: str, other, swap: bool = False) -> "X":
-        a, b = _x(self), _x(other)
-        if swap:
-            a, b = b, a
-        return X(f"({a} {op} {b})")
+        a, b = (other, self) if swap else (self, other)
+        level = _BIN_LEVEL[op]
+        # left-associative: only the right operand needs a parenthesis
+        # at its own level -- except under AND/OR, whose unparenthesized
+        # same-operator chains the parser re-balances
+        left = level + 1 if level in (_AND, _OR) else level
+        return X(f"{_arg(a, left)} {op} {_arg(b, level + 1)}", prec=level)
 
     def __eq__(self, other):  # type: ignore[override]
         return self._bin("=", other)
@@ -173,7 +212,7 @@ class X:
         return self._bin("OR", other, swap=True)
 
     def __invert__(self):
-        return X(f"(NOT {_x(self)})")
+        return X(f"NOT {_arg(self, _NOT)}", prec=_NOT)
 
     def __add__(self, other):
         return self._bin("+", other)
@@ -200,13 +239,14 @@ class X:
         return self._bin("%", other)
 
     def __neg__(self):
-        return X(f"(- {_x(self)})")
+        # the space keeps ``- -1`` from lexing as a ``--`` comment
+        return X(f"- {_arg(self, _UNARY)}", prec=_UNARY)
 
     # --- Column methods ------------------------------------------------
     def __getitem__(self, key):
         if isinstance(key, str):
-            return X(f"{_x(self)}.{key}")
-        return X(f"{_x(self)}[{_x(key)}]")
+            return X(f"{_arg(self, _PRIMARY)}.{key}")
+        return X(f"{_arg(self, _PRIMARY)}[{_arg(key, _CMP)}]")
 
     def isin(self, *vals) -> "X":
         flat = []
@@ -215,13 +255,14 @@ class X:
                 flat.extend(v)
             else:
                 flat.append(v)
-        return X(f"({_x(self)} IN ({', '.join(_x(v) for v in flat)}))")
+        items = ", ".join(_x(v) for v in flat)
+        return X(f"{_arg(self, _CMP)} IN ({items})", prec=_PRED)
 
     def isNull(self) -> "X":
-        return X(f"({_x(self)} IS NULL)")
+        return X(f"{_arg(self, _CMP)} IS NULL", prec=_PRED)
 
     def isNotNull(self) -> "X":
-        return X(f"({_x(self)} IS NOT NULL)")
+        return X(f"{_arg(self, _CMP)} IS NOT NULL", prec=_PRED)
 
     def cast(self, dtype: str) -> "X":
         return X(f"CAST({_x(self)} AS {dtype})")
@@ -230,7 +271,9 @@ class X:
         return X(f"TRY_CAST({_x(self)} AS {dtype})")
 
     def rlike(self, pattern: str) -> "X":
-        return X(f"({_x(self)} RLIKE {_x(pattern)})")
+        return X(
+            f"{_arg(self, _CMP)} RLIKE {_arg(pattern, _CMP)}", prec=_PRED
+        )
 
     def startswith(self, other) -> "X":
         return X(f"startswith({_x(self)}, {_x(other)})")
@@ -248,7 +291,7 @@ class X:
         return self._bin("<=>", other)
 
     def bitwiseXOR(self, other) -> "X":
-        return X(f"({_x(self)} ^ {_x(other)})")
+        return self._bin("^", other)
 
     def __hash__(self):  # X overrides __eq__; keep it usable in sets
         return hash(self._render())
@@ -269,7 +312,7 @@ class CaseX(X):
             f"WHEN {_x(c)} THEN {_x(v)}" for c, v in self._parts
         )
         tail = f" ELSE {_x(self._else)}" if self._else is not None else ""
-        return f"(CASE {body}{tail} END)"
+        return f"CASE {body}{tail} END"
 
     def when(self, cond, value) -> "CaseX":
         return CaseX(self._parts + [(cond, value)], self._else)
@@ -299,6 +342,8 @@ column = col
 
 
 def lit(v) -> X:
+    if isinstance(v, X):  # F.lit(Column) passes the column through
+        return v
     return X(_x(v))
 
 

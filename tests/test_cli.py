@@ -917,3 +917,35 @@ recordSplitterClass = Ead
     imp(reduced, extra="keepMissingHierarchyMembers = true")
     rows = {r._id: r.deleted for r in spark.read.parquet(records).collect()}
     assert rows["arc.ARCH1_F2"] is False
+
+
+def test_extract_wide_marc_mixed_serializations(spark):
+    """A store may hold MARCXML and MARC-in-JSON rows side by side (a
+    harvest beside a JSON import); each row is parsed by its own first
+    byte, so both get their titles."""
+    from recordmanager_spark.cli import extract_wide
+
+    xml = (
+        '<record xmlns="http://www.loc.gov/MARC21/slim">'
+        "<leader>00000cam a22000004i 4500</leader>"
+        '<controlfield tag="001">x1</controlfield>'
+        '<datafield tag="245" ind1="1" ind2="0">'
+        '<subfield code="a">Title from XML</subfield></datafield>'
+        "</record>"
+    )
+    marc_json = json.dumps({
+        "leader": "00000cam a22000004i 4500",
+        "fields": [
+            {"001": "j1"},
+            {"245": {"ind1": "1", "ind2": "0",
+                     "subfields": [{"a": "Title from JSON"}]}},
+        ],
+    })
+    df = spark.createDataFrame(
+        [("x1", "s", xml), ("j1", "s", "  " + marc_json)],
+        "_id string, source_id string, original_data string",
+    ).coalesce(1)
+    got = extract_wide(df, "marc", only=["title"]).select("_id", "title")
+    assert {r["_id"]: r["title"] for r in got.collect()} == {
+        "x1": "Title from XML", "j1": "Title from JSON",
+    }

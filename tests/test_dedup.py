@@ -270,3 +270,54 @@ def test_verify_frame_marc_and_dc_shapes(spark):
         assert out.dtypes == want_types
         for r in out.collect():
             assert r.asDict() == want[r["_id"]]
+
+
+def _marc_json(rec_id, title, author, isbn):
+    import json
+
+    def df(tag, subs):
+        return {tag: {"ind1": " ", "ind2": " ",
+                      "subfields": [{k: v} for k, v in subs]}}
+
+    return json.dumps({
+        "leader": "00000cam a22000004i 4500",
+        "fields": [
+            {"001": rec_id},
+            {"008": "970101s1999    xxua               eng d"},
+            df("020", [("a", isbn)]),
+            df("100", [("a", author)]),
+            df("245", [("a", title)]),
+        ],
+    })
+
+
+def test_blocking_payload_computed_once(spark, tmp_path):
+    """The edge pass materialises the per-record payload once: its
+    executed plan reads the checkpoint, never the store again, and never
+    re-runs the MARC parse UDF (the size census, the join-back and both
+    capped branches would each re-extract otherwise)."""
+    from recordmanager_spark import cli
+
+    rows = [
+        ("a1", "a", _marc_json("a1", "Shared chronicle", "Writer, W.",
+                               "0-306-40615-2")),
+        ("a2", "a", _marc_json("a2", "Only in a", "Other, O.", "")),
+        ("b1", "b", _marc_json("b1", "Shared chronicle", "Writer, W.",
+                               "9780306406157")),
+        ("b2", "b", _marc_json("b2", "Only in b", "Third, T.", "")),
+    ]
+    path = str(tmp_path / "records")
+    spark.createDataFrame(
+        rows, "_id string, source_id string, original_data string"
+    ).write.parquet(path)
+    keyed = DD.with_dedup_keys(
+        DD.verify_frame(cli.extract_wide(spark.read.parquet(path), "marc")),
+        title_col="title", author_col="author", isbn_col="isbn",
+    )
+    edges = DD.blocking_verified_edges(
+        keyed, ["isbn_keys", "title_keys"], distinct=False
+    )
+    assert {(r["id_a"], r["id_b"]) for r in edges.collect()} == {("a1", "b1")}
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert "FileScan" not in plan

@@ -314,3 +314,130 @@ def test_parser_conf_pinned_and_asserted(spark):
             SA.assert_parser_conf(spark)
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+
+
+# (name, builder over a functions module, hand-parenthesized text, compare
+# values). Each builder runs once against sqlalg and once against
+# pyspark.sql.functions; the rendered text must parse to the same tree as
+# the fully parenthesized text, and evaluate to the same values as the
+# Column build.
+_PAREN_CASES = [
+    ("and-left", lambda M: M.col("p") & M.col("q") & M.col("r") & M.col("t"),
+     "((p AND q) AND r) AND t", True),
+    ("and-right", lambda M: M.col("p") & (M.col("q") & (M.col("r") & M.col("t"))),
+     "p AND (q AND (r AND t))", True),
+    ("or-left", lambda M: M.col("p") | M.col("q") | M.col("r") | M.col("t"),
+     "((p OR q) OR r) OR t", True),
+    ("or-right", lambda M: M.col("p") | (M.col("q") | (M.col("r") | M.col("t"))),
+     "p OR (q OR (r OR t))", True),
+    ("or-under-and", lambda M: (M.col("p") | M.col("q")) & (M.col("r") | M.col("t")),
+     "(p OR q) AND (r OR t)", True),
+    ("and-under-or", lambda M: (M.col("p") & M.col("q")) | (M.col("r") & M.col("t")),
+     "(p AND q) OR (r AND t)", True),
+    ("not-and", lambda M: ~(M.col("p") & M.col("q")), "NOT (p AND q)", True),
+    ("not-or-and", lambda M: ~M.col("p") & ~(M.col("q") | M.col("r")),
+     "(NOT p) AND (NOT (q OR r))", True),
+    ("not-cmp", lambda M: ~(M.col("a") == 1), "NOT (a = 1)", True),
+    ("not-isnull", lambda M: ~M.col("a").isNull(), "NOT (a IS NULL)", True),
+    ("not-not", lambda M: ~~M.col("p"), "NOT (NOT p)", True),
+    ("in-cmp", lambda M: (M.col("a") == 1).isin(True), "(a = 1) IN (true)", True),
+    ("in-sum", lambda M: (M.col("a") + 1).isin(2, 3), "(a + 1) IN (2, 3)", True),
+    ("rlike-cmp", lambda M: (M.col("a") == 1).rlike("t"), "(a = 1) RLIKE 't'", False),
+    ("isnull-cmp", lambda M: (M.col("a") == 1).isNull(), "(a = 1) IS NULL", True),
+    ("isnotnull-and", lambda M: (M.col("p") & M.col("q")).isNotNull(),
+     "(p AND q) IS NOT NULL", True),
+    ("cmp-isnull", lambda M: M.col("a").isNull() == M.col("p"),
+     "(a IS NULL) = p", True),
+    ("cmp-chain", lambda M: (M.col("a") == M.col("b")) == M.col("p"),
+     "(a = b) = p", True),
+    ("cmp-right", lambda M: M.col("p") == (M.col("a") < M.col("b")),
+     "p = (a < b)", True),
+    ("eq-null-safe", lambda M: M.col("a").eqNullSafe(M.col("b") + 1) & M.col("p"),
+     "(a <=> (b + 1)) AND p", True),
+    ("neg-sum", lambda M: -(M.col("a") + M.col("b")), "- (a + b)", True),
+    ("neg-col", lambda M: -M.col("a") * M.col("b"), "(- a) * b", True),
+    ("minus-neg-lit", lambda M: M.col("a") - (-M.lit(1)), "a - (- 1)", True),
+    ("minus-neg-col", lambda M: M.col("a") - (-M.col("b")), "a - (- b)", True),
+    ("neg-neg", lambda M: -(-M.col("a")), "- (- a)", True),
+    ("sub-left", lambda M: M.col("a") - M.col("b") - M.col("c"), "(a - b) - c", True),
+    ("sub-right", lambda M: M.col("a") - (M.col("b") - M.col("c")), "a - (b - c)", True),
+    ("mul-over-add", lambda M: (M.col("a") + M.col("b")) * M.col("c"),
+     "(a + b) * c", True),
+    ("add-over-mul", lambda M: M.col("a") * M.col("b") + M.col("c") % 3,
+     "(a * b) + (c % 3)", True),
+    ("div-right", lambda M: M.col("a") / (M.col("b") * M.col("c")),
+     "a / (b * c)", True),
+    ("radd", lambda M: 1 - (M.col("a") + 2), "1 - (a + 2)", True),
+    ("xor-cmp", lambda M: M.col("a").bitwiseXOR(M.col("b") + 1) == M.col("c"),
+     "(a ^ (b + 1)) = c", True),
+    ("field-composite", lambda M: (M.col("a") + M.col("b"))["f"], "(a + b).f", False),
+    ("index-composite", lambda M: M.col("arr")[M.col("a") - 1], "arr[(a - 1)]", True),
+    ("index-of-case",
+     lambda M: M.when(M.col("p"), M.col("arr")).otherwise(M.array(M.col("b")))[0],
+     "(CASE WHEN p THEN arr ELSE array(b) END)[0]", True),
+    ("field-of-case",
+     lambda M: M.when(M.col("p"), M.col("st")).otherwise(M.col("st"))["x"],
+     "(CASE WHEN p THEN st ELSE st END).x", True),
+    ("nested-case",
+     lambda M: M.when(M.col("p"), M.when(M.col("q"), 1).otherwise(2))
+     .when(M.col("r") & M.col("t"), M.when(M.col("a") > 1, 3))
+     .otherwise(M.col("a") + 4) + 1,
+     "(CASE WHEN p THEN (CASE WHEN q THEN 1 ELSE 2 END) "
+     "WHEN (r AND t) THEN (CASE WHEN (a > 1) THEN 3 END) ELSE (a + 4) END) + 1",
+     True),
+    ("lambda-body",
+     lambda M: M.filter(M.col("arr"), lambda x: (x > 1) & ~(x == 3)),
+     "filter(arr, {v} -> (({v} > 1) AND (NOT ({v} = 3))))", True),
+    ("cast-arg", lambda M: (M.col("a") + 1).cast("string").rlike("^[0-9]+$"),
+     "CAST((a + 1) AS string) RLIKE '^[0-9]+$'", True),
+]
+
+
+def test_sqlalg_minimal_parens_same_tree(spark):
+    """Minimal parentheses parse to the tree of the fully parenthesized
+    text and evaluate like the Column build."""
+    import itertools
+    import re
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    bools = [True, False, None]
+    rows = [
+        (p, q, r, t, a, b, c, [1, 2, 3, 4], {"x": a})
+        for (p, q, r, t), (a, b, c) in zip(
+            itertools.product(bools, repeat=4),
+            itertools.cycle([(1, 2, 3), (3, 1, 2), (None, 5, 1), (2, 2, None)]),
+        )
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "p boolean, q boolean, r boolean, t boolean, a int, b int, c int, "
+        "arr array<int>, st struct<x:int>",
+    )
+    for name, build, hand, values in _PAREN_CASES:
+        text = str(build(S))
+        if "{v}" in hand:  # lambda variables get generated names
+            hand = hand.replace("{v}", re.search(r"V\d+", text).group())
+        assert parser.parseExpression(text).equals(
+            parser.parseExpression(hand)
+        ), (name, text, hand)
+        if values:
+            got = df.select(F.expr(text).alias("v")).collect()
+            want = df.select(build(F).alias("v")).collect()
+            assert got == want, (name, text)
+
+    pins = {
+        "a = 1 AND b = 2": (S.col("a") == 1) & (S.col("b") == 2),
+        "(p AND q) AND r": S.col("p") & S.col("q") & S.col("r"),
+        "p AND (q AND r)": S.col("p") & (S.col("q") & S.col("r")),
+        "p AND q OR r": S.col("p") & S.col("q") | S.col("r"),
+        "NOT (p AND q)": ~(S.col("p") & S.col("q")),
+        "NOT a IS NULL": ~S.col("a").isNull(),
+        "a = 1 IN (true)": (S.col("a") == 1).isin(True),
+        "- (a + b)": -(S.col("a") + S.col("b")),
+        "a - - 1": S.col("a") - (-S.lit(1)),
+        "(a + b).f": (S.col("a") + S.col("b"))["f"],
+        "CASE WHEN a > 1 THEN 1 ELSE 2 END + 1":
+            S.when(S.col("a") > 1, 1).otherwise(2) + 1,
+    }
+    for want, sa in pins.items():
+        assert str(sa) == want

@@ -160,8 +160,10 @@ AUDITS = [
     ("geocode_customers", 0, True, False,
      "cache join broadcasts; record side stays narrow"),
     ("dedup_er", 3, False, False,
-     "one component pass: the sizing take() at construction runs the "
-     "one blocking-key shuffle (101-cap) + pair distinct and resolves "
+     "one component pass: construction local-checkpoints the per-record "
+     "payload (the one record scan; keys and verify fields computed "
+     "once), then the sizing take() runs the one blocking-key shuffle "
+     "(101-cap, no pair distinct) over the checkpoint and resolves "
      "components driver-side, falling back to distributed label "
      "propagation past 2M edges — the registered plan is then the local "
      "assignment relation (0-3 exchanges depending on path)"),
