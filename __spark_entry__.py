@@ -2134,7 +2134,7 @@ def xslt_normalize_orders(spark: SparkSession, sf: str) -> DataFrame:
     )
     df = apply_xslt(
         o.select("o_orderkey", xml.alias("xml")), "xml", xsl,
-        out_column="res", backend="mini",
+        out_column="res",
     )
     return df.select(
         "o_orderkey",

@@ -37,14 +37,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import sqlalg, sqltwin
 from ..functions import geo as GEOF
 from ..functions import keys as K
 from .format_calculator import format_col
 from recordmanager_spark.sparkcompat import try_element_at
-
-# False in this module; the SQL-text twin (recordmanager_spark.sqltwin)
-# overrides it to True so twin instances never recurse into themselves.
-_IS_SQL_TWIN = False
 
 # Normalized MARC struct: control fields carry `value`, data fields carry
 # `subfields`. One array keeps original field order (MARC order matters for
@@ -1178,12 +1175,9 @@ def _callnumber_pure_exprs(marc: Column) -> dict[str, Column]:
     }
 
 
-def marc_callnumber_columns(
-    marc: Column,
-    hilcc: list[dict] | None = None,
-    marc_col_name: str | None = None,
-) -> dict[str, Column]:
-    """callnumber-* and dewey-* columns (Record/Marc.php:493-586).
+def marc_callnumber_columns(marc_col: str) -> dict[str, Column]:
+    """callnumber-* and dewey-* columns (Record/Marc.php:493-586) over
+    the parsed-MARC column named ``marc_col``.
 
     callnumber-first: first of 099$a/090$a/050$a; callnumber-subject: the
     leading letters of 090$a|050$a uppercased; callnumber-label: the
@@ -1192,30 +1186,18 @@ def marc_callnumber_columns(
     all. Dewey from 082$a/083$a: the LAST field wins for hundreds/tens/
     ones/full/raw (reference loop overwrites), dewey-sort keeps the first.
 
-    ``hilcc``: optional HILCC range table; when given, adds
-    ``category_str_mv`` (one category per valid call number, the
-    useHILCC branch at Record/Marc.php:529-545 — the reference ships no
-    table either; it's an install-time mapping file).
-
-    ``marc_col_name``: when the marc struct is a named column, pass its
-    name so the pure argument trees compile through the SQL-text twin
-    (one ``F.expr`` parse each) and only the pandas-UDF wraps build
-    through the Column API.
+    The pure argument trees compile through the SQL-text twin (one
+    ``F.expr`` parse each); only the pandas-UDF wraps build through the
+    Column API.
     """
     from ..functions import callnumbers as CN
 
-    if marc_col_name and not _IS_SQL_TWIN:
-        from .. import sqlalg, sqltwin
-
-        tw = sqltwin.marc_twin()
-        pure = {
-            k: F.expr(str(v))
-            for k, v in tw._callnumber_pure_exprs(
-                sqlalg.col(marc_col_name)
-            ).items()
-        }
-    else:
-        pure = _callnumber_pure_exprs(marc)
+    pure = {
+        k: F.expr(str(v))
+        for k, v in sqltwin.marc_twin()
+        ._callnumber_pure_exprs(sqlalg.col(marc_col))
+        .items()
+    }
     cn_raw = pure.pop("callnumber_raw")
     dewey = pure.pop("__dewey")
     # pandas UDF over the whole array (UDFs cannot run inside transform
@@ -1223,13 +1205,7 @@ def marc_callnumber_columns(
     cn_sort = CN.lc_sort_key_first_valid(cn_raw)
     dewey_last = try_element_at(dewey, -1)
     dewey_first = try_element_at(dewey, 1)
-    extra = (
-        {"category_str_mv": CN.lc_categories_udf(hilcc)(cn_raw)}
-        if hilcc is not None
-        else {}
-    )
     return {
-        **extra,
         **pure,
         "callnumber_raw": cn_raw,
         "callnumber_sort": cn_sort,
@@ -1305,20 +1281,19 @@ def marc_era_facets(marc: Column) -> Column:
 # JVM work that is seconds per process while the parser is cold
 # (PERFORMANCE.md, "Twin SQL parenthesization"), so construction is LAZY
 # per column name and memoized per (marc_col, id_prefix): a query that
-# selects six columns builds six expressions. Column objects are
-# immutable and reusable across DataFrames in the JVM.
+# selects six columns builds six expressions. Each state holds the
+# built Columns, their SQL text and ONE builder memo (shared subtrees
+# and the hidden-column texts). Column objects are immutable and
+# reusable across DataFrames in the JVM.
 _SOLR_COLS_CACHE: dict = {}
 
-# Columns whose builders pass through a pandas UDF (the call-number sort
-# key and Dewey digit extractors) have no scalar SQL form — they stay on
-# the Column path; everything else compiles through the SQL-text twin.
-_TWIN_SKIP = frozenset(
-    {
-        "callnumber_first", "callnumber_subject", "callnumber_label",
-        "callnumber_raw", "callnumber_sort", "dewey_hundreds", "dewey_tens",
-        "dewey_ones", "dewey_full", "dewey_sort", "dewey_raw",
-        "category_str_mv",
-    }
+# The call-number columns pass through pandas UDFs, which have no scalar
+# SQL form: :func:`marc_callnumber_columns` builds them all at once, in
+# this order, after the columns of :func:`_solr_col_builders`.
+_CALLNUMBER_COLS = (
+    "callnumber_first", "callnumber_subject", "callnumber_label",
+    "callnumber_raw", "callnumber_sort", "dewey_hundreds", "dewey_tens",
+    "dewey_ones", "dewey_full", "dewey_sort", "dewey_raw",
 )
 
 
@@ -1335,15 +1310,14 @@ def _maybe_hide(memo: dict, name: str, v):
     so no rendered SQL is ever rewritten after the fact.
 
     The full text lands in ``memo['__hidden__']`` (reserved key) for
-    :func:`solr_columns` to materialize as hidden companion columns;
-    a hidden text may reference an EARLIER placeholder (nested shared
-    subtrees), which solr_columns handles by adding hidden columns in
-    creation order.
+    :func:`to_solr_columns` to materialize as hidden companion columns
+    in one projection: no hidden text references another placeholder
+    (each is a whole author struct or the publish year).
 
-    Opt-in via ``memo['__hide__']``: only callers that materialize the
-    hidden companion columns (solr_columns) set it — standalone twin
-    builders (the parity tests, ad-hoc column construction) keep fully
-    inline SQL that evaluates without any companion column."""
+    Opt-in via ``memo['__hide__']``: only :func:`to_solr_columns`, which
+    materializes the companion columns, sets it. Standalone builds (the
+    parity tests' Column reference among them) keep fully inline trees
+    that evaluate without any companion column."""
     if not memo.get("__hide__"):
         return v
     text = str(v)
@@ -1354,30 +1328,15 @@ def _maybe_hide(memo: dict, name: str, v):
     return type(v)(hname)
 
 
-def _twin_builders(marc_col: str, id_prefix: str | None, memo: dict):
-    """The SQL-text twin's builder map for this column source — each
-    builder returns an ``sqlalg.X`` whose ``str()`` is the full column
-    SQL, compiled into a plan via ONE ``F.expr`` parse instead of
-    thousands of py4j Column-constructor round trips (PERFORMANCE.md,
-    construction census: ~25k round trips / ~11 s for the work-key tree
-    alone before this path existed)."""
-    from .. import sqlalg, sqltwin
-
-    tw = sqltwin.marc_twin()
-    return tw._solr_col_builders(sqlalg.col(marc_col), id_prefix, memo)
-
-
 def _solr_col_builders(m: Column, id_prefix: str | None, memo: dict) -> dict:
     """name → zero-arg builder for every Solr column (Record/Marc.php
-    :267-596). ``memo`` shares the expensive sub-expressions (author
-    structs, publish year) between related columns."""
+    :267-596) but the :data:`_CALLNUMBER_COLS`. ``memo`` shares the
+    expensive sub-expressions (author structs, publish year) between
+    related columns."""
 
     def shared(name, fn):
         if name not in memo:
-            v = fn()
-            if _IS_SQL_TWIN:
-                v = _maybe_hide(memo, name, v)
-            memo[name] = v
+            memo[name] = _maybe_hide(memo, name, fn())
         return memo[name]
 
     pa = lambda: shared("pa", lambda: primary_authors(m))  # noqa: E731
@@ -1540,20 +1499,6 @@ def _solr_col_builders(m: Column, id_prefix: str | None, memo: dict) -> dict:
         "fullrecord": lambda: F.to_json(m),
         "long_lat": lambda: marc_geographic_locations(m),
         "unique_ids": lambda: marc_unique_ids(m),
-        **{
-            name: (lambda n=name: shared(
-                "callnumbers",
-                lambda: marc_callnumber_columns(
-                    m, marc_col_name=memo.get("__marc_col_name")
-                ),
-            )[n])
-            for name in (
-                "callnumber_first", "callnumber_subject", "callnumber_label",
-                "callnumber_raw", "callnumber_sort", "dewey_hundreds",
-                "dewey_tens", "dewey_ones", "dewey_full", "dewey_sort",
-                "dewey_raw",
-            )
-        },
     }
 
 
@@ -1566,61 +1511,43 @@ def to_solr_columns(
     """Project a parsed-MARC DataFrame into the wide Solr-array schema.
 
     Columns follow Record/Marc.php:267-596; each is a JVM expression over
-    the struct column. Pass ``only`` with the column names a caller will
-    actually use — Catalyst would prune unused columns anyway, but every
-    built column is parsed and analysed in the JVM (seconds per process
-    while the parser is cold), so pruning at construction time is the
-    real win. Names that MARC does not produce are ignored.
+    the struct column. Every column compiles through the SQL-text twin
+    (one ``F.expr`` parse each); the call-number columns add their
+    pandas-UDF wraps on top (:func:`marc_callnumber_columns`). Pass
+    ``only`` with the column names a caller will actually use — Catalyst
+    would prune unused columns anyway, but every built column is parsed
+    and analysed in the JVM (seconds per process while the parser is
+    cold), so pruning at construction time is the real win. Names that
+    MARC does not produce are ignored.
     """
-    cache_key = (marc_col, id_prefix)
     state = _SOLR_COLS_CACHE.setdefault(
-        cache_key,
-        {"sqls": {}, "cols": {}, "memo": {}, "twin_memo": {}, "hidden": {}},
+        (marc_col, id_prefix),
+        {"sqls": {}, "cols": {}, "memo": {"__src": marc_col, "__hide__": True}},
     )
-    state["memo"]["__marc_col_name"] = marc_col
-    state["twin_memo"].setdefault("__src", marc_col)
-    state["twin_memo"].setdefault("__hide__", True)
-    builders = _solr_col_builders(F.col(marc_col), id_prefix, state["memo"])
-    names = list(builders) if only is None else [n for n in builders if n in set(only)]
-    twin = None
+    builders = sqltwin.marc_twin()._solr_col_builders(
+        sqlalg.col(marc_col), id_prefix, state["memo"]
+    )
+    names = [*builders, *_CALLNUMBER_COLS]
+    if only is not None:
+        names = [n for n in names if n in set(only)]
     for n in names:
-        if n in state["sqls"] or n in state["cols"]:
+        if n in state["cols"]:
             continue
-        if not _IS_SQL_TWIN and n not in _TWIN_SKIP:
-            if twin is None:
-                twin = _twin_builders(marc_col, id_prefix, state["twin_memo"])
-            state["sqls"][n] = str(twin[n]())
-        else:
-            state["cols"][n] = builders[n]()
-    # Shared-subtree extraction: memoized sub-expressions (the author
-    # structs, publish year) are EMBEDDED per consuming column — trees
-    # duplicate per reference, so `author`/`author_role`/`author_variant`
-    # each carried the full ~21 KB relator-classification tree and the
-    # analyzer paid for it three times. Big memo entries became hidden
-    # placeholders at MEMO INSERTION time (_maybe_hide, ADVICE r6), so
-    # every rendered SQL already references them by name — nothing is
-    # text-rewritten here, and cols/sqls can never diverge.
-    state["hidden"].update(state["twin_memo"].get("__hidden__", {}))
-    cols = {}
-    for n in names:
-        if n not in state["cols"]:
+        if n in builders:
+            state["sqls"][n] = str(builders[n]())
             state["cols"][n] = F.expr(state["sqls"][n])
-        cols[n] = state["cols"][n]
-    # transitively-used hidden columns: a hidden text may reference an
-    # EARLIER placeholder (nested shared subtrees), so walk newest-first
-    used: set = set()
-    hidden_items = list(state["hidden"].items())
-    for h, t in reversed(hidden_items):
-        if any(h in state["sqls"].get(n, "") for n in names) or any(
-            h in state["hidden"][u] for u in used
-        ):
-            used.add(h)
+        else:
+            state["cols"].update(marc_callnumber_columns(marc_col))
+    # Big shared subtrees (the author structs, publish year) became
+    # hidden placeholders at memo insertion (_maybe_hide), so the
+    # analyzer sees each once instead of once per consuming column.
+    hidden = state["memo"].get("__hidden__", {})
+    used = [
+        h for h in hidden if any(h in state["sqls"].get(n, "") for n in names)
+    ]
+    cols = {n: state["cols"][n] for n in names}
     if used:
-        # creation order so later hidden columns can reference earlier
-        # ones (withColumns' parallel projection could not)
-        for h, t in hidden_items:
-            if h in used:
-                df = df.withColumn(h, F.expr(t))
+        df = df.withColumns({h: F.expr(hidden[h]) for h in used})
         return df.withColumns(cols).drop(*used)
     return df.withColumns(cols)
 
@@ -1725,24 +1652,22 @@ def _work_titles(marc: Column, alt: bool) -> Column:
     return F.concat(*parts)
 
 
-def work_keys(marc: "Column | str") -> Column:
-    """'UT <title>' / 'AT <author> <title>' work keys, main + alt-script.
+def work_keys(marc_col: str) -> Column:
+    """'UT <title>' / 'AT <author> <title>' work keys, main + alt-script,
+    of the parsed-MARC column named ``marc_col``.
 
     Uniform titles key alone; other titles cross with every author
     (work_keys_from_all_authors default). All values pass normalizeKey.
     Pure array expressions — the cross product happens per record in the
-    JVM with no join.
-
-    Pass the marc column NAME (a string) to compile the whole key tree
-    through the SQL-text twin — one ``F.expr`` parse instead of ~25k
-    py4j round trips (~11 s of driver time at the round-5 census).
+    JVM with no join. The tree (:func:`_work_keys`) compiles through the
+    SQL-text twin — one ``F.expr`` parse instead of ~25k py4j round
+    trips (~11 s of driver time at the round-5 census).
     """
-    if isinstance(marc, str) and not _IS_SQL_TWIN:
-        from .. import sqlalg, sqltwin
+    return F.expr(str(sqltwin.marc_twin()._work_keys(sqlalg.col(marc_col))))
 
-        return F.expr(str(sqltwin.marc_twin().work_keys(sqlalg.col(marc))))
-    if isinstance(marc, str):
-        marc = F.col(marc)
+
+def _work_keys(marc: Column) -> Column:
+    """The work-key tree behind :func:`work_keys`."""
 
     def keys_for(authors: Column, titles: Column) -> Column:
         # let-bind `titles` (a ~10 KB per-engine subtree) through a

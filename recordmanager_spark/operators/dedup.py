@@ -32,7 +32,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from recordmanager_spark.sparkcompat import try_element_at
 
-from ..functions.keys import author_match_expr, normalize_key
+from .. import sqlalg as SA
+from .. import sqltwin
+from ..functions.keys import author_match_expr
 
 # ---------------------------------------------------------------------------
 # Key generation (DedupHandler.php:313-370)
@@ -73,9 +75,6 @@ def with_dedup_keys(
     ``F.expr`` parse instead of hundreds of py4j Column-constructor
     round trips — see PERFORMANCE.md construction census).
     """
-    from .. import sqlalg as SA
-    from .. import sqltwin
-
     ktw = sqltwin.keys_twin()
     tk = F.expr(
         str(
@@ -247,15 +246,14 @@ def blocking_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _match_condition_from(ca, cb, pre_normalized: bool = False) -> Column:
+def _match_condition_from(ca, cb) -> Column:
     """matchRecords as a boolean Column, generic over field access.
 
     ``ca``/``cb`` map a field name to a Column for each side — either
     joined-alias access (``F.col("a.title")``) or struct-lambda access
-    (``x["title"]``), so the same decision logic serves the join-based
-    verifier and the in-partition fused verifier. With ``pre_normalized``
-    the title/author comparison keys are read from ``__nk_title`` /
-    ``__nk_author`` (computed once per record instead of once per pair).
+    (``x["title"]``). The title/author comparison keys are read from
+    ``__nk_title`` / ``__nk_author``, computed once per record by
+    :func:`_match_payload`.
     """
     # hard filters (:752-808)
     fmt_ok = ca("format").eqNullSafe(cb("format"))
@@ -289,12 +287,8 @@ def _match_condition_from(ca, cb, pre_normalized: bool = False) -> Column:
     )
 
     # title similarity: normalized keys within 10% levenshtein (:902-927)
-    if pre_normalized:
-        ta, tb = ca("__nk_title"), cb("__nk_title")
-        aa, ab = ca("__nk_author"), cb("__nk_author")
-    else:
-        ta, tb = normalize_key(ca("title")), normalize_key(cb("title"))
-        aa, ab = normalize_key(ca("author")), normalize_key(cb("author"))
+    ta, tb = ca("__nk_title"), cb("__nk_title")
+    aa, ab = ca("__nk_author"), cb("__nk_author")
     # Levenshtein is the hot cost of verification (every surviving pair pays
     # it on both title and author). Two cuts, same accept set:
     # 1. length-band reject — |len(x)-len(y)| is a lower bound on edit
@@ -331,45 +325,26 @@ def _match_condition_from(ca, cb, pre_normalized: bool = False) -> Column:
     return fmt_ok & access_ok & (accept_fast | accept_slow)
 
 
-def match_condition(a: str = "a", b: str = "b") -> Column:
-    """The matchRecords decision as one boolean Column over a joined pair
-    of record structs aliased ``a`` and ``b``.
-
-    Expected columns per side: the :data:`_VERIFY_FIELDS` battery, in
-    the shapes it records (:func:`verify_frame` builds them).
-    """
-    return _match_condition_expr(a, b)
-
-
 _MATCH_SQL_CACHE: dict = {}
 
 
-def _match_condition_expr(
-    a: str = "a", b: str = "b", pre_normalized: bool = False
-) -> Column:
-    """matchRecords compiled through the SQL-text twin: the same
-    decision tree as :func:`_match_condition_from`, rendered to SQL once
-    (pure Python) and parsed with ONE ``F.expr`` call instead of ~1.2k
-    py4j round trips of Column construction per dedup build (guide
-    §4/§5 — the r12 renormalize/fieldspec technique applied to the
-    verify tree; parity pinned by tests/test_dedup.py). The SQL text is
-    cached per (a, b, pre_normalized) — it is a function of nothing
-    else."""
-    key = (a, b, pre_normalized)
-    sql = _MATCH_SQL_CACHE.get(key)
-    if sql is None:
-        from .. import sqlalg as SA
-        from .. import sqltwin
+def match_condition(a: str = "a", b: str = "b") -> Column:
+    """The matchRecords decision as one boolean Column over a joined pair
+    of record structs aliased ``a`` and ``b``, each carrying the
+    :func:`_match_payload` fields.
 
-        tw = sqltwin.dedup_twin()
-        sql = str(
-            tw._match_condition_from(
-                lambda n: SA.col(f"{a}.{n}"),
-                lambda n: SA.col(f"{b}.{n}"),
-                pre_normalized=pre_normalized,
+    The tree is :func:`_match_condition_from` compiled through the
+    SQL-text twin: rendered to SQL once per (a, b) in pure Python and
+    parsed with ONE ``F.expr`` call instead of ~1.2k py4j round trips of
+    Column construction per dedup build (parity pinned by
+    tests/test_dedup.py)."""
+    sql = _MATCH_SQL_CACHE.get((a, b))
+    if sql is None:
+        sql = _MATCH_SQL_CACHE[(a, b)] = str(
+            sqltwin.dedup_twin()._match_condition_from(
+                lambda n: SA.col(f"{a}.{n}"), lambda n: SA.col(f"{b}.{n}")
             )
         )
-        _MATCH_SQL_CACHE[key] = sql
     return F.expr(sql)
 
 
@@ -425,6 +400,24 @@ def verify_frame(wide: DataFrame) -> DataFrame:
     return wide.select("_id", "source_id", *cols)
 
 
+def _match_payload() -> list[Column]:
+    """The per-record inputs of :func:`match_condition`: the
+    :data:`_VERIFY_FIELDS` battery with ``title`` and ``author`` replaced
+    by their normalize_key forms ``__nk_title`` and ``__nk_author``.
+
+    Select these before any join or pair generation, so each record's
+    keys are computed once rather than once per pair. normalize_key
+    compiles through the SQL-text twin (one parse each)."""
+    ktw = sqltwin.keys_twin()
+    return [
+        *[F.col(f) for f in _VERIFY_FIELDS if f not in ("title", "author")],
+        *[
+            F.expr(str(ktw.normalize_key(SA.col(f)))).alias(f"__nk_{f}")
+            for f in ("title", "author")
+        ],
+    ]
+
+
 def blocking_verified_edges(
     records: DataFrame,
     key_cols: list[str],
@@ -460,20 +453,10 @@ def blocking_verified_edges(
     codegen — the shape that stays fast when a hot key emits its capped
     ~5000 pairs per group at 100 TB.
     """
-    # compile the normalize_key trees through the SQL-text twin (one
-    # parse each instead of per-node py4j chatter)
-    from .. import sqlalg as SA
-    from .. import sqltwin
-
-    ktw = sqltwin.keys_twin()
-    nk_title = F.expr(str(ktw.normalize_key(SA.col("title"))))
-    nk_author = F.expr(str(ktw.normalize_key(SA.col("author"))))
     member = F.struct(
         F.col(id_col).alias("id"),
         F.col(source_col).alias("source"),
-        *[F.col(f) for f in _VERIFY_FIELDS if f not in ("title", "author")],
-        nk_title.alias("__nk_title"),
-        nk_author.alias("__nk_author"),
+        *_match_payload(),
     )
     # one corpus scan: concatenate the key arrays before the explode (a
     # union of per-column explodes re-scans the records — and re-runs the
@@ -546,7 +529,7 @@ def blocking_verified_edges(
         try_element_at(F.col("__c"), F.col("__p.i")).alias("a"),
         try_element_at(F.col("__c"), F.col("__p.j")).alias("b"),
     )
-    match = _match_condition_expr("a", "b", pre_normalized=True)
+    match = match_condition("a", "b")
     # sources ride along (functionally dependent on the ids, so the
     # distinct is unchanged) — they let ``deduplicate`` enforce the
     # one-per-source invariant driver-side without a second record pass.
@@ -568,9 +551,10 @@ def verified_edges(
 
     The pair table is tiny relative to the corpus — join it twice against
     the (pruned) record projection; Catalyst prunes the record scan to the
-    verification columns only.
+    verification columns only, and the match keys are computed per record
+    before the joins.
     """
-    proj = records.select(F.col(id_col).alias("id"), *_VERIFY_FIELDS)
+    proj = records.select(F.col(id_col).alias("id"), *_match_payload())
     a = proj.alias("a")
     b = proj.alias("b")
     joined = (
@@ -949,7 +933,7 @@ def component_part_edges(
         F.col(comp_host_col).alias("host"),
         F.col(source_col).alias("src"),
         F.col("__pos"),
-        *[f for f in _VERIFY_FIELDS if f in comp.columns],
+        *_match_payload(),
     )
     a, b = proj.alias("a"), proj.alias("b")
     aligned = (

@@ -8,64 +8,35 @@ global parameters.
 Spark-first: the stylesheet compiles ONCE per executor (module-level
 lazy cache inside the UDF closure) and applies per record via an
 Arrow-batched pandas UDF — the same shape as the other parse steps.
-Two interchangeable backends:
-
-- **lxml** (libxslt) when installed — full XSLT 1.0;
-- :class:`recordmanager_spark.xsl.MiniXSLT` (stdlib, always available) —
-  the XSLT subset the reference's shipped stylesheets use, verified
-  against all 12 ``transformations/*.xsl`` in the test suite.
-
-``backend="auto"`` (default) prefers lxml and falls back to the mini
-engine, so the operator is no longer gated on container contents.
+The engine is :class:`recordmanager_spark.xsl.MiniXSLT` (stdlib only):
+the XSLT subset the reference's shipped stylesheets use, verified
+against all 12 ``transformations/*.xsl`` in the test suite. Records
+parse with the stdlib expat parser, which refuses entity-expansion
+bombs and never fetches external entities.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 
-try:  # pragma: no cover - environment-dependent
-    from lxml import etree as _etree
-
-    HAVE_LXML = True
-except ImportError:
-    _etree = None
-    HAVE_LXML = False
-
-
-def xslt_available() -> bool:
-    """True — the stdlib mini engine is always present; retained for
-    callers that used the old lxml gate."""
-    return True
-
 
 def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
-                  backend: str = "auto",
                   documents: dict[str, str] | None = None,
                   extensions: dict | None = None):
     """Build a pandas UDF applying the stylesheet to an XML string column.
 
-    ``backend``: ``"auto"`` (lxml if installed, else mini), ``"lxml"``
-    (raise if unavailable), or ``"mini"`` (force the stdlib engine).
     Unparseable records map to NULL, mirroring the reference's
     per-record error handling (bad records are logged and skipped, not
     fatal to the batch).
 
     ``documents`` feeds the stylesheet's ``document()`` calls: a
     {href: xml-string} mapping serialized into the executor closure, so
-    the engine never touches network or filesystem (mini backend only —
-    lxml resolves document() through its own loaders).
+    the engine never touches network or filesystem.
 
     ``extensions`` registers Python callables as stylesheet XPath
-    functions (the reference's ``php_function`` analogue; mini backend
-    only) — cloudpickled into the executor closure.
+    functions (the reference's ``php_function`` analogue) — cloudpickled
+    into the executor closure.
     """
-    if backend == "lxml" and not HAVE_LXML:
-        raise RuntimeError(
-            "XSLT backend 'lxml' requested but lxml is not installed; "
-            "use backend='mini' or 'auto'."
-        )
-    use_lxml = HAVE_LXML if backend == "auto" else backend == "lxml"
-
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import StringType
 
@@ -74,29 +45,6 @@ def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
     # compiled per executor process on first use (closures serialize the
     # source string, not the compiled object)
     state: dict = {}
-
-    if use_lxml:
-
-        @pandas_udf(StringType())
-        def transform(xml: pd.Series) -> pd.Series:
-            if "t" not in state:
-                state["t"] = _etree.XSLT(_etree.fromstring(xsl.encode()))
-
-            lx_params = {
-                k: _etree.XSLT.strparam(str(v)) for k, v in xsl_params.items()
-            }
-
-            def one(doc):
-                if not doc:
-                    return None
-                try:
-                    return str(state["t"](_etree.fromstring(doc.encode()), **lx_params))
-                except _etree.XMLSyntaxError:
-                    return None
-
-            return xml.map(one)
-
-        return transform
 
     @pandas_udf(StringType())
     def transform(xml: pd.Series) -> pd.Series:
@@ -124,14 +72,13 @@ def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
 
 
 def apply_xslt(df, column: str, xsl: str, out_column: str | None = None,
-               params: dict[str, object] | None = None, backend: str = "auto",
+               params: dict[str, object] | None = None,
                documents: dict[str, str] | None = None,
                extensions: dict | None = None):
     """Apply a stylesheet to ``column``, writing ``out_column`` (default:
     in place). Pure projection — no shuffle; scales with the scan."""
     udf = make_xslt_udf(
-        xsl, params=params, backend=backend, documents=documents,
-        extensions=extensions,
+        xsl, params=params, documents=documents, extensions=extensions
     )
     return df.withColumn(out_column or column, udf(df[column]))
 

@@ -150,6 +150,16 @@ def parse_warc_text(name: str, text: str) -> list[tuple]:
     return parse_warc_bytes(name, text.encode("utf-8"))
 
 
+# Inflated-size cap for one gzip member, which is one WARC record in
+# Common Crawl's layout. Crawlers truncate payloads at 1 MiB and the
+# benchmark's records are a few KB, so a member past the cap is a
+# decompression bomb (a 200 KB gzip of zeros inflates to 200 MB) or an
+# absurd record: it is inflated in bounded chunks that are thrown away
+# and then dropped, and the members after it still parse.
+_MAX_MEMBER_BYTES = 64 << 20
+_DRAIN_CHUNK = 1 << 20
+
+
 def gunzip_members(data: bytes) -> bytes:
     """Decompress a (possibly multi-member) gzip blob — Common Crawl
     WARC segments are one gzip MEMBER PER RECORD concatenated, so a
@@ -159,7 +169,9 @@ def gunzip_members(data: bytes) -> bytes:
     stop — because a real-crawl segment with one damaged record must
     not fail the whole task (the parser's lenient contract; the
     partial record ahead of the corruption parses or drops downstream
-    exactly like a truncated tail)."""
+    exactly like a truncated tail). A member that inflates past
+    ``_MAX_MEMBER_BYTES`` is dropped whole and parsing goes on after
+    it, so one member never holds more than the cap in memory."""
     import zlib
 
     if len(data) < 2 or data[:2] != b"\x1f\x8b":
@@ -169,9 +181,18 @@ def gunzip_members(data: bytes) -> bytes:
     while len(view) >= 2 and bytes(view[:2]) == b"\x1f\x8b":
         d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
         try:
-            out += d.decompress(bytes(view))
+            member = d.decompress(view, _MAX_MEMBER_BYTES)
+            over = False
+            while not d.eof:
+                tail = d.unconsumed_tail
+                chunk = d.decompress(tail, _DRAIN_CHUNK)
+                if not chunk and len(d.unconsumed_tail) == len(tail):
+                    break  # input exhausted: a truncated member
+                over = over or bool(chunk)
         except zlib.error:  # corrupt member: keep what decoded
             break
+        if not over:
+            out += member
         if not d.eof:  # truncated final member: keep what decoded
             break
         view = memoryview(d.unused_data)

@@ -2,23 +2,28 @@
 
 The fieldspec/normalization specs (``extractors/marc.py``,
 ``extractors/format_calculator.py``, ``functions/keys.py``,
-``functions/geo.py``) are written once, against the ``pyspark.sql.
-functions`` API. This module re-executes their UNMODIFIED source with
-the ``F`` global (and the few cross-module spec imports) rebound to
-:mod:`recordmanager_spark.sqlalg`, producing "twin" modules whose
-functions emit SQL text instead of py4j Column trees.
+``functions/geo.py``, the matchRecords tree in ``operators/dedup.py``)
+are written once, against the ``pyspark.sql.functions`` API, and never
+branch on which algebra they run under. This module re-executes their
+UNMODIFIED source with the ``F`` global (and the few cross-module spec
+imports) rebound to :mod:`recordmanager_spark.sqlalg`, producing "twin"
+modules whose functions emit SQL text instead of py4j Column trees.
 
 Rebinding works because Python functions resolve module globals at CALL
 time: the module body executes normally (real imports, real pandas_udf
 decorators — those objects are simply never invoked through the twin),
 and afterwards the names the spec functions look up (``F``, ``K``,
-``GEOF``, ``format_col``, ``try_element_at``) are swapped for their
-SQL-text counterparts.
+``GEOF``, ``format_col``, ``try_element_at``, ``author_match_expr``)
+are swapped for their SQL-text counterparts.
 
 The twins are built lazily and cached; building one costs a few ms of
-pure Python. ``extractors/marc.py`` consults :func:`marc_twin` to
-compile each Solr column / work-key tree as ONE ``F.expr`` call —
-turning ~25k py4j round trips of plan construction into one parse.
+pure Python. The production entry points take a column NAME and compile
+each big tree through a twin as ONE ``F.expr`` call — turning ~25k py4j
+round trips of plan construction into one parse: ``marc.to_solr_columns``,
+``marc.work_keys``, ``marc.marc_callnumber_columns``, the renormalize
+derivations, ``dedup.match_condition`` and the dedup key columns.
+Running a spec on real Columns remains the parity reference in
+``tests/test_sqltwin.py`` and ``tests/test_dedup.py``.
 """
 
 from __future__ import annotations
@@ -65,18 +70,17 @@ def format_calculator_twin() -> types.ModuleType:
 def dedup_twin() -> types.ModuleType:
     """operators/dedup re-executed against the SQL-text algebra.
 
-    Only the pure expression builders are meaningful through this twin
-    (``_match_condition_from`` / ``match_condition`` — the matchRecords
-    verify tree); the DataFrame-shaping functions still reference the
-    real pyspark DataFrame API and must not be called on the twin."""
-    kt = keys_twin()
+    Only ``_match_condition_from`` (the matchRecords verify tree over
+    the pre-normalized ``__nk_title`` / ``__nk_author`` keys) is
+    meaningful through this twin; the DataFrame-shaping functions still
+    reference the real pyspark DataFrame API and must not be called on
+    the twin."""
     return _load(
         "recordmanager_spark.operators.dedup",
         {
             "F": S,
             "try_element_at": S.try_element_at,
-            "author_match_expr": kt.author_match_expr,
-            "normalize_key": kt.normalize_key,
+            "author_match_expr": keys_twin().author_match_expr,
         },
     )
 
@@ -90,6 +94,5 @@ def marc_twin() -> types.ModuleType:
             "GEOF": geo_twin(),
             "format_col": format_calculator_twin().format_col,
             "try_element_at": S.try_element_at,
-            "_IS_SQL_TWIN": True,
         },
     )

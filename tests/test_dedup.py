@@ -66,9 +66,9 @@ def test_basic_match_and_group(spark):
 
 
 def test_match_condition_twin_parity(spark):
-    """The SQL-text-compiled matchRecords (_match_condition_expr, the
-    default verify path since r13) must decide every pair exactly like
-    the Column build (_match_condition_from) — adversarial cross
+    """The SQL-text-compiled matchRecords (match_condition, the only
+    verify path) must decide every pair exactly like the Column build
+    of _match_condition_from normalizing per pair — adversarial cross
     product: nulls, array overlaps, year/page/issn conflicts, prefix
     authors, levenshtein band edges, unicode, empty strings."""
     import itertools
@@ -108,32 +108,46 @@ def test_match_condition_twin_parity(spark):
         F.struct(*[F.col(f"a_{f}").alias(f) for f in fields]).alias("a"),
         F.struct(*[F.col(f"b_{f}").alias(f) for f in fields]).alias("b"),
     )
-    col_cond = DD._match_condition_from(
-        lambda n: F.col(f"a.{n}"), lambda n: F.col(f"b.{n}")
+    # the reference normalizes per pair from the raw title/author; the
+    # production tree reads the per-record keys the payload carries
+    def per_pair(side):
+        def field(n):
+            if n.startswith("__nk_"):  # __nk_title -> normalize_key(title)
+                return normalize_key(F.col(f"{side}.{n[len('__nk_'):]}"))
+            return F.col(f"{side}.{n}")
+
+        return field
+
+    col_cond = DD._match_condition_from(per_pair("a"), per_pair("b"))
+    keyed = pair.select(
+        *[
+            F.struct(
+                F.col(f"{s}.*"),
+                normalize_key(F.col(f"{s}.title")).alias("__nk_title"),
+                normalize_key(F.col(f"{s}.author")).alias("__nk_author"),
+            ).alias(s)
+            for s in ("a", "b")
+        ]
     )
-    twin_cond = DD._match_condition_expr("a", "b")
-    out = pair.select(col_cond.alias("c"), twin_cond.alias("t")).collect()
+    out = keyed.select(
+        col_cond.alias("c"), DD.match_condition("a", "b").alias("t")
+    ).collect()
     assert [r["c"] for r in out] == [r["t"] for r in out]
-    # pre-normalized variant (the fused blocking+verify path)
-    pairn = pair.select(
-        F.struct(
-            F.col("a.*"),
-            normalize_key(F.col("a.title")).alias("__nk_title"),
-            normalize_key(F.col("a.author")).alias("__nk_author"),
-        ).alias("a"),
-        F.struct(
-            F.col("b.*"),
-            normalize_key(F.col("b.title")).alias("__nk_title"),
-            normalize_key(F.col("b.author")).alias("__nk_author"),
-        ).alias("b"),
+
+
+def test_match_condition_sql_is_small():
+    """matchRecords reads the per-record __nk_ keys, so its SQL carries
+    no normalize_key tree: normalizing per pair inlined normalize_key
+    and its kana map four times (~97 KiB of SQL to parse per plan)."""
+    from recordmanager_spark import sqlalg as SA
+    from recordmanager_spark import sqltwin
+
+    sql = str(
+        sqltwin.dedup_twin()._match_condition_from(
+            lambda n: SA.col(f"a.{n}"), lambda n: SA.col(f"b.{n}")
+        )
     )
-    c2 = DD._match_condition_from(
-        lambda n: F.col(f"a.{n}"), lambda n: F.col(f"b.{n}"),
-        pre_normalized=True,
-    )
-    t2 = DD._match_condition_expr("a", "b", pre_normalized=True)
-    out2 = pairn.select(c2.alias("c"), t2.alias("t")).collect()
-    assert [r["c"] for r in out2] == [r["t"] for r in out2]
+    assert len(sql) <= 4 * 1024, len(sql)
 
 
 def test_same_source_never_pairs(spark):

@@ -453,7 +453,7 @@ def test_golden_solr_updater_single_record(spark):
     ).drop("m")
     wide = NZ.normalize_fields(wide, limits=limits, barrier=True)
     work = NZ.normalize_fields(
-        parsed.select(MARC.work_keys(F.col("m")).alias("work_keys_str_mv")),
+        parsed.select(MARC.work_keys("m").alias("work_keys_str_mv")),
         limits=limits, barrier=True,
     )
     r = _collect_interpreted(spark, wide).asDict()

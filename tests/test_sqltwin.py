@@ -1,13 +1,14 @@
 """Parity gate for the SQL-text compilation path.
 
-Every Solr column the twin compiles (and the work-key tree) must be
-BYTE-IDENTICAL to the Column-API build on an adversarial MARC corpus —
-880 linkage, analytical entries, non-filing indicators, ISBN-10
-upgrades, OCLC prefixes, unbalanced trailing brackets, abbreviation /
-numeric / initial trailing periods, DOIs in 856, 264-ind2 publisher
-fallback, Cyrillic + kana normalize_key folds, 034 DMS coordinates,
-empty/missing fields. The twin path is the DEFAULT in to_solr_columns,
-so this sweep is what licenses it.
+Production builds every MARC Solr column, the call-number argument
+trees and the work-key tree only through the SQL-text twin. Running
+the same spec functions on real Columns is the reference: each twin
+tree must be BYTE-IDENTICAL to it on an adversarial MARC corpus — 880
+linkage, analytical entries, non-filing indicators, ISBN-10 upgrades,
+OCLC prefixes, unbalanced trailing brackets, abbreviation / numeric /
+initial trailing periods, DOIs in 856, 264-ind2 publisher fallback,
+Cyrillic + kana normalize_key folds, 034 DMS coordinates, empty/missing
+fields. ``test_solr_frame_golden`` pins the whole produced frame.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 import recordmanager_spark.extractors.marc as MARC
 import recordmanager_spark.sqlalg as S
 import recordmanager_spark.sqltwin as TW
+from tests.golden_rows import assert_golden, collect_rows
 
 
 def _rec(fields, leader="00000cam a22000004i 4500"):
@@ -161,8 +163,7 @@ def parsed(spark):
 
 
 def _all_names():
-    builders = MARC._solr_col_builders(F.col("marc"), None, {})
-    return [n for n in builders if n not in MARC._TWIN_SKIP]
+    return list(MARC._solr_col_builders(F.col("marc"), None, {}))
 
 
 def test_twin_column_parity(spark, parsed):
@@ -186,9 +187,9 @@ def test_twin_column_parity(spark, parsed):
 
 def test_twin_host_linking_author_parity(spark, parsed):
     """marc_main_author / marc_host_record_ids / linking_ids (every
-    prepend_003 / id_in_999 variant) — the renormalize twin paths that
-    have no _solr_col_builders entry, so the column sweep above never
-    exercises them (ADVICE r12)."""
+    prepend_003 / id_in_999 variant) and the call-number argument trees
+    — twin paths that have no _solr_col_builders entry, so the column
+    sweep above never exercises them (ADVICE r12)."""
     tw = TW.marc_twin()
     cases: dict = {
         "main_author": (
@@ -196,6 +197,11 @@ def test_twin_host_linking_author_parity(spark, parsed):
             lambda: tw.marc_main_author(S.col("marc")),
         ),
     }
+    for k in MARC._callnumber_pure_exprs(F.col("marc")):
+        cases[f"callnumber_{k}"] = (
+            lambda k=k: MARC._callnumber_pure_exprs(F.col("marc"))[k],
+            lambda k=k: tw._callnumber_pure_exprs(S.col("marc"))[k],
+        )
     for p3 in (False, True):
         cases[f"host_ids_p3={p3}"] = (
             lambda p3=p3: MARC.marc_host_record_ids(
@@ -234,9 +240,24 @@ def test_twin_host_linking_author_parity(spark, parsed):
 def test_twin_work_keys_parity(spark, parsed):
     a = parsed.select(MARC.work_keys("marc").cast("string").alias("v"))
     b = parsed.select(
-        MARC.work_keys(F.col("marc")).cast("string").alias("v")
+        MARC._work_keys(F.col("marc")).cast("string").alias("v")
     )
     assert [r["v"] for r in a.collect()] == [r["v"] for r in b.collect()]
+
+
+def test_solr_frame_golden(spark, parsed):
+    """The whole ``to_solr_columns`` frame over RECORDS, one digest per
+    row. The key carries a hash of the output column list in order, so
+    the frame's column order is pinned with its values; the hidden
+    shared-subtree columns and the call-number UDF columns are covered
+    through the outputs that read them."""
+    import hashlib
+
+    out = MARC.to_solr_columns(parsed, "marc")
+    order = hashlib.sha256(",".join(out.columns).encode()).hexdigest()[:12]
+    assert_golden(
+        f"marc_solr_frame#{order}", collect_rows(out, "marc", "fullrecord")
+    )
 
 
 def test_twin_id_prefix(spark, parsed):
@@ -248,9 +269,8 @@ def test_twin_id_prefix(spark, parsed):
 
 
 def test_twin_is_the_default_path(spark, parsed):
-    """to_solr_columns must route non-skip columns through F.expr (the
-    twin) — pin by checking the cache holds a parsed-SQL column whose
-    plan matches the Column build."""
+    """to_solr_columns routes its columns through F.expr (the twin) —
+    pin by checking a cold-cache build yields the expected values."""
     MARC._SOLR_COLS_CACHE.clear()
     out = MARC.to_solr_columns(parsed, "marc", only=["title", "isbn"])
     vals = out.select("title", F.array_join("isbn", "|").alias("i")).collect()

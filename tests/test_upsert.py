@@ -57,22 +57,13 @@ def test_normalized_empty_if_identical(spark):
 
 
 def test_xslt_backends():
-    """XSLT is always available via the stdlib mini engine; the explicit
-    lxml backend still fails fast when lxml is absent
-    (Utils/XslTransformation.php analogue)."""
+    """XSLT always runs on the one stdlib engine, whatever the container
+    holds (Utils/XslTransformation.php analogue)."""
     from recordmanager_spark.sources import transforms
 
-    assert transforms.xslt_available()
     sheet = (
         '<xsl:stylesheet version="1.0" '
         'xmlns:xsl="http://www.w3.org/1999/XSL/Transform">'
         '<xsl:template match="/"><out/></xsl:template></xsl:stylesheet>'
     )
     assert transforms.make_xslt_udf(sheet) is not None
-    assert transforms.make_xslt_udf(sheet, backend="mini") is not None
-    if not transforms.HAVE_LXML:
-        try:
-            transforms.make_xslt_udf(sheet, backend="lxml")
-            raise AssertionError("expected RuntimeError without lxml")
-        except RuntimeError as e:
-            assert "lxml" in str(e)

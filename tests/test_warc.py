@@ -119,6 +119,33 @@ def test_gunzip_members_multi_member_and_passthrough():
     assert gunzip_members(a + bytes(bad) + c) == b"first record "
 
 
+def test_gunzip_members_drops_gzip_bomb():
+    """A ~200 KB gzip of zeros (~200 MB inflated) between two good
+    members is dropped without inflating past the cap; both records
+    around it still parse."""
+    import gzip
+    import zlib
+
+    from recordmanager_spark.sources.warc import (
+        _MAX_MEMBER_BYTES,
+        gunzip_members,
+        parse_warc_bytes,
+    )
+
+    z = zlib.compressobj(9, zlib.DEFLATED, zlib.MAX_WBITS | 16)
+    zeros = bytes(1 << 20)
+    bomb = b"".join(z.compress(zeros) for _ in range(200)) + z.flush()
+    assert len(bomb) < 256 * 1024
+    good = [
+        gzip.compress(_rec("resource", f"http://{u}/", u).encode())
+        for u in ("a", "b")
+    ]
+    out = gunzip_members(good[0] + bomb + good[1])
+    assert len(out) < _MAX_MEMBER_BYTES
+    rows = parse_warc_bytes("seg.warc.gz", out)
+    assert [(r[4], r[8]) for r in rows] == [("http://a/", "a"), ("http://b/", "b")]
+
+
 def test_warc_records_gz_binary_content(spark):
     import gzip
 

@@ -36,7 +36,7 @@ def _keys(spark, raw):
     df = spark.createDataFrame([(raw,)], "raw string").select(
         marc.parse_marc_in_json("raw").alias("m")
     )
-    return df.select(marc.work_keys(F.col("m")).alias("k")).collect()[0].k
+    return df.select(marc.work_keys("m").alias("k")).collect()[0].k
 
 
 def test_work_keys(spark):

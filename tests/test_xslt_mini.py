@@ -372,9 +372,38 @@ def test_spark_xslt_udf(spark):
     df = spark.range(50).select(
         F.concat(F.lit("<r><v>"), F.col("id").cast("string"), F.lit("</v></r>")).alias("xml")
     )
-    got = apply_xslt(df, "xml", xsl, out_column="res", backend="mini")
+    got = apply_xslt(df, "xml", xsl, out_column="res")
     rows = {r.res for r in got.collect()}
     assert "<out>7!</out>" in rows and len(rows) == 50
+
+
+def test_spark_xslt_udf_entity_bomb(spark):
+    """A billion-laughs record (10^9 'lol's once expanded) maps to NULL
+    instead of growing the worker, an external entity is never read,
+    and the neighbouring record still transforms."""
+    from pyspark.sql import functions as F
+
+    from recordmanager_spark.sources.transforms import make_xslt_udf
+
+    xsl = """<xsl:stylesheet version="1.0"
+      xmlns:xsl="http://www.w3.org/1999/XSL/Transform">
+      <xsl:template match="/"><out><xsl:value-of select="r/v"/></out></xsl:template>
+    </xsl:stylesheet>"""
+    ents = '<!ENTITY l0 "lol">' + "".join(
+        f'<!ENTITY l{i} "{("&l%d;" % (i - 1)) * 10}">' for i in range(1, 10)
+    )
+    bomb = f"<!DOCTYPE r [{ents}]><r><v>&l9;</v></r>"
+    external = '<!DOCTYPE r [<!ENTITY x SYSTEM "secret.txt">]><r><v>&x;</v></r>'
+    df = spark.createDataFrame(
+        [(0, bomb), (1, external), (2, "<r><v>fine</v></r>")],
+        "i int, xml string",
+    )
+    rows = (
+        df.select("i", make_xslt_udf(xsl)(F.col("xml")).alias("res"))
+        .orderBy("i")
+        .collect()
+    )
+    assert [r.res for r in rows] == [None, None, "<out>fine</out>"]
 
 
 # --- xsl:sort / xsl:key / xsl:number / strip-space / include -----------------
@@ -667,8 +696,7 @@ def test_apply_xslt_document_resolver_on_spark(spark):
         [('<r ref="a"/>',), ('<r ref="b"/>',)], "xml string"
     )
     rows = apply_xslt(
-        df, "xml", xsl, out_column="out", backend="mini",
-        documents={"lut.xml": lut},
+        df, "xml", xsl, out_column="out", documents={"lut.xml": lut},
     ).orderBy("xml").collect()
     assert [r.out for r in rows] == ["<o>Alpha</o>", "<o>Beta</o>"]
 

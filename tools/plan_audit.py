@@ -418,8 +418,12 @@ AUDITS = [
 ]
 
 
-# Plan-size ratchet for the extractor queries: (query, max MB of
-# optimizedPlan().toJSON(), max per-row XPath evaluator objects).
+# Plan-size ratchet for the extractor and dedup queries: (query, max MB
+# of plan, max per-row XPath evaluator objects). The plan is the
+# returned frame's optimizedPlan().toJSON() plus the plan description
+# of every SQL execution the query ran while it was built: the dedup
+# queries resolve their edges eagerly, so their verify trees live only
+# in those executions.
 # Caps are ~1.3x the value measured when frozen (2026-08). Two regression
 # classes trip them: a megaplan from inlining a generated-XML expression
 # into every consumer (the forward_film class — 0.36 MB after its
@@ -444,6 +448,10 @@ SIZE_AUDITS = [
     ("marc_authority_extract", 1.0, 0),
     ("sierra_harvest_extract", 0.7, 0),
     ("genieplus_harvest_extract", 1.0, 0),
+    # matchRecords over per-record normalize_key columns: 0.16 / 0.13 MB;
+    # normalizing per pair inlined the kana map four times: 0.28 / 0.27
+    ("dedup_incremental", 0.21, 0),
+    ("component_dedup", 0.18, 0),
 ]
 
 _XPATH_EVAL_MARKS = (
@@ -515,9 +523,15 @@ def _audit(sf_dir: str) -> None:
     spark = get_spark("plan_audit", shuffle_partitions=16)
     qs = entry_mod.queries()
     failures = []
+    store = spark._jsparkSession.sharedState().statusStore()
     for name, max_mb, max_xpath in SIZE_AUDITS:
+        before = store.executionsCount()
         df = qs[name](spark, sf_dir)
         j = df._jdf.queryExecution().optimizedPlan().toJSON()
+        ran = store.executionsList(before, 1 << 20)
+        j += "".join(
+            ran.apply(i).physicalPlanDescription() for i in range(ran.size())
+        )
         mb = len(j) / 1e6
         n_xpath = sum(j.count(m) for m in _XPATH_EVAL_MARKS)
         problems = []
