@@ -1205,7 +1205,7 @@ def marc_callnumber_columns(marc_col: str) -> dict[str, Column]:
     cn_sort = CN.lc_sort_key_first_valid(cn_raw)
     dewey_last = try_element_at(dewey, -1)
     dewey_first = try_element_at(dewey, 1)
-    return {
+    built = {
         **pure,
         "callnumber_raw": cn_raw,
         "callnumber_sort": cn_sort,
@@ -1216,6 +1216,11 @@ def marc_callnumber_columns(marc_col: str) -> dict[str, Column]:
         "dewey_sort": CN.dewey_sort_key(dewey_first),
         "dewey_raw": dewey_last,
     }
+    # _CALLNUMBER_COLS names the outputs and their order for
+    # to_solr_columns; a column built here but not named there would
+    # never be output
+    assert built.keys() == set(_CALLNUMBER_COLS), built.keys() ^ set(_CALLNUMBER_COLS)
+    return {n: built[n] for n in _CALLNUMBER_COLS}
 
 
 def marc_topic_facets(marc: Column) -> Column:

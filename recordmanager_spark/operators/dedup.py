@@ -551,10 +551,18 @@ def verified_edges(
 
     The pair table is tiny relative to the corpus — join it twice against
     the (pruned) record projection; Catalyst prunes the record scan to the
-    verification columns only, and the match keys are computed per record
-    before the joins.
+    verification columns only. The match keys are computed once per
+    record the pairs touch (a semi join first), not per pair and not for
+    the whole corpus.
     """
-    proj = records.select(F.col(id_col).alias("id"), *_match_payload())
+    # pairs is read twice (its ids, then the join-back): materialise it
+    # once instead of re-running the blocking join (localCheckpoint:
+    # non-resilient, see connected_components)
+    pairs = pairs.localCheckpoint(eager=True)
+    touched = pairs.select(F.explode(F.array("id_a", "id_b")).alias("__id"))
+    proj = records.join(
+        touched, F.col(id_col) == F.col("__id"), "left_semi"
+    ).select(F.col(id_col).alias("id"), *_match_payload())
     a = proj.alias("a")
     b = proj.alias("b")
     joined = (
@@ -928,7 +936,8 @@ def component_part_edges(
         F.count(F.lit(1)).alias("__n")
     )
 
-    proj = comp.select(
+    # match keys only for the components of hosts in a dedup group
+    proj = comp.join(h, F.col(comp_host_col) == F.col("hid"), "left_semi").select(
         F.col(comp_id_col).alias("id"),
         F.col(comp_host_col).alias("host"),
         F.col(source_col).alias("src"),

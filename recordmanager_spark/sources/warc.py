@@ -154,10 +154,16 @@ def parse_warc_text(name: str, text: str) -> list[tuple]:
 # Common Crawl's layout. Crawlers truncate payloads at 1 MiB and the
 # benchmark's records are a few KB, so a member past the cap is a
 # decompression bomb (a 200 KB gzip of zeros inflates to 200 MB) or an
-# absurd record: it is inflated in bounded chunks that are thrown away
-# and then dropped, and the members after it still parse.
+# absurd record: it is inflated to the end in bounded chunks that are
+# thrown away and then dropped, and the members after it still parse.
 _MAX_MEMBER_BYTES = 64 << 20
-_DRAIN_CHUNK = 1 << 20
+# Per inflate call: at most this much input in and output out. Input
+# goes in as slices of the segment with the offset tracked here, so no
+# call copies more than one slice — handing zlib the whole remaining
+# segment would copy it into ``unconsumed_tail``/``unused_data`` once
+# per call, making time grow with members (or bomb size) x segment size.
+_IN_CHUNK = 64 << 10
+_OUT_CHUNK = 1 << 20
 
 
 def gunzip_members(data: bytes) -> bytes:
@@ -165,37 +171,44 @@ def gunzip_members(data: bytes) -> bytes:
     WARC segments are one gzip MEMBER PER RECORD concatenated, so a
     plain single-member gunzip would stop after the first record.
     Non-gzip input passes through unchanged. Corrupt members are
-    handled like truncated ones — keep every byte decoded so far and
-    stop — because a real-crawl segment with one damaged record must
-    not fail the whole task (the parser's lenient contract; the
-    partial record ahead of the corruption parses or drops downstream
-    exactly like a truncated tail). A member that inflates past
-    ``_MAX_MEMBER_BYTES`` is dropped whole and parsing goes on after
-    it, so one member never holds more than the cap in memory."""
+    handled like truncated ones — keep every member decoded before the
+    damage and stop — because a real-crawl segment with one damaged
+    record must not fail the whole task (the parser's lenient contract;
+    the partial record ahead of the truncation parses or drops
+    downstream). A member that inflates past ``_MAX_MEMBER_BYTES`` is
+    dropped whole and parsing goes on after it, so one member never
+    holds more than the cap in memory. Time is linear in the input and
+    the inflated size."""
     import zlib
 
     if len(data) < 2 or data[:2] != b"\x1f\x8b":
         return data
     out = bytearray()
     view = memoryview(data)
-    while len(view) >= 2 and bytes(view[:2]) == b"\x1f\x8b":
+    pos = 0
+    while view[pos : pos + 2] == b"\x1f\x8b":
         d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
+        member, size = [], 0
         try:
-            member = d.decompress(view, _MAX_MEMBER_BYTES)
-            over = False
             while not d.eof:
-                tail = d.unconsumed_tail
-                chunk = d.decompress(tail, _DRAIN_CHUNK)
-                if not chunk and len(d.unconsumed_tail) == len(tail):
+                chunk = view[pos : pos + _IN_CHUNK]
+                piece = d.decompress(chunk, _OUT_CHUNK)
+                left = d.unused_data if d.eof else d.unconsumed_tail
+                used = len(chunk) - len(left)
+                if not piece and not used:
                     break  # input exhausted: a truncated member
-                over = over or bool(chunk)
-        except zlib.error:  # corrupt member: keep what decoded
+                pos += used
+                size += len(piece)
+                if size <= _MAX_MEMBER_BYTES:
+                    member.append(piece)
+                elif member:
+                    member = []  # over the cap: drain, keep nothing
+        except zlib.error:  # corrupt member: stop here
             break
-        if not over:
-            out += member
+        if size <= _MAX_MEMBER_BYTES:
+            out += b"".join(member)
         if not d.eof:  # truncated final member: keep what decoded
             break
-        view = memoryview(d.unused_data)
     return bytes(out)
 
 

@@ -119,31 +119,60 @@ def test_gunzip_members_multi_member_and_passthrough():
     assert gunzip_members(a + bytes(bad) + c) == b"first record "
 
 
-def test_gunzip_members_drops_gzip_bomb():
-    """A ~200 KB gzip of zeros (~200 MB inflated) between two good
-    members is dropped without inflating past the cap; both records
-    around it still parse."""
+def test_gunzip_members_drops_gzip_bomb(monkeypatch):
+    """A ~200 KB gzip of zeros (~200 MB inflated) between good members
+    is dropped without inflating past the cap, and every record around
+    it still parses. Every inflate call gets at most one input slice,
+    so neither draining the bomb nor stepping from member to member
+    copies the rest of the ~4 MB segment (which made time grow with
+    bomb size x segment size)."""
     import gzip
+    import random
+    import time
     import zlib
 
     from recordmanager_spark.sources.warc import (
+        _IN_CHUNK,
         _MAX_MEMBER_BYTES,
         gunzip_members,
         parse_warc_bytes,
     )
 
+    fed = []
+    real = zlib.decompressobj
+
+    class Recording:
+        def __init__(self, *a, **k):
+            self._d = real(*a, **k)
+
+        def decompress(self, data, max_length=0):
+            fed.append(len(data))
+            return self._d.decompress(data, max_length)
+
+        def __getattr__(self, name):
+            return getattr(self._d, name)
+
     z = zlib.compressobj(9, zlib.DEFLATED, zlib.MAX_WBITS | 16)
-    zeros = bytes(1 << 20)
-    bomb = b"".join(z.compress(zeros) for _ in range(200)) + z.flush()
+    bomb = b"".join(z.compress(bytes(1 << 20)) for _ in range(200)) + z.flush()
     assert len(bomb) < 256 * 1024
+    rnd = random.Random(7)
+    bodies = ["a"] + [rnd.randbytes(3500).hex() for _ in range(1000)]
     good = [
-        gzip.compress(_rec("resource", f"http://{u}/", u).encode())
-        for u in ("a", "b")
+        gzip.compress(_rec("resource", f"http://r{i}/", t).encode())
+        for i, t in enumerate(bodies)
     ]
-    out = gunzip_members(good[0] + bomb + good[1])
+    seg = good[0] + bomb + b"".join(good[1:])
+    assert len(seg) > 4 << 20
+    monkeypatch.setattr(zlib, "decompressobj", Recording)
+    t0 = time.perf_counter()
+    out = gunzip_members(seg)
+    elapsed = time.perf_counter() - t0
     assert len(out) < _MAX_MEMBER_BYTES
+    assert max(fed) <= _IN_CHUNK
     rows = parse_warc_bytes("seg.warc.gz", out)
-    assert [(r[4], r[8]) for r in rows] == [("http://a/", "a"), ("http://b/", "b")]
+    assert [r[8] for r in rows] == bodies
+    assert rows[0][4] == "http://r0/"
+    assert elapsed < 30, elapsed
 
 
 def test_warc_records_gz_binary_content(spark):

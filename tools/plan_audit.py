@@ -448,8 +448,8 @@ SIZE_AUDITS = [
     ("marc_authority_extract", 1.0, 0),
     ("sierra_harvest_extract", 0.7, 0),
     ("genieplus_harvest_extract", 1.0, 0),
-    # matchRecords over per-record normalize_key columns: 0.16 / 0.13 MB;
-    # normalizing per pair inlined the kana map four times: 0.28 / 0.27
+    # matchRecords over per-record normalize_key columns: 0.18 / 0.16 MB;
+    # normalizing per pair inlined the kana map four times: 0.29 / 0.27
     ("dedup_incremental", 0.21, 0),
     ("component_dedup", 0.18, 0),
 ]
@@ -519,22 +519,36 @@ def main() -> None:
         raise exc
 
 
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution in the status store, -1 if none.
+    The store is filled from the listener bus asynchronously, so drain
+    the bus first."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
 def _audit(sf_dir: str) -> None:
     spark = get_spark("plan_audit", shuffle_partitions=16)
     qs = entry_mod.queries()
     failures = []
     store = spark._jsparkSession.sharedState().statusStore()
     for name, max_mb, max_xpath in SIZE_AUDITS:
-        before = store.executionsCount()
+        first = _last_execution_id(spark) + 1
         df = qs[name](spark, sf_dir)
         j = df._jdf.queryExecution().optimizedPlan().toJSON()
-        ran = store.executionsList(before, 1 << 20)
-        j += "".join(
-            ran.apply(i).physicalPlanDescription() for i in range(ran.size())
-        )
+        problems = []
+        # execution ids are sequential: select the query's executions by
+        # id, and fail rather than under-count if one was evicted
+        for i in range(first, _last_execution_id(spark) + 1):
+            ex = store.execution(i)
+            if ex.isEmpty():
+                problems.append(f"execution {i} missing from the status store")
+            else:
+                j += ex.get().physicalPlanDescription()
         mb = len(j) / 1e6
         n_xpath = sum(j.count(m) for m in _XPATH_EVAL_MARKS)
-        problems = []
         if mb > max_mb:
             problems.append(f"plan json {mb:.2f}MB > {max_mb}MB")
         if n_xpath > max_xpath:
