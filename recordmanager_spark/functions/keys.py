@@ -100,8 +100,10 @@ _KANA_MAP["ー"] = ""  # chōonpu long-vowel mark
 _KANA_RANGE_RE = "[ぁ-ヿ]"
 
 
+# ``map`` quoted: as a call argument, a bare ``map(`` makes the parser's
+# SLL prediction read the whole 314-literal call (sqlalg module docstring)
 _KANA_MAP_SQL = (
-    "map("
+    "`map`("
     + ",".join(f"'{k}','{v}'" for k, v in _KANA_MAP.items())
     + ")"
 )

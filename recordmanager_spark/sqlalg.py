@@ -30,6 +30,25 @@ looks: ANTLR builds its prediction DFA for the lookahead after every
 ``(``, and that cold build was most of the cost of parsing the MARC
 trees (PERFORMANCE.md, "Twin SQL parenthesization").
 
+Spellings for short lookahead: Spark's parser first predicts in ANTLR's
+SLL mode, and a decision reads as many tokens as it needs to rule out
+the other alternatives. Some spellings made it read to the end of the
+construct, which for nested trees means thousands of tokens
+(``format``: 10,926). The grammar has keyword forms ``TRIM(x FROM y)``
+and ``SUBSTRING(x FROM p FOR n)``, so at ``trim(`` / ``substring(`` the
+parser reads the whole first argument looking for ``FROM``; :func:`_fn`
+writes these names quoted (`` `trim`( ``), which parses to the same
+tree as the plain call. A searched ``CASE WHEN c`` is read to its
+``END``; :class:`CaseX` writes the simple form ``CASE true WHEN c``,
+whose ``true = c`` the optimizer removes, leaving the same ``CaseWhen``
+plan. A bare ``map(`` as a call argument is read to its ``)`` too, so
+``keys``' kana fold map, the one such call, is written `` `map`( ``.
+ANTLR keeps the DFA it builds for a lookahead in a static cache
+for the life of the JVM, so a long lookahead costs retained heap as
+well as parse time. ``tests/test_sqltwin.py`` caps the longest
+lookahead of every production tree (PERFORMANCE.md, "Short-lookahead
+spellings").
+
 Parser-conf requirement (ADVICE r6): ``lit(str)``'s escaping assumes
 the DEFAULT ``spark.sql.parser.escapedStringLiterals=false``. Under
 the legacy conf every twin-compiled literal containing backslashes
@@ -45,7 +64,9 @@ Semantics notes (kept in lockstep with Column behavior):
   survive verbatim);
 - ``lit(float)`` renders as ``CAST(.. AS DOUBLE)`` — a bare SQL decimal
   literal would type as DECIMAL, unlike ``F.lit``;
-- ``when(...)`` chains render one CASE WHEN, like ``F.when``;
+- ``when(...)`` chains render one ``CASE true WHEN``, which
+  optimizes to the ``CaseWhen`` of ``F.when``: ``true = c`` is NULL
+  where ``c`` is, and a NULL condition falls through in both forms;
 - lambda arguments get globally unique variable names, so nested
   higher-order functions can never capture each other's variables.
 
@@ -285,7 +306,7 @@ class X:
         return X(f"contains({_x(self)}, {_x(other)})")
 
     def substr(self, pos, length) -> "X":
-        return X(f"substring({_x(self)}, {_x(pos)}, {_x(length)})")
+        return _fn("substring", self, pos, length)
 
     def eqNullSafe(self, other) -> "X":
         return self._bin("<=>", other)
@@ -298,7 +319,9 @@ class X:
 
 
 class CaseX(X):
-    """A CASE WHEN chain under construction (F.when semantics)."""
+    """A CASE chain under construction (F.when semantics), rendered as
+    ``CASE true WHEN c THEN v … END`` so the parser need not read to
+    ``END`` to tell it from the searched form (module docstring)."""
 
     __slots__ = ("_parts", "_else")
 
@@ -312,7 +335,7 @@ class CaseX(X):
             f"WHEN {_x(c)} THEN {_x(v)}" for c, v in self._parts
         )
         tail = f" ELSE {_x(self._else)}" if self._else is not None else ""
-        return f"CASE {body}{tail} END"
+        return f"CASE true {body}{tail} END"
 
     def when(self, cond, value) -> "CaseX":
         return CaseX(self._parts + [(cond, value)], self._else)
@@ -348,7 +371,8 @@ def lit(v) -> X:
 
 
 def expr(sql: str) -> X:
-    return X(f"({sql})")
+    # loosest level: _arg parenthesizes the text only under an operator
+    return X(sql, prec=_OR)
 
 
 def _lam(fn: Callable) -> str:
@@ -364,7 +388,15 @@ def _lam(fn: Callable) -> str:
     return f"({', '.join(v._render() for v in vs)}) -> {_x(body)}"
 
 
+# Names with a keyword form in Spark's grammar (``TRIM(x FROM y)``,
+# ``SUBSTRING(x FROM p FOR n)``): quoted, they parse as the plain call
+# without SLL reading the whole first argument to rule the form out.
+_KEYWORD_FORM = frozenset({"trim", "substring"})
+
+
 def _fn(name: str, *args) -> X:
+    if name in _KEYWORD_FORM:
+        name = f"`{name}`"
     return X(f"{name}({', '.join(_x(a) for a in args)})")
 
 

@@ -9,6 +9,12 @@ OCLC prefixes, unbalanced trailing brackets, abbreviation / numeric /
 initial trailing periods, DOIs in 856, 264-ind2 publisher fallback,
 Cyrillic + kana normalize_key folds, 034 DMS coordinates, empty/missing
 fields. ``test_solr_frame_golden`` pins the whole produced frame.
+
+The rendering rules of ``sqlalg`` are pinned here too: minimal
+parentheses, quoted keyword-form names and ``CASE true WHEN`` each give
+the parsed tree or optimized plan of the plain spelling, and
+``test_twin_sll_lookahead_ratchet`` caps how far ahead the parser's
+prediction reads in any production tree.
 """
 
 from __future__ import annotations
@@ -394,32 +400,42 @@ _PAREN_CASES = [
     ("index-composite", lambda M: M.col("arr")[M.col("a") - 1], "arr[(a - 1)]", True),
     ("index-of-case",
      lambda M: M.when(M.col("p"), M.col("arr")).otherwise(M.array(M.col("b")))[0],
-     "(CASE WHEN p THEN arr ELSE array(b) END)[0]", True),
+     "(CASE true WHEN p THEN arr ELSE array(b) END)[0]", True),
     ("field-of-case",
      lambda M: M.when(M.col("p"), M.col("st")).otherwise(M.col("st"))["x"],
-     "(CASE WHEN p THEN st ELSE st END).x", True),
+     "(CASE true WHEN p THEN st ELSE st END).x", True),
     ("nested-case",
      lambda M: M.when(M.col("p"), M.when(M.col("q"), 1).otherwise(2))
      .when(M.col("r") & M.col("t"), M.when(M.col("a") > 1, 3))
      .otherwise(M.col("a") + 4) + 1,
-     "(CASE WHEN p THEN (CASE WHEN q THEN 1 ELSE 2 END) "
-     "WHEN (r AND t) THEN (CASE WHEN (a > 1) THEN 3 END) ELSE (a + 4) END) + 1",
+     "(CASE true WHEN p THEN (CASE true WHEN q THEN 1 ELSE 2 END) "
+     "WHEN (r AND t) THEN (CASE true WHEN (a > 1) THEN 3 END) "
+     "ELSE (a + 4) END) + 1",
      True),
     ("lambda-body",
      lambda M: M.filter(M.col("arr"), lambda x: (x > 1) & ~(x == 3)),
      "filter(arr, {v} -> (({v} > 1) AND (NOT ({v} = 3))))", True),
     ("cast-arg", lambda M: (M.col("a") + 1).cast("string").rlike("^[0-9]+$"),
      "CAST((a + 1) AS string) RLIKE '^[0-9]+$'", True),
+    # keyword-form names render quoted and parse as the plain call
+    ("trim-quoted", lambda M: M.trim(M.col("a").cast("string")),
+     "trim(CAST(a AS string))", True),
+    ("substring-quoted", lambda M: M.substring(M.col("a").cast("string"), 1, 2),
+     "substring(CAST(a AS string), 1, 2)", True),
+    ("substr-quoted", lambda M: M.col("a").cast("string").substr(2, 1),
+     "substring(CAST(a AS string), 2, 1)", True),
+    # expr() text is parenthesized only under an operator
+    ("expr-operand", lambda M: M.expr("a + 1") * M.col("b"), "(a + 1) * b", True),
+    ("expr-call-arg", lambda M: M.coalesce(M.expr("a + 1"), M.col("b")),
+     "coalesce((a + 1), b)", True),
 ]
 
 
-def test_sqlalg_minimal_parens_same_tree(spark):
-    """Minimal parentheses parse to the tree of the fully parenthesized
-    text and evaluate like the Column build."""
+@pytest.fixture(scope="module")
+def grid(spark):
+    """Every combination of three-valued p, q, r, t beside small ints."""
     import itertools
-    import re
 
-    parser = spark._jsparkSession.sessionState().sqlParser()
     bools = [True, False, None]
     rows = [
         (p, q, r, t, a, b, c, [1, 2, 3, 4], {"x": a})
@@ -428,11 +444,20 @@ def test_sqlalg_minimal_parens_same_tree(spark):
             itertools.cycle([(1, 2, 3), (3, 1, 2), (None, 5, 1), (2, 2, None)]),
         )
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "p boolean, q boolean, r boolean, t boolean, a int, b int, c int, "
         "arr array<int>, st struct<x:int>",
     )
+
+
+def test_sqlalg_minimal_parens_same_tree(spark, grid):
+    """Minimal parentheses parse to the tree of the fully parenthesized
+    text and evaluate like the Column build."""
+    import re
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    df = grid
     for name, build, hand, values in _PAREN_CASES:
         text = str(build(S))
         if "{v}" in hand:  # lambda variables get generated names
@@ -456,8 +481,167 @@ def test_sqlalg_minimal_parens_same_tree(spark):
         "- (a + b)": -(S.col("a") + S.col("b")),
         "a - - 1": S.col("a") - (-S.lit(1)),
         "(a + b).f": (S.col("a") + S.col("b"))["f"],
-        "CASE WHEN a > 1 THEN 1 ELSE 2 END + 1":
+        "CASE true WHEN a > 1 THEN 1 ELSE 2 END + 1":
             S.when(S.col("a") > 1, 1).otherwise(2) + 1,
+        "`trim`(a)": S.trim(S.col("a")),
+        "`substring`(a, 1, 2)": S.col("a").substr(1, 2),
+        "coalesce(a + 1, b)": S.coalesce(S.expr("a + 1"), S.col("b")),
     }
     for want, sa in pins.items():
         assert str(sa) == want
+
+
+# (name, builder over a functions module). The twin renders each CASE as
+# ``CASE true WHEN c``; over the nullable booleans of ``grid`` its
+# optimized plan must equal the searched ``CASE WHEN c`` spelling's, and
+# its values the Column build's.
+_CASE_TRUE_CASES = [
+    ("top-level",
+     lambda M: M.when(M.col("p"), M.col("a"))
+     .when(M.col("q") | M.col("r"), 2).otherwise(M.col("b"))),
+    ("no-else", lambda M: M.when(M.col("p") & M.col("q"), M.col("a"))),
+    ("nested",
+     lambda M: M.when(M.col("p"), M.when(M.col("q"), 1).otherwise(2))
+     .when(~M.col("t"), M.when(M.col("a") > 1, 3))
+     .otherwise(M.col("a") + 4) + 1),
+    ("lambda-body",
+     lambda M: M.transform(
+         M.col("arr"),
+         lambda x: M.when(x > M.col("a"), x).when(M.col("p"), 0).otherwise(-x),
+     )),
+]
+
+
+def test_sqlalg_case_true_when_same_optimized_plan(spark, grid):
+    """``CASE true WHEN`` optimizes to the searched form's plan (the
+    optimizer removes ``true = c``) and evaluates like ``F.when``."""
+    for name, build in _CASE_TRUE_CASES:
+        text = str(build(S))
+        assert "CASE true WHEN" in text, (name, text)
+        searched = text.replace("CASE true WHEN", "CASE WHEN")
+        got, ref = (
+            grid.select(F.expr(t).alias("v"))._jdf.queryExecution()
+            .optimizedPlan()
+            for t in (text, searched)
+        )
+        assert got.sameResult(ref), (name, got.toString(), ref.toString())
+        want = grid.select(build(F).alias("v")).collect()
+        assert grid.select(F.expr(text).alias("v")).collect() == want, name
+
+
+def _production_trees(spark, monkeypatch) -> dict[str, str]:
+    """name -> SQL text of every twin tree production parses: the
+    ``to_solr_columns`` columns with their hidden placeholders, the
+    call-number argument trees, work keys, the renormalize derivations
+    (every host / linking variant) and, recorded as ``deduplicate``
+    hands them to ``F.expr``, the dedup key, normalize_key payload and
+    matchRecords trees."""
+    import recordmanager_spark.operators.dedup as D
+
+    tw = TW.marc_twin()
+    m, tm = S.col("marc"), S.col("__marc")
+    memo = {"__src": "marc", "__hide__": True}
+    trees = {
+        f"solr.{n}": str(b())
+        for n, b in tw._solr_col_builders(m, None, memo).items()
+    }
+    trees.update(
+        (f"hidden.{h}", t) for h, t in memo.get("__hidden__", {}).items()
+    )
+    trees.update(
+        (f"callnumber.{k}", str(v))
+        for k, v in tw._callnumber_pure_exprs(m).items()
+    )
+    trees["work_keys"] = str(tw._work_keys(m))
+    renorm = {
+        "title": tw.marc_title(tm),
+        "title_filing": tw.marc_title(tm, for_filing=True),
+        "author": tw.marc_main_author(tm),
+        "format_977": tw.first_subfield(tm, "977", "a"),
+        "isbns": tw.marc_isbns(tm),
+        "unique_ids": S.transform(
+            tw.marc_unique_ids(tm), lambda k: S.substring(k, 1, 200)
+        ),
+    }
+    for p3 in (False, True):
+        renorm[f"hosts_p3={p3}"] = tw.marc_host_record_ids(tm, prepend_003=p3)
+        for i9 in (False, True):
+            renorm[f"linking_p3={p3}_i9={i9}"] = tw.linking_ids(
+                tm, prepend_003=p3, id_in_999=i9
+            )
+    trees.update((f"renormalize.{k}", str(v)) for k, v in renorm.items())
+
+    seen: list[str] = []
+    expr = F.expr
+    monkeypatch.setattr(F, "expr", lambda s: seen.append(s) or expr(s))
+    empty = F.lit(None).cast("string")
+    D.with_dedup_keys(
+        spark.range(0).select(
+            empty.alias("title"), empty.alias("author"),
+            F.array(empty).alias("isbn"),
+        )
+    )
+    D._match_payload()
+    D._MATCH_SQL_CACHE.clear()
+    D.match_condition()
+    monkeypatch.undo()
+    trees.update((f"dedup.{i}", t) for i, t in enumerate(seen))
+    return trees
+
+
+# The longest SLL lookahead any production tree may make the parser read,
+# in tokens: the matchRecords tree's parenthesized-expression decision.
+# Keyword-form calls (``trim(``, ``substring(``), searched ``CASE WHEN``
+# and ``map(`` as an argument each read to the end of their call, which
+# took ``format`` to 10,926 tokens.
+_MAX_SLL_LOOK = 942
+
+
+def _sll_max_look(spark, text: str) -> tuple[int, str]:
+    """Parse ``text`` as Spark's first (SLL) stage does, with ANTLR's
+    profiler on; return the longest lookahead of any decision and the
+    rule it belongs to."""
+    from py4j.java_gateway import get_field
+
+    jvm = spark._jvm
+    P = jvm.org.apache.spark.sql.catalyst.parser
+    A = jvm.org.antlr.v4.runtime
+
+    def scala_object(name):
+        return getattr(getattr(P, name + "$"), "MODULE$")
+
+    # the lexer and parser set-up of Spark's AbstractParser.parse
+    lexer = P.SqlBaseLexer(
+        P.UpperCaseCharStream(A.CharStreams.fromString(text))
+    )
+    lexer.removeErrorListeners()
+    lexer.addErrorListener(scala_object("ParseErrorListener"))
+    tokens = A.CommonTokenStream(lexer)
+    parser = P.SqlBaseParser(tokens)
+    scala_object("AbstractParser").configureParser(
+        parser, text, tokens, jvm.org.apache.spark.sql.internal.SqlApiConf.get()
+    )
+    parser.setErrorHandler(P.SparkParserBailErrorStrategy())
+    parser.setProfile(True)
+    parser.getInterpreter().setPredictionMode(A.atn.PredictionMode.SLL)
+    parser.singleExpression()
+    assert parser.getNumberOfSyntaxErrors() == 0
+    look, decision = max(
+        (get_field(d, "SLL_MaxLook"), get_field(d, "decision"))
+        for d in parser.getParseInfo().getDecisionInfo()
+    )
+    state = parser.getATN().getDecisionState(decision)
+    return look, P.SqlBaseParser.ruleNames[get_field(state, "ruleIndex")]
+
+
+def test_twin_sll_lookahead_ratchet(spark, monkeypatch):
+    """Every production twin tree parses in SLL mode without error, and
+    no decision reads more than ``_MAX_SLL_LOOK`` tokens ahead: ANTLR
+    keeps the DFA it builds for a long lookahead for the life of the
+    JVM, so lookahead costs parse time and retained heap."""
+    over = {}
+    for name, text in _production_trees(spark, monkeypatch).items():
+        look, rule = _sll_max_look(spark, text)
+        if look > _MAX_SLL_LOOK:
+            over[name] = (look, rule)
+    assert not over, over
