@@ -147,8 +147,9 @@ def cmd_import(args) -> None:
         record_tag = cfg.record_xpath.rstrip("/").rsplit("/", 1)[-1]
     if not record_tag:
         record_tag = "record"
-    raw = spark.read.text(args.file, wholetext=True).withColumnRenamed(
-        "value", "doc"
+    raw = spark.read.text(args.file, wholetext=True).select(
+        F.col("_metadata.file_path").alias("__file"),
+        F.col("value").alias("doc"),
     )
     # preTransformation (PreTransformationTrait.php): whole-payload
     # XSLT(s) applied in order BEFORE splitting, with the reference's
@@ -191,8 +192,8 @@ def cmd_import(args) -> None:
     if hierarchical:
         part_cols.append(F.col("p.archive_id").alias("__archive_id"))
     parts = raw.select(
-        F.explode(split(F.col("doc"))).alias("p")
-    ).select(*part_cols)
+        "__file", F.posexplode(split(F.col("doc"))).alias("__pos", "p")
+    ).select(*part_cols, F.struct("__file", "__pos").alias("__order"))
     local_id = F.col("__local_id")
     for pat, repl in cfg.id_search_replace:
         expr, ci = _php_regex(pat)
@@ -208,50 +209,51 @@ def cmd_import(args) -> None:
         F.lit(False).alias("deleted"),
         F.lit(now).alias("created"),
         F.lit(now).alias("updated"),
+        "__order",
     )
-    existing = read_store(spark, args.records, missing_ok=True)
-    merged = batch
-    if existing is not None:
-        from .sources.upsert import upsert_records
+    from .sources.upsert import latest_per_id, upsert_records
 
-        merged = upsert_records(existing, batch, now)
-        if hierarchical and not cfg.keep_missing_hierarchy_members:
-            # StoreRecordTrait.php:294-310: members of a re-imported
-            # archive that the new split no longer produced are marked
-            # deleted (keepMissingHierarchyMembers turns this off).
-            # Scope = this source's records whose id carries one of the
-            # batch's archive ids (EAD part ids are archive-prefixed by
-            # construction); the batch's own ids anti-join out.
-            archives = [
-                r[0]
-                for r in parts.select("__archive_id").distinct().collect()
-                if r[0]
-            ]
-            if archives:
-                pfx = cfg.effective_id_prefix + "."
-                in_scope = F.lit(False)
-                for a in archives:
-                    p = pfx + a
-                    in_scope = in_scope | (
-                        (F.col("_id") == p)
-                        | F.col("_id").startswith(p + "_")
-                    )
-                fresh = batch.select("_id").withColumn(
-                    "__fresh", F.lit(True)
+    batch = latest_per_id(batch)
+    merged = upsert_records(
+        read_store(spark, args.records, missing_ok=True), batch, now
+    )
+    if hierarchical and not cfg.keep_missing_hierarchy_members:
+        # StoreRecordTrait.php:294-310: members of a re-imported
+        # archive that the new split no longer produced are marked
+        # deleted (keepMissingHierarchyMembers turns this off).
+        # Scope = this source's records whose id carries one of the
+        # batch's archive ids (EAD part ids are archive-prefixed by
+        # construction); the batch's own ids anti-join out.
+        archives = [
+            r[0]
+            for r in parts.select("__archive_id").distinct().collect()
+            if r[0]
+        ]
+        if archives:
+            pfx = cfg.effective_id_prefix + "."
+            in_scope = F.lit(False)
+            for a in archives:
+                p = pfx + a
+                in_scope = in_scope | (
+                    (F.col("_id") == p)
+                    | F.col("_id").startswith(p + "_")
                 )
-                merged = (
-                    merged.join(F.broadcast(fresh), "_id", "left")
-                    .withColumn(
-                        "deleted",
-                        F.when(
-                            (F.col("source_id") == cfg.id)
-                            & in_scope
-                            & F.col("__fresh").isNull(),
-                            F.lit(True),
-                        ).otherwise(F.col("deleted")),
-                    )
-                    .drop("__fresh")
+            fresh = batch.select("_id").withColumn(
+                "__fresh", F.lit(True)
+            )
+            merged = (
+                merged.join(F.broadcast(fresh), "_id", "left")
+                .withColumn(
+                    "deleted",
+                    F.when(
+                        (F.col("source_id") == cfg.id)
+                        & in_scope
+                        & F.col("__fresh").isNull(),
+                        F.lit(True),
+                    ).otherwise(F.col("deleted")),
                 )
+                .drop("__fresh")
+            )
     n = commit_store(spark, args.records, merged)
     print(f"imported {args.file}: records table now {n} rows")
 
@@ -264,8 +266,9 @@ def cmd_harvest(args) -> None:
     cfg = _load_config(args.config, args.source)
     from .sources.oaipmh import harvest_records
 
-    pages = spark.read.text(args.pages, wholetext=True).withColumnRenamed(
-        "value", "xml"
+    pages = spark.read.text(args.pages, wholetext=True).select(
+        F.col("_metadata.file_path").alias("__file"),
+        F.col("value").alias("xml"),
     )
     # oaipmhTransformation: XSLT(s) over each response page before
     # record extraction (e.g. strip_namespaces.xsl)
@@ -279,6 +282,7 @@ def cmd_harvest(args) -> None:
         id_replace = cfg.id_search_replace[0][1]
     recs = harvest_records(
         pages,
+        keep=["__file"],
         id_search=id_search,
         id_replace=id_replace,
         id_prefix=cfg.effective_id_prefix,
@@ -292,13 +296,15 @@ def cmd_harvest(args) -> None:
         F.col("deleted"),
         F.lit(now).alias("created"),
         F.lit(now).alias("updated"),
+        F.struct("__file", "position").alias("__order"),
     )
-    existing = read_store(spark, args.records, missing_ok=True)
-    if existing is not None:
-        from .sources.upsert import upsert_records
+    from .sources.upsert import latest_per_id, upsert_records
 
-        batch = upsert_records(existing, batch, now)
-    n = commit_store(spark, args.records, batch)
+    batch = latest_per_id(batch)
+    merged = upsert_records(
+        read_store(spark, args.records, missing_ok=True), batch, now
+    )
+    n = commit_store(spark, args.records, merged)
     print(f"harvested {args.pages}: records table now {n} rows")
 
 
@@ -965,14 +971,6 @@ def _table_location(spark, table: str) -> str | None:
     if len(parts) == 2:
         return f"{wh}/{parts[0]}.db/{parts[1]}"
     return None
-
-
-def _local_path(uri: str) -> str | None:
-    """Local filesystem path of a file:/no-scheme URI, else None."""
-    from urllib.parse import urlparse
-
-    u = urlparse(uri)
-    return u.path if u.scheme in ("", "file") else None
 
 
 def _hadoop_fs(spark, uri: str):

@@ -21,8 +21,7 @@ compressed audio (MP3/AAC/…) needs ffmpeg/PyAV, which is INJECTED —
 tests pass a deterministic fake, the engine imports neither.
 
 Scale shape: fingerprinting is one Arrow-batched Python scan (zero
-shuffles; pair with ``repartition_by_bytes`` — audio payloads dominate
-row size). The fingerprint table is n_segments rows per audio (tiny
+shuffles). The fingerprint table is n_segments rows per audio (tiny
 next to the payloads); banding, bucket caps, and the audio-level match
 aggregation are the already-audited bounded-state pair engine, exactly
 the video-frames composition.
@@ -155,8 +154,6 @@ def audio_segment_fingerprints(
     df: DataFrame,
     decoder_factory: Callable[[], AudioDecoder] = lambda: decode_wav_mono,
     seg_ms: int = 1000,
-    payload_col: str = "payload",
-    id_col: str = "id",
 ) -> DataFrame:
     """(id, seg, fp): one energy-delta fingerprint per ``seg_ms``
     segment. ``decoder_factory`` resolves once per TASK, not per row
@@ -165,6 +162,8 @@ def audio_segment_fingerprints(
     PCM16 WAV with no dependency at all. Audios shorter than one
     segment fingerprint whatever they have; undecodable payloads
     contribute zero rows (they can never pair — the honest outcome)."""
+    payload_col = "payload"
+    id_col = "id"
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         decode = decoder_factory()

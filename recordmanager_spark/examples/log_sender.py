@@ -120,7 +120,6 @@ def send_logs(
     mailer: Callable,
     recipient: str,
     batch_size: int = 100,
-    log: Callable = lambda level, msg: None,
 ) -> int:
     """Drain the log store into batched reports; returns the total
     message count sent. Raises on a mailer failure WITHOUT deleting the
@@ -137,10 +136,7 @@ def send_logs(
             _format_line(r) for r in batch
         )
         if not mailer(recipient, subject, body):
-            log("fatal", "Failed to send email")
             raise RuntimeError("Failed to send email")
         delete_batch(batch)
         count += len(batch)
-        log("info", f"{count} message(s) sent")
-    log("info", f"Completed with {count} message(s) sent")
     return count

@@ -268,7 +268,6 @@ def push_dataframe(
     update_url: str,
     workers: int | None = None,
     max_update_records: int = 5000,
-    no_commit: bool = False,
     **pusher_kwargs,
 ) -> None:
     """foreachPartition POST of a Solr-document DataFrame.
@@ -293,7 +292,6 @@ def push_dataframe(
         )
 
     out.foreachPartition(part)
-    if not no_commit:
-        SolrPusher(
-            make_transport(), update_url=update_url, **pusher_kwargs
-        ).commit()
+    SolrPusher(
+        make_transport(), update_url=update_url, **pusher_kwargs
+    ).commit()

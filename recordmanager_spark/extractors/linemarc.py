@@ -34,18 +34,6 @@ DEFAULT_FORMATS: list[dict] = [
     {"subfieldRegExp": r"‡([a-z0-9]) "},
 ]
 
-# The GeniePlus export config exercised by the reference's tests
-# (LineBasedMarcFormatterTest.php:54-63)
-GENIEPLUS_FORMATS: list[dict] = [
-    {
-        "subfieldRegExp": r"‡([a-z0-9])",
-        "endOfLineMarker": "^",
-        "ind1Offset": 3,
-        "ind2Offset": 4,
-        "contentOffset": 4,
-        "firstSubfieldOffset": 5,
-    }
-]
 
 # characters legal in XML 1.0 per the reference's post-serialization
 # strip (LineBasedMarcFormatter.php:196-200; astral planes are not in

@@ -1092,37 +1092,6 @@ def marc_geographic_locations(marc: Column) -> Column:
     return F.filter(vals, lambda v: v.isNotNull())
 
 
-def marc_building_hierarchy(
-    marc: Column,
-    field: str = "852",
-    loc: str = "b",
-    sub: str | None = None,
-) -> Column:
-    """Building values as level arrays (getBuilding, Marc.php:1585-1640):
-    one entry per holdings field with a location subfield; when a
-    sub-location subfield is configured (driverParam
-    subLocationInBuilding) and present, the entry is [location, sub] —
-    the two-level form the multilevel building mapping consumes.
-    Replayed against PreviewCreatorTest.php in tests/test_golden_marc.py.
-    """
-    flds = fields_by_tag(marc, field)
-
-    def one(f):
-        location = try_element_at(_sub_values(f, [loc]), 1)
-        if sub:
-            s = try_element_at(_sub_values(f, [sub]), 1)
-            return F.when(
-                s.isNotNull() & (s != ""), F.array(location, s)
-            ).otherwise(F.array(location))
-        return F.array(location)
-
-    return F.filter(
-        F.transform(flds, one),
-        lambda lv: try_element_at(lv, 1).isNotNull()
-        & (try_element_at(lv, 1) != ""),
-    )
-
-
 def _callnumber_pure_exprs(marc: Column) -> dict[str, Column]:
     """The pure-expression half of the call-number columns — everything
     except the pandas-UDF wraps, so the SQL-text twin can compile these
@@ -1869,21 +1838,6 @@ def _serialize_one(parsed) -> str | None:
         {"leader": leader if leader is not None else "", "fields": out_fields},
         separators=(",", ":"),
         ensure_ascii=False,
-    )
-
-
-@pandas_udf(StringType())
-def serialize_marc_in_json(marc: pd.DataFrame) -> pd.Series:
-    """The storage serialization the renormalize pass writes back
-    (Renormalize.php:173 ``$metadataRecord->serialize()``). Struct
-    columns arrive as a (leader, fields) DataFrame under Arrow."""
-    return pd.Series(
-        [
-            None
-            if fields is None and leader is None
-            else _serialize_one((leader, fields))
-            for leader, fields in zip(marc["leader"], marc["fields"])
-        ]
     )
 
 

@@ -168,7 +168,7 @@ def normalize_marc(
     return F.struct(marc["leader"].alias("leader"), fields.alias("fields"))
 
 
-def holdings_summary(marc: Column, alma: bool = False) -> Column:
+def holdings_summary(marc: Column) -> Column:
     """(branch, callnumber, available) structs from normalized 952 fields —
     the projection SolrUpdater feeds the building/holdings facets from."""
     f952 = F.filter(marc["fields"], lambda f: f["tag"] == "952")

@@ -16,7 +16,7 @@ import re
 
 import pandas as pd
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BooleanType, StringType
+from pyspark.sql.types import BooleanType, StringType
 
 
 def _sortable(s: str) -> str:
@@ -181,95 +181,6 @@ def dewey_number_udf(precision: int):
             lambda v: DeweyCallNumber(v).number(precision)
             if v and DeweyCallNumber(v).is_valid()
             else ""
-        )
-
-    return _f
-
-
-def lc_category_udf(mapping: list[dict]):
-    """HILCC category for LC call numbers (LcCallNumber.php:190-236).
-
-    ``mapping`` is the user-supplied HILCC range table — rows of
-    ``{a1, a2, d1, d2, f1, f2, cat}`` matched in order: the first row
-    whose letter range [a1, a2] (string compare) and digit/decimal ranges
-    contain the parsed call number wins. The reference loads this from an
-    install-time mappings/LcCallNumberCategories.php (not shipped with
-    the repo), so the table is an argument here, captured by the UDF
-    closure and shipped once per executor.
-
-    Invalid call numbers (including I/O/W/X/Y first letters) map to ''.
-    """
-
-    @pandas_udf(StringType())
-    def _f(col: pd.Series) -> pd.Series:
-        cache: dict = {}
-
-        def cat(v):
-            cn = LcCallNumber(v or "")
-            if not cn.is_valid():
-                return ""
-            digits = int(cn.digits or 0)
-            # PHP intval('.25') == 0: the reference's decimal bound check
-            # runs on the intval of the raw '.nnn' string, which is
-            # always 0 — a quirk kept for parity (getCategory :215-216)
-            m = re.match(r"\s*[-+]?\d+", cn.decimal or "")
-            decimal = int(m.group(0)) if m else 0
-            key = (cn.letters, digits, decimal)
-            hit = cache.get(key)
-            if hit is None:
-                hit = ""
-                for item in mapping:
-                    if (
-                        item["a1"] <= cn.letters <= item["a2"]
-                        and item["d1"] <= digits <= item["d2"]
-                        and item["f1"] <= decimal <= item["f2"]
-                    ):
-                        hit = item["cat"]
-                        break
-                cache[key] = hit
-            return hit
-
-        return col.map(cat)
-
-    return _f
-
-
-def lc_categories_udf(mapping: list[dict]):
-    """Array variant of :func:`lc_category_udf` for ``callnumber-raw``:
-    one category per VALID call number with a non-empty category match —
-    the ``category_str_mv`` loop in Record/Marc.php:529-545."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def _f(col: pd.Series) -> pd.Series:
-        cache: dict = {}
-
-        def cat_one(v):
-            cn = LcCallNumber(v or "")
-            if not cn.is_valid():
-                return None
-            digits = int(cn.digits or 0)
-            m = re.match(r"\s*[-+]?\d+", cn.decimal or "")
-            decimal = int(m.group(0)) if m else 0
-            key = (cn.letters, digits, decimal)
-            hit = cache.get(key)
-            if hit is None:
-                hit = ""
-                for item in mapping:
-                    if (
-                        item["a1"] <= cn.letters <= item["a2"]
-                        and item["d1"] <= digits <= item["d2"]
-                        and item["f1"] <= decimal <= item["f2"]
-                    ):
-                        hit = item["cat"]
-                        break
-                cache[key] = hit
-            return hit or None
-
-        # Arrow hands list columns over as numpy arrays — no truthiness
-        return col.map(
-            lambda arr: []
-            if arr is None
-            else [c for c in (cat_one(v) for v in arr) if c]
         )
 
     return _f

@@ -4,7 +4,7 @@ Re-expresses the reference's Utils/MetadataUtils.php scalar library
 (normalizeKey :416-433, createTitleKey :369-405, normalizeISBN :442-453,
 isbn10to13 :270-284, authorMatch :464-496, punctuation strips :507-677,
 stripLeadingArticle/createSortTitle :678-719, array_iunique :721-740,
-createIdSortKey :742-756, getSourceFromId :1093-1108) as Spark Column
+createIdSortKey :742-756) as Spark Column
 expressions. Everything here except the ISBN check-digit math stays
 JVM-side inside whole-stage codegen — no Python round trip — which is what
 makes key generation viable over 100 TB of records.
@@ -21,8 +21,6 @@ import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 from recordmanager_spark.sparkcompat import try_element_at
 
 # Common Latin accent folding (lowercase side; input is lowercased first).
@@ -70,8 +68,8 @@ assert len(_GREEK_1) == len(_GREEK_1_TO), (len(_GREEK_1), len(_GREEK_1_TO))
 # folding renders digraphs letter-by-letter (きゃ -> "kiya", ICU "kya")
 # and drops sokuon gemination (っ -> "", ICU doubles the consonant) —
 # deterministic and consistent across sources, which is what dedup keys
-# need; normalize_key_icu gives exact reference romanization. Han has
-# no bounded table and still passes through raw (stable, non-Latin).
+# need. Han has no bounded table and still passes through raw (stable,
+# non-Latin).
 _KANA_BASE = {
     "あ": "a", "い": "i", "う": "u", "え": "e", "お": "o",
     "か": "ka", "き": "ki", "く": "ku", "け": "ke", "こ": "ko",
@@ -149,7 +147,7 @@ def normalize_key(col: Column | str) -> Column:
     e.g. ICU strips en dashes the ASCII strip ranges keep). The
     reference is always-ICU (MetadataUtils.php:416-433) because its
     whole fleet shares one PHP runtime; a Spark cluster gives no such
-    guarantee. :func:`normalize_key_icu` is the ICU transliterator fold.
+    guarantee. ``tests/oracles.normalize_key_py`` is its Python twin.
     """
     c0 = F.lower(F.col(col) if isinstance(col, str) else col)
     # let-bind the input through a one-element array: the kana branch
@@ -168,118 +166,6 @@ def normalize_key(col: Column | str) -> Column:
         c = F.replace(c, F.lit(src), F.lit(dst))
     c = F.translate(c, _ONE_FOLD_SRC, _ONE_FOLD_DST)
     return F.regexp_replace(c, _KEY_STRIP_RE, "")
-
-
-def normalize_key_py(s: str | None) -> str:
-    """Driver-side Python twin of :func:`normalize_key`.
-
-    Byte-identical to the Column fold (a pytest sweep pins the parity):
-    used where a key must be computed OUTSIDE a Spark plan — goldens
-    and test oracles. Keep the
-    two implementations in lockstep when extending the fold tables.
-    """
-    if s is None:
-        return ""
-    c = s.lower()
-    if re.search(_KANA_RANGE_RE, c):
-        c = "".join(_KANA_MAP.get(ch, ch) for ch in c)
-    c = c.translate(str.maketrans(_ACCENTS, _FOLDED))
-    for src, dst in _MULTI_FOLD:
-        c = c.replace(src, dst)
-    # translate() maps positionally and DELETES source chars past the
-    # target's length — mirror both behaviors
-    table: dict[int, str | None] = {
-        ord(a): b for a, b in zip(_ONE_FOLD_SRC, _ONE_FOLD_DST)
-    }
-    for ch in _ONE_FOLD_SRC[len(_ONE_FOLD_DST):]:
-        table[ord(ch)] = None
-    c = c.translate(table)
-    return re.sub(_KEY_STRIP_RE, "", c)
-
-
-# --- ICU key folding --------------------------------------------------------
-# The reference's production path folds keys through an ICU transliterator
-# (MetadataUtils.php:416-433; default rules recordmanager.ini.sample:19-25),
-# which also romanizes Han — beyond the data-driven tables above.
-# ``normalize_key`` never uses this path (see its docstring:
-# environment-sniffed key engines silently fork the key space between
-# ICU and ICU-free machines, and the pandas UDF additionally requires
-# PyICU on every executor).
-
-_ICU_KEY_FOLDING_RULES = (
-    ":: NFD; :: lower; :: Latin; :: [^[:letter:] [:number:]] Remove; :: NFKC;"
-)
-
-_ICU_AVAILABLE: bool | None = None
-
-
-def icu_available() -> bool:
-    """True when an ICU transliterator can run: PyICU if installed,
-    else the in-repo ctypes binding over the system libicui18n
-    (functions/icu_ctypes.py) — present on every mainstream Linux
-    image even where the PyICU wheel is not."""
-    global _ICU_AVAILABLE
-    if _ICU_AVAILABLE is None:
-        try:
-            import icu  # noqa: F401  (PyICU)
-
-            _ICU_AVAILABLE = True
-        except Exception:
-            from . import icu_ctypes
-
-            _ICU_AVAILABLE = icu_ctypes.available()
-    return _ICU_AVAILABLE
-
-
-def normalize_key_icu(col: Column | str) -> Column:
-    """normalizeKey via an ICU transliterator — the reference's exact
-    production rules, including Han/Kana romanization.
-
-    Arrow-batched pandas UDF (the only Python hop in key generation when
-    enabled); executors must also have PyICU importable. Divergence from
-    the JVM path to be aware of: ICU's ``[^letter number] Remove`` strips
-    non-ASCII punctuation (e.g. en dash) that the JVM path's ASCII strip
-    ranges keep — matching the reference, which has the same difference
-    from this engine's fallback tables.
-    """
-    if not icu_available():
-        raise RuntimeError(
-            "normalize_key_icu requires PyICU or a loadable system "
-            "libicui18n (see functions/icu_ctypes.py); install one or "
-            "use the default normalize_key (data-driven "
-            "Latin/Cyrillic/Greek fold)"
-        )
-    c = F.col(col) if isinstance(col, str) else col
-    return _icu_fold_udf(c)
-
-
-def _make_icu_transliterator(rules: str):
-    """PyICU when importable, else the ctypes binding over the system
-    libicui18n — both run the same ICU rule engine, so the fold is
-    identical; only the wrapper differs. Runs INSIDE the pandas UDF on
-    each executor (each worker process builds its own transliterator —
-    ICU handles are not shared across threads/processes)."""
-    try:
-        import icu
-
-        return icu.Transliterator.createFromRules(
-            "rm_key_folding", rules, icu.UTransDirection.FORWARD
-        )
-    except Exception:
-        from recordmanager_spark.functions.icu_ctypes import (
-            Transliterator,
-            UTransDirection,
-        )
-
-        return Transliterator.createFromRules(
-            "rm_key_folding", rules, UTransDirection.FORWARD
-        )
-
-
-@pandas_udf(StringType())
-def _icu_fold_udf(s):
-    tr = _make_icu_transliterator(_ICU_KEY_FOLDING_RULES)
-    return s.map(lambda v: tr.transliterate(v) if v is not None else None)
 
 
 def title_key_prefix(col: Column | str) -> Column:
@@ -482,7 +368,6 @@ _NUMERIC_WORD = "[+-]?([0-9]{1,10}(\\.[0-9]{0,10})?|\\.[0-9]{1,10})"
 def strip_trailing_punctuation(
     col: Column | str,
     additional: str = "",
-    abbreviations: tuple[str, ...] = DEFAULT_ABBREVIATIONS,
 ) -> Column:
     """stripTrailingPunctuation (MetadataUtils.php:572-632), faithfully.
 
@@ -499,6 +384,7 @@ def strip_trailing_punctuation(
     dominates plan-construction time in wide extractor projections. The
     period-rule exceptions become bounded negative lookbehinds.
     """
+    abbreviations = DEFAULT_ABBREVIATIONS
     c = F.col(col) if isinstance(col, str) else col
     if additional:
         trail_re = "[" + re.escape(" /:;,=([" + additional) + "]+\\z"
@@ -552,14 +438,14 @@ def strip_punctuation(col: Column | str) -> Column:
     return F.when(out == "", c).otherwise(out)
 
 
-def strip_leading_article(col: Column | str, articles: list[str] | None = None) -> Column:
+def strip_leading_article(col: Column | str) -> Column:
     """stripLeadingArticle (MetadataUtils.php:678-688): lowercase, then drop
     the first list-order article prefix. Regex alternation tries branches
     left-to-right, which preserves the reference's first-match-wins loop in
     ONE linear op (the when-chain form re-referenced the input 2x per
     article)."""
     c = F.lower(F.col(col) if isinstance(col, str) else col)
-    pattern = "^(?:" + "|".join(re.escape(a) for a in (articles or ARTICLES)) + ")"
+    pattern = "^(?:" + "|".join(re.escape(a) for a in ARTICLES) + ")"
     return F.regexp_replace(c, pattern, "")
 
 
@@ -583,12 +469,6 @@ def create_id_sort_key(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     digits = F.regexp_extract(c, "^\\w*(\\d+)$", 1)
     return F.when(digits != "", digits).otherwise(c)
-
-
-def get_source_from_id(col: Column | str) -> Column:
-    """Prefix before the first '.' (MetadataUtils.php:1093-1108)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract(c, "^([^.]+)", 1)
 
 
 def extract_year(col: Column | str) -> Column:
@@ -686,8 +566,9 @@ def uc_first(col: Column | str) -> Column:
     return F.concat(F.upper(F.substring(c, 1, 1)), F.substring(c, 2, 0x7FFFFFF))
 
 
-def array_trim(col: Column | str, chars: str = " \t\n\r\x00\x0b") -> Column:
+def array_trim(col: Column | str) -> Column:
     """PHP trim() over every array element (MetadataUtils.php:926-945)."""
+    chars = " \t\n\r\x00\x0b"
     c = F.col(col) if isinstance(col, str) else col
     cls = "[" + "".join("\\u%04x" % ord(ch) for ch in chars) + "]+"
     return F.transform(

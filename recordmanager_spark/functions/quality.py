@@ -243,24 +243,12 @@ def _gopher_quality_of(c: Column, toks: Column) -> Column:
     )
 
 
-def bullet_ellipsis_stats(col: Column | str) -> Column:
-    """struct(frac_bullet_lines, frac_ellipsis_lines): Gopher rejects docs
-    with >90% bullet-started or >30% ellipsis-ended lines."""
-    ls = lines_of(col)
-    n = F.size(ls)
-    bullets = F.size(F.filter(ls, lambda l: l.rlike(r"^\s*[-*•]")))
-    ellips = F.size(F.filter(ls, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
-    return F.struct(
-        F.when(n > 0, bullets / n).otherwise(F.lit(0.0)).alias("frac_bullet_lines"),
-        F.when(n > 0, ellips / n).otherwise(F.lit(0.0)).alias("frac_ellipsis_lines"),
-    )
-
-
-def c4_clean_lines(col: Column | str, min_words: int = 3) -> Column:
+def c4_clean_lines(col: Column | str) -> Column:
     """C4-style line cleaning: keep lines that end in terminal punctuation
     (., !, ?, ") AND have >= min_words words AND contain none of the
     boilerplate markers (cookie / javascript / lorem ipsum,
     case-insensitive). Returns struct(text, n_kept, n_total)."""
+    min_words = 3
     ls = lines_of(col)
 
     def keep(l: Column) -> Column:

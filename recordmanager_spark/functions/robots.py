@@ -152,9 +152,6 @@ def robots_gate(
     robots: DataFrame,
     url_col: str = "url",
     agent: str = "*",
-    out_col: str = "robots_allowed",
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
 ) -> DataFrame:
     """Annotate ``df`` with the RFC 9309 crawl verdict for each row's
     URL against the per-host ``robots`` table (host, robots_txt).
@@ -164,6 +161,9 @@ def robots_gate(
     Arrow-batched scan with an lru-cached parse per distinct robots
     text — the documents never shuffle. Hosts with no robots row are
     allowed (opt-out protocol)."""
+    out_col = "robots_allowed"
+    host_col = "host"
+    txt_col = "robots_txt"
     # RFC 9309 has exactly one robots.txt per authority; a robots table
     # with duplicate host rows (two harvest runs unioned, http+https
     # both recorded) must NOT fan the left join out — a gate that

@@ -65,8 +65,8 @@ def punct_ratio(col: Column | str) -> Column:
     return F.when(n > 0, p / n).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or LANG_PROFILES["en"]
+def stopword_ratio(col: Column | str) -> Column:
+    sw = LANG_PROFILES["en"]
     lit_sw = F.array(*[F.lit(s) for s in sw])
     return let(
         tokenize(F.lower(F.col(col) if isinstance(col, str) else col)),
@@ -133,11 +133,12 @@ def lang_scores(col: Column | str) -> Column:
     )
 
 
-def lang_id(col: Column | str, default: str = "und") -> Column:
+def lang_id(col: Column | str) -> Column:
     """Pick the language with the most stopword hits; 'und' when all zero.
 
     Ties break by profile order (array_sort is stable on equal keys would
     not be deterministic; instead fold keeps the first maximum)."""
+    default = "und"
     scores = lang_scores(col)
     best = F.aggregate(
         scores,
@@ -158,14 +159,6 @@ def normalize_for_fingerprint(col: Column | str) -> Column:
 def fingerprint(col: Column | str) -> Column:
     """Deterministic 128-bit content fingerprint (md5 of normalized text)."""
     return F.md5(normalize_for_fingerprint(col))
-
-
-def char_ngrams(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-gram shingles of the normalized text."""
-    c = normalize_for_fingerprint(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: F.substring(c, i, n))
-    return F.array_distinct(F.filter(grams, lambda g: F.length(g) == n))
 
 
 def ngrams_from_tokens(toks: Column, n: int = 3) -> Column:

@@ -131,7 +131,6 @@ def canonical_url_dedup(
     url_col: str = "url",
     id_col: str = "doc_id",
     quality_col: str | None = None,
-    canonical_col: str = "canonical_url",
     **canon_kwargs,
 ) -> DataFrame:
     """Keep ONE row per canonical URL: highest ``quality_col`` wins,
@@ -146,6 +145,7 @@ def canonical_url_dedup(
     no skew hazard; at 100 TB this is strictly cheaper than any
     content-hash dedup because the key is short and already materialized.
     """
+    canonical_col = "canonical_url"
     from pyspark.sql import Window
 
     out = df.withColumn(

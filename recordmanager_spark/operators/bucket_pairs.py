@@ -150,7 +150,6 @@ def capped_bucket_pairs(
     payload_cols: tuple[str, ...] = (),
     small_path: str = "array",
     join_hint: str | None = "shuffle_hash",
-    hub_cap: int | None = None,
     assume_under_cap: bool = False,
 ) -> DataFrame:
     """DISTINCT candidate pairs per bucket with bounded aggregation state.
@@ -170,7 +169,7 @@ def capped_bucket_pairs(
     large and per-key rows are cap-bounded, so skipping sort-merge's
     sorts is usually right.
 
-    ``hub_cap`` (default ``min(bucket_cap, 64)``) sizes the over-cap
+    ``hub_cap = min(bucket_cap, 64)`` sizes the over-cap
     REP set separately from the small-bucket work bound: hub pair
     volume is n*hub_cap PER BAND, and a fully degenerate item (every
     band a mega-bucket) multiplies that by the band count — at
@@ -196,9 +195,8 @@ def capped_bucket_pairs(
     100 TB the floor amortizes to nothing and the bound is what makes
     degenerate buckets survivable.
     """
+    hub_cap = min(bucket_cap, 64)
     pay = list(payload_cols)
-    if hub_cap is None:
-        hub_cap = min(bucket_cap, 64)
     # Normalize the null-filters across every branch: join-key,
     # ``__rid != id``, and caller post-filter predicates (e.g. the
     # Hamming ``bit_count(__h_a ^ __h_b) <= k`` pushed into the small

@@ -44,17 +44,13 @@ def flag_contaminated(
     bench_text_col: str,
     n: int = 8,
     min_hits: int = 1,
-    broadcast_hits: bool = True,
 ) -> DataFrame:
     """Annotate ``docs`` with (n_hits, contaminated).
 
     ``n_hits`` counts the document's DISTINCT grams that appear anywhere
     in the benchmark; ``contaminated`` is ``n_hits >= min_hits``.
 
-    ``broadcast_hits`` assumes the contaminated subset is small (the
-    normal case); pass False to fall back to a shuffled join when a
-    corpus is known to overlap massively (e.g. re-checking a benchmark
-    against itself).
+    The hits side is broadcast: the contaminated subset is small.
     """
     bench_grams = (
         benchmark.select(F.explode(ngram_set(bench_text_col, n)).alias("g"))
@@ -68,9 +64,7 @@ def flag_contaminated(
         .groupBy(id_col)
         .agg(F.count("*").alias("n_hits"))
     )
-    if broadcast_hits:
-        hits = F.broadcast(hits)
-    out = docs.join(hits, id_col, "left")
+    out = docs.join(F.broadcast(hits), id_col, "left")
     return out.withColumn(
         "n_hits", F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
     ).withColumn("contaminated", F.col("n_hits") >= min_hits)
@@ -204,10 +198,6 @@ def fuzzy_decontaminate(
     text_col: str = "text",
     bench_id_col: str | None = None,
     bench_text_col: str | None = None,
-    num_perm: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    shingle_n: int = 3,
     est_threshold: float = 0.5,
 ) -> DataFrame:
     """NEAR-duplicate benchmark decontamination: flag corpus documents
@@ -234,6 +224,10 @@ def fuzzy_decontaminate(
     probe and the scoring are map-side joins and the benchmark never
     shuffles anything corpus-sized.
     """
+    num_perm = 16
+    bands = 4
+    rows_per_band = 4
+    shingle_n = 3
     from .text_dedup import (
         _band_key_array,
         minhash_sig_agreement,

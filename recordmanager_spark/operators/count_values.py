@@ -32,9 +32,7 @@ def count_values(df: DataFrame, field: str, descending: bool = True) -> DataFram
     return out.orderBy(*order)
 
 
-def count_mapped_values(
-    df: DataFrame, field: str, mapping, descending: bool = True
-) -> DataFrame:
+def count_mapped_values(df: DataFrame, field: str, mapping) -> DataFrame:
     """countValues over the MAPPED form of a field (--mapped mode of
     Command/Records/CountValues.php): values run through the source's
     mapping table before tallying, so the frequency table reflects what
@@ -50,4 +48,4 @@ def count_mapped_values(
         )
     )
     mapped = df.select(map_array_column(arr, mapping).alias("__mapped"))
-    return count_values(mapped, "__mapped", descending)
+    return count_values(mapped, "__mapped", True)

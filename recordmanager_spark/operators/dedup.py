@@ -181,7 +181,7 @@ def blocking_pairs(
     candidates_per_key: int = 101,
 ) -> DataFrame:
     """Candidate pairs: records from different sources sharing any blocking
-    key. Returns (key, id_a, id_b) with id_a < id_b, deduped across keys.
+    key. Returns (id_a, id_b) with id_a < id_b, deduped across keys.
 
     Skew control: keys shared by more than ``candidates_per_key`` records
     are truncated per the reference's fetch cap (DedupHandler.php:466-467) —
@@ -809,12 +809,11 @@ def enforce_one_per_source(
     records: DataFrame,
     id_col: str = "_id",
     source_col: str = "source_id",
-    order_col: str | None = None,
 ) -> DataFrame:
     """≤1 record per source per group (DedupHandler.php:1221-1242).
 
     Batch variant of the reference's greedy insert: within a component,
-    keep the first record per source (by ``order_col`` or id); extras
+    keep the first record per source by id; extras
     leave the group (component -> null). Groups shrinking below 2 members
     dissolve (reference removeFromDedupRecord :672-741)."""
     j = components.join(
@@ -822,7 +821,7 @@ def enforce_one_per_source(
         "id",
     )
     w = Window.partitionBy("component", "source").orderBy(
-        F.col(order_col or "id").asc()
+        F.col("id").asc()
     )
     kept = j.withColumn("__rn", F.row_number().over(w))
     kept = kept.withColumn(
@@ -1002,11 +1001,7 @@ def dedup_component_parts(
 def deduplicate_incremental(
     records: DataFrame,
     existing: DataFrame,
-    dirty_col: str = "update_needed",
-    id_col: str = "_id",
-    source_col: str = "source_id",
     key_cols: list[str] | None = None,
-    candidates_per_key: int = 101,
 ) -> DataFrame:
     """Re-dedup only dirty rows against the full key index.
 
@@ -1021,6 +1016,10 @@ def deduplicate_incremental(
     full key index with a broadcast-able dirty side — the 100 TB corpus is
     scanned once for the index, not self-joined.
     """
+    dirty_col = "update_needed"
+    id_col = "_id"
+    source_col = "source_id"
+    candidates_per_key = 101
     key_cols = key_cols or ["isbn_keys", "id_keys", "title_keys"]
     ids = records.select(
         F.col(id_col).alias("id"),
@@ -1104,8 +1103,6 @@ def deduplicate_incremental(
 def check_dedup_consistency(
     assignment: DataFrame,
     records: DataFrame,
-    id_col: str = "_id",
-    source_col: str = "source_id",
 ) -> DataFrame:
     """Validate a (id, dedup_id) assignment against the invariants.
 
@@ -1120,6 +1117,8 @@ def check_dedup_consistency(
     Empty result = consistent. The repair is ``enforce_one_per_source`` /
     re-running ``deduplicate`` on the affected groups.
     """
+    id_col = "_id"
+    source_col = "source_id"
     a = assignment.select(
         F.col(id_col).alias("id") if id_col in assignment.columns else F.col("id"),
         "dedup_id",

@@ -121,8 +121,6 @@ def corpus_datacard(
     by: Sequence[str] = ("source", "lang"),
     text_col: str = "text",
     approach: str = "exact",
-    rsd: float = 0.01,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Per-group corpus summary — the table a dataset release publishes:
     document/token/char budgets, exact-duplicate rate (content
@@ -141,6 +139,8 @@ def corpus_datacard(
     statistics, one groupBy aggregates them; the corpus never shuffles
     (only the per-row stat rows do, map-side combined).
     """
+    rsd = 0.01
+    accuracy = 10_000
     q = F.round(quality_score(text_col), 2)
     per = df.select(
         *[F.col(c) for c in by],
@@ -369,8 +369,6 @@ def token_divergence_report(
 
 def boilerplate_ngram_report(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     min_doc_frac: float = 0.01,
     top_k: int = 100,
@@ -396,6 +394,8 @@ def boilerplate_ngram_report(
     window. Determinism: ties break on the gram string ascending, so
     the DuckDB oracle reproduces rows exactly.
     """
+    id_col = "doc_id"
+    text_col = "text"
     from ..functions.text import token_ngrams
 
     grams = df.select(

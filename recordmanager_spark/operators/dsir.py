@@ -91,14 +91,11 @@ def hashed_ngram_buckets(
     )
 
 
-def ngram_bucket_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = 1024,
-    salt: str = "dsir",
-) -> DataFrame:
+def ngram_bucket_counts(df: DataFrame, n_buckets: int = 1024) -> DataFrame:
     """(bucket, cnt) over a corpus — one explode + one map-side-combined
     groupBy; output bounded by ``n_buckets``, not corpus size."""
+    text_col = "text"
+    salt = "dsir"
     return (
         df.select(
             F.explode(
@@ -171,13 +168,13 @@ def dsir_log_ratio_micros(
     target_counts: DataFrame,
     raw_counts: DataFrame,
     n_buckets: int = 1024,
-    alpha: float = 0.5,
 ) -> list[int]:
     """Per-bucket ``round(log(p̂/q̂) * 1e6)`` as ints, Laplace-smoothed
     (α added per bucket). Two n_buckets-bounded collects; the result is
     the literal table ``dsir_score`` folds over. (Kept for callers that
     already hold count DataFrames — :func:`dsir_select` uses the fused
     :func:`tagged_bucket_counts` single-job path.)"""
+    alpha = 0.5
     t = {r["bucket"]: r["cnt"] for r in target_counts.collect()}
     r = {r["bucket"]: r["cnt"] for r in raw_counts.collect()}
     return _log_ratio_micros_from(t, r, n_buckets, alpha)
@@ -247,13 +244,13 @@ def dsir_select(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
     alpha: float = 0.5,
-    salt: str = "dsir",
-    gumbel_salt: str = "dsir-g",
 ) -> DataFrame:
     """End-to-end DSIR: estimate p (``target``) and q (``df``), score,
     and keep the Gumbel top-``k`` (ties on the micro score break to the
     smaller id). Two bounded stat passes + one scan-stage scoring pass +
     a top-k merge; the corpus never shuffles."""
+    salt = "dsir"
+    gumbel_salt = "dsir-g"
     counts = tagged_bucket_counts(
         [(0, target), (1, df)], text_col, n_buckets, salt
     )

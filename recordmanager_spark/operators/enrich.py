@@ -15,11 +15,9 @@ Behavioral spec (reference, NOT code):
   an authority table.
 
 Spark-first: every one of these is a LEFT equi-join against a small-to-
-medium lookup DataFrame. Lookup sides are broadcast by default (vocabulary/
-cache/authority tables are MBs, records are TBs) so enrichment never
-shuffles the record side — the plan stays narrow per partition. For lookup
-tables too large to broadcast, pass ``broadcast_lookup=False`` and bucket
-both sides on the join key instead.
+medium lookup DataFrame. Lookup sides are broadcast (vocabulary/cache/
+authority tables are MBs, records are TBs) so enrichment never shuffles
+the record side — the plan stays narrow per partition.
 """
 
 from __future__ import annotations
@@ -31,19 +29,12 @@ from ..functions import geo as GEO
 from recordmanager_spark.sparkcompat import try_element_at
 
 
-def _maybe_broadcast(df: DataFrame, broadcast: bool) -> DataFrame:
-    return F.broadcast(df) if broadcast else df
-
-
 def enrich_with_entities(
     records: DataFrame,
     entities: DataFrame,
     id_col: str,
     uri_col: str,
     out_col: str = "topic_add",
-    entity_uri: str = "uri",
-    label_cols: tuple[str, ...] = ("pref_labels", "alt_labels"),
-    broadcast_lookup: bool = True,
     max_map_entries: int = 2_000,
 ) -> DataFrame:
     """Add an array column of labels gathered from matched entities.
@@ -64,6 +55,8 @@ def enrich_with_entities(
     for the join itself, and only the exploded (rid, label-array) hit rows
     — far smaller than the records — move in the gather shuffle.
     """
+    entity_uri = "uri"
+    label_cols = ("pref_labels", "alt_labels")
     ent_rows = None
     if max_map_entries:
         limited = entities.select(
@@ -104,7 +97,7 @@ def enrich_with_entities(
         F.col(id_col).alias("__rid"),
         F.posexplode_outer(uri_col).alias("__pos", "__uri"),
     )
-    joined = exploded.join(_maybe_broadcast(ent, broadcast_lookup), "__uri", "left")
+    joined = exploded.join(F.broadcast(ent), "__uri", "left")
     # unmatched URIs join to NULL labels; coalesce before collecting, since
     # flatten() of an array containing NULL elements is NULL. Sorting by the
     # original position keeps the reference's per-record URI iteration order.
@@ -131,22 +124,21 @@ def geocode_locations(
     records: DataFrame,
     cache: DataFrame,
     location_col: str,
-    cache_key: str = "location",
-    cache_wkt: str = "wkt",
-    wkt_out: str = "location_geo",
-    center_out: str = "center_coords",
-    broadcast_lookup: bool = True,
 ) -> DataFrame:
     """Join the geocode cache and derive center coordinates from the WKT.
 
     The reference's term-simplification retries happen at cache-fill time;
     the steady-state hot path is exactly this lookup (uriCache semantics).
     """
+    cache_key = "location"
+    cache_wkt = "wkt"
+    wkt_out = "location_geo"
+    center_out = "center_coords"
     c = cache.select(
         F.col(cache_key).alias("__loc"), F.col(cache_wkt).alias(wkt_out)
     )
     out = records.join(
-        _maybe_broadcast(c, broadcast_lookup),
+        F.broadcast(c),
         F.col(location_col) == F.col("__loc"),
         "left",
     ).drop("__loc")
@@ -200,13 +192,8 @@ def geocode_with_simplification(
     location_col: str,
     *,
     id_col: str = "_id",
-    cache_key: str = "location",
-    cache_wkt: str = "wkt",
-    wkt_out: str = "location_geo",
     optional_terms: tuple[str, ...] = (),
     blocklist: tuple[str, ...] = (),
-    max_levels: int = 5,
-    broadcast_lookup: bool = True,
 ) -> DataFrame:
     """Geocode with the reference's retry-with-simplification ladder
     (NominatimGeocoder.php:262-345) against an offline cache.
@@ -218,6 +205,10 @@ def geocode_with_simplification(
     simplification level wins — same first-hit-wins semantics, one shuffle
     of only the (id, candidate) pairs. Blocklisted locations never geocode.
     """
+    cache_key = "location"
+    cache_wkt = "wkt"
+    wkt_out = "location_geo"
+    max_levels = 5
     loc = F.col(location_col)
     blocked = F.lit(False)
     for pat in blocklist:
@@ -252,7 +243,7 @@ def geocode_with_simplification(
     c = cache.select(
         F.col(cache_key).alias("__cand"), F.col(cache_wkt).alias("__wkt")
     )
-    hits = cand.join(_maybe_broadcast(c, broadcast_lookup), "__cand")
+    hits = cand.join(F.broadcast(c), "__cand")
     best = hits.groupBy("__rid").agg(
         F.min(F.struct(F.col("__lvl"), F.col("__cand"), F.col("__wkt"))).alias("__b")
     )
@@ -278,13 +269,6 @@ def resolve_links(
     records: DataFrame,
     targets: DataFrame,
     link_col: str,
-    source_col: str = "source_id",
-    id_prefix_col: str | None = None,
-    target_source: str = "source_id",
-    target_linking: str = "linking_id",
-    target_id: str = "_id",
-    out_col: str = "resolved_id",
-    broadcast_lookup: bool = True,
     alt_link_col: str | None = None,
 ) -> DataFrame:
     """MARC $w resolution: (source_id, link) → stored id, else prefixed id.
@@ -299,6 +283,11 @@ def resolve_links(
     $w. Unresolved links are prefixed from the RAW id (the fallback
     column when given), mirroring ``$this->idPrefix . '.' . $targetId``.
     """
+    source_col = "source_id"
+    target_source = "source_id"
+    target_linking = "linking_id"
+    target_id = "_id"
+    out_col = "resolved_id"
     t = targets
     from pyspark.sql import types as T
 
@@ -316,7 +305,7 @@ def resolve_links(
         )
     t = t.dropDuplicates(["__tsrc", "__tlink"])
     joined = records.join(
-        _maybe_broadcast(t, broadcast_lookup),
+        F.broadcast(t),
         (F.col(source_col) == F.col("__tsrc")) & (F.col(link_col) == F.col("__tlink")),
         "left",
     )
@@ -329,19 +318,15 @@ def resolve_links(
             F.col("__tid").alias("__tid2"),
         )
         joined = joined.join(
-            _maybe_broadcast(t2, broadcast_lookup),
+            F.broadcast(t2),
             (F.col(source_col) == F.col("__tsrc2"))
             & (F.col(alt_link_col) == F.col("__tlink2")),
             "left",
         )
         resolved = F.coalesce(resolved, F.col("__tid2"))
-    prefix = (
-        F.col(id_prefix_col)
-        if id_prefix_col
-        else F.col(source_col)
-    )
     out = joined.withColumn(
-        out_col, F.coalesce(resolved, F.concat(prefix, F.lit("."), raw))
+        out_col,
+        F.coalesce(resolved, F.concat(F.col(source_col), F.lit("."), raw)),
     ).drop("__tsrc", "__tlink", "__tid")
     return out.drop("__tsrc2", "__tlink2", "__tid2") if alt_link_col else out
 
@@ -350,34 +335,24 @@ def enrich_authors(
     records: DataFrame,
     authorities: DataFrame,
     author_id_col: str,
-    auth_id: str = "auth_id",
-    variants_col: str = "variant_names",
-    out_col: str = "author_variant",
-    broadcast_lookup: bool = True,
 ) -> DataFrame:
     """Author-id → authority variant names (AuthEnrichment semantics)."""
+    auth_id = "auth_id"
+    variants_col = "variant_names"
+    out_col = "author_variant"
     a = authorities.select(
         F.col(auth_id).alias("__aid"),
         F.coalesce(F.col(variants_col), F.array()).alias(out_col),
     )
     out = records.join(
-        _maybe_broadcast(a, broadcast_lookup),
+        F.broadcast(a),
         F.col(author_id_col) == F.col("__aid"),
         "left",
     ).drop("__aid")
     return out.withColumn(out_col, F.coalesce(F.col(out_col), F.array()))
 
 
-def enrich_music_ids(
-    records: DataFrame,
-    mb_lookup: DataFrame,
-    id_col: str = "_id",
-    title_col: str = "title_short",
-    music_ids_col: str = "music_ids",
-    pub_numbers_col: str = "publisher_numbers",
-    out_col: str = "mbid_str_mv",
-    broadcast_lookup: bool = True,
-) -> DataFrame:
+def enrich_music_ids(records: DataFrame, mb_lookup: DataFrame) -> DataFrame:
     """MusicBrainz-id enrichment (Enrichment/MusicBrainzEnrichment.php:78-140).
 
     records[music_ids] is array<struct<type,value>>; types map isrc→isrc,
@@ -391,6 +366,11 @@ def enrich_music_ids(
     Offline-join form of the reference's rate-limited HTTP queries: the
     lookup broadcasts, the record side stays narrow plus one gather.
     """
+    id_col = "_id"
+    title_col = "title_short"
+    music_ids_col = "music_ids"
+    pub_numbers_col = "publisher_numbers"
+    out_col = "mbid_str_mv"
     from ..functions.keys import normalize_key
 
     mb = mb_lookup.select(
@@ -399,7 +379,7 @@ def enrich_music_ids(
         F.col("title").alias("__mbtitle"),
         F.col("mbid").alias("__mbid"),
     )
-    mb = _maybe_broadcast(mb, broadcast_lookup)
+    mb = F.broadcast(mb)
 
     base = records.select(
         F.col(id_col).alias("__rid"),
@@ -501,8 +481,6 @@ def uri_cache_split(
     cache: DataFrame,
     now: "int | float",
     max_age_minutes: int = DEFAULT_CACHE_EXPIRATION_MINUTES,
-    id_col: str = "_id",
-    broadcast_cache: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Split enrichment requests into (hits, misses) against the uriCache.
 
@@ -513,13 +491,14 @@ def uri_cache_split(
     ``timestamp > now - maxCacheAge`` filter, AbstractEnrichment.php:217).
     ``now`` is explicit so runs are deterministic and retryable.
     """
+    id_col = "_id"
     cutoff = float(now) - max_age_minutes * 60
     fresh = cache.where(F.col("timestamp") > cutoff).select(
         F.col("_id").alias("__uc_id"),
         F.col("data").alias("data"),
     )
     joined = requests.join(
-        _maybe_broadcast(fresh, broadcast_cache),
+        F.broadcast(fresh),
         requests[id_col] == F.col("__uc_id"),
         "left",
     )
@@ -528,11 +507,10 @@ def uri_cache_split(
     return hits, misses
 
 
-def uri_cache_upsert(
-    cache: DataFrame, fetched: DataFrame, id_col: str = "_id"
-) -> DataFrame:
+def uri_cache_upsert(cache: DataFrame, fetched: DataFrame) -> DataFrame:
     """Upsert fetched rows into the cache (same-id rows are replaced —
     saveUriCache overwrites by _id, AbstractEnrichment.php:317-326)."""
+    id_col = "_id"
     keep = cache.join(
         fetched.select(F.col(id_col).alias("__new_id")),
         cache[id_col] == F.col("__new_id"),
@@ -541,13 +519,7 @@ def uri_cache_upsert(
     return keep.unionByName(fetched.select(*keep.columns))
 
 
-def fetch_uris(
-    misses: DataFrame,
-    fetcher,
-    now: "int | float",
-    id_col: str = "_id",
-    url_col: str = "url",
-) -> DataFrame:
+def fetch_uris(misses: DataFrame, fetcher, now: "int | float") -> DataFrame:
     """Apply a fetcher to the miss worklist, producing uriCache rows.
 
     ``fetcher(url) -> str`` runs inside an Arrow-batched mapInPandas over
@@ -555,6 +527,8 @@ def fetch_uris(
     the single network boundary; pass a deterministic fake for tests or an
     HTTP client in a connected deployment.
     """
+    id_col = "_id"
+    url_col = "url"
     import pandas as pd  # noqa: PLC0415
 
     ts = float(now)

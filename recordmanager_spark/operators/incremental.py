@@ -31,19 +31,6 @@ def changed_since(df: DataFrame, ts_col: str, watermark: Any, slack_seconds: int
     return df.filter(F.col(ts_col) >= wm)
 
 
-def mark_unseen_deleted(
-    stored: DataFrame, seen_ids: DataFrame, id_col: str, deleted_col: str = "deleted"
-) -> DataFrame:
-    """Records in ``stored`` whose id is absent from ``seen_ids`` get
-    deleted=true (full-list deletion diff). Returns stored with the flag
-    recomputed. ``seen_ids`` must have column ``id_col``."""
-    seen = seen_ids.select(F.col(id_col)).distinct().withColumn("__seen", F.lit(True))
-    joined = stored.join(F.broadcast(seen), on=id_col, how="left")
-    return joined.withColumn(
-        deleted_col, F.when(F.col("__seen").isNull(), F.lit(True)).otherwise(F.col(deleted_col))
-    ).drop("__seen")
-
-
 def unseen_ids(stored: DataFrame, seen_ids: DataFrame, id_col: str) -> DataFrame:
     """Just the ids that disappeared (anti-join form)."""
     return stored.select(id_col).join(seen_ids.select(id_col), on=id_col, how="left_anti")
@@ -57,13 +44,13 @@ def once_per_group(df: DataFrame, group_col: str) -> DataFrame:
 def propagate_dirty_to_hosts(
     records: DataFrame,
     changed: DataFrame,
-    host_link_col: str = "host_record_id",
-    link_col: str = "linking_id",
-    source_col: str = "source_id",
 ) -> DataFrame:
     """Hosts whose components changed become update_needed (StoreRecordTrait
     .php:232-286): join changed components' host ids to host linking ids
     within the same source."""
+    host_link_col = "host_record_id"
+    link_col = "linking_id"
+    source_col = "source_id"
     comp_links = (
         changed.select(source_col, F.explode(host_link_col).alias("__hlink"))
         .distinct()

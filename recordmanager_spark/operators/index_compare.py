@@ -105,7 +105,6 @@ def compare_index_docs(
     indexed: DataFrame,
     id_col: str = "id",
     fields: list[str] | None = None,
-    ignore_fields: tuple[str, ...] = DEFAULT_IGNORE_FIELDS,
     skip_missing: bool = False,
 ) -> DataFrame:
     """Field-level diff of would-be index docs (``records``) against the
@@ -116,6 +115,7 @@ def compare_index_docs(
     array<string>) — ``added`` = values the new doc would introduce,
     ``removed`` = currently-indexed values it would drop; both sorted
     for deterministic comparison, only non-empty diffs emitted."""
+    ignore_fields = DEFAULT_IGNORE_FIELDS
     new = _melt(records, id_col, "new_vals")
     old = _melt(indexed, id_col, "old_vals")
     if fields:
@@ -166,8 +166,6 @@ def check_index(
     records: DataFrame,
     dedup: DataFrame | None = None,
     id_col: str = "id",
-    format_col: str = "record_format",
-    deleted_col: str = "deleted",
     updated_col: str | None = None,
 ) -> DataFrame:
     """Orphaned index rows: indexed docs whose backing record is gone
@@ -178,6 +176,8 @@ def check_index(
     reason ∈ {'missing', 'deleted'} — the reference's report line /
     buffered-delete list as a DataFrame (feed it to the Solr sink's
     delete batching to complete the non-report path)."""
+    format_col = "record_format"
+    deleted_col = "deleted"
 
     def probe(side: DataFrame, backing: DataFrame, merged: bool) -> DataFrame:
         cols = [F.col(id_col).cast("string").alias("__bid"),

@@ -32,16 +32,6 @@ from pyspark.sql import functions as F
 from ..functions.keys import array_iunique
 
 
-def member_score(title_col: Column, n_fields: Column) -> Column:
-    """Reference scoring: non-empty field count + title length; ALL-CAPS
-    titles count half (SolrUpdater.php:2612-2650)."""
-    tl = F.coalesce(F.length(title_col), F.lit(0))
-    allcaps = title_col.isNotNull() & (F.upper(title_col) == title_col) & (
-        F.lower(title_col) != title_col
-    )
-    return n_fields + F.when(allcaps, tl / 2).otherwise(tl)
-
-
 def merge_groups(
     df: DataFrame,
     group_col: str,
@@ -103,25 +93,6 @@ def merge_groups(
     return ranked.groupBy(F.col(group_col).alias(id_col)).agg(*aggs)
 
 
-def merged_and_members(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    **kwargs,
-) -> tuple[DataFrame, DataFrame]:
-    """The full processDedupRecord output: (merged docs, member docs
-    annotated with merged_child_boolean + local_ids)."""
-    merged = merge_groups(df, group_col, id_col, **kwargs).withColumn(
-        "record_format", F.lit("merged")
-    ).withColumn("merged_boolean", F.lit(True))
-    w = Window.partitionBy(group_col)
-    members = (
-        df.withColumn("merged_child_boolean", F.lit(True))
-        .withColumn("local_ids", F.sort_array(F.collect_list(id_col).over(w)))
-    )
-    return merged, members
-
-
 # Formats the componentParts policy treats as journals (SolrUpdater reads
 # these from config: journal_formats / earticle_formats; defaults mirror
 # SolrUpdater.php:219-227).
@@ -139,8 +110,6 @@ def is_hidden_component_part(
     fmt: Column,
     *,
     component_parts: str = "merge_all",
-    article_formats: Sequence[str] = ARTICLE_FORMATS,
-    earticle_formats: Sequence[str] = EARTICLE_RECORD_FORMATS,
 ) -> Column:
     """Column predicate for MetadataUtils::isHiddenComponentPart (:947-973).
 
@@ -151,6 +120,8 @@ def is_hidden_component_part(
     either merge mode (a quirk preserved here: the two modes share one
     branch body).
     """
+    article_formats = ARTICLE_FORMATS
+    earticle_formats = EARTICLE_RECORD_FORMATS
     is_component = host_record_id.isNotNull()
     if component_parts == "merge_all":
         return is_component
@@ -167,18 +138,7 @@ def merge_component_parts(
     components: DataFrame,
     *,
     component_parts: str = "merge_all",
-    id_col: str = "_id",
-    linking_col: str = "linking_id",
-    format_col: str = "format",
-    date_col: str = "date",
-    source_col: str = "source_id",
-    host_link_col: str = "host_record_id",
-    deleted_col: str = "deleted",
-    suppressed_col: str = "suppressed",
     component_sources: Sequence[str] | None = None,
-    max_components: int = 10000,
-    journal_formats: Sequence[str] = JOURNAL_FORMATS,
-    earticle_formats: Sequence[str] = EARTICLE_FORMATS,
 ) -> DataFrame:
     """Component-part merge policy (SolrUpdater.php:1928-1993).
 
@@ -207,6 +167,17 @@ def merge_component_parts(
     (source, link) — both sides shuffle by that key only; per-host gather
     is one groupBy with map-side partials.
     """
+    id_col = "_id"
+    linking_col = "linking_id"
+    format_col = "format"
+    date_col = "date"
+    source_col = "source_id"
+    host_link_col = "host_record_id"
+    deleted_col = "deleted"
+    suppressed_col = "suppressed"
+    max_components = 10000
+    journal_formats = JOURNAL_FORMATS
+    earticle_formats = EARTICLE_FORMATS
     host_fmt = F.coalesce(F.col(format_col), F.lit(""))
     is_journal = host_fmt.isin(*journal_formats) | host_fmt.isin(*earticle_formats)
     merge_ok = (

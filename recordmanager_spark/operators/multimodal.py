@@ -7,8 +7,7 @@ real and tested, and so are the decoders for every SELF-DESCRIBING
 format a pure-stdlib parser can handle:
 
 - container sniffing (magic bytes): PNG/JPEG/GIF/BMP/WebP/WAV/MP3/
-  MP4/PDF — JVM-side as a Column expression (``sniff_mime_expr``) and
-  Python-side for the Arrow stages (``sniff_mime``);
+  MP4/PDF — Python-side for the Arrow stages (``sniff_mime``);
 - image dimensions without pixel decode: PNG IHDR, GIF logical screen,
   BMP BITMAPINFOHEADER, JPEG SOF marker walk (``png_dims`` /
   ``gif_dims`` / ``bmp_dims`` / ``jpeg_dims``);
@@ -38,31 +37,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = (
-    "id long, payload binary, mime string, meta map<string,string>"
-)
 
 FEATURE_SCHEMA = "id long, sha256 string, byte_len int, feature array<float>"
-
-
-def attach_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Cheap JVM-side metadata: byte length + sha256 of the payload."""
-    return df.withColumn("byte_len", F.length(F.col(payload_col))).withColumn(
-        "sha256", F.sha2(F.col(payload_col), 256)
-    )
-
-
-def repartition_by_bytes(
-    df: DataFrame, payload_col: str, target_bytes: int = 128 * 1024 * 1024
-) -> DataFrame:
-    """Repartition so each partition holds ~target_bytes of payload —
-    the unit that matters for Python decode stages, not row count."""
-    total = df.agg(F.sum(F.length(F.col(payload_col)))).collect()[0][0] or 0
-    n = max(1, int(total / target_bytes) + 1)
-    return df.repartition(n)
 
 
 # (magic prefix hex, offset, mime) — longest prefixes first so WebP
@@ -82,22 +60,9 @@ _MAGIC = [
 ]
 
 
-def sniff_mime_expr(payload_col: Column | str) -> Column:
-    """JVM-side magic-byte container sniffing — a scan-stage Column
-    expression (no Python), for routing payloads to per-format decode
-    stages. Returns NULL for unrecognized/NULL payloads."""
-    c = F.col(payload_col) if isinstance(payload_col, str) else payload_col
-    out = F.lit(None).cast("string")
-    for hexpfx, off, mime in reversed(_MAGIC):
-        n = len(hexpfx) // 2
-        out = F.when(
-            F.hex(F.substring(c, off + 1, n)) == F.lit(hexpfx), mime
-        ).otherwise(out)
-    return out
-
-
 def sniff_mime(payload: bytes | None) -> str | None:
-    """Python twin of :func:`sniff_mime_expr` for Arrow stages."""
+    """Container MIME type from the payload's magic bytes, None when
+    unrecognized."""
     if not payload:
         return None
     for hexpfx, off, mime in _MAGIC:
@@ -475,12 +440,12 @@ MEDIA_PROBE_SCHEMA = (
 )
 
 
-def media_probe(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def media_probe(df: DataFrame) -> DataFrame:
     """mapInPandas media probe: sniff the container and run the REAL
     per-format decoder — image dims (PNG/GIF/BMP/JPEG headers), WAV
     meta + PCM RMS, BMP pixel aHash. Unknown/corrupt payloads yield
-    NULL fields, never a crashed stage. Streams Arrow batches; pair
-    with :func:`repartition_by_bytes` so partitions are byte-bounded."""
+    NULL fields, never a crashed stage. Streams Arrow batches."""
+    payload_col = "payload"
 
     def probe_one(b) -> tuple:
         p = bytes(b) if b is not None else b""
@@ -566,21 +531,19 @@ def resize_nearest(img: "np.ndarray", width: int, height: int) -> "np.ndarray":
 
 def resize_images(
     df: DataFrame,
-    payload_col: str = "payload",
     width: int = 64,
     height: int = 64,
     decoder=None,
 ) -> DataFrame:
     """mapInPandas image resize: decode → nearest-neighbor resample →
-    raw RGB bytes + dims, one Arrow-batched Python scan (pair with
-    :func:`repartition_by_bytes` — image payloads dominate row size, so
-    partitions must be byte-bounded, not row-counted). The default
+    raw RGB bytes + dims, one Arrow-batched Python scan. The default
     decoder is the container's stdlib pair (PNG/BMP pixel decoders);
     ``decoder(payload) -> ndarray | None`` injects a real imaging
     library (e.g. PIL) for the remaining formats.
     Undecodable payloads yield NULL pixel fields, never a crashed
     stage. Output pixels are C-order (height, width, 3) uint8 — the
     shape a downstream feature extractor's batch dimension expects."""
+    payload_col = "payload"
 
     def default_decoder(p: bytes) -> "np.ndarray | None":
         mime = sniff_mime(p)
@@ -628,10 +591,11 @@ def resize_images(
     return df.mapInPandas(op, schema=RESIZE_SCHEMA)
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: streams Arrow batches through a
     Python stage. The "feature" is a deterministic 8-float fake (STUB for
     a real CNN/audio embedding); the batch plumbing is the real thing."""
+    payload_col = "payload"
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

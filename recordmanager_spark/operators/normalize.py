@@ -61,12 +61,13 @@ def hierarchical_facet(col: Column) -> Column:
 ALLFIELDS_EXCLUDED = ("fullrecord", "thumbnail", "id", "recordtype", "record_format", "ctrlnum")
 
 
-def allfields(df: DataFrame, columns: list[str] | None = None) -> Column:
-    """Union of the given columns' values, case-insensitively uniqued.
+def allfields(df: DataFrame) -> Column:
+    """Union of the values of every column outside ALLFIELDS_EXCLUDED,
+    case-insensitively uniqued.
 
     Scalars contribute themselves; array columns contribute each element.
     """
-    cols = columns or [
+    cols = [
         f.name for f in df.schema.fields if f.name not in ALLFIELDS_EXCLUDED
     ]
     parts = []
@@ -128,10 +129,8 @@ def _limit_for(field: str, limits: dict[str, int]) -> int | None:
 
 def normalize_fields(
     df: DataFrame,
-    columns: list[str] | None = None,
     limits: dict[str, int] | None = None,
     non_indexed: list[str] | None = None,
-    unicode_normalize: bool = True,
     barrier: bool = False,
 ) -> DataFrame:
     """The normalizeFields pass over string / array<string> columns.
@@ -144,11 +143,11 @@ def normalize_fields(
     fails with INTERNAL_ERROR at runtime. Plain table columns (the normal
     pre-sink case, where extraction was persisted first) don't need it.
     """
-    if barrier and unicode_normalize:
+    if barrier:
         df = df.mapInArrow(lambda batches: batches, df.schema)
     limits = limits or {}
     non_indexed = non_indexed or []
-    cols = columns or [
+    cols = [
         f.name
         for f in df.schema.fields
         if isinstance(f.dataType, T.StringType)
@@ -164,18 +163,14 @@ def normalize_fields(
         lim = _limit_for(name, limits)
         dt = df.schema[name].dataType
         if isinstance(dt, T.ArrayType):
-            c = F.col(name)
-            if unicode_normalize:
-                c = normalize_unicode_array(c)
+            c = normalize_unicode_array(F.col(name))
             if lim:
                 c = F.transform(c, lambda v: F.substring(v, 1, lim))
             if non_indexed:
                 c = F.array_except(c, F.array(*[F.lit(x) for x in non_indexed]))
             updates[name] = F.array_distinct(c)
         else:
-            c = F.col(name)
-            if unicode_normalize:
-                c = normalize_unicode(c)
+            c = normalize_unicode(F.col(name))
             if lim:
                 c = F.substring(c, 1, lim)
             if non_indexed:

@@ -52,7 +52,6 @@ def cap_per_group(
     group_cols: list[str],
     cap: int,
     id_col: str = "doc_id",
-    salt: str = "cap",
 ) -> DataFrame:
     """Thin each group to ~``cap`` rows, deterministically and with
     bounded state — the RefinedWeb/C4-style per-domain (or per-source)
@@ -84,6 +83,7 @@ def cap_per_group(
     exact per-group rank is a window over an unbounded hot key (the r6
     ADVICE class). Rank on quality instead by pre-filtering with
     ``quality_buckets`` / ``nb_quality`` scores, then capping."""
+    salt = "cap"
     sizes = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("__gn"),
         F.min_by(F.col(id_col), unit_hash(F.col(id_col), salt)).alias(
@@ -106,7 +106,6 @@ def pack_sequences(
     tokens_col: str = "n_tokens",
     budget: int = 2048,
     shard_col: str | None = None,
-    num_shards: int | None = None,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing (GPT-2/3 appendix-style).
 
@@ -124,26 +123,12 @@ def pack_sequences(
     what large pipelines actually use because it is a pure prefix sum —
     one window aggregation, fully parallel across shards.
 
-    Pass ``shard_col`` to use an existing shard assignment, or
-    ``num_shards`` to derive one as ``pmod(hash, n)`` of the id. With
-    neither, everything packs in one shard (fine for tests; a global
+    Pass ``shard_col`` to use an existing shard assignment; without it,
+    everything packs in one shard (fine for tests; a global
     single-partition sort at scale — don't).
     """
     if shard_col is None:
-        if num_shards:
-            df = df.withColumn(
-                "shard",
-                F.pmod(
-                    F.conv(
-                        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.lit(num_shards),
-                ),
-            )
-        else:
-            df = df.withColumn("shard", F.lit(0))
+        df = df.withColumn("shard", F.lit(0))
         shard_col = "shard"
     elif shard_col != "shard":
         df = df.withColumn("shard", F.col(shard_col))
@@ -173,7 +158,6 @@ def mix_sources(
     *,
     source_col: str = "source",
     id_col: str = "doc_id",
-    default_weight: float = 1.0,
     salt: str = "mix",
 ) -> DataFrame:
     """Epoch-weighted source mixing with deterministic fractional repeats.
@@ -187,6 +171,7 @@ def mix_sources(
     sources), the repeat expansion is ``explode(sequence())`` — map-side
     only, rows never shuffle.
     """
+    default_weight = 1.0
     w_expr: Column = F.lit(float(default_weight))
     for src, w in weights.items():
         w_expr = (
@@ -207,8 +192,6 @@ def mix_sources(
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_chars: int = 2048,
     overlap: int = 256,
 ) -> DataFrame:
@@ -228,6 +211,7 @@ def chunk_documents(
     chunking needs the tokenizer and belongs in the loader;
     ``pack_sequences`` handles the token-budget assembly stage.
     """
+    text_col = "text"
     if overlap >= chunk_chars:
         raise ValueError(
             f"overlap ({overlap}) must be smaller than chunk_chars "
@@ -271,10 +255,7 @@ def quality_buckets(
     df: DataFrame,
     score_col: str,
     by: str = "lang",
-    cuts: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-    broadcast_thresholds: bool = True,
     approach: str = "approx",
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """CCNet-style quality bucketing (Wenzek et al. 2020 §4.3): within
     each ``by`` group (language), score percentiles at ``cuts`` split
@@ -304,6 +285,8 @@ def quality_buckets(
     group's percentiles); assignment is a scan-stage comparison. The
     corpus never shuffles.
     """
+    cuts = (1.0 / 3.0, 2.0 / 3.0)
+    accuracy = 10_000
     if approach == "exact":
         q1 = F.expr(f"percentile({score_col}, {cuts[0]!r})")
         q2 = F.expr(f"percentile({score_col}, {cuts[1]!r})")
@@ -321,8 +304,7 @@ def quality_buckets(
         .agg(q1.alias("__q1"), q2.alias("__q2"))
         .withColumnRenamed(by, "__qb_grp")
     )
-    if broadcast_thresholds:
-        th = F.broadcast(th)
+    th = F.broadcast(th)
     out = df.join(th, df[by].eqNullSafe(th["__qb_grp"]), "left").drop("__qb_grp")
     s = F.col(score_col)
     return out.withColumn(
@@ -339,7 +321,6 @@ def temperature_mix(
     source_col: str = "source",
     id_col: str = "doc_id",
     temperature: float = 2.0,
-    target_rows: int | None = None,
     salt: str = "tmix",
 ) -> DataFrame:
     """Temperature-flattened source mixing: p_s ∝ f_s^(1/τ).
@@ -349,7 +330,7 @@ def temperature_mix(
     to 1/temperature and renormalized, so τ>1 upsamples small sources
     and downsamples dominant ones; τ=1 is proportional passthrough.
     Per-source epoch weights are derived so expected output rows ≈
-    ``target_rows`` (default: the corpus size) under the flattened
+    the corpus size under the flattened
     distribution, then applied with mix_sources' deterministic
     fractional-epoch expansion (``rep`` ordinal column).
 
@@ -363,12 +344,11 @@ def temperature_mix(
     total = sum(counts.values())
     if not total:
         return df.withColumn("rep", F.lit(0)).where(F.lit(False))
-    target = target_rows if target_rows is not None else total
     powered = {
         s: (n / total) ** (1.0 / temperature) for s, n in counts.items()
     }
     z = sum(powered.values())
-    weights = {s: (powered[s] / z) * target / counts[s] for s in counts}
+    weights = {s: (powered[s] / z) * total / counts[s] for s in counts}
     return mix_sources(
         df, weights, source_col=source_col, id_col=id_col, salt=salt
     )
@@ -406,8 +386,6 @@ def train_val_test_split(
     fractions: tuple[float, ...] = (0.98, 0.01, 0.01),
     labels: tuple[str, ...] = ("train", "val", "test"),
     id_col: str = "doc_id",
-    salt: str = "split",
-    split_col: str = "split",
 ) -> DataFrame:
     """Deterministic corpus split by cumulative hash intervals.
 
@@ -420,6 +398,8 @@ def train_val_test_split(
 
     Scale: one scan-stage comparison chain, zero shuffles.
     """
+    salt = "split"
+    split_col = "split"
     if len(fractions) != len(labels):
         raise ValueError(
             f"{len(fractions)} fractions vs {len(labels)} labels"
@@ -446,7 +426,6 @@ def train_val_test_split(
 def corpus_token_stats(
     df: DataFrame,
     by: tuple[str, ...] = ("source", "lang"),
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-group token-budget report for mixture planning: documents,
     whitespace tokens, BPE-ish subword tokens, characters, mean doc
@@ -460,6 +439,7 @@ def corpus_token_stats(
     those few grouped rows — NOT a second aggregation branch, which
     would re-scan the corpus.
     """
+    text_col = "text"
     from pyspark.sql import Window
 
     from ..functions.text import bpe_ish_token_count, token_count
@@ -492,11 +472,9 @@ def shuffle_shards(
     (a) uniformly shuffled, (b) reproducible from a seed, and (c)
     computable WITHOUT a global sort — at 100 TB a true orderBy is a
     full-corpus range shuffle, while hash sharding is a pure scan-stage
-    projection here (ZERO shuffles; the shard becomes the output file
-    via ``write_shuffled_shards``, which pays exactly one partitioning
-    pass). Changing ``seed`` reshuffles everything; re-running with the
-    same seed is byte-stable, so shard manifests can be diffed across
-    pipeline re-runs.
+    projection here (ZERO shuffles). Changing ``seed`` reshuffles
+    everything; re-running with the same seed is byte-stable, so shard
+    manifests can be diffed across pipeline re-runs.
 
     Returns the input plus (shard int, sort_key string) — order within
     a shard = sort_key order; hex15-of-md5 keeps the shard modulus
@@ -547,29 +525,6 @@ def shard_manifest(
         sharded.withColumn("__mh", member_hash)
         .groupBy("shard")
         .agg(*aggs)
-    )
-
-
-def write_shuffled_shards(
-    df: DataFrame,
-    id_col: str,
-    path: str,
-    n_shards: int,
-    seed: str = "0",
-    fmt: str = "parquet",
-) -> None:
-    """Materialize the deterministic shuffle: one partitioning pass on
-    the shard id, rows sorted by sort_key WITHIN each shard (a
-    sortWithinPartitions, never a global sort), one output
-    file-per-shard layout a training loader can stream in order."""
-    out = shuffle_shards(df, id_col, n_shards, seed)
-    (
-        out.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "sort_key")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .format(fmt)
-        .save(path)
     )
 
 

@@ -184,7 +184,6 @@ def knn_pq(
     codebooks: list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    code_col: str = "pq_code",
     k: int = 5,
     rerank: DataFrame | None = None,
     shortlist: int = 50,
@@ -207,6 +206,7 @@ def knn_pq(
     recall jumps to near-exact while the corpus-wide scan still touches
     only code bytes: the exact pass reads ``queries x shortlist``
     vectors, never the corpus."""
+    code_col = "pq_code"
     m_ = len(codebooks)
     sub = len(codebooks[0][0])
     books_lit = _nested_lit(codebooks)
@@ -358,8 +358,6 @@ def ivfadc_write_index(
     coarse: list,
     codebooks: list,
     id_col: str = "vec_id",
-    repartition: bool = True,
-    mode: str = "overwrite",
 ) -> None:
     """Persist the IVFADC index as a catalog table PARTITIONED BY cell.
 
@@ -374,16 +372,18 @@ def ivfadc_write_index(
     no shuffle to co-locate away — the query side broadcasts — so the
     win is scan pruning, which bucket specs don't give.
 
-    ``repartition=True`` shuffles once on ``cell`` at write time so
+    The write shuffles once on ``cell`` so
     each cell is one writer task's output (no small-files explosion
     from every ingest task writing every cell); AQE splits skewed
     cells. Stored row = (id, cell, m-byte code): ~3% of a float32
     corpus at m=8, dim=64."""
-    enc = ivfadc_encode(df, vec_col, coarse, codebooks, id_col=id_col)
-    if repartition:
-        enc = enc.repartition("cell")
-    enc.write.format("parquet").mode(mode).partitionBy("cell").saveAsTable(
-        table
+    (
+        ivfadc_encode(df, vec_col, coarse, codebooks, id_col=id_col)
+        .repartition("cell")
+        .write.format("parquet")
+        .mode("overwrite")
+        .partitionBy("cell")
+        .saveAsTable(table)
     )
 
 

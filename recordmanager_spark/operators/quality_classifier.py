@@ -50,10 +50,7 @@ __all__ = ["train_nb_quality", "nb_quality_score"]
 def train_nb_quality(
     positive: DataFrame,
     negative: DataFrame,
-    text_col: str = "text",
     n_buckets: int = 1024,
-    alpha: float = 0.5,
-    salt: str = "nbq",
 ) -> dict:
     """Closed-form NB training: returns ``{"weights_micro": [int]*B,
     "prior_micro": int, "n_buckets": B, "salt": salt}``.
@@ -63,6 +60,9 @@ def train_nb_quality(
     2 * (n_buckets + 1) counters) — the un-fused form ran four jobs,
     i.e. four corpus scans at 100 TB. The driver holds B ints, never
     documents."""
+    text_col = "text"
+    alpha = 0.5
+    salt = "nbq"
     from .dsir import _log_ratio_micros_from, tagged_bucket_counts
 
     counts = tagged_bucket_counts(
@@ -88,9 +88,7 @@ def train_nb_quality(
 def nb_quality_score(
     df: DataFrame,
     model: dict,
-    text_col: str = "text",
     threshold: float = 0.5,
-    out_prefix: str = "nb_",
 ) -> DataFrame:
     """Score: ``logit = prior + (Σ weights[h(g)]) / max(n_grams, 1)``
     (fastText's mean-of-feature-vectors length normalization),
@@ -98,6 +96,8 @@ def nb_quality_score(
 
     Adds ``{prefix}logit``, ``{prefix}prob``, ``{prefix}label``.
     Scan-stage only — see module docstring."""
+    text_col = "text"
+    out_prefix = "nb_"
     arr = _long_array_lit(model["weights_micro"])
     buckets = hashed_ngram_buckets(
         text_col, model["n_buckets"], model["salt"]

@@ -56,9 +56,7 @@ def _truthy(v) -> bool:
     return str(v).strip().lower() in ("true", "1", "yes", "on")
 
 
-def per_source_xslt(
-    stylesheets: Mapping[str, str], source_col: str = "source_id"
-):
+def per_source_xslt(stylesheets: Mapping[str, str]):
     """Arrow-batched UDF applying each row's source-specific stylesheet
     (XslTransformation.php:142-172 with per-source sheets, the
     ``normalization=`` datasources.ini setting). Stylesheets compile
@@ -127,7 +125,6 @@ def renormalize_records(
     *,
     stylesheets: Mapping[str, str] | None = None,
     now=None,
-    data_col: str = "original_data",
 ) -> DataFrame:
     """The Renormalize.php pass over a records DataFrame, returning the
     updated table (same rows, refreshed normalized_data / keys / flags).
@@ -140,6 +137,7 @@ def renormalize_records(
     stages and keep stored keys/flags untouched — the reference's
     per-format driver dispatch narrowed to the formats whose drivers
     actually carry dedup-key/holdings semantics."""
+    data_col = "original_data"
     src = F.col("source_id")
     # Every fieldspec derivation below compiles through the SQL-text
     # twin (sqltwin.marc_twin): the tree composes as a string in pure

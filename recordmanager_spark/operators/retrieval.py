@@ -110,13 +110,7 @@ def build_postings(
 def bm25_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     n_partial: int = 32,
     postings: DataFrame | None = None,
     stats: DataFrame | None = None,
@@ -132,6 +126,12 @@ def bm25_topk(
     corpus ZERO times (pinned in tests/test_retrieval.py), which is
     the 100 TB serving shape.
     """
+    id_col = "doc_id"
+    text_col = "text"
+    query_id_col = "query_id"
+    query_text_col = "query_text"
+    k1 = 1.2
+    b = 0.75
     if k < 1 or n_partial < 1:
         raise ValueError(f"k={k} and n_partial={n_partial} must be >= 1")
 
@@ -240,11 +240,7 @@ def bm25_topk(
     )
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    k: int = 10,
-    c: int = 60,
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
     """Reciprocal-rank fusion of N ranked lists into one.
 
     Each input has (query_id, doc_id, rank); output is
@@ -258,6 +254,7 @@ def rrf_fuse(
     (small per query by construction), so the whole fusion is tiny
     next to the legs that produced it.
     """
+    c = 60
     if not rankings:
         raise ValueError("rrf_fuse needs at least one ranked list")
     unioned = None

@@ -24,8 +24,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from recordmanager_spark.sparkcompat import try_element_at
 
-from .bucket_pairs import capped_bucket_pairs
-
 
 def _dot(a: "Column | str", b: "Column | str", dim: int | None = None) -> Column:
     """Dot product; ``dim`` unrolls to a codegen multiply-add chain.
@@ -97,12 +95,12 @@ def knn_bruteforce(
     vec_col: str = "embedding",
     dim: int | None = None,
     k: int = 10,
-    include_self: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for every query vector.
 
-    Returns (query_id, neighbor_id, cosine, rank). The query side is
-    broadcast; ties break on neighbor id for determinism.
+    Returns (query_id, neighbor_id, cosine, rank); a query is never its
+    own neighbor. The query side is broadcast; ties break on neighbor id
+    for determinism.
     """
     # Precompute each side's norm ONCE before the cross join — inlining
     # cosine_similarity there recomputes both norms for every (query,
@@ -123,8 +121,7 @@ def knn_bruteforce(
         (_norm(vec_col, dim) if dim else _norm(as_d(F.col(vec_col)))).alias("c_norm"),
     )
     joined = c.crossJoin(F.broadcast(q))
-    if not include_self:
-        joined = joined.where(F.col("query_id") != F.col("neighbor_id"))
+    joined = joined.where(F.col("query_id") != F.col("neighbor_id"))
     scored = joined.select(
         "query_id",
         "neighbor_id",
@@ -205,39 +202,6 @@ def lsh_bucket(vec: Column, num_planes: int = 8) -> Column:
     for p in range(num_planes):
         bucket = bucket * 2 + _hyperplane_bit(vec, p)
     return bucket
-
-
-def band_buckets_udf(num_bands: int, num_planes: int):
-    """pandas_udf: embedding array → array<long> of per-band bucket ids.
-
-    Band i draws the disjoint plane range [i*p, (i+1)*p) from the SAME
-    deterministic ±1 sign table the Column-expression ``lsh_bucket`` uses
-    (plane 0 is the most-significant bit), so the two paths agree bit for
-    bit. Many-plane banding (8 bands × ~20 planes) as Column expressions
-    would inline bands*planes*dim literal sign weights into the plan —
-    the create_map plan-bloat pathology — and evaluate ~160 interpreted
-    aggregate folds per row. One Arrow batch + a single (n×d)·(d×P) numpy
-    matmul carries zero plan literals and is the fast path at any scale.
-    """
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    total = num_bands * num_planes
-    weights = np.array([_plane_signs(p) for p in range(total)])  # P × MAXDIM
-    msb_first = (2 ** np.arange(num_planes - 1, -1, -1)).astype(np.int64)
-
-    @pandas_udf(ArrayType(LongType()))
-    def _buckets(vs: pd.Series) -> pd.Series:
-        arr = np.array(vs.tolist(), dtype=np.float64)  # n × d (one model dim)
-        bits = (arr @ weights[:, : arr.shape[1]].T) >= 0  # n × P
-        per_band = [
-            bits[:, b * num_planes : (b + 1) * num_planes].astype(np.int64)
-            @ msb_first
-            for b in range(num_bands)
-        ]
-        return pd.Series(list(np.stack(per_band, axis=1)))
-
-    return _buckets
 
 
 def knn_lsh(
@@ -331,96 +295,6 @@ def exact_near_duplicates(
         ).alias("cosine"),
     )
     return pairs.where(F.col("cosine") >= threshold)
-
-
-def embedding_near_duplicates(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    num_planes: int | None = None,
-    num_bands: int = 8,
-    target_bucket_rows: int = 128,
-    dim: int | None = None,
-    bucket_cap: int = 200,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine >= threshold, banded LSH.
-
-    (id_a, id_b, cosine) with id_a < id_b. Approximate: a pair is a
-    candidate when it shares a bucket in ANY of ``num_bands`` independent
-    bands of ``num_planes`` hyperplane sign bits each.
-
-    Scale shape: one band of p planes gives 2^p buckets, so within-bucket
-    pair volume is ~n²/2^p — p must GROW with the corpus or the candidate
-    set degenerates quadratically. When ``num_planes`` is None it is sized
-    from the corpus count so expected bucket size ~= ``target_bucket_rows``
-    (p = log2(n / target)). That many planes makes a single band's recall
-    collapse — P(collide | cos=t) = (1 - arccos(t)/pi)^p — which is what
-    the bands restore: recall = 1-(1-r^p)^b. At p=20, b=8 a cos=0.99 pair
-    survives with ~0.98 probability while random pairs (r~0.5) are
-    candidates ~8/2^20 of the time.
-
-    Skew guard: plane-count sizing bounds the EXPECTED bucket, but a
-    corpus where every vector is near-identical (mirrored shards, a
-    constant embedding from a broken encoder) puts all n rows in the SAME
-    bucket of every band regardless of p — the round-6 skew soak showed
-    the uncapped self-join going quadratic there. Candidate pairs come
-    from :func:`~recordmanager_spark.operators.bucket_pairs.
-    capped_bucket_pairs`: buckets within ``bucket_cap`` get exact
-    all-pairs (codegen self-join, identical to the uncapped behavior);
-    over-cap buckets switch to hub pairs against <= cap salted-min
-    representatives, so the mega-bucket costs n*cap pairs instead of
-    n²/2 AND every beyond-cap member genuinely pairs with the hub set
-    (the round-6 slice-truncation silently dropped beyond-cap rows from
-    every band — the r6 ADVICE recall regression, fixed here and pinned
-    by tests/test_similarity.py's degenerate-corpus coverage check). No
-    aggregation buffer ever holds a full bucket: the rep picking is a
-    map-side-combinable min per (bucket, salt slot), not a collect_list.
-    """
-    as_d = (
-        (lambda v: v)
-        if dim
-        else (lambda v: F.transform(v, lambda x: x.cast("double")))
-    )
-    if num_planes is None:
-        import math
-
-        n = df.count()
-        num_planes = min(24, max(4, math.ceil(math.log2(max(n, 2) / max(target_bucket_rows, 1)))))
-    band_buckets = band_buckets_udf(num_bands, num_planes)
-    b = df.select(
-        F.col(id_col).alias("id"),
-        as_d(F.col(vec_col)).alias("vec"),
-        (_norm(vec_col, dim) if dim else _norm(as_d(F.col(vec_col)))).alias("nrm"),
-        band_buckets(F.col(vec_col)).alias("buckets"),
-    ).localCheckpoint(eager=True)  # bucket bits + norms computed once, not per join side
-    banded = b.select("id", F.posexplode("buckets").alias("band", "bucket"))
-    pairs = capped_bucket_pairs(banded, ["band", "bucket"], "id", bucket_cap)
-    # Exact cosine on the candidate list: join vectors back on the UNIQUE
-    # id key — skew-free by construction, and AQE broadcasts the pair side
-    # at runtime when it is actually small. No planted broadcast hint: the
-    # pair list is bucket-cap-bounded PER BUCKET but grows with the number
-    # of buckets (the round-6 soak's 100k near-identical corpus produced
-    # ~20M candidate pairs — hint-forced broadcasts overflowed the 8 GB
-    # HashedRelation cap exactly the way a 100 TB run would).
-    a_side = b.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("__va"), F.col("nrm").alias("__na")
-    )
-    b_side = b.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("__vb"), F.col("nrm").alias("__nb")
-    )
-    scored = (
-        pairs.join(a_side, "id_a")
-        .join(b_side, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                _dot("__va", "__vb", dim) / (F.col("__na") * F.col("__nb")), 6
-            ).alias("cosine"),
-        )
-    )
-    return scored.where(F.col("cosine") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -521,7 +395,6 @@ def knn_ivf(
     k: int = 10,
     n_cells: int = 64,
     n_probe: int = 8,
-    include_self: bool = False,
 ) -> DataFrame:
     """IVF top-k: probe the n_probe nearest cells per query, exact-score
     only those cells' members. Candidate volume ~ corpus * n_probe/n_cells.
@@ -550,9 +423,9 @@ def knn_ivf(
         .select("query_id", "q_vec", "cell")
     )
 
-    cands = probes.join(members, "cell")
-    if not include_self:
-        cands = cands.where(F.col("query_id") != F.col("neighbor_id"))
+    cands = probes.join(members, "cell").where(
+        F.col("query_id") != F.col("neighbor_id")
+    )
     scored = cands.withColumn(
         "cosine", F.round(cosine_similarity(F.col("q_vec"), F.col("c_vec")), 6)
     )
@@ -573,8 +446,6 @@ def knn_ivf(
 
 def cluster_corpus(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
     kmeans_iters: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
@@ -603,6 +474,8 @@ def cluster_corpus(
     assignment is a vectorized Arrow argmax scan, the corpus never
     shuffles; the stats groupBy moves n_cells rows per partition.
     """
+    id_col = "vec_id"
+    vec_col = "embedding"
     centroids, assigned = ivf_assign(
         corpus, id_col, vec_col, n_cells, kmeans_iters
     )
@@ -650,8 +523,7 @@ def semantic_dedup(
     dropped iff some lower-id vector in its cell is >= threshold
     similar. Cross-cell near-dups are invisible by design — that is the
     recall/cost trade the clustering buys; n_cells must scale with
-    corpus size (cells of ~constant expected size) exactly like
-    embedding_near_duplicates' plane count.
+    corpus size (cells of ~constant expected size).
 
     ``assignment``: optional precomputed (id, cell, raw) — pass
     :func:`ivf_assign`'s output to reuse an index, or a custom

@@ -206,7 +206,6 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
     rows_per_band: int = 4,
-    bucket_cap: int = 200,
 ) -> DataFrame:
     """(id_a, id_b) candidates sharing at least one LSH band.
 
@@ -219,6 +218,7 @@ def lsh_candidate_pairs(
     expansion is ever O(bucket²) — and beyond-cap members still report
     (previously they were silently truncated out of every band).
     """
+    bucket_cap = 200
     banded = signatures.select(
         "id",
         F.posexplode(_band_key_array(bands, rows_per_band)).alias(
@@ -265,8 +265,6 @@ def minhash_calibration(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_perm: int = 16,
-    shingle_n: int = 3,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Calibration report for the minhash family: per sampled pair,
@@ -286,6 +284,8 @@ def minhash_calibration(
     Scale: signatures/shingle sets are the operators' own
     map-side-combinable aggregations; the pair joins key on the unique
     id (skew-free, AQE-sized)."""
+    num_perm = 16
+    shingle_n = 3
     ids = df.select(F.col(id_col).alias("id_a"))
     if pairs is None:
         # the id+1 default needs arithmetic ids; failing HERE with the
@@ -389,13 +389,6 @@ def minhash_incremental(
     new_docs: DataFrame,
     index: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    shingle_n: int = 3,
-    est_threshold: float = 0.5,
     max_candidates: int = 200,
     broadcast_batch: bool = True,
     within_batch: bool = True,
@@ -441,6 +434,13 @@ def minhash_incremental(
     ``broadcast_batch=False`` for batch sizes past broadcast limits
     (both sides then shuffle on the band key).
     """
+    id_col = "doc_id"
+    text_col = "text"
+    num_perm = 16
+    bands = 4
+    rows_per_band = 4
+    shingle_n = 3
+    est_threshold = 0.5
     sigs_new = minhash_signature(
         new_docs, id_col, text_col, num_perm, shingle_n
     )
@@ -622,8 +622,6 @@ def simhash_near_duplicates(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    band_bits: int = 15,
-    bucket_cap: int = 2000,
 ) -> DataFrame:
     """Near-dup pairs by simhash Hamming distance <= max_hamming.
 
@@ -631,6 +629,8 @@ def simhash_near_duplicates(
     any pair within Hamming distance (bands-1) shares an identical band —
     so candidates come from an equi-join on (band, band_value), never a
     cross product. Returns (id_a, id_b, hamming)."""
+    band_bits = 15
+    bucket_cap = 2000
     # single consumer (the band explode) — plain lineage, no checkpoint
     sigs = simhash(df, id_col, text_col)
     return hamming_near_duplicates(
@@ -651,7 +651,6 @@ def hamming_near_duplicates(
     max_hamming: int = 3,
     band_bits: int | None = None,
     bucket_cap: int = 2000,
-    assume_under_cap: bool = False,
 ) -> DataFrame:
     """Near-dup pairs among 64-bit-or-less integer fingerprints by
     Hamming distance — the generic banded engine behind
@@ -672,12 +671,6 @@ def hamming_near_duplicates(
     groupBy (degenerate buckets bounded to ``bucket_cap`` members),
     one codegen shuffle-hash self-join per band bucket. Returns
     (id_a, id_b, hamming), distinct.
-
-    ``assume_under_cap=True`` skips the bucket-size census entirely
-    (caller asserts no band bucket exceeds ``bucket_cap`` — see
-    ``capped_bucket_pairs``): the census is a fixed ~0.5 s of
-    scheduler stages that dominates small interactive runs but is
-    what bounds degenerate-bucket state at corpus scale. Default off.
     """
     if band_bits is None:
         band_bits = max(1, total_bits // (max_hamming + 1))
@@ -713,7 +706,6 @@ def hamming_near_duplicates(
         payload_cols=("__h",),
         small_path="join",
         join_hint="shuffle_hash",
-        assume_under_cap=assume_under_cap,
     )
     hamming = F.bit_count(F.col("__h_a").bitwiseXOR(F.col("__h_b")))
     return pairs.where(hamming <= max_hamming).select(
@@ -774,8 +766,6 @@ def winnow_near_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    w: int = 4,
     min_shared: int = 2,
     bucket_cap: int = 200,
 ) -> DataFrame:
@@ -810,6 +800,8 @@ def winnow_near_duplicates(
     0.034 postings/char, 3.6x faster end-to-end. Small k/w is for
     short-match forensics (plagiarism), not corpus dedup.
     """
+    k = 5
+    w = 4
     from .bucket_pairs import salt_slot
 
     fp = winnow_fingerprints(df, id_col, text_col, k, w)
@@ -885,7 +877,6 @@ def line_level_dedup(
     id_col: str,
     text_col: str,
     max_docs: int = 1,
-    sep: str = "\n",
 ) -> DataFrame:
     """(id, text) with every line that appears in more than ``max_docs``
     distinct documents removed, line order otherwise preserved.
@@ -900,6 +891,7 @@ def line_level_dedup(
     merges two distinct lines' counts (~n^2/2^65: a handful of lines in
     10^10 distinct — noise for boilerplate thresholds).
     """
+    sep = "\n"
     lines = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"),
@@ -927,12 +919,7 @@ def line_level_dedup(
     )
 
 
-def paragraph_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    sep: str = "\n\n",
-) -> DataFrame:
+def paragraph_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Corpus-wide paragraph dedup (the CCNet/RefinedWeb granularity
     between exact-document and line-level): every paragraph keeps its
     GLOBAL first occurrence — ordered by (doc id, position) — and later
@@ -953,6 +940,7 @@ def paragraph_dedup(
     buffer is bounded by a single document's size. Paragraphs whose
     normalized form is empty are structural whitespace and always kept.
     """
+    sep = "\n\n"
     paras = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),

@@ -29,7 +29,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from recordmanager_spark.sparkcompat import try_element_at
 
 SENTINELS = (
     "##default",
@@ -163,46 +162,6 @@ def map_array_column(col: Column, mapping: Mapping) -> Column:
             mapped
         )
     return F.when(src_empty, F.coalesce(col, F.array())).otherwise(mapped)
-
-
-def map_hierarchy_value(levels: Column, mapping: Mapping) -> Column:
-    """Map a hierarchy value (array of levels) per level, join with '/'.
-
-    Parity with FieldMapper::mapValue's array branch: each level uses the
-    sub-map at its index (falling back to the main map); an empty mapped
-    level stops the accumulation.
-    """
-    max_levels = 10
-    acc0 = F.struct(
-        F.array().cast(T.ArrayType(T.StringType())).alias("out"),
-        F.lit(False).alias("done"),
-    )
-
-    def step(acc, i):
-        level_val = F.coalesce(try_element_at(levels, i), F.lit(""))
-        # level 1 uses the main map; level k>1 uses sub_maps[k-2] if present
-        mapped = map_value_expr(level_val, mapping)
-        for idx, sub in enumerate(mapping.sub_maps):
-            mapped = F.when(
-                i == F.lit(idx + 2), map_value_expr(level_val, sub)
-            ).otherwise(mapped)
-        mapped = F.filter(mapped, lambda x: x != "")
-        stop = acc["done"] | (F.size(mapped) == 0)
-        return F.struct(
-            F.when(stop, acc["out"])
-            .otherwise(F.concat(acc["out"], mapped))
-            .alias("out"),
-            stop.alias("done"),
-        )
-
-    # guard: sequence(1, 0) would count DOWN in Spark, so empty input gets
-    # an empty index array instead
-    idxs = F.when(
-        F.size(levels) > 0,
-        F.sequence(F.lit(1), F.least(F.size(levels), F.lit(max_levels))),
-    ).otherwise(F.array().cast(T.ArrayType(T.IntegerType())))
-    out = F.aggregate(idxs, acc0, step, lambda a: a["out"])
-    return F.array_join(out, "/")
 
 
 # ---------------------------------------------------------------------------

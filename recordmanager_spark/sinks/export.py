@@ -27,10 +27,10 @@ def export_records(
     skip: int = 0,
     xpath_predicate: str | None = None,
     sort_dedup: bool = False,
-    dedup_col: str = "dedup_id",
     inject_fields: dict[str, str] | None = None,
 ) -> DataFrame:
     """Build the export DataFrame (callers then .write it with a batch size)."""
+    dedup_col = "dedup_id"
     out = df
     if xpath_predicate:
         # validate the predicate on the driver with a 1-row probe so a typo
@@ -53,9 +53,9 @@ def export_records(
 
 
 def write_export(
-    df: DataFrame, path: str, batch_size: int | None = None, fmt: str = "json"
+    df: DataFrame, path: str, batch_size: int | None = None
 ) -> None:
     w = df.write.mode("overwrite")
     if batch_size:
         w = w.option("maxRecordsPerFile", batch_size)
-    getattr(w, fmt)(path)
+    w.json(path)

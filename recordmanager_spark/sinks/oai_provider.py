@@ -124,12 +124,8 @@ def disseminate(
     df: DataFrame,
     metadata_prefix: str,
     *,
-    transformations: Mapping[str, Callable[[], Column]] | None = None,
     sets: Mapping[str, Mapping[str, str]] | None = None,
-    id_col: str = "_id",
     oai_id_col: str | None = "oai_id",
-    updated_col: str = "updated",
-    deleted_col: str = "deleted",
     id_prefix: str = "oai:repo:",
 ) -> DataFrame:
     """Full ListRecords record envelopes for one metadataPrefix.
@@ -140,8 +136,10 @@ def disseminate(
     deleted records keep their header (status="deleted") with no metadata.
     Adds columns: oai_header, oai_metadata, oai_record.
     """
+    id_col = "_id"
+    updated_col = "updated"
+    deleted_col = "deleted"
     registry = dict(FORMAT_REGISTRY)
-    registry.update(transformations or {})
     if metadata_prefix not in registry:
         raise ValueError(f"cannotDisseminateFormat: {metadata_prefix!r}")
     header = record_header(

@@ -29,14 +29,10 @@ def write_update_batches(
     df: DataFrame,
     path: str,
     max_update_records: int = DEFAULT_MAX_UPDATE_RECORDS,
-    workers: int | None = None,
 ) -> None:
     """Write index documents as JSON-lines files of bounded batch size."""
-    out = df
-    if workers:
-        out = out.repartition(workers)
     (
-        out.write.mode("overwrite")
+        df.write.mode("overwrite")
         .option("maxRecordsPerFile", max_update_records)
         .json(path)
     )

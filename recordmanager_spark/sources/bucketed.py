@@ -134,18 +134,16 @@ def write_bucketed(
     table: str,
     key: str,
     n_buckets: int,
-    sort: bool = True,
     mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
-    """Save ``df`` as a bucketed (and by default sorted) catalog table.
+    """Save ``df`` as a bucketed, sorted catalog table.
 
-    ``sort=True`` additionally sorts each bucket file by the key so
-    downstream sort-merge joins skip their Sort as well as their
-    Exchange. The spec is also persisted as a sidecar in the table
-    location so a later process can recover it without guessing;
-    appending with a spec that differs from the sidecar raises (the
-    mismatch would silently re-shuffle or mis-bucket every probe)."""
+    Each bucket file is sorted by the key so downstream sort-merge joins
+    skip their Sort as well as their Exchange. The spec is also persisted
+    as a sidecar in the table location so a later process can recover it
+    without guessing; appending with a spec that differs from the sidecar
+    raises (the mismatch would silently re-shuffle or mis-bucket every
+    probe)."""
     spark = df.sparkSession
     if mode == "append":
         loc = (
@@ -164,10 +162,13 @@ def write_bucketed(
                     f"written with {prior}, append requested "
                     f"key={key!r} n_buckets={n_buckets}"
                 )
-    writer = df.write.format(fmt).mode(mode).bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
+    (
+        df.write.format("parquet")
+        .mode(mode)
+        .bucketBy(n_buckets, key)
+        .sortBy(key)
+        .saveAsTable(table)
+    )
     loc = _catalog_location(spark, table)
     if loc:
         write_bucket_spec(spark, loc, key, n_buckets)

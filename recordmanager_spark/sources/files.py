@@ -51,22 +51,19 @@ MARC_IN_JSON_SCHEMA = T.StructType(
 )
 
 
-def read_table(spark: SparkSession, path: str, fmt: str = "parquet", **options) -> DataFrame:
+def read_table(spark: SparkSession, path: str, **options) -> DataFrame:
+    fmt = "parquet"
     return spark.read.format(fmt).options(**options).load(path)
 
 
-def read_xml_records(
-    spark: SparkSession, path: str, row_tag: str = "record", schema: T.StructType | None = None
-) -> DataFrame:
+def read_xml_records(spark: SparkSession, path: str) -> DataFrame:
     """Read an XML file of records split on ``row_tag`` (the reference's
     recordXPath). Uses Spark 4 native XML when present; falls back to a
     whole-file regexp split (fine for landing-zone-sized files; big files
     should be pre-split)."""
+    row_tag = "record"
     try:
-        reader = spark.read.format("xml").option("rowTag", row_tag)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.load(path)
+        return spark.read.format("xml").option("rowTag", row_tag).load(path)
     except Exception:
         text = spark.read.text(path, wholetext=True)
         pattern = f"(?s)<{row_tag}[\\s>].*?</{row_tag}>"
@@ -75,13 +72,3 @@ def read_xml_records(
                 F.expr(f"regexp_extract_all(value, '{pattern}', 0)")
             ).alias("record_xml")
         )
-
-
-def split_records(df: DataFrame, xml_col: str, row_tag: str) -> DataFrame:
-    """flatMap one stored XML blob into N record strings (Splitter/File.php
-    semantics) — explode over regexp_extract_all, scan-stage only."""
-    pattern = f"(?s)<{row_tag}[\\\\s>].*?</{row_tag}>"
-    return df.withColumn(
-        "record_xml",
-        F.explode(F.expr(f"regexp_extract_all({xml_col}, '{pattern}', 0)")),
-    )

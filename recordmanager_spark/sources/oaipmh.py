@@ -114,7 +114,6 @@ def resumption_token(xml: Column) -> Column:
 
 def harvest_records(
     responses: DataFrame,
-    xml_col: str = "xml",
     keep: list[str] | None = None,
     id_search: str | None = None,
     id_replace: str | None = None,
@@ -126,15 +125,18 @@ def harvest_records(
     the last ':' of the OAI identifier, matching the common
     ``oai:host:id`` layout the reference strips via regex config),
     _id (= '<prefix>.<local_id>' when ``id_prefix`` given), datestamp,
-    deleted, set_specs, metadata_xml.
+    deleted, set_specs, metadata_xml, and position (the record's 0-based
+    index in its response page).
 
     ``id_search``/``id_replace`` use Java regex semantics — translate PCRE
     ``\\1`` backreferences to ``$1`` (the reference configs use both).
     """
     parts = responses.select(
         *(keep or []),
-        F.explode(parse_oai_response(F.col(xml_col))).alias("__r"),
-    ).select(*(keep or []), "__r.*")
+        F.posexplode(parse_oai_response(F.col("xml"))).alias(
+            "position", "__r"
+        ),
+    ).select(*(keep or []), "position", "__r.*")
     local = try_element_at(F.split(F.col("oai_id"), ":"), -1)
     if id_search is not None:
         import re as _re

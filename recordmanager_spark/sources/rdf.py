@@ -215,6 +215,9 @@ def entities_from_triples(
     )
 
 
-def import_rdf(docs: DataFrame, text_col: str = "text", languages: list[str] | None = None) -> DataFrame:
+def import_rdf(
+    docs: DataFrame, languages: list[str] | None = None
+) -> DataFrame:
     """Turtle documents → entity lookup table (the ImportRdf equivalent)."""
+    text_col = "text"
     return entities_from_triples(triples_df(docs, text_col), languages)

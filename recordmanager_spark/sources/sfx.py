@@ -37,7 +37,6 @@ def filename_date(name: Column) -> Column:
 
 def select_harvest_files(
     listing: DataFrame,
-    name_col: str = "filename",
     file_prefix: str = "",
     file_suffix: str = ".xml",
     start_date: Any = None,
@@ -46,6 +45,7 @@ def select_harvest_files(
     """Files due for harvest: prefix/suffix match, valid filename date,
     start < date <= end (HTTPFiles::retrieveFileList). Adds ``file_date``;
     the caller's new watermark is max(file_date) over the result."""
+    name_col = "filename"
     name = F.col(name_col)
     out = listing.where(
         name.startswith(file_prefix) & name.endswith(file_suffix)
@@ -60,7 +60,6 @@ def select_harvest_files(
 
 def sfx_normalize_records(
     records: DataFrame,
-    xml_col: str = "record_xml",
     source_id: str = "sfx",
 ) -> DataFrame:
     """Per-record SFX normalization: id from 090$a, 001 injection, OAI id,
@@ -70,6 +69,7 @@ def sfx_normalize_records(
     001 control field appended before </record> (normalizeRecord).
     Records without a 090$a are DROPPED (the reference throws per record).
     """
+    xml_col = "record_xml"
     xml = F.col(xml_col)
     rid = F.trim(
         F.regexp_extract(

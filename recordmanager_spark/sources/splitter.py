@@ -61,17 +61,6 @@ def _component_xml(el: ET.Element) -> str:
     return ET.tostring(clone, encoding="unicode")
 
 
-SPLIT_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("part_xml", T.StringType()),
-            T.StructField("part_id", T.StringType()),
-            T.StructField("sequence", T.IntegerType()),
-        ]
-    )
-)
-
-
 def make_tag_splitter(record_tag: str, id_tag: str | None = None):
     """JVM fast path for the generic file splitter: streaming-tag matching
     with regexp_extract_all — the same trick Hadoop's XmlInputFormat uses
@@ -84,9 +73,8 @@ def make_tag_splitter(record_tag: str, id_tag: str | None = None):
     For hierarchy-aware splitting (EAD/EAD3) or exotic layouts use the
     parsing splitters below.
 
-    Returns the same ``SPLIT_SCHEMA`` struct array as make_xpath_splitter:
-    (part_xml = raw source fragment, part_id = first ``id_tag`` text or
-    1-based position, sequence)."""
+    Returns an array of (part_xml = raw source fragment, part_id = first
+    ``id_tag`` text or 1-based position, sequence)."""
     tag = re.escape(record_tag)
     ns = r"(?:\w+:)?"  # local-name match: optional namespace prefix
     frag_pat = (
@@ -117,39 +105,6 @@ def make_tag_splitter(record_tag: str, id_tag: str | None = None):
     return split
 
 
-def make_xpath_splitter(record_tag: str, id_tag: str | None = None):
-    """File-splitter equivalent: extract repeated ``record_tag`` elements.
-
-    (The reference's recordXPath is a full XPath; local-name matching covers
-    the overwhelmingly common ``//record``-style configurations and stays
-    namespace-agnostic.)
-    """
-
-    @pandas_udf(SPLIT_SCHEMA)
-    def split(xml: pd.Series) -> pd.Series:
-        def one(doc):
-            if not doc:
-                return []
-            try:
-                root = ET.fromstring(doc)
-            except ET.ParseError:
-                return []
-            out = []
-            for i, el in enumerate(_findall_local(root, record_tag), start=1):
-                pid = None
-                if id_tag:
-                    ids = _findall_local(el, id_tag)
-                    pid = (ids[0].text or "").strip() if ids else None
-                out.append(
-                    (ET.tostring(el, encoding="unicode"), pid or str(i), i)
-                )
-            return out
-
-        return xml.map(one)
-
-    return split
-
-
 EAD_SCHEMA = T.ArrayType(
     T.StructType(
         [
@@ -163,9 +118,6 @@ EAD_SCHEMA = T.ArrayType(
         ]
     )
 )
-
-# did children that components do NOT inherit (Splitter/Ead.php default)
-NON_INHERITED = {"unitid", "unittitle", "unitdate", "unitdatestructured"}
 
 
 def _ead_components(doc: str | None, non_inherited: set | None = None):
@@ -282,9 +234,6 @@ EAD3_SCHEMA = T.ArrayType(
         ]
     )
 )
-
-# EAD3: only dao/daoset are withheld from inheritance (Splitter/Ead3.php:65-68)
-_EAD3_NON_INHERITED = {"dao", "daoset"}
 
 
 def _first_unitid(el, unit_id_label: str | None) -> str:

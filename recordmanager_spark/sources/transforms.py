@@ -21,8 +21,7 @@ import pandas as pd
 
 
 def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
-                  documents: dict[str, str] | None = None,
-                  extensions: dict | None = None):
+                  documents: dict[str, str] | None = None):
     """Build a pandas UDF applying the stylesheet to an XML string column.
 
     Unparseable records map to NULL, mirroring the reference's
@@ -32,10 +31,6 @@ def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
     ``documents`` feeds the stylesheet's ``document()`` calls: a
     {href: xml-string} mapping serialized into the executor closure, so
     the engine never touches network or filesystem.
-
-    ``extensions`` registers Python callables as stylesheet XPath
-    functions (the reference's ``php_function`` analogue) — cloudpickled
-    into the executor closure.
     """
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import StringType
@@ -52,9 +47,7 @@ def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
             from recordmanager_spark.xsl import MiniXSLT
 
             doc_resolver = documents.__getitem__ if documents else None
-            state["t"] = MiniXSLT(
-                xsl, document_resolver=doc_resolver, extensions=extensions
-            )
+            state["t"] = MiniXSLT(xsl, document_resolver=doc_resolver)
 
         import xml.etree.ElementTree as ET
 
@@ -72,14 +65,10 @@ def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
 
 
 def apply_xslt(df, column: str, xsl: str, out_column: str | None = None,
-               params: dict[str, object] | None = None,
-               documents: dict[str, str] | None = None,
-               extensions: dict | None = None):
+               documents: dict[str, str] | None = None):
     """Apply a stylesheet to ``column``, writing ``out_column`` (default:
     in place). Pure projection — no shuffle; scales with the scan."""
-    udf = make_xslt_udf(
-        xsl, params=params, documents=documents, extensions=extensions
-    )
+    udf = make_xslt_udf(xsl, documents=documents)
     return df.withColumn(out_column or column, udf(df[column]))
 
 

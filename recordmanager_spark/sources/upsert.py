@@ -4,7 +4,6 @@ Behavioral spec (reference, NOT code): Command/StoreRecordTrait.php:187-310 —
 - last-write-wins by ``_id``: an incoming record replaces the stored row
 - ``created`` survives from the stored row; new rows get created=updated
 - ``updated`` (and ``date``) stamp to the batch timestamp on every touch
-- ``normalized_data`` stored empty when identical to ``original_data``
 - rows not in the batch are untouched.
 
 Spark-first: one full-outer join on the id — exactly what ``MERGE INTO``
@@ -19,56 +18,48 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def normalize_empty_if_identical(
-    df: DataFrame,
-    original_col: str = "original_data",
-    normalized_col: str = "normalized_data",
-) -> DataFrame:
-    """normalized_data := '' when identical to original (StoreRecordTrait)."""
-    return df.withColumn(
-        normalized_col,
-        F.when(
-            F.col(normalized_col) == F.col(original_col), F.lit("")
-        ).otherwise(F.coalesce(F.col(normalized_col), F.lit(""))),
+def latest_per_id(batch: DataFrame) -> DataFrame:
+    """One row per ``_id``: the batch's last copy in input order.
+
+    A dump may hold the same record twice, and a harvest may fetch it
+    twice in one run. The reference stores records in stream order, so
+    the last copy is the one that stays. Input order is the batch's
+    ``__order`` column, (file path, position in the file): a later file
+    by path wins, then a later position in that file. ``__order`` is
+    dropped."""
+    w = Window.partitionBy("_id").orderBy(F.col("__order").desc())
+    return (
+        batch.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn", "__order")
     )
 
 
 def upsert_records(
-    existing: DataFrame,
+    existing: DataFrame | None,
     batch: DataFrame,
     timestamp: _dt.datetime,
-    id_col: str = "_id",
-    order_col: str | None = None,
 ) -> DataFrame:
     """Last-write-wins upsert of `batch` into `existing`.
 
     Columns present in both frames take the batch's value for matched and
     new ids; `created` is preserved for matched ids; `updated` and `date`
     stamp to `timestamp` for every batch row; untouched rows pass through
-    unchanged. Result schema = existing's schema.
+    unchanged. Result schema = existing's schema. With no store yet
+    (``existing`` None) the batch is the store.
 
-    A batch may contain the same id twice (re-harvest within one run); the
-    store keeps exactly one row per id. With ``order_col`` the row with
-    the greatest value wins (the reference's stream-order last-write);
-    without it the survivor is arbitrary-but-single (dropDuplicates).
+    The batch holds one row per id (:func:`latest_per_id`), so the store
+    keeps one row per id.
     """
+    if existing is None:
+        return batch
+    id_col = "_id"
     ts = F.lit(timestamp)
     cols = existing.columns
-    if order_col:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(id_col).orderBy(F.col(order_col).desc())
-        batch = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    else:
-        batch = batch.dropDuplicates([id_col])
     b = batch
     for c in cols:
         if c not in b.columns:

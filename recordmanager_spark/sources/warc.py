@@ -250,12 +250,7 @@ def warc_records(
     return files.select(*names).mapInPandas(gen, WARC_SCHEMA)
 
 
-def warc_documents(
-    files: DataFrame,
-    name_col: str = "path",
-    content_col: str = "value",
-    keep_types: tuple[str, ...] = ("response", "conversion"),
-) -> DataFrame:
+def warc_documents(files: DataFrame) -> DataFrame:
     """Crawl records as corpus DOCUMENTS: the bridge from a WARC
     landing zone to the corpus-curation pipeline
     (``corpus_config.apply_corpus_pipeline``).
@@ -278,6 +273,9 @@ def warc_documents(
     :func:`warc_records` — zero shuffles until the pipeline's own
     keyed stages.
     """
+    name_col = "path"
+    content_col = "value"
+    keep_types = ("response", "conversion")
     recs = warc_records(files, name_col=name_col, content_col=content_col)
     return recs.where(F.col("warc_type").isin(*keep_types)).select(
         F.coalesce(F.col("target_uri"), F.col("record_id")).alias("doc_id"),

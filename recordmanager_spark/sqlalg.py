@@ -55,8 +55,7 @@ the legacy conf every twin-compiled literal containing backslashes
 (all the regex patterns) would silently change meaning. The canonical
 session factory (``recordmanager_spark.session.get_spark``) pins the
 conf to false; a deployment building its own SparkSession must do the
-same before parsing any twin-compiled expression, or call
-:func:`assert_parser_conf` once to fail fast.
+same before parsing any twin-compiled expression.
 
 Semantics notes (kept in lockstep with Column behavior):
 - ``lit(str)`` escapes backslashes, quotes, and control chars so the
@@ -79,24 +78,9 @@ from __future__ import annotations
 
 import inspect
 import itertools
-from typing import Callable, Iterable
+from typing import Callable
 
 _ctr = itertools.count()
-
-
-def assert_parser_conf(spark) -> None:
-    """Fail fast if the session's parser mode would mis-read the twin's
-    escaped string literals (see the module docstring). One cheap conf
-    read — call it once per foreign-built SparkSession."""
-    v = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-    if str(v).lower() != "false":
-        raise RuntimeError(
-            "spark.sql.parser.escapedStringLiterals is enabled: the "
-            "SQL-text twin's literal escaping (sqlalg.lit) assumes the "
-            "default parser mode — twin-compiled regex patterns would "
-            "silently change meaning. Set the conf to false (the "
-            "recordmanager_spark.session.get_spark factory pins it)."
-        )
 
 
 # Precedence levels of Spark's expression grammar, loosest first: the
@@ -453,9 +437,7 @@ def array_contains(arr, v) -> X:
     return _fn("array_contains", arr, v)
 
 
-def array_join(arr, delim, null_replacement=None) -> X:
-    if null_replacement is not None:
-        return _fn("array_join", arr, delim, null_replacement)
+def array_join(arr, delim) -> X:
     return _fn("array_join", arr, delim)
 
 
@@ -477,10 +459,6 @@ def array_sort(arr) -> X:
 
 def array_min(arr) -> X:
     return _fn("array_min", arr)
-
-
-def array_max(arr) -> X:
-    return _fn("array_max", arr)
 
 
 def flatten(arr) -> X:
@@ -537,10 +515,6 @@ def trim(c) -> X:
     return _fn("trim", c)
 
 
-def ltrim(c) -> X:
-    return _fn("ltrim", c)
-
-
 def rtrim(c) -> X:
     return _fn("rtrim", c)
 
@@ -565,10 +539,6 @@ def nullif(a, b) -> X:
     return _fn("nullif", a, b)
 
 
-def nvl(a, b) -> X:
-    return _fn("nvl", a, b)
-
-
 def least(*args) -> X:
     return _fn("least", *args)
 
@@ -577,9 +547,7 @@ def greatest(*args) -> X:
     return _fn("greatest", *args)
 
 
-def sequence(a, b, step=None) -> X:
-    if step is not None:
-        return _fn("sequence", a, b, step)
+def sequence(a, b) -> X:
     return _fn("sequence", a, b)
 
 

@@ -64,12 +64,12 @@ def incremental_run(
     store: WatermarkStore,
     key: str,
     process: Callable[[DataFrame], DataFrame],
-    slack_seconds: int = 5,
 ) -> DataFrame:
     """Process only rows newer than the stored watermark, then advance it.
 
     The 5s slack mirrors the reference's clock-skew allowance
     (SolrUpdater.php:990-1053)."""
+    slack_seconds = 5
     wm = store.get(key)
     batch = df
     if wm is not None:
@@ -88,18 +88,17 @@ def streaming_events(
     spark: SparkSession,
     path: str,
     schema,
-    ts_col: str = "ts",
     window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Windowed event aggregation with late-data watermarking.
 
     readStream(parquet dir) -> withWatermark -> window agg; callers attach
     a sink (memory sink in tests via processAllAvailable)."""
+    ts_col = "ts"
+    watermark = "10 minutes"
     stream = spark.readStream.schema(schema).parquet(path)
     win = (
-        F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
+        F.window(ts_col, window)
     )
     return (
         stream.withWatermark(ts_col, watermark)
@@ -111,11 +110,7 @@ def streaming_events(
     )
 
 
-def dedup_new_or_changed(
-    stream: DataFrame,
-    id_col: str = "_id",
-    hash_col: str = "content_hash",
-):
+def dedup_new_or_changed(stream: DataFrame):
     """Stateful streaming dedup: emit a record only when its content hash
     is new or changed since the last emission for that id.
 
@@ -127,6 +122,8 @@ def dedup_new_or_changed(
     with the cluster; late re-deliveries of identical payloads are
     suppressed exactly once per change.
     """
+    id_col = "_id"
+    hash_col = "content_hash"
     import pandas as pd  # noqa: F401 (worker-side import)
 
     out_schema = f"{id_col} string, {hash_col} string, is_new boolean"
@@ -161,8 +158,6 @@ def dedup_new_or_changed(
 
 def streaming_first_seen(
     stream: DataFrame,
-    fingerprint_col: str = "fingerprint",
-    id_col: str = "doc_id",
     emit_updates: bool = False,
     state_ttl_seconds: float | None = None,
 ):
@@ -207,6 +202,8 @@ def streaming_first_seen(
     ``state_ttl_seconds=None`` and bound state by splitting the input
     instead.
     """
+    fingerprint_col = "fingerprint"
+    id_col = "doc_id"
     out_schema = f"{fingerprint_col} string, {id_col} string, n_seen long"
     state_schema = f"winner string, n long"
     ttl_ms = (
@@ -262,14 +259,7 @@ def streaming_first_seen(
 
 def streaming_minhash_neardup(
     stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 16,
-    shingle_n: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
     threshold: float = 0.5,
-    reps_per_bucket: int = 16,
     state_ttl_seconds: float | None = None,
     register_matches: bool = False,
 ):
@@ -332,6 +322,13 @@ def streaming_minhash_neardup(
     exact-within-the-window trade (and the same RUNNING-trigger
     requirement) as streaming_first_seen's TTL.
     """
+    id_col = "doc_id"
+    text_col = "text"
+    num_perm = 16
+    shingle_n = 3
+    bands = 4
+    rows_per_band = 4
+    reps_per_bucket = 16
     from ..functions.text import normalize_for_fingerprint, tokenize
     from ..operators.text_dedup import _PERM_XOR, _band_key_array
 

@@ -15,6 +15,5 @@ Modules:
   named templates, params/variables, AVTs, copy/copy-of, import).
 """
 
-from .config import XslTransformationConfig  # noqa: F401
 from .engine import MiniXSLT, XsltError  # noqa: F401
 from .xpath1 import XPath, XPathError, build_tree, parse_xml  # noqa: F401

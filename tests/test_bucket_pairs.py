@@ -111,22 +111,6 @@ def test_hamming_over_cap_bucket_reports_beyond_cap_members(spark):
     assert all(r.hamming == 0 for r in out)
 
 
-def test_embedding_degenerate_corpus_reports_all(spark):
-    from recordmanager_spark.operators import similarity as SIM
-
-    # identical vectors share every band bucket — the ADVICE r6 case
-    df = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[1.0, 0.0, 1.0, 0.5]) for i in range(40)]
-    )
-    out = SIM.embedding_near_duplicates(
-        df, "vec_id", "embedding", threshold=0.9,
-        num_planes=4, num_bands=2, dim=4, bucket_cap=6,
-    ).collect()
-    covered = {r.id_a for r in out} | {r.id_b for r in out}
-    assert covered == set(range(40))
-    assert all(abs(r.cosine - 1.0) < 1e-6 for r in out)
-
-
 def test_null_bucket_and_null_payload_rows_excluded(spark):
     """Contract pin (r8/r9): rows with NULL bucket keys or NULL payloads
     are filtered up front — they never pair, on either path. In-repo

@@ -148,43 +148,3 @@ def test_validate_date(spark):
     assert _one(spark, K.validate_date(F.col("v")), "2019-02-29") is None
     assert _one(spark, K.validate_date(F.col("v")), "2020-13-01") is None
     assert _one(spark, K.validate_date(F.col("v")), "20200101") is None
-
-
-def test_lc_category_hilcc(spark):
-    """HILCC range lookup (LcCallNumber::getCategory :197-236): first
-    matching range wins; invalid CNs (no digits / I-O-W-X-Y initial) and
-    unmatched ranges yield ''."""
-    from recordmanager_spark.functions.callnumbers import (
-        lc_categories_udf,
-        lc_category_udf,
-    )
-
-    table = [
-        {"a1": "QA", "a2": "QA", "d1": 0, "d2": 99, "f1": 0, "f2": 999,
-         "cat": "Math::Foundations"},
-        {"a1": "QA", "a2": "QA", "d1": 100, "d2": 999, "f1": 0, "f2": 999,
-         "cat": "Math::Advanced"},
-        {"a1": "A", "a2": "Z", "d1": 0, "d2": 9999, "f1": 0, "f2": 999,
-         "cat": "Everything"},
-    ]
-    df = spark.createDataFrame(
-        [("QA76.73",), ("QA141",), ("Z12",), ("I5",), ("QA",), ("",)],
-        "v: string",
-    )
-    got = [
-        r["c"] for r in
-        df.select(lc_category_udf(table)(F.col("v")).alias("c")).collect()
-    ]
-    # PHP intval('.73') == 0 so QA76.73 matches f1=0..f2=999 via decimal 0
-    assert got == [
-        "Math::Foundations", "Math::Advanced", "Everything", "", "", ""
-    ]
-
-    arr = spark.createDataFrame(
-        [(["QA76.73", "I5", "QA141"],), ([],)], "v: array<string>"
-    )
-    got2 = [
-        r["c"] for r in
-        arr.select(lc_categories_udf(table)(F.col("v")).alias("c")).collect()
-    ]
-    assert got2 == [["Math::Foundations", "Math::Advanced"], []]

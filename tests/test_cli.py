@@ -253,6 +253,69 @@ def test_cli_rewrite_cleans_tmp(workspace, spark):
     assert spark.read.parquet(records).count() == 4
 
 
+def test_import_keeps_last_copy_of_repeated_id(workspace, spark):
+    """A dump that repeats a recordID stores one row per id holding the
+    later copy, on a first import and again on a re-import; across
+    files, the later file by path wins."""
+    dump = workspace / "dup.xml"
+    dump.write_text(
+        "<collection>"
+        + _dc("a1", "First Copy", "Author, A.")
+        + _dc("a2", "Only Once", "Author, A.")
+        + _dc("a1", "Second Copy", "Author, A.")
+        + "</collection>"
+    )
+    records = str(workspace / "records")
+    cmd = ["import", "--config", str(workspace / "conf" / "datasources.ini"),
+           "--source", "libA", "--records", records, "--id-tag", "recordID",
+           "--file"]
+    for _ in range(2):
+        main([*cmd, str(dump)])
+        rows = {r._id: r for r in spark.read.parquet(records).collect()}
+        assert spark.read.parquet(records).count() == 2
+        assert set(rows) == {"libA.a1", "libA.a2"}
+        assert "Second Copy" in rows["libA.a1"].original_data
+
+    dumps = workspace / "dumps"
+    dumps.mkdir()
+    (dumps / "1.xml").write_text(
+        "<collection>" + _dc("a1", "Older File", "Author, A.") + "</collection>"
+    )
+    (dumps / "2.xml").write_text(
+        "<collection>" + _dc("a1", "Newer File", "Author, A.") + "</collection>"
+    )
+    main([*cmd, str(dumps)])
+    rows = spark.read.parquet(records).where("_id = 'libA.a1'").collect()
+    assert len(rows) == 1 and "Newer File" in rows[0].original_data
+
+
+def test_harvest_keeps_last_copy_of_repeated_id(tmp_path, spark):
+    """A harvest that fetches a record twice stores one row per id
+    holding the later copy, in a new store and again on a re-harvest."""
+    (tmp_path / "ds.ini").write_text("[oai]\ninstitution = I\nformat = dc\n")
+
+    def rec(title):
+        return (
+            "<record><header><identifier>oai:x:rec1</identifier>"
+            "<datestamp>2024-01-01</datestamp></header><metadata><dc>"
+            f"<recordID>rec1</recordID><title>{title}</title>"
+            "</dc></metadata></record>"
+        )
+
+    (tmp_path / "page1.xml").write_text(
+        "<OAI-PMH><ListRecords>" + rec("First Copy") + rec("Second Copy")
+        + "</ListRecords></OAI-PMH>"
+    )
+    records = str(tmp_path / "records")
+    for _ in range(2):
+        main(["harvest", "--config", str(tmp_path / "ds.ini"),
+              "--source", "oai", "--pages", str(tmp_path / "page1.xml"),
+              "--records", records])
+        rows = spark.read.parquet(records).collect()
+        assert [r._id for r in rows] == ["oai.rec1"]
+        assert "<title>Second Copy</title>" in rows[0].original_data
+
+
 def test_cli_first_import_count_is_observed(workspace, spark, capsys,
                                             monkeypatch):
     """The printed row count comes from the commit write itself: no

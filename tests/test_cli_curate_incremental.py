@@ -10,7 +10,8 @@ import uuid
 
 import pytest
 
-from recordmanager_spark.cli import _local_path, _table_location, main
+from recordmanager_spark.cli import _table_location, main
+from tests.oracles import local_path
 
 
 @pytest.fixture
@@ -20,7 +21,7 @@ def index_table(spark):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     # a recovered (re-registered) index is EXTERNAL: DROP leaves the
     # warehouse files behind — clear them so runs don't accumulate
-    loc = _local_path(_table_location(spark, name) or "")
+    loc = local_path(_table_location(spark, name) or "")
     if loc:
         shutil.rmtree(loc, ignore_errors=True)
 
@@ -107,7 +108,7 @@ def test_index_survives_catalog_loss(spark, tmp_path, index_table):
     # simulate a process restart: catalog forgets the table, the
     # warehouse directory survives (save data aside across the
     # managed-table DROP, then restore it)
-    loc = _local_path(_table_location(spark, index_table))
+    loc = local_path(_table_location(spark, index_table))
     saved = tmp_path / "saved_idx"
     shutil.copytree(loc, saved)
     spark.sql(f"DROP TABLE {index_table}")

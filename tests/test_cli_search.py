@@ -127,7 +127,8 @@ def test_search_survives_catalog_loss(spark, tmp_path, capsys, table):
     import json as _json
     import shutil
 
-    from recordmanager_spark.cli import _local_path, _table_location
+    from recordmanager_spark.cli import _table_location
+    from tests.oracles import local_path
 
     src = str(tmp_path / "docs")
     _docs(spark, src)
@@ -137,7 +138,7 @@ def test_search_survives_catalog_loss(spark, tmp_path, capsys, table):
     # simulate the process restart for BOTH tables: save data aside
     # across the managed-table DROP, then restore it
     for t in (table, table + "_stats"):
-        loc = _local_path(_table_location(spark, t))
+        loc = local_path(_table_location(spark, t))
         saved = tmp_path / ("saved_" + t)
         shutil.copytree(loc, saved)
         spark.sql(f"DROP TABLE {t}")
@@ -164,5 +165,5 @@ def test_search_survives_catalog_loss(spark, tmp_path, capsys, table):
     for t in (table, table + "_stats"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(
-            _local_path(_table_location(spark, t)), ignore_errors=True
+            local_path(_table_location(spark, t)), ignore_errors=True
         )

@@ -12,7 +12,7 @@ import json
 from pyspark.sql import functions as F
 
 from recordmanager_spark.extractors import dc, marc
-from recordmanager_spark.extractors.format_calculator import formats_as_list
+from tests.format_model import formats_as_list
 
 
 def df(val): return val  # noqa: E704 - readability helper

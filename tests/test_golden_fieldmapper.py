@@ -59,21 +59,3 @@ def _mv(spark, val: str, mapping) -> list:
 )
 def test_golden_map_value(spark, map_file, map_type, value, expected):
     assert _mv(spark, value, _load(map_file, map_type)) == expected
-
-
-def test_golden_multilevel_mapping(spark):
-    """FieldMapperTest.php testMultilevelMappingFile: level 1 through the
-    normal map, level 2 through the regexp map, '/'-joined; an empty
-    mapped level truncates from that level on."""
-    basic = _load("building-basic.map", "normal")
-    basic.sub_maps = [_load("building-regexp.map", "regexp")]
-
-    def mv(levels):
-        df = spark.createDataFrame([(levels,)], "v array<string>").coalesce(1)
-        return df.select(
-            MP.map_hierarchy_value(F.col("v"), basic).alias("m")
-        ).collect()[0]["m"]
-
-    assert mv(["val1", "val1"]) == "a/b/val/1"
-    assert mv(["val2", "val1"]) == ""
-    assert mv(["val1", "21"]) == "a/b"

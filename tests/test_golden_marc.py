@@ -499,40 +499,18 @@ def test_golden_create_preview(spark):
     assert not mism, mism
 
 
-def test_golden_preview_creator_building(spark):
-    """PreviewCreatorTest.php testBuilding: holdings_record.xml with
-    subLocationInBuilding=c and the multilevel building mapping
-    (building.map normal + building_sub.map regexp) — locations become
-    [loc, sub] level arrays, a location mapping to '' drops the whole
-    entry, an empty-mapped sub-location truncates to the location alone,
-    and unmapped locations take the ##default."""
-    from pyspark.sql import functions as F
-
-    from recordmanager_spark.plans import mapping as MP
-
-    mapdir = "/root/reference/tests/fixtures/Base/config/fieldmappertest/mappings"
-    main = MP.parse_map_file(
-        "building.map", open(f"{mapdir}/building.map").read(), type="normal"
-    )
-    main.sub_maps = [
-        MP.parse_map_file(
-            "building_sub.map",
-            open(f"{mapdir}/building_sub.map").read(),
-            type="regexp",
-        )
-    ]
-    raw = open(
-        "/root/reference/tests/fixtures/Base/Solr/holdings_record.xml"
-    ).read()
-    df = spark.createDataFrame([(raw,)], "raw string").coalesce(1)
-    parsed = df.select(MARC.parse_marcxml("raw").alias("m"))
-    hier = MARC.marc_building_hierarchy(F.col("m"), sub="c")
-    mapped = F.filter(
-        F.transform(hier, lambda lv: MP.map_hierarchy_value(lv, main)),
-        lambda v: v != "",
-    )
-    out = parsed.select(mapped.alias("building")).collect()[0]["building"]
-    assert out == ["B", "A/2", "A", "DEF/2"]
+# The GeniePlus export config exercised by the reference's tests
+# (LineBasedMarcFormatterTest.php:54-63)
+GENIEPLUS_FORMATS: list[dict] = [
+    {
+        "subfieldRegExp": r"‡([a-z0-9])",
+        "endOfLineMarker": "^",
+        "ind1Offset": 3,
+        "ind2Offset": 4,
+        "contentOffset": 4,
+        "firstSubfieldOffset": 5,
+    }
+]
 
 
 def test_golden_line_based_marc_formats():
@@ -545,8 +523,8 @@ def test_golden_line_based_marc_formats():
     fixdir = "/root/reference/tests/fixtures/Base/utils/LineBasedMarcFormatter"
     for name, fmts in (
         ("alma", None),
-        ("genieplus", LM.GENIEPLUS_FORMATS),
-        ("bad", LM.GENIEPLUS_FORMATS),
+        ("genieplus", GENIEPLUS_FORMATS),
+        ("bad", GENIEPLUS_FORMATS),
     ):
         txt = open(f"{fixdir}/{name}.txt").read()
         xml = open(f"{fixdir}/{name}.xml").read()

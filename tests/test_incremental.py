@@ -26,15 +26,6 @@ def test_changed_since(spark):
     assert got == ["1", "2"]
 
 
-def test_mark_unseen_deleted(spark):
-    stored = spark.createDataFrame(
-        [Row(_id="a", deleted=False), Row(_id="b", deleted=False), Row(_id="c", deleted=True)]
-    )
-    seen = spark.createDataFrame([Row(_id="a")])
-    out = {r["_id"]: r["deleted"] for r in INC.mark_unseen_deleted(stored, seen, "_id").collect()}
-    assert out == {"a": False, "b": True, "c": True}
-
-
 def test_unseen_ids(spark):
     stored = spark.createDataFrame([Row(_id="a"), Row(_id="b")])
     seen = spark.createDataFrame([Row(_id="b")])

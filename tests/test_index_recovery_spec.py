@@ -14,7 +14,6 @@ import pytest
 
 from recordmanager_spark import cli
 from recordmanager_spark.cli import (
-    _local_path,
     _recover_orphan_index,
     _table_location,
 )
@@ -23,6 +22,7 @@ from recordmanager_spark.sources.bucketed import (
     write_bucket_spec,
     write_bucketed,
 )
+from tests.oracles import local_path
 
 
 @pytest.fixture
@@ -30,7 +30,7 @@ def table(spark):
     name = "t_spec_" + uuid.uuid4().hex[:8]
     yield name
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    loc = _local_path(_table_location(spark, name) or "")
+    loc = local_path(_table_location(spark, name) or "")
     if loc:
         shutil.rmtree(loc, ignore_errors=True)
 
@@ -43,7 +43,7 @@ def _bucketed_df(spark):
 
 def _simulate_restart(spark, table, tmp_path):
     """Catalog forgets the table; the warehouse directory survives."""
-    loc = _local_path(_table_location(spark, table))
+    loc = local_path(_table_location(spark, table))
     saved = tmp_path / ("saved_" + table)
     shutil.copytree(loc, saved)
     spark.sql(f"DROP TABLE {table}")
@@ -190,7 +190,7 @@ def test_recovery_survives_corrupt_sidecar(spark, table, tmp_path):
     file-name validation instead of crashing."""
     write_bucketed(_bucketed_df(spark), table, "term", 8)
     loc = _simulate_restart(spark, table, tmp_path)
-    lp = _local_path(loc)
+    lp = local_path(loc)
     with open(f"{lp}/_rm_bucket_spec.json", "wb") as f:
         f.write(b'{"key": "ter')
     assert _recover_orphan_index(spark, table, None, "term", 8)

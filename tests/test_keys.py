@@ -8,6 +8,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from recordmanager_spark.functions import keys as K
+from tests.oracles import normalize_key_py
 
 
 def one(spark, col, value: str):
@@ -156,10 +157,6 @@ def test_create_id_sort_key(spark, raw, expected):
     assert one(spark, K.create_id_sort_key(F.col("v")), raw) == expected
 
 
-def test_get_source_from_id(spark):
-    assert one(spark, K.get_source_from_id(F.col("v")), "alpha.rec.1") == "alpha"
-
-
 def test_extract_year(spark):
     assert one(spark, K.extract_year(F.col("v")), "c1987.") == "1987"
     assert one(spark, K.extract_year(F.col("v")), "no year") == ""
@@ -268,52 +265,6 @@ def test_array_trim(spark):
     assert out == ["a", "b", "c"]
 
 
-# --- optional ICU key folding (MetadataUtils.php:416-433) -------------------
-
-
-def test_normalize_key_icu_raises_without_pyicu():
-    if K.icu_available():
-        pytest.skip("PyICU present; covered by the parity test below")
-    with pytest.raises(RuntimeError, match="PyICU"):
-        K.normalize_key_icu(F.lit("x"))
-
-
-@pytest.mark.skipif(not K.icu_available(), reason="PyICU not installed")
-@pytest.mark.parametrize(
-    "raw,expected",
-    [
-        # MetadataUtilsTest.php testNormalizeKey, default rules
-        ("A -.*B  C", "abc"),
-        ("ÖÄÅöäåüïé", "oaaoaauie"),
-        ("AaÖÄÅöäåüï", "aaoaaoaaui"),
-    ],
-)
-def test_normalize_key_icu_reference_goldens(spark, raw, expected):
-    assert one(spark, K.normalize_key_icu(F.col("v")), raw) == expected
-
-
-@pytest.mark.skipif(not K.icu_available(), reason="PyICU not installed")
-def test_normalize_key_icu_cjk_stable(spark):
-    # Han/Kana romanize to stable non-empty keys — the capability the
-    # data-driven fallback tables lack
-    for cjk in ("北京", "とうきょう", "漱石"):
-        out = one(spark, K.normalize_key_icu(F.col("v")), cjk)
-        assert out and out == one(spark, K.normalize_key_icu(F.col("v")), cjk)
-
-
-def test_normalize_key_default_is_deterministic_table(monkeypatch):
-    """normalize_key is the table fold even when PyICU is importable:
-    dedup keys must be byte-identical across machines, so the fold is
-    never environment-sniffed."""
-    calls = []
-    monkeypatch.setattr(
-        K, "normalize_key_icu", lambda c: calls.append(c) or F.lit("icu")
-    )
-    monkeypatch.setattr(K, "_ICU_AVAILABLE", True)
-    K.normalize_key(F.lit("x"))
-    assert len(calls) == 0  # never touches ICU
-
-
 @pytest.mark.parametrize(
     "raw,expected",
     [
@@ -345,4 +296,4 @@ def test_normalize_key_py_matches_column_engine(spark):
     df = spark.createDataFrame([(v,) for v in vals], "s string")
     got = [r.k for r in df.select(K.normalize_key(F.col("s")).alias("k")).collect()]
     # the Column fold null-propagates; the py twin maps None -> ""
-    assert got == [K.normalize_key_py(v) if v is not None else None for v in vals]
+    assert got == [normalize_key_py(v) if v is not None else None for v in vals]

@@ -9,10 +9,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from recordmanager_spark.operators.keywords import tfidf_keywords
-from recordmanager_spark.operators.packing import (
-    shuffle_shards,
-    write_shuffled_shards,
-)
+from recordmanager_spark.operators.packing import shuffle_shards
 from recordmanager_spark.operators.text_dedup import paragraph_dedup
 
 DOCS = [
@@ -77,19 +74,6 @@ def test_shuffle_shards_deterministic_and_uniform(spark):
     sizes = Counter(r.shard for r in a)
     assert len(sizes) == 16
     assert max(sizes.values()) < 2 * min(sizes.values())  # balanced
-
-
-def test_write_shuffled_shards_layout(spark, tmp_path):
-    df = spark.range(500).withColumnRenamed("id", "doc_id")
-    path = str(tmp_path / "shards")
-    write_shuffled_shards(df, "doc_id", path, n_shards=8, seed="7")
-    back = spark.read.parquet(path)
-    assert back.count() == 500
-    assert back.select("shard").distinct().count() == 8
-    # within-shard order == sort_key order (read one shard's file directly)
-    one = spark.read.parquet(f"{path}/shard=3").collect()
-    keys = [r.sort_key for r in one]
-    assert keys == sorted(keys)
 
 
 def test_paragraph_dedup_first_occurrence_wins(spark):

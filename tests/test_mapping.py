@@ -100,24 +100,6 @@ def test_regexp_multi_collects_all(spark):
     ]
 
 
-def test_hierarchy_mapping(spark):
-    main = MP.parse_map_file("h", "a = A\nb = B\nstop =\n##default = X")
-    col = F.col("v")
-    assert _one(spark, MP.map_hierarchy_value(col, main), ["a", "b"]) == "A/B"
-    # empty mapped level stops accumulation
-    assert _one(spark, MP.map_hierarchy_value(col, main), ["a", "stop", "b"]) == "A"
-    assert _one(spark, MP.map_hierarchy_value(col, main), []) == ""
-
-
-def test_hierarchy_submaps(spark):
-    main = MP.parse_map_file("h", "x = L1")
-    sub = MP.parse_map_file("h2", "x = L2")
-    main.sub_maps = [sub]
-    assert (
-        _one(spark, MP.map_hierarchy_value(F.col("v"), main), ["x", "x"]) == "L1/L2"
-    )
-
-
 # --- field rules -----------------------------------------------------------
 
 

@@ -1,4 +1,4 @@
-"""Property: serialize_marc_in_json round-trips the parsed struct
+"""Property: the MARC-in-JSON serializer round-trips the parsed struct
 bit-exact through the storage parser (_parse_one), over randomized
 field shapes — control/data fields, missing indicators, empty and
 unicode subfield values (Marc/Serialization/MarcInJson.php)."""

@@ -101,12 +101,6 @@ class TestQualityRules:
         assert got["n_words"] >= 50
         assert got["passes"]
 
-    def test_bullet_ellipsis(self, spark):
-        text = "- item one\nplain\n* item two\nwaiting...\nend"
-        got = _one(spark, QL.bullet_ellipsis_stats(F.col("t")), text)
-        assert got["frac_bullet_lines"] == pytest.approx(2 / 5)
-        assert got["frac_ellipsis_lines"] == pytest.approx(1 / 5)
-
 
 class TestC4Clean:
     def test_line_rules(self, spark):

@@ -5,7 +5,6 @@ import math
 import pytest
 from pyspark.sql import Row
 
-from pyspark.sql import functions as F
 from recordmanager_spark.operators import similarity as SIM
 
 VECS = [
@@ -42,86 +41,6 @@ def test_knn_lsh_subset_of_exact_scores(spark):
     for r in approx:
         truth = _cos(VECS[0].embedding, VECS[r["neighbor_id"]].embedding)
         assert r["cosine"] == pytest.approx(round(truth, 6), abs=1e-6)
-
-
-def test_embedding_near_duplicates(spark):
-    df = spark.createDataFrame(VECS)
-    out = SIM.embedding_near_duplicates(df, threshold=0.95, num_planes=1)
-    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    # 0 and 1 are nearly parallel; orthogonal/opposite pairs excluded
-    assert pairs <= {(0, 1)}
-
-
-def _clustered_vecs(n_clusters=40, copies=3, d=16):
-    """Deterministic clustered corpus: each cluster is a base vector plus
-    near-copies (tiny perturbation → cosine ≈ 1)."""
-    import math
-    import random
-
-    rnd = random.Random(42)
-    rows = []
-    vid = 0
-    for c in range(n_clusters):
-        base = [rnd.gauss(0, 1) for _ in range(d)]
-        nrm = math.sqrt(sum(x * x for x in base))
-        base = [x / nrm for x in base]
-        for k in range(copies):
-            vec = [x + (0.001 * k * ((i % 3) - 1)) for i, x in enumerate(base)]
-            rows.append((vid, c, vec))
-            vid += 1
-    return rows
-
-
-def test_banded_neardup_recall_and_bucket_bound(spark):
-    """Banding restores recall at plane counts that keep buckets small."""
-    rows = _clustered_vecs()
-    df = spark.createDataFrame(rows, ["vec_id", "cluster", "embedding"])
-
-    exact = {
-        (r.id_a, r.id_b)
-        for r in SIM.exact_near_duplicates(
-            df, threshold=0.999, dim=16
-        ).collect()
-    }
-    assert len(exact) >= 40  # every cluster contributes intra-cluster pairs
-
-    approx = {
-        (r.id_a, r.id_b)
-        for r in SIM.embedding_near_duplicates(
-            df, threshold=0.999, num_planes=8, num_bands=8, dim=16
-        ).collect()
-    }
-    assert approx <= exact  # candidates are exact-rescored: no false accepts
-    recall = len(approx & exact) / len(exact)
-    assert recall >= 0.9, recall
-
-    # bucket-size bound: the banded signature splits mass — no band bucket
-    # may hold a quadratic share of the corpus
-    bb = SIM.band_buckets_udf(8, 8)
-    sizes = (
-        df.select(F.posexplode(bb("embedding")).alias("band", "bucket"))
-        .groupBy("band", "bucket")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert sizes <= len(rows) // 2
-
-
-def test_auto_plane_sizing(spark):
-    """num_planes=None sizes planes from the corpus count."""
-    rows = _clustered_vecs(n_clusters=20, copies=2)
-    df = spark.createDataFrame(rows, ["vec_id", "cluster", "embedding"])
-    out = SIM.embedding_near_duplicates(
-        df, threshold=0.999, target_bucket_rows=8, dim=16
-    )
-    # sanity: runs end-to-end and only true near-dups survive rescoring
-    got = {(r.id_a, r.id_b) for r in out.collect()}
-    exact = {
-        (r.id_a, r.id_b)
-        for r in SIM.exact_near_duplicates(df, threshold=0.999, dim=16).collect()
-    }
-    assert got <= exact
 
 
 def test_semantic_dedup(spark):

@@ -7,21 +7,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from recordmanager_spark.operators import multimodal as MM
-from recordmanager_spark.sources.files import split_records
 from recordmanager_spark.streaming.pipeline import streaming_events
 
 XML_BLOB = """<collection>
 <record id="1"><title>First</title></record>
 <record id="2"><title>Second</title></record>
 </collection>"""
-
-
-def test_split_records(spark):
-    df = spark.createDataFrame([Row(xml=XML_BLOB)])
-    out = split_records(df, "xml", "record").select("record_xml").collect()
-    assert len(out) == 2
-    assert "First" in out[0]["record_xml"]
-    assert "Second" in out[1]["record_xml"]
 
 
 def test_extract_features_mapinpandas(spark):
@@ -35,12 +26,6 @@ def test_extract_features_mapinpandas(spark):
     again = {r["id"]: r for r in MM.extract_features(df).collect()}
     assert out[1]["feature"] == again[1]["feature"]
     assert out[1]["sha256"] != out[2]["sha256"]
-
-
-def test_attach_media_meta(spark):
-    df = spark.createDataFrame([Row(id=1, payload=bytearray(b"xyz"))])
-    r = MM.attach_media_meta(df).first()
-    assert r["byte_len"] == 3 and len(r["sha256"]) == 64
 
 
 def test_streaming_windowed_agg(spark, tmp_path):

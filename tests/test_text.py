@@ -48,11 +48,6 @@ def test_token_ngrams(spark, text, n, expected):
     assert one(spark, TX.token_ngrams(F.col("v"), n), text) == expected
 
 
-def test_char_ngrams(spark):
-    got = one(spark, TX.char_ngrams(F.col("v"), 3), "abcd")
-    assert got == ["abc", "bcd"]
-
-
 def test_bpe_ish_token_count(spark):
     # 'hello'(2) + 'hi'(1) + 'abcdefgh'(2)
     assert one(spark, TX.bpe_ish_token_count(F.col("v")), "hello hi abcdefgh") == 5

@@ -47,15 +47,6 @@ def test_upsert_deletion_record(spark):
     assert out["a.2"].updated == T1
 
 
-def test_normalized_empty_if_identical(spark):
-    df = spark.createDataFrame(
-        [("r1", "<x/>", "<x/>"), ("r2", "<x/>", "<y/>"), ("r3", "<x/>", None)],
-        ["_id", "original_data", "normalized_data"],
-    )
-    out = {r._id: r.normalized_data for r in UP.normalize_empty_if_identical(df).collect()}
-    assert out == {"r1": "", "r2": "<y/>", "r3": ""}
-
-
 def test_xslt_backends():
     """XSLT always runs on the one stdlib engine, whatever the container
     holds (Utils/XslTransformation.php analogue)."""

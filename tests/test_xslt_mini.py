@@ -13,7 +13,7 @@ import xml.etree.ElementTree as ET
 import pytest
 
 from recordmanager_spark.xsl import (
-    MiniXSLT, XPath, XsltError, XslTransformationConfig, parse_xml,
+    MiniXSLT, XPath, XsltError, parse_xml,
 )
 from recordmanager_spark.xsl.xpath1 import Context
 
@@ -340,18 +340,6 @@ class TestReferenceStylesheets:
         assert ">pre:r1<" in out
         # replace_all template substitutes [001] with the record id
         assert "http://x/r1" in out
-
-    def test_properties_config(self):
-        cfg = XslTransformationConfig(REF, "marc2ese_raita.properties")
-        marc = ('<record xmlns="http://www.loc.gov/MARC21/slim">'
-                "<leader>00000cam a22000004i 4500</leader>"
-                '<controlfield tag="001">viola9</controlfield>'
-                '<datafield tag="245" ind1="1" ind2="0">'
-                '<subfield code="a">T</subfield></datafield></record>')
-        out = cfg.transform(marc)
-        assert "FI-Viola:viola9" in out
-        assert "bibId=viola9" in out  # [001] substitution from ini params
-        assert "Raita collection" in out
 
 
 @needs_ref

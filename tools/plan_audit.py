@@ -311,7 +311,7 @@ AUDITS = [
     ("shuffle_shards_docs", 0, False, False,
      "deterministic training shuffle is a pure scan-stage projection — "
      "the shard/sort-key assignment costs ZERO shuffles at any corpus "
-     "size; write_shuffled_shards pays exactly one partitioning pass"),
+     "size"),
     ("paragraph_dedup_docs", 3, True, False,
      "first-occurrence via map-side-combinable groupBy(paragraph md5) "
      "joined back (the r6 exact-dedup de-skew pattern — never a window "
