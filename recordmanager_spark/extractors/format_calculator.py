@@ -12,15 +12,23 @@ so this must be the real decision tree, not an approximation.
 
 Spark-first design: the whole tree is pure Column expressions over the parsed
 MARC struct — substring probes, when-chains, and higher-order array functions
-(transform/exists/aggregate). Everything stays inside whole-stage codegen; no
-Python round trip per record. ``tests/format_model.py`` holds the faithful
-Python model of the same tree, which the tests cross-check this against.
+(transform/exists/aggregate), with no Python round trip per record. The
+higher-order functions are ``CodegenFallback`` in Spark 4.1, so the tree
+is evaluated interpreted (generated code calls its ``eval``) and its cost
+follows its size. The record-level cues (leader positions, the 008 and
+007 values, the tag probes) and the candidate list are therefore bound
+once (``keys.let1``); the decision tree reads them as lambda variables.
+``tests/format_model.py`` holds the faithful Python model of the same tree,
+which the tests cross-check this against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..functions import keys as K
+
 
 def _c008(f008: Column, pos: int) -> Column:
     # PHP substr is 0-based; Spark substring is 1-based. Out-of-range gives
@@ -92,8 +100,6 @@ def format_col(marc: Column) -> Column:
     (leader + fields); ``tests/format_model.py`` is its Python model."""
     fields = marc["fields"]
     leader = F.coalesce(marc["leader"], F.lit(""))
-    rtype = F.lower(F.substring(leader, 7, 1))
-    blevel = F.lower(F.substring(leader, 8, 1))
 
     def ctl(tag: str) -> Column:
         vals = F.filter(
@@ -101,7 +107,6 @@ def format_col(marc: Column) -> Column:
         )
         return F.coalesce(F.try_element_at(vals, F.lit(1))["value"], F.lit(""))
 
-    f008 = ctl("008")
     f007s = F.transform(
         F.filter(fields, lambda f: (f["tag"] == "007") & f["value"].isNotNull()),
         lambda f: F.lower(f["value"]),
@@ -110,9 +115,6 @@ def format_col(marc: Column) -> Column:
     def has_tag(tag: str) -> Column:
         return F.exists(fields, lambda f: f["tag"] == tag)
 
-    has_086 = has_tag("086")
-    is_thesis = has_tag("502")
-    is_conference = has_tag("111") | has_tag("711")
     serial_host = F.exists(
         fields,
         lambda f: (f["tag"] == "773")
@@ -141,18 +143,36 @@ def format_col(marc: Column) -> Column:
             & (_subfield_eq(f, "2") == source),
         )
 
-    online_338 = _33x_match("338", "online resource", "cr", "rdacarrier")
-    video_336 = _33x_match("336", "two-dimensional moving image", "tdi", "rdacontent")
-
-    is_electronic = (
-        F.lower(f245_h).contains("[electronic resource]")
-        | (rtype == "m")
-        | online_338
+    return K.let1(
+        F.struct(
+            F.lower(F.substring(leader, 7, 1)).alias("rtype"),
+            F.lower(F.substring(leader, 8, 1)).alias("blevel"),
+            ctl("008").alias("f008"),
+            f007s.alias("f007s"),
+            has_tag("086").alias("gov"),
+            has_tag("502").alias("thesis"),
+            (has_tag("111") | has_tag("711")).alias("conf"),
+            serial_host.alias("serial_host"),
+            F.lower(f245_h).contains("[electronic resource]").alias("er_245h"),
+            _33x_match("338", "online resource", "cr", "rdacarrier")
+            .alias("online_338"),
+            _33x_match("336", "two-dimensional moving image", "tdi", "rdacontent")
+            .alias("video_336"),
+        ),
+        _formats,
     )
 
-    codes007 = F.transform(f007s, lambda s: F.substring(s, 1, 1))
+
+def _formats(c: Column) -> Column:
+    """The decision tree of :func:`format_col` over its bound cues."""
+    rtype, blevel, f008 = c["rtype"], c["blevel"], c["f008"]
+    is_thesis, is_conference = c["thesis"], c["conf"]
+    online_338, video_336 = c["online_338"], c["video_336"]
+    is_electronic = c["er_245h"] | (rtype == "m") | online_338
+
+    codes007 = F.transform(c["f007s"], lambda s: F.substring(s, 1, 1))
     has_007 = lambda *cs: F.exists(  # noqa: E731
-        codes007, lambda c: c.isin(*cs)
+        codes007, lambda x: x.isin(*cs)
     )
 
     not_book_007 = has_007("g", "k", "m", "v")
@@ -212,7 +232,7 @@ def format_col(marc: Column) -> Column:
     fmt_blevel = (
         F.when(
             blevel == "a",
-            F.when(serial_host, "Article").otherwise("BookComponentPart"),
+            F.when(c["serial_host"], "Article").otherwise("BookComponentPart"),
         )
         .when(blevel == "b", "SerialComponentPart")
         .when(
@@ -248,7 +268,7 @@ def format_col(marc: Column) -> Column:
     )
 
     specials = F.array(
-        F.when(has_086, "GovernmentDocument").otherwise(""),
+        F.when(c["gov"], "GovernmentDocument").otherwise(""),
         F.when(is_thesis, "Thesis").otherwise(""),
         F.when(is_electronic, "Electronic").otherwise(""),
         F.when(is_conference, "ConferenceProceeding").otherwise(""),
@@ -257,7 +277,7 @@ def format_col(marc: Column) -> Column:
     )
     per_007 = F.flatten(
         F.transform(
-            f007s,
+            c["f007s"],
             lambda s: F.array(
                 F.when(F.substring(s, 1, 1) == "v", "Video").otherwise(""),
                 _fmt_007_col(s),
@@ -273,12 +293,14 @@ def format_col(marc: Column) -> Column:
         .when(rtype == "a", "Text")
         .otherwise("Unknown")
     )
-    withfb = F.when(F.size(candidates) == 0, F.array(fallback)).otherwise(candidates)
     # order-preserving dedup (getFormats: array_unique keeps first occurrence)
-    return F.aggregate(
-        withfb,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(F.array_contains(acc, x), acc).otherwise(
-            F.concat(acc, F.array(x))
+    return K.let1(
+        candidates,
+        lambda cands: F.aggregate(
+            F.when(F.size(cands) == 0, F.array(fallback)).otherwise(cands),
+            F.array().cast("array<string>"),
+            lambda acc, x: F.when(F.array_contains(acc, x), acc).otherwise(
+                F.concat(acc, F.array(x))
+            ),
         ),
     )

@@ -13,8 +13,12 @@ Reference behavior (NOT code) from NatLibFi/RecordManager:
 Spark-first design: the irregular JSON (dynamic tag keys, heterogeneous
 values) is normalized ONCE into a typed struct column by an Arrow-batched
 pandas UDF; every downstream fieldspec operation is a JVM-side higher-order
-array expression (filter/transform/flatten/exists) that stays inside
-whole-stage codegen — no per-row Python in the hot path after parse.
+array expression (filter/transform/flatten/exists) — no per-row Python in
+the hot path after parse. Higher-order functions are ``CodegenFallback``
+in Spark 4.1: generated code calls their interpreted ``eval``, so these
+trees are not compiled and cost in proportion to their size. A value a
+tree reads more than once is therefore written once, bound through
+``keys.let1``.
 
 At 100 TB scale: parse happens at ingest and the struct column is stored in
 parquet, so analytic queries never re-parse; field selection is a narrow
@@ -24,6 +28,7 @@ per-row expression with no shuffle.
 from __future__ import annotations
 
 import json
+import re
 from typing import Iterable, Sequence
 
 import pandas as pd
@@ -250,16 +255,6 @@ def fields_by_tag(marc: Column, tag: str) -> Column:
     return F.filter(marc["fields"], lambda f: f["tag"] == tag)
 
 
-def _let1(value: Column, body) -> Column:
-    """Let-bind ``value`` through a one-element array transform: the
-    body reads it as a lambda variable, so however many times the body
-    references it the value's tree appears in the plan exactly once.
-    Expression trees duplicate per reference (both Column-API and the
-    SQL-text twin), so fan-out over a big subtree multiplies analyzer
-    and codegen cost — the r6 work-keys fix, packaged (opt r12)."""
-    return try_element_at(F.transform(F.array(value), body), 1)
-
-
 def control_value(marc: Column, tag: str) -> Column:
     """First control-field value for the tag ('' if absent)."""
     vals = F.filter(
@@ -463,16 +458,16 @@ def marc_title(marc: Column, for_filing: bool = False) -> Column:
             t = F.lower(K.strip_punctuation(v)) if for_filing else v
             return F.when(fld.isNotNull(), t).otherwise(F.lit(None))
 
-        return _let1(
-            _let1(raw, mk_t),
+        return K.let1(
+            K.let1(raw, mk_t),
             lambda t: F.struct(
                 t.alias("t"), K.strip_trailing_punctuation(t).alias("c")
             ),
         )
 
-    return _let1(
+    return K.let1(
         one("245"),
-        lambda s1: _let1(
+        lambda s1: K.let1(
             one("240"),
             lambda s2: (
                 F.when(F.coalesce(s1["c"], F.lit("")) != "", s1["c"])
@@ -537,11 +532,13 @@ def marc_publishers(marc: Column) -> Column:
     first_b = try_element_at(
         F.flatten(F.transform(f264, lambda f: _sub_values(f, ["b"]))), 1
     )
-    p264 = F.when(
-        first_b.isNotNull(),
-        F.array(K.strip_trailing_punctuation(first_b)),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.when(F.size(p260) > 0, p260).otherwise(p264)
+    p264 = K.let1(
+        first_b,
+        lambda b: F.when(
+            b.isNotNull(), F.array(K.strip_trailing_punctuation(b))
+        ).otherwise(F.array().cast("array<string>")),
+    )
+    return K.let1(p260, lambda p: F.when(F.size(p) > 0, p).otherwise(p264))
 
 
 def marc_isbns(marc: Column) -> Column:
@@ -626,6 +623,11 @@ def marc_allfields(marc: Column) -> Column:
 
 # Default primary author relator codes (Marc.php:69-71; config-overridable).
 PRIMARY_AUTHOR_RELATORS = ("adp", "aut", "cmp", "cre", "dub", "inv")
+# Personal (100/700: primary by relator, or bare 100; secondary is the
+# rest) and corporate (110/111/710/711, relators ignored) author fields,
+# in priority order.
+_PERSONAL_TAGS = ("100", "700")
+_CORPORATE_TAGS = ("110", "111", "710", "711")
 
 
 def normalize_relator(v: Column) -> Column:
@@ -633,10 +635,11 @@ def normalize_relator(v: Column) -> Column:
     return F.lower(F.regexp_replace(F.trim(v), "\\p{P}+", ""))
 
 
-def _linked_terms_for_field(marc: Column, tag: str, field: Column, codes) -> Column:
+def _linked_terms_for_field(marc: Column, field: Column, codes) -> Column:
     """880 terms linked to THIS field via its $6 occurrence — the reference
     appends them to the same name string (Marc.php:2270-2280)."""
     occ = _field_link_occ(field)
+    prefix = F.concat(field["tag"], F.lit("-"))
     linked = F.filter(
         marc["fields"],
         lambda f: (f["tag"] == "880")
@@ -644,7 +647,7 @@ def _linked_terms_for_field(marc: Column, tag: str, field: Column, codes) -> Col
         & F.exists(
             F.coalesce(f["subfields"], F.array()),
             lambda s: (s["code"] == "6")
-            & s["value"].startswith(tag + "-")
+            & s["value"].startswith(prefix)
             & (_occurrence(s["value"]) == occ),
         ),
     )
@@ -654,129 +657,114 @@ def _linked_terms_for_field(marc: Column, tag: str, field: Column, codes) -> Col
     )
 
 
-def authors_by_relator(
+def classified_authors(
     marc: Column,
-    field_specs: Sequence[tuple],
+    tags: Sequence[str],
+    codes: Sequence[str],
     relators: Sequence[str],
     no_relator_required: Sequence[str],
-    invert_match: bool = False,
 ) -> Column:
-    """getAuthorsByRelator as one struct Column: names / relators / variants.
+    """getAuthorsByRelator's per-field step: every field of ``tags``, in
+    record order, as struct(tag, m, name, rel, a).
 
-    ``field_specs``: [(tag, subfield list), ...] in priority order. A field
-    matches when its normalized $4/$e relators intersect ``relators``, or it
-    has none and its tag is in ``no_relator_required`` (empty ``relators``
-    matches everything); ``invert_match`` flips the decision (secondary
-    authors). 880 alt-script terms append to the same name; variants are
-    author-initial forms of $a (getAuthorVariants).
-    """
-    # closure factory, NOT default-arg capture: F.transform passes the
-    # element index to any callable with a second parameter, so mk must
-    # expose a strictly one-argument signature
-    def make_mk(tag, codes):
-        def mk(field):
-            # let-bind the relator array, joined terms and 880-linked
-            # terms through a one-element struct array: each was read
-            # 2-3x below and the linked-880 scan is a multi-KB subtree —
-            # trees duplicate per reference, and the duplicated copies
-            # dominated analyzer time on the author columns
-            frel0 = F.array_distinct(
-                F.filter(
-                    F.transform(_sub_values(field, ["4", "e"]), normalize_relator),
-                    lambda v: v != "",
-                )
-            )
-            terms0 = subfield_join(field, list(codes))
-            linked0 = _linked_terms_for_field(marc, tag, field, codes)
+    ``m``: the field's normalized $4/$e relators intersect ``relators``,
+    or it has none and its tag is in ``no_relator_required`` (empty
+    ``relators`` matches everything). ``name`` is the ``codes`` join with
+    the 880 alt-script terms linked to the field appended; ``rel`` the
+    first relator; ``a`` the first $a. Each field is classified once,
+    whichever author sets (:func:`author_set`) read it."""
 
-            def build(b):
-                frel, terms, linked = b["f"], b["t"], b["l"]
-                if relators:
-                    lit_rel = F.array(*[F.lit(r) for r in relators])
-                    match = F.size(F.array_intersect(lit_rel, frel)) > 0
-                    if tag in no_relator_required:
-                        match = match | (F.size(frel) == 0)
-                else:
-                    match = F.lit(True)
-                if invert_match:
-                    match = ~match
-                full = F.when(
-                    F.size(linked) > 0,
-                    F.concat(terms, F.lit(" "), F.array_join(linked, " ")),
-                ).otherwise(terms)
-                name = K.strip_trailing_punctuation(F.trim(full))
-                return F.struct(
-                    match.alias("m"),
-                    name.alias("name"),
-                    F.coalesce(try_element_at(frel, 1), F.lit("")).alias("rel"),
-                    F.coalesce(
-                        try_element_at(_sub_values(field, ["a"]), 1), F.lit("")
-                    ).alias("a"),
-                )
-
-            return try_element_at(
-                F.transform(
-                    F.array(
-                        F.struct(
-                            frel0.alias("f"), terms0.alias("t"), linked0.alias("l")
-                        )
-                    ),
-                    build,
-                ),
-                1,
-            )
-
-        return mk
-
-    per_tag = []
-    for tag, codes in field_specs:
-        fields = fields_by_tag(marc, tag)
-        per_tag.append(
+    def classify(field):
+        # the relators, the joined terms and the 880-linked terms are
+        # each read 2-3x below
+        frel0 = F.array_distinct(
             F.filter(
-                F.transform(fields, make_mk(tag, codes)),
-                lambda s: s["m"] & (s["name"] != ""),
+                F.transform(_sub_values(field, ["4", "e"]), normalize_relator),
+                lambda v: v != "",
             )
         )
-    entries = F.concat(*per_tag) if len(per_tag) > 1 else per_tag[0]
-    # bind `entries` ONCE through a lambda variable: the struct below reads
-    # it three times, and Column trees duplicate per reference — inlined,
-    # each author column carried a 3x copy of the whole per-tag match tree
-    # (tens of kB of expression nodes per column; measurable analyzer time)
-    return try_element_at(
-        F.transform(
-            F.array(entries),
-            lambda e: F.struct(
-                F.transform(e, lambda s: s["name"]).alias("names"),
-                F.transform(e, lambda s: s["rel"]).alias("relators"),
-                F.filter(
-                    F.transform(e, lambda s: K.author_initials(s["a"])),
-                    lambda v: v != "",
-                ).alias("variants"),
+
+        def build(b):
+            frel, terms, linked = b["f"], b["t"], b["l"]
+            if relators:
+                lit_rel = F.array(*[F.lit(r) for r in relators])
+                match = (F.size(F.array_intersect(lit_rel, frel)) > 0) | (
+                    (F.size(frel) == 0) & field["tag"].isin(*no_relator_required)
+                )
+            else:
+                match = F.lit(True)
+            full = F.when(
+                F.size(linked) > 0,
+                F.concat(terms, F.lit(" "), F.array_join(linked, " ")),
+            ).otherwise(terms)
+            return F.struct(
+                field["tag"].alias("tag"),
+                match.alias("m"),
+                K.strip_trailing_punctuation(F.trim(full)).alias("name"),
+                F.coalesce(try_element_at(frel, 1), F.lit("")).alias("rel"),
+                F.coalesce(
+                    try_element_at(_sub_values(field, ["a"]), 1), F.lit("")
+                ).alias("a"),
+            )
+
+        return K.let1(
+            F.struct(
+                frel0.alias("f"),
+                subfield_join(field, list(codes)).alias("t"),
+                _linked_terms_for_field(marc, field, codes).alias("l"),
             ),
-        ),
-        1,
+            build,
+        )
+
+    return F.transform(
+        F.filter(marc["fields"], lambda f: f["tag"].isin(*tags)), classify
     )
 
 
-_AUTHOR_SPECS = (("100", ("a", "b", "c", "q", "d")), ("700", ("a", "b", "c", "q", "d")))
-_CORP_SPECS = (
-    ("110", ("a", "b")), ("111", ("a", "b")),
-    ("710", ("a", "b")), ("711", ("a", "b")),
-)
+def author_set(
+    entries: Column, tags: Sequence[str], matched: bool = True
+) -> Column:
+    """getAuthorsByRelator's result as struct(names, relators, variants):
+    the :func:`classified_authors` entries whose ``m`` equals ``matched``
+    (False gives the secondary authors) and whose name is not empty, tag
+    by tag in the priority order of ``tags``. Variants are author-initial
+    forms of $a (getAuthorVariants)."""
+
+    def of_tag(es, tag):
+        return F.filter(
+            es,
+            lambda e: (e["tag"] == tag)
+            & (e["m"] if matched else ~e["m"])
+            & (e["name"] != ""),
+        )
+
+    return K.let1(
+        K.let1(entries, lambda es: F.concat(*[of_tag(es, t) for t in tags])),
+        lambda e: F.struct(
+            F.transform(e, lambda s: s["name"]).alias("names"),
+            F.transform(e, lambda s: s["rel"]).alias("relators"),
+            F.filter(
+                F.transform(e, lambda s: K.author_initials(s["a"])),
+                lambda v: v != "",
+            ).alias("variants"),
+        ),
+    )
 
 
-def primary_authors(marc: Column) -> Column:
-    return authors_by_relator(marc, _AUTHOR_SPECS, PRIMARY_AUTHOR_RELATORS, ("100",))
-
-
-def secondary_authors(marc: Column) -> Column:
-    return authors_by_relator(
-        marc, _AUTHOR_SPECS, PRIMARY_AUTHOR_RELATORS, ("100",), invert_match=True
+def personal_authors(marc: Column) -> Column:
+    return classified_authors(
+        marc, _PERSONAL_TAGS, ("a", "b", "c", "q", "d"),
+        PRIMARY_AUTHOR_RELATORS, ("100",),
     )
 
 
 def corporate_authors(marc: Column) -> Column:
-    return authors_by_relator(marc, _CORP_SPECS, (), ("110", "111", "710", "711"))
+    return author_set(
+        classified_authors(
+            marc, _CORPORATE_TAGS, ("a", "b"), (), _CORPORATE_TAGS
+        ),
+        _CORPORATE_TAGS,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -941,49 +929,16 @@ def marc_unique_ids(marc: Column) -> Column:
             try_element_at(_sub_values(field, [code]), 1), F.lit("")
         )
 
-    f010 = first_field("010")
-    # every normalize_key below is a multi-KB fold tree and the id
-    # assembly reads each key 2-3x — let-bind through structs so each
-    # fold appears in the plan once (opt r12; trees duplicate per
-    # reference)
-    ids_010 = _let1(
-        F.struct(
-            K.normalize_key(sub1(f010, "a")).alias("l"),
-            K.normalize_key(sub1(f010, "b")).alias("n"),
-        ),
-        lambda s: F.filter(
-            F.array(
-                F.when(s["l"] != "", F.concat(F.lit("(lccn)"), s["l"])),
-                F.when(
-                    (s["n"] != "") & (s["l"] != ""),
-                    F.concat(F.lit("(nucmc)"), s["l"]),
-                ),
-            ),
-            lambda v: v.isNotNull(),
-        ),
+    f010, f015, f016, f024 = (
+        first_field(t) for t in ("010", "015", "016", "024")
+    )
+    # 035 values with an accepted system-control-number prefix
+    scns = F.filter(
+        F.transform(fields_by_tag(marc, "035"), lambda f: sub1(f, "a")),
+        lambda a: a.rlike(_SCN_RE),
     )
 
-    def qualified(tag):
-        fld = first_field(tag)
-        return _let1(
-            F.struct(
-                K.normalize_key(sub1(fld, "a")).alias("nr"),
-                sub1(fld, "2").alias("src"),
-            ),
-            lambda s: F.filter(
-                F.array(
-                    F.when(
-                        (s["nr"] != "") & (s["src"] != ""),
-                        F.concat(F.lit("("), s["src"], F.lit(")"), s["nr"]),
-                    )
-                ),
-                lambda v: v.isNotNull(),
-            ),
-        )
-
-    f024 = first_field("024")
-
-    def ids_024_of(x: Column) -> Column:
+    def with_keys(x: Column) -> Column:
         raw, ind1 = x["raw"], x["i"]
         ian_nr = F.when(
             F.instr(raw, " ") > 1, F.substring(raw, 1, F.instr(raw, " ") - 1)
@@ -997,48 +952,62 @@ def marc_unique_ids(marc: Column) -> Column:
             .when(ind1 == "7", x["s2"])
             .otherwise("")
         )
-        nr0 = K.normalize_key(F.when(ind1 == "3", ian_nr).otherwise(raw))
-        return _let1(
-            F.struct(src24.alias("src"), nr0.alias("nr0")),
-            lambda y: _let1(
-                F.when(
-                    (y["src"] == "ismn") & ~y["nr0"].rlike("[0-9]{13}"),
-                    F.lit(""),
-                ).otherwise(y["nr0"]),
-                lambda nr: F.filter(
-                    F.array(
-                        F.when(
-                            (y["src"] != "") & (nr != ""),
-                            F.concat(F.lit("("), y["src"], F.lit(")"), nr),
-                        )
-                    ),
-                    lambda v: v.isNotNull(),
-                ),
+        # every value that passes normalizeKey, folded by ONE transform:
+        # normalize_key is a multi-KB tree (its kana map alone 1.5 KB)
+        unkeyed = F.concat(
+            F.array(
+                sub1(f010, "a"), sub1(f010, "b"), sub1(f015, "a"),
+                sub1(f016, "a"), F.when(ind1 == "3", ian_nr).otherwise(raw),
             ),
+            scns,
+        )
+        return K.let1(
+            F.struct(
+                F.transform(unkeyed, K.normalize_key).alias("k"),
+                src24.alias("src"),
+            ),
+            lambda y: _unique_ids_of(y["k"], y["src"], x),
         )
 
-    ids_024 = _let1(
+    return K.let1(
         F.struct(
             sub1(f024, "a").alias("raw"),
             F.coalesce(f024["ind1"], F.lit(" ")).alias("i"),
             sub1(f024, "2").alias("s2"),
+            sub1(f015, "2").alias("s15"),
+            sub1(f016, "2").alias("s16"),
         ),
-        ids_024_of,
+        with_keys,
     )
 
-    scns = F.filter(
-        F.transform(
-            fields_by_tag(marc, "035"),
-            lambda f: _let1(
-                F.coalesce(
-                    try_element_at(_sub_values(f, ["a"]), 1), F.lit("")
-                ),
-                lambda a: F.when(a.rlike(_SCN_RE), K.normalize_key(a)),
-            ),
+
+def _unique_ids_of(k: Column, src24: Column, x: Column) -> Column:
+    """The id list of :func:`marc_unique_ids` from its normalized keys
+    ``k`` (010 $a and $b, 015 $a, 016 $a, 024 $a, then the 035 system
+    control numbers), the 024 source and the 015/016 $2 sources."""
+    lccn, nucmc = try_element_at(k, 1), try_element_at(k, 2)
+    nr0 = try_element_at(k, 5)
+    nr24 = F.when(
+        (src24 == "ismn") & ~nr0.rlike("[0-9]{13}"), F.lit("")
+    ).otherwise(nr0)
+
+    def qualified(nr, src):
+        return F.when(
+            (nr != "") & (src != ""), F.concat(F.lit("("), src, F.lit(")"), nr)
+        )
+
+    fixed = F.array(
+        F.when(lccn != "", F.concat(F.lit("(lccn)"), lccn)),
+        F.when(
+            (nucmc != "") & (lccn != ""), F.concat(F.lit("(nucmc)"), lccn)
         ),
-        lambda v: v.isNotNull(),
+        qualified(try_element_at(k, 3), x["s15"]),
+        qualified(try_element_at(k, 4), x["s16"]),
+        qualified(nr24, src24),
     )
-    return F.concat(ids_010, qualified("015"), qualified("016"), ids_024, scns)
+    return F.concat(
+        F.filter(fixed, lambda v: v.isNotNull()), F.slice(k, 6, F.size(k))
+    )
 
 
 def marc_geographic_locations(marc: Column) -> Column:
@@ -1048,44 +1017,62 @@ def marc_geographic_locations(marc: Column) -> Column:
     coordinate order is coped with by swapping (ENVELOPE is minX, maxX,
     maxY, minY).
 
-    Two chained ``transform``s: the first DECODES each 034 into a struct of
-    four decimals, the second formats WKT from the struct's lambda-bound
-    fields. Column trees duplicate per reference — the DMS cascade is ~20k
-    chars and the WKT step reads each coordinate ~8 times, so inlining it
-    made this single column a 650k-char expression (seconds of analyzer
-    time per query). Binding through the lambda variable keeps each decode
-    in the tree exactly once."""
+    Two chained ``transform``s: the first DECODES each 034 into an array
+    of its four decimals ($d $e $f $g), the second formats WKT from the
+    lambda-bound array. The DMS cascade is ~4.5 KB of tree and the WKT
+    step reads each coordinate ~8 times, so the decode runs as one
+    ``transform`` over the four values, and the number formatting as one
+    over the six printed values: each is written once."""
 
     def decode(field):
-        sub = lambda c: F.coalesce(  # noqa: E731
-            try_element_at(_sub_values(field, [c]), 1), F.lit("")
-        )
-        return F.struct(
-            GEOF.coordinate_to_decimal(sub("d")).alias("w"),
-            GEOF.coordinate_to_decimal(sub("e")).alias("e"),
-            GEOF.coordinate_to_decimal(sub("f")).alias("n"),
-            GEOF.coordinate_to_decimal(sub("g")).alias("s"),
+        return F.transform(
+            F.array(
+                *[
+                    F.coalesce(
+                        try_element_at(_sub_values(field, [c]), 1), F.lit("")
+                    )
+                    for c in "defg"
+                ]
+            ),
+            GEOF.coordinate_to_decimal,
         )
 
     def one(d):
-        w, e, n, s = d["w"], d["e"], d["n"], d["s"]
+        w, e, n, s = (try_element_at(d, i) for i in (1, 2, 3, 4))
         w_ok = ~F.isnan(w) & (w >= -180) & (w <= 180)
         n_ok = ~F.isnan(n) & (n >= -90) & (n <= 90)
         e_ok = ~F.isnan(e) & (e >= -180) & (e <= 180)
         s_ok = ~F.isnan(s) & (s >= -90) & (s <= 90)
         has_box = ~F.isnan(e) & ~F.isnan(s) & ((e != w) | (n != s))
-        env = F.concat(
-            F.lit("ENVELOPE("), GEOF._fmt(F.least(w, e)), F.lit(", "),
-            GEOF._fmt(F.greatest(w, e)), F.lit(", "),
-            GEOF._fmt(F.greatest(n, s)), F.lit(", "),
-            GEOF._fmt(F.least(n, s)), F.lit(")"),
+        box_ok = e_ok & s_ok
+        # the printed numbers, formatted by one transform; the envelope's
+        # only when it can print (formatting casts to long, which fails on
+        # NaN or a huge value)
+        shown = F.concat(
+            F.array(w, n),
+            F.when(
+                box_ok,
+                F.array(
+                    F.least(w, e), F.greatest(w, e),
+                    F.greatest(n, s), F.least(n, s),
+                ),
+            ).otherwise(F.array().cast("array<double>")),
         )
-        point = F.concat(
-            F.lit("POINT("), GEOF._fmt(w), F.lit(" "), GEOF._fmt(n), F.lit(")")
-        )
+
+        def wkt(t):
+            env = F.concat(
+                F.lit("ENVELOPE("), try_element_at(t, 3), F.lit(", "),
+                try_element_at(t, 4), F.lit(", "), try_element_at(t, 5),
+                F.lit(", "), try_element_at(t, 6), F.lit(")"),
+            )
+            point = F.concat(
+                F.lit("POINT("), try_element_at(t, 1), F.lit(" "),
+                try_element_at(t, 2), F.lit(")"),
+            )
+            return F.when(has_box, F.when(box_ok, env)).otherwise(point)
+
         return F.when(
-            w_ok & n_ok,
-            F.when(has_box, F.when(e_ok & s_ok, env)).otherwise(point),
+            w_ok & n_ok, K.let1(F.transform(shown, GEOF._fmt), wkt)
         )
 
     vals = F.transform(F.transform(fields_by_tag(marc, "034"), decode), one)
@@ -1284,9 +1271,9 @@ def _maybe_hide(memo: dict, name: str, v):
     so no rendered SQL is ever rewritten after the fact.
 
     The full text lands in ``memo['__hidden__']`` (reserved key) for
-    :func:`to_solr_columns` to materialize as hidden companion columns
-    in one projection: no hidden text references another placeholder
-    (each is a whole author struct or the publish year).
+    :func:`to_solr_columns` to materialize as hidden companion columns.
+    A hidden text may read placeholders created before it (``pa`` and
+    ``sa`` read ``pers``), so insertion order is dependency order.
 
     Opt-in via ``memo['__hide__']``: only :func:`to_solr_columns`, which
     materializes the companion columns, sets it. Standalone builds (the
@@ -1295,7 +1282,7 @@ def _maybe_hide(memo: dict, name: str, v):
     if not memo.get("__hide__"):
         return v
     text = str(v)
-    if len(text) < 1500:
+    if len(text) < 1024:
         return v
     hname = f"__rm_{memo.get('__src', 'm')}_{name}"
     memo.setdefault("__hidden__", {})[hname] = text
@@ -1313,8 +1300,14 @@ def _solr_col_builders(m: Column, id_prefix: str | None, memo: dict) -> dict:
             memo[name] = _maybe_hide(memo, name, fn())
         return memo[name]
 
-    pa = lambda: shared("pa", lambda: primary_authors(m))  # noqa: E731
-    sa = lambda: shared("sa", lambda: secondary_authors(m))  # noqa: E731
+    # pa and sa read one classification of the 100/700 fields
+    pers = lambda: shared("pers", lambda: personal_authors(m))  # noqa: E731
+    pa = lambda: shared(  # noqa: E731
+        "pa", lambda: author_set(pers(), _PERSONAL_TAGS)
+    )
+    sa = lambda: shared(  # noqa: E731
+        "sa", lambda: author_set(pers(), _PERSONAL_TAGS, matched=False)
+    )
     ca = lambda: shared("ca", lambda: corporate_authors(m))  # noqa: E731
     pubyear = lambda: shared("pubyear", lambda: marc_publish_year(m))  # noqa: E731
     local_id = lambda: control_value(m, "001")  # noqa: E731
@@ -1331,9 +1324,9 @@ def _solr_col_builders(m: Column, id_prefix: str | None, memo: dict) -> dict:
             m, [(GET_NORMAL, "022", ["a"])], split_subfields=True
         ),
         "language": lambda: marc_languages(m),
-        # Full FormatCalculator.php decision tree as pure Column exprs —
-        # stays in whole-stage codegen, sees record-level cues (086, 502,
-        # 111/711, 773$g, 245$h, 336/338).
+        # Full FormatCalculator.php decision tree as pure Column exprs
+        # over record-level cues (086, 502, 111/711, 773$g, 245$h,
+        # 336/338); higher-order functions, so it runs interpreted
         "format": lambda: format_col(m),
         # relator-classified authors (getAuthorsByRelator): 100/700 with
         # primary relators (or bare 100) are primary; the inverse set is
@@ -1514,16 +1507,28 @@ def to_solr_columns(
             state["cols"].update(marc_callnumber_columns(marc_col))
     # Big shared subtrees (the author structs, publish year) became
     # hidden placeholders at memo insertion (_maybe_hide), so the
-    # analyzer sees each once instead of once per consuming column.
+    # analyzer sees each once instead of once per consuming column. A
+    # hidden text reads only placeholders inserted before it: walk them
+    # newest first to find every one the columns need, then add them
+    # one projection per dependency level.
     hidden = state["memo"].get("__hidden__", {})
-    used = [
-        h for h in hidden if any(h in state["sqls"].get(n, "") for n in names)
-    ]
+    need = " ".join(state["sqls"].get(n, "") for n in names)
+    level: dict[str, int] = {}
+    for h in reversed(hidden):
+        if re.search(rf"\b{h}\b", need):
+            level[h] = 0
+            need += " " + hidden[h]
+    for h in level:
+        for d in level:
+            if d != h and re.search(rf"\b{d}\b", hidden[h]):
+                level[d] = max(level[d], level[h] + 1)
     cols = {n: state["cols"][n] for n in names}
-    if used:
-        df = df.withColumns({h: F.expr(hidden[h]) for h in used})
-        return df.withColumns(cols).drop(*used)
-    return df.withColumns(cols)
+    for depth in sorted(set(level.values()), reverse=True):
+        df = df.withColumns(
+            {h: F.expr(hidden[h]) for h in level if level[h] == depth}
+        )
+    out = df.withColumns(cols)
+    return out.drop(*level) if level else out
 
 
 # ---------------------------------------------------------------------------
@@ -1572,11 +1577,9 @@ def _work_authors(marc: Column, alt: bool) -> Column:
 def _work_titles(marc: Column, alt: bool) -> Column:
     """Array of struct(uniform boolean, value string) title entries.
 
-    The per-tag title and its non-filing indicator are LET-BOUND through
-    a one-element array transform before the stripped/original fan-out:
-    inlined, ``title`` appeared ~6x per tag (Column trees and SQL text
-    both duplicate per reference), which multiplied the work-key tree to
-    ~54 KB of expression per engine and dominated analyzer time."""
+    The per-tag title and its non-filing indicator are bound once
+    (``keys.let1``) before the stripped/original fan-out, which reads
+    the title ~6x."""
     parts = []
     for tag, (extra, nonfiling_ind) in _WORK_TITLE_SPECS.items():
         uniform = tag in ("130", "730")
@@ -1609,12 +1612,7 @@ def _work_titles(marc: Column, alt: bool) -> Column:
                     lambda v: v != "",
                 )
 
-            vals = F.flatten(
-                F.transform(
-                    F.array(F.struct(title.alias("t"), ind.alias("i"))),
-                    fan_out,
-                )
-            )
+            vals = K.let1(F.struct(title.alias("t"), ind.alias("i")), fan_out)
         parts.append(
             F.transform(
                 vals,
@@ -1641,38 +1639,59 @@ def work_keys(marc_col: str) -> Column:
 
 
 def _work_keys(marc: Column) -> Column:
-    """The work-key tree behind :func:`work_keys`."""
+    """The work-key tree behind :func:`work_keys`: one ``keys_for`` over
+    the main and the alt-script (authors, titles) pair, so the key
+    assembly and its normalize_key are written once."""
 
-    def keys_for(authors: Column, titles: Column) -> Column:
-        # let-bind `titles` (a ~10 KB per-engine subtree) through a
-        # one-element array: it is read twice below (UT filter + AT
-        # filter) and trees duplicate per reference
-        def one(ts):
-            ut = F.transform(
-                F.filter(ts, lambda t: t["uniform"]),
-                lambda t: F.concat(F.lit("UT "), K.normalize_key(t["value"])),
-            )
-            at = F.flatten(
-                F.transform(
-                    F.filter(ts, lambda t: ~t["uniform"]),
-                    lambda t: F.transform(
-                        authors,
-                        lambda a: F.concat(
-                            F.lit("AT "),
-                            K.normalize_key(a),
-                            F.lit(" "),
-                            K.normalize_key(t["value"]),
-                        ),
+    def keys_for(e: Column) -> Column:
+        # every author and title value, normalized by ONE transform
+        # (normalize_key is a multi-KB tree), then split back
+        authors, titles = e["a"], e["t"]
+        n_a = F.size(authors)
+        values = F.concat(authors, F.transform(titles, lambda t: t["value"]))
+        return K.let1(
+            F.transform(values, K.normalize_key),
+            lambda nk: _keys_from(
+                F.slice(nk, 1, n_a),
+                F.zip_with(
+                    titles,
+                    F.slice(nk, n_a + 1, F.size(titles)),
+                    lambda t, v: F.struct(
+                        t["uniform"].alias("uniform"), v.alias("value")
                     ),
-                )
+                ),
+            ),
+        )
+
+    engines = F.array(
+        *[
+            F.struct(
+                _work_authors(marc, alt).alias("a"),
+                _work_titles(marc, alt).alias("t"),
             )
-            return F.concat(ut, at)
+            for alt in (False, True)
+        ]
+    )
+    return F.array_distinct(F.flatten(F.transform(engines, keys_for)))
 
-        return F.flatten(F.transform(F.array(titles), one))
 
-    main = keys_for(_work_authors(marc, False), _work_titles(marc, False))
-    alt = keys_for(_work_authors(marc, True), _work_titles(marc, True))
-    return F.array_distinct(F.concat(main, alt))
+def _keys_from(authors: Column, titles: Column) -> Column:
+    """'UT <title>' for uniform titles, 'AT <author> <title>' for every
+    other title with every author, from normalized values."""
+    ut = F.transform(
+        F.filter(titles, lambda t: t["uniform"]),
+        lambda t: F.concat(F.lit("UT "), t["value"]),
+    )
+    at = F.flatten(
+        F.transform(
+            F.filter(titles, lambda t: ~t["uniform"]),
+            lambda t: F.transform(
+                authors,
+                lambda a: F.concat(F.lit("AT "), a, F.lit(" "), t["value"]),
+            ),
+        )
+    )
+    return F.concat(ut, at)
 
 
 def marc_main_author(marc: Column) -> Column:

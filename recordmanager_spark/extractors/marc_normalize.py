@@ -17,7 +17,9 @@ Behavioral spec (reference, NOT code): Record/Marc.php:1368-1474 —
 
 Pure JVM array expressions over the parsed MARC struct (no Python UDF):
 per-record field arrays are small (tens of fields), so every step is an
-in-row higher-order function — zero shuffles, fully codegen-friendly.
+in-row higher-order function with zero shuffles. Higher-order functions
+are ``CodegenFallback`` in Spark 4.1, so these steps are evaluated
+interpreted (generated code calls their ``eval``).
 """
 
 from __future__ import annotations

@@ -6,9 +6,11 @@ degrees via a cascade of format attempts) and :987-1054
 (getCenterCoordinates / getGeoDisplayField — ENVELOPE handled by regex,
 other WKT via centroid).
 
-Spark-first: the DMS cascade is a pure CASE chain of regexp_extracts — fully
-JVM, codegen-friendly. WKT centroids for POINT/ENVELOPE are JVM regex; only
-POLYGON/LINESTRING centroids drop to an Arrow UDF (a tiny pure-Python
+Spark-first: the DMS cascade is a pure CASE chain of regexp_extracts, fully
+JVM; its input is bound once through a lambda, so it runs interpreted
+(higher-order functions are ``CodegenFallback`` in Spark 4.1). WKT
+centroids for POINT/ENVELOPE are JVM regex; only POLYGON/LINESTRING
+centroids drop to an Arrow UDF (a tiny pure-Python
 geometry reader — no external geo lib required in this container).
 """
 
@@ -22,19 +24,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from . import keys as K
+
 
 def coordinate_to_decimal(col: Column) -> Column:
     """MetadataUtils::coordinateToDecimal as a JVM expression cascade.
 
-    The cleaned input is LET-BOUND through a one-element array transform:
-    the cascade reads it ~25 times (5 rlike probes + 15 regexp_extracts +
-    fallbacks) and expression trees duplicate per reference — inlined,
-    every 034 coordinate carried ~25 copies of its source subtree and the
-    4-coordinate WKT column alone was ~48 KB of expression."""
-    v0 = F.regexp_replace(col, " ", "")
-    return F.try_element_at(
-        F.transform(F.array(v0), _coordinate_cascade), F.lit(1)
-    )
+    The cleaned input is bound once (``keys.let1``): the cascade reads it
+    ~25 times (5 rlike probes + 15 regexp_extracts + fallbacks), and
+    inlined, every 034 coordinate carried ~25 copies of its source
+    subtree."""
+    return K.let1(F.regexp_replace(col, " ", ""), _coordinate_cascade)
 
 
 def _coordinate_cascade(v: Column) -> Column:

@@ -5,9 +5,16 @@ Re-expresses the reference's Utils/MetadataUtils.php scalar library
 isbn10to13 :270-284, authorMatch :464-496, punctuation strips :507-677,
 stripLeadingArticle/createSortTitle :678-719, array_iunique :721-740,
 createIdSortKey :742-756) as Spark Column
-expressions. Everything here except the ISBN check-digit math stays
-JVM-side inside whole-stage codegen — no Python round trip — which is what
-makes key generation viable over 100 TB of records.
+expressions. Everything here runs in the JVM with no Python round trip.
+The trees that use higher-order functions (``transform`` / ``filter`` /
+``aggregate`` / ``exists``: the kana fold, the title-key prefix, ISBN
+check digits, author initials) are ``CodegenFallback`` in Spark 4.1, so
+those are evaluated interpreted (generated code calls their ``eval``);
+the rest is code-generated.
+
+:func:`let1` is the one way the spec modules (this one,
+``extractors/marc.py``, ``extractors/format_calculator.py``,
+``functions/geo.py``) write a value that a tree reads more than once.
 
 Design note: the reference folds diacritics through an ICU transliterator
 (conf/recordmanager.ini.sample:19-25). We fold the common Latin accent
@@ -22,6 +29,17 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from recordmanager_spark.sparkcompat import try_element_at
+
+
+def let1(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` bound once: ``body`` reads it as the
+    lambda variable of a one-element array ``transform``. Expression
+    trees duplicate per reference, in the Column API and in the SQL-text
+    twin alike, and every copy is parsed, analysed, optimized and
+    evaluated again; bound, the value's tree appears once however often
+    ``body`` reads it. Bind several values with one ``F.struct``."""
+    return try_element_at(F.transform(F.array(value), body), 1)
+
 
 # Common Latin accent folding (lowercase side; input is lowercased first).
 _ACCENTS = "àáâãäåāăąèéêëēĕėęěìíîïĩīĭįıòóôõöøōŏőùúûüũūŭůűųýÿŷçćĉċčñńņňďđĝğġģĥħĵķĺļľłŕŗřśŝşšţťŧŵźżž"
@@ -150,16 +168,10 @@ def normalize_key(col: Column | str) -> Column:
     guarantee. ``tests/oracles.normalize_key_py`` is its Python twin.
     """
     c0 = F.lower(F.col(col) if isinstance(col, str) else col)
-    # let-bind the input through a one-element array: the kana branch
-    # reads it 4x (rlike probe, fold, passthrough, split) and expression
-    # trees duplicate per reference — inlined, every normalize_key call
-    # multiplied its input subtree ~4x in wide extractor plans
-    c = F.try_element_at(
-        F.transform(
-            F.array(c0),
-            lambda v: F.when(v.rlike(_KANA_RANGE_RE), _fold_kana(v)).otherwise(v),
-        ),
-        F.lit(1),
+    # the kana branch reads its input 3x (rlike probe, fold, passthrough)
+    c = let1(
+        c0,
+        lambda v: F.when(v.rlike(_KANA_RANGE_RE), _fold_kana(v)).otherwise(v),
     )
     c = F.translate(c, _ACCENTS, _FOLDED)
     for src, dst in _MULTI_FOLD:
@@ -299,31 +311,49 @@ def author_initials(col: Column | str) -> Column:
     """getAuthorInitials (MetadataUtils.php:1184-1227): initials separate,
     then smushed; personal names ("Last, First") rotate the surname last;
     hyphenated names contribute both initials; long personal names add the
-    given-names smush too ("w b" + "wb" for william butler yeats)."""
+    given-names smush too ("w b" + "wb" for william butler yeats).
+    ``tests/oracles.author_initials_py`` is its Python twin.
+
+    The tokens and the personal-name flag, the joined initials and the
+    personal-name form are each bound once (:func:`let1`): every later
+    step reads them two or three times."""
     name = F.col(col) if isinstance(col, str) else col
     # PHP strpos: comma at position 0 is falsy -> not personal; comma as
     # the final char doesn't count either
     p = F.instr(name, ",")
     is_personal = (p > 1) & (p < F.length(name))
-    cleaned = F.lower(F.regexp_replace(name, "[^\\p{L} -]", ""))
-    raw_tokens = F.split(cleaned, " ")
-    n_tokens = F.size(raw_tokens)
-    rotated = F.when(
-        is_personal & (n_tokens > 1),
-        F.concat(F.slice(raw_tokens, 2, 100000), F.slice(raw_tokens, 1, 1)),
-    ).otherwise(raw_tokens)
-    initials = F.transform(
-        F.filter(rotated, lambda t: t != ""),
-        lambda t: F.when(
-            (F.instr(t, "-") > 1) & (F.instr(t, "-") < F.length(t)),
-            F.concat(
-                F.substring(t, 1, 1),
-                F.lit(" "),
-                F.substr(t, F.instr(t, "-") + 1, F.lit(1)),
-            ),
-        ).otherwise(F.substring(t, 1, 1)),
+    tokens = F.split(F.lower(F.regexp_replace(name, "[^\\p{L} -]", "")), " ")
+
+    def from_tokens(s: Column) -> Column:
+        raw_tokens, personal = s["t"], s["p"]
+        n_tokens = F.size(raw_tokens)
+        rotated = F.when(
+            personal & (n_tokens > 1),
+            F.concat(F.slice(raw_tokens, 2, 100000), F.slice(raw_tokens, 1, 1)),
+        ).otherwise(raw_tokens)
+        initials = F.transform(
+            F.filter(rotated, lambda t: t != ""),
+            lambda t: F.when(
+                (F.instr(t, "-") > 1) & (F.instr(t, "-") < F.length(t)),
+                F.concat(
+                    F.substring(t, 1, 1),
+                    F.lit(" "),
+                    F.substr(t, F.instr(t, "-") + 1, F.lit(1)),
+                ),
+            ).otherwise(F.substring(t, 1, 1)),
+        )
+        long_personal = (n_tokens > 2) & personal
+        return let1(
+            F.array_join(initials, " "),
+            lambda result: _smushed_initials(result, long_personal),
+        )
+
+    return let1(
+        F.struct(tokens.alias("t"), is_personal.alias("p")), from_tokens
     )
-    result = F.array_join(initials, " ")
+
+
+def _smushed_initials(result: Column, long_personal: Column) -> Column:
     smush_all = F.replace(result, F.lit(" "), F.lit(""))
     smush_pers = F.replace(
         F.substring(result, 1, F.length(result) - 1).cast("string"),
@@ -331,14 +361,17 @@ def author_initials(col: Column | str) -> Column:
         F.lit(""),
     )
     with_pers = F.when(
-        (n_tokens > 2) & is_personal & (smush_pers != ""),
+        long_personal & (smush_pers != ""),
         F.concat(result, F.lit(" "), smush_pers),
     ).otherwise(result)
-    out = F.when(
-        F.trim(with_pers) != smush_all,
-        F.concat(with_pers, F.lit(" "), smush_all),
-    ).otherwise(with_pers)
-    return F.trim(out)
+    return let1(
+        with_pers,
+        lambda w: F.trim(
+            F.when(
+                F.trim(w) != smush_all, F.concat(w, F.lit(" "), smush_all)
+            ).otherwise(w)
+        ),
+    )
 
 
 def strip_leading_punctuation(

@@ -76,15 +76,20 @@ def with_dedup_keys(
     round trips — see PERFORMANCE.md construction census).
     """
     ktw = sqltwin.keys_twin()
+    # createTitleKey's prefix and the author, normalized by ONE
+    # transform: normalize_key is a multi-KB tree
+    prefix = SA.substring(ktw.title_key_prefix(SA.col(title_col)), 1, 200)
     tk = F.expr(
         str(
-            SA.substring(
-                SA.concat(
-                    ktw.create_title_key(SA.col(title_col)),
-                    ktw.normalize_key(SA.col(author_col)),
+            ktw.let1(
+                SA.transform(
+                    SA.array(prefix, SA.col(author_col)), ktw.normalize_key
                 ),
-                1,
-                200,
+                lambda k: SA.substring(
+                    SA.concat(SA.try_element_at(k, 1), SA.try_element_at(k, 2)),
+                    1,
+                    200,
+                ),
             )
         )
     )
@@ -246,8 +251,11 @@ def blocking_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _match_condition_from(ca, cb) -> Column:
-    """matchRecords as a boolean Column, generic over field access.
+def _match_parts(ca, cb) -> dict:
+    """matchRecords as three boolean Columns, generic over field access:
+    ``__m_hard`` (the hard filters), ``__m_fast`` (a shared ISBN or
+    unique id) and ``__m_slow`` (no conflict, similar title and author).
+    A pair matches when :func:`_match_of` holds.
 
     ``ca``/``cb`` map a field name to a Column for each side — either
     joined-alias access (``F.col("a.title")``) or struct-lambda access
@@ -320,32 +328,55 @@ def _match_condition_from(ca, cb) -> Column:
         & (lev_a != -1)
     )
 
-    accept_fast = isbn_accept | id_accept
-    accept_slow = ~issn_reject & ~year_reject & ~pages_reject & ~series_reject & title_ok & author_ok
-    return fmt_ok & access_ok & (accept_fast | accept_slow)
+    return {
+        "__m_hard": fmt_ok & access_ok,
+        "__m_fast": isbn_accept | id_accept,
+        "__m_slow": ~issn_reject & ~year_reject & ~pages_reject
+        & ~series_reject & title_ok & author_ok,
+    }
 
 
-_MATCH_SQL_CACHE: dict = {}
+def _match_of(part) -> Column:
+    """The matchRecords decision from its :func:`_match_parts` (``part``
+    maps a part name to its Column)."""
+    return part("__m_hard") & (part("__m_fast") | part("__m_slow"))
 
 
-def match_condition(a: str = "a", b: str = "b") -> Column:
-    """The matchRecords decision as one boolean Column over a joined pair
-    of record structs aliased ``a`` and ``b``, each carrying the
-    :func:`_match_payload` fields.
+_MATCH_SQL: dict[str, str] = {}
 
-    The tree is :func:`_match_condition_from` compiled through the
-    SQL-text twin: rendered to SQL once per (a, b) in pure Python and
-    parsed with ONE ``F.expr`` call instead of ~1.2k py4j round trips of
-    Column construction per dedup build (parity pinned by
-    tests/test_dedup.py)."""
-    sql = _MATCH_SQL_CACHE.get((a, b))
-    if sql is None:
-        sql = _MATCH_SQL_CACHE[(a, b)] = str(
-            sqltwin.dedup_twin()._match_condition_from(
-                lambda n: SA.col(f"{a}.{n}"), lambda n: SA.col(f"{b}.{n}")
-            )
+
+def match_columns() -> dict[str, Column]:
+    """The :func:`_match_parts` of a joined pair of record structs
+    aliased ``a`` and ``b``, each carrying the :func:`_match_payload`
+    fields, by part name.
+
+    Each part is compiled through the SQL-text twin: rendered to SQL once
+    in pure Python and parsed with one ``F.expr`` call instead of ~1.2k
+    py4j round trips of Column construction per dedup build (parity
+    pinned by tests/test_dedup.py)."""
+    if not _MATCH_SQL:
+        parts = sqltwin.dedup_twin()._match_parts(
+            lambda n: SA.col(f"a.{n}"), lambda n: SA.col(f"b.{n}")
         )
-    return F.expr(sql)
+        _MATCH_SQL.update((k, str(v)) for k, v in parts.items())
+    return {k: F.expr(v) for k, v in _MATCH_SQL.items()}
+
+
+def with_match(pairs: DataFrame) -> DataFrame:
+    """``pairs`` (record structs ``a`` and ``b``) plus the boolean
+    matchRecords decision ``__match``.
+
+    The parts are selected as columns before they are combined, so no
+    parenthesis in the parsed SQL encloses a long subtree: the parser's
+    SLL prediction reads from a ``(`` to its ``)`` to tell a
+    parenthesized expression from a row or a lambda parameter list. The
+    optimizer collapses the two projections into one expression."""
+    parts = match_columns()
+    return (
+        pairs.withColumns(parts)
+        .withColumn("__match", _match_of(F.col))
+        .drop(*parts)
+    )
 
 
 # The matchRecords field battery, the one definition of the verify
@@ -529,11 +560,10 @@ def blocking_verified_edges(
         try_element_at(F.col("__c"), F.col("__p.i")).alias("a"),
         try_element_at(F.col("__c"), F.col("__p.j")).alias("b"),
     )
-    match = match_condition("a", "b")
     # sources ride along (functionally dependent on the ids, so the
     # distinct is unchanged) — they let ``deduplicate`` enforce the
     # one-per-source invariant driver-side without a second record pass.
-    out = pairs.where(match).select(
+    out = with_match(pairs).where(F.col("__match")).select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
         F.col("a.source").alias("src_a"),
@@ -570,7 +600,7 @@ def verified_edges(
         .join(b, pairs.id_b == F.col("b.id"))
     )
     keep = ["id_a", "id_b"] + [c for c in ("src_a", "src_b") if c in pairs.columns]
-    return joined.where(match_condition("a", "b")).select(*keep)
+    return with_match(joined).where(F.col("__match")).select(*keep)
 
 
 # ---------------------------------------------------------------------------
@@ -952,7 +982,7 @@ def component_part_edges(
             & (F.col("a.__pos") == F.col("b.__pos")),
         )
     )
-    verified = aligned.withColumn("__ok", match_condition("a", "b"))
+    verified = with_match(aligned).withColumnRenamed("__match", "__ok")
     per_pair = (
         verified.groupBy("host_a", "host_b")
         .agg(F.count(F.lit(1)).alias("__aligned"), F.sum(F.col("__ok").cast("int")).alias("__okn"))

@@ -14,9 +14,11 @@ Behavioral spec (reference, NOT code):
 
 Spark-first: everything except the Unicode normal form is a JVM array
 expression. NFKC has no Spark SQL builtin, so it is an Arrow-batched pandas
-UDF applied only to columns that need it — and skipped entirely for pure-
-ASCII values via a cheap JVM pre-filter, so at 100 TB the Python path only
-sees the minority of strings with non-ASCII bytes.
+UDF applied only to columns that need it. Every value of such a column
+crosses to Python; inside the UDF, pure-ASCII values (``str.isascii``,
+for which NFKC is the identity) skip the normalization. A JVM-side guard
+would not spare the crossing: Spark evaluates a Python UDF in a CASE
+branch unconditionally (see ``_nfkc_one``).
 """
 
 from __future__ import annotations

@@ -14,14 +14,15 @@ time: the module body executes normally (real imports, real pandas_udf
 decorators — those objects are simply never invoked through the twin),
 and afterwards the names the spec functions look up (``F``, ``K``,
 ``GEOF``, ``format_col``, ``try_element_at``, ``author_match_expr``)
-are swapped for their SQL-text counterparts.
+are swapped for their SQL-text counterparts. ``K`` carries
+``keys.let1``, the one helper the specs bind a repeated value with.
 
 The twins are built lazily and cached; building one costs a few ms of
 pure Python. The production entry points take a column NAME and compile
 each big tree through a twin as ONE ``F.expr`` call — turning ~25k py4j
 round trips of plan construction into one parse: ``marc.to_solr_columns``,
 ``marc.work_keys``, ``marc.marc_callnumber_columns``, the renormalize
-derivations, ``dedup.match_condition`` and the dedup key columns.
+derivations, ``dedup.match_columns`` and the dedup key columns.
 Running a spec on real Columns remains the parity reference in
 ``tests/test_sqltwin.py`` and ``tests/test_dedup.py``.
 """
@@ -58,19 +59,22 @@ def keys_twin() -> types.ModuleType:
 
 
 def geo_twin() -> types.ModuleType:
-    return _load("recordmanager_spark.functions.geo", {"F": S})
+    return _load(
+        "recordmanager_spark.functions.geo", {"F": S, "K": keys_twin()}
+    )
 
 
 def format_calculator_twin() -> types.ModuleType:
     return _load(
-        "recordmanager_spark.extractors.format_calculator", {"F": S}
+        "recordmanager_spark.extractors.format_calculator",
+        {"F": S, "K": keys_twin()},
     )
 
 
 def dedup_twin() -> types.ModuleType:
     """operators/dedup re-executed against the SQL-text algebra.
 
-    Only ``_match_condition_from`` (the matchRecords verify tree over
+    Only ``_match_parts`` (the matchRecords verify trees over
     the pre-normalized ``__nk_title`` / ``__nk_author`` keys) is
     meaningful through this twin; the DataFrame-shaping functions still
     reference the real pyspark DataFrame API and must not be called on

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import re
+import unicodedata
 import xml.etree.ElementTree as ET
 from urllib.parse import urlparse
 
@@ -52,6 +53,54 @@ def normalize_key_py(s: str | None) -> str:
         table[ord(ch)] = None
     c = c.translate(table)
     return re.sub(_KEY_STRIP_RE, "", c)
+
+
+def author_initials_py(name: str | None) -> str | None:
+    """Python twin of ``keys.author_initials``, written step by step
+    from MetadataUtils::getAuthorInitials (MetadataUtils.php:1184-1227):
+
+    - the name is personal when it has a comma that is neither its first
+      character (PHP ``strpos`` returns a falsy 0) nor its last;
+    - everything but letters, spaces and hyphens is removed, the rest
+      lowercased and exploded on single spaces (empty tokens kept);
+    - a personal name of more than one token moves its first token (the
+      surname) to the end;
+    - each non-empty token gives its first letter, or, when a hyphen sits
+      strictly inside it, the first letters on both sides of the first
+      hyphen, space-separated;
+    - the initials, space-joined, then gain the personal-name smush (all
+      but the last character, spaces removed) when the name is personal
+      with more than two tokens, and the smush of all initials when the
+      result so far, space-trimmed, differs from it.
+    """
+    if name is None:
+        return None
+    comma = name.find(",")
+    personal = 0 < comma < len(name) - 1
+    cleaned = "".join(
+        ch for ch in name
+        if ch in " -" or unicodedata.category(ch).startswith("L")
+    ).lower()
+    tokens = cleaned.split(" ")
+    if personal and len(tokens) > 1:
+        tokens = tokens[1:] + tokens[:1]
+    initials = []
+    for t in tokens:
+        if t == "":
+            continue
+        hyphen = t.find("-")
+        if 0 < hyphen < len(t) - 1:
+            initials.append(t[0] + " " + t[hyphen + 1])
+        else:
+            initials.append(t[0])
+    result = " ".join(initials)
+    smush_all = result.replace(" ", "")
+    smush_pers = result[: max(len(result) - 1, 0)].replace(" ", "")
+    if len(tokens) > 2 and personal and smush_pers != "":
+        result = result + " " + smush_pers
+    if result.strip(" ") != smush_all:
+        result = result + " " + smush_all
+    return result.strip(" ")
 
 
 SPLIT_SCHEMA = T.ArrayType(

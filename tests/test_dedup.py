@@ -66,9 +66,9 @@ def test_basic_match_and_group(spark):
 
 
 def test_match_condition_twin_parity(spark):
-    """The SQL-text-compiled matchRecords (match_condition, the only
-    verify path) must decide every pair exactly like the Column build
-    of _match_condition_from normalizing per pair — adversarial cross
+    """The SQL-text-compiled matchRecords (with_match, the only verify
+    path) must decide every pair exactly like the Column build of
+    _match_parts normalizing per pair — adversarial cross
     product: nulls, array overlaps, year/page/issn conflicts, prefix
     authors, levenshtein band edges, unicode, empty strings."""
     import itertools
@@ -118,7 +118,7 @@ def test_match_condition_twin_parity(spark):
 
         return field
 
-    col_cond = DD._match_condition_from(per_pair("a"), per_pair("b"))
+    col_parts = DD._match_parts(per_pair("a"), per_pair("b"))
     keyed = pair.select(
         *[
             F.struct(
@@ -129,8 +129,8 @@ def test_match_condition_twin_parity(spark):
             for s in ("a", "b")
         ]
     )
-    out = keyed.select(
-        col_cond.alias("c"), DD.match_condition("a", "b").alias("t")
+    out = DD.with_match(keyed).select(
+        DD._match_of(col_parts.get).alias("c"), F.col("__match").alias("t")
     ).collect()
     assert [r["c"] for r in out] == [r["t"] for r in out]
 
@@ -142,12 +142,11 @@ def test_match_condition_sql_is_small():
     from recordmanager_spark import sqlalg as SA
     from recordmanager_spark import sqltwin
 
-    sql = str(
-        sqltwin.dedup_twin()._match_condition_from(
-            lambda n: SA.col(f"a.{n}"), lambda n: SA.col(f"b.{n}")
-        )
+    parts = sqltwin.dedup_twin()._match_parts(
+        lambda n: SA.col(f"a.{n}"), lambda n: SA.col(f"b.{n}")
     )
-    assert len(sql) <= 4 * 1024, len(sql)
+    size = sum(len(str(v)) for v in parts.values())
+    assert size <= 4 * 1024, size
 
 
 def test_same_source_never_pairs(spark):

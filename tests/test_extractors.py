@@ -537,6 +537,10 @@ def test_marc_geographic_locations(spark):
             # out of range -> discarded
             {"034": {"ind1": " ", "ind2": " ", "subfields": [
                 {"d": "200"}, {"e": "210"}, {"f": "60"}, {"g": "50"}]}},
+            # box whose east edge is out of range (and past a long) ->
+            # discarded, never formatted
+            {"034": {"ind1": " ", "ind2": " ", "subfields": [
+                {"d": "10"}, {"e": "9e300"}, {"f": "60"}, {"g": "50"}]}},
             # DMS form (E 25 08 31 ~ 25.141944) point
             {"034": {"ind1": " ", "ind2": " ", "subfields": [
                 {"d": "E0250831"}, {"f": "N0372500"}]}},
@@ -547,7 +551,7 @@ def test_marc_geographic_locations(spark):
     assert r.long_lat[0] == "ENVELOPE(10, 20, 60, 50)"
     assert r.long_lat[1] == "POINT(25 60)"
     assert r.long_lat[2] == "ENVELOPE(10, 20, 60, 50)"
-    assert len(r.long_lat) == 4  # out-of-range one dropped
+    assert len(r.long_lat) == 4  # out-of-range ones dropped
     assert r.long_lat[3].startswith("POINT(25.14")
 
 

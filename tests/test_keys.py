@@ -8,7 +8,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from recordmanager_spark.functions import keys as K
-from tests.oracles import normalize_key_py
+from tests.oracles import author_initials_py, normalize_key_py
 
 
 def one(spark, col, value: str):
@@ -297,3 +297,32 @@ def test_normalize_key_py_matches_column_engine(spark):
     got = [r.k for r in df.select(K.normalize_key(F.col("s")).alias("k")).collect()]
     # the Column fold null-propagates; the py twin maps None -> ""
     assert got == [normalize_key_py(v) if v is not None else None for v in vals]
+
+
+# comma first / last / inside, hyphens inside and at token edges, 1, 2
+# and 3+ tokens, runs of spaces (empty tokens), non-letters only,
+# non-ASCII letters, empty and null
+_INITIALS_NAMES = [
+    "Yeats, William Butler", ",Smith John", "Smith John,", ",", "Smith,",
+    "Jean-Luc Picard", "Smith, Jean-Luc", "O'Brien, Mary-Kate Ann Lee",
+    "-Smith, -", "a- -b", "x-y-z, q", "Madonna", "Smith, John",
+    " Smith,  John ", "Writer, Wendy-Ann B.", "Ünal, Özge Ayşe",
+    "12345", "1, 2, 3", "", None,
+]
+
+
+def test_author_initials_matches_oracle(spark):
+    """``keys.author_initials``, built with Column functions and through
+    the SQL-text twin, equals the getAuthorInitials oracle on every
+    name."""
+    from recordmanager_spark import sqlalg as SA
+    from recordmanager_spark import sqltwin
+
+    df = spark.createDataFrame([(n,) for n in _INITIALS_NAMES], "v string")
+    twin = F.expr(str(sqltwin.keys_twin().author_initials(SA.col("v"))))
+    rows = df.select(
+        "v", K.author_initials(F.col("v")).alias("c"), twin.alias("t")
+    ).collect()
+    want = {n: author_initials_py(n) for n in _INITIALS_NAMES}
+    assert [(r["v"], r["c"]) for r in rows] == list(want.items())
+    assert [(r["v"], r["t"]) for r in rows] == list(want.items())

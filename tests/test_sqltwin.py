@@ -12,14 +12,18 @@ fields. ``test_solr_frame_golden`` pins the whole produced frame.
 
 The rendering rules of ``sqlalg`` are pinned here too: minimal
 parentheses, quoted keyword-form names and ``CASE true WHEN`` each give
-the parsed tree or optimized plan of the plain spelling, and
+the parsed tree or optimized plan of the plain spelling,
 ``test_twin_sll_lookahead_ratchet`` caps how far ahead the parser's
-prediction reads in any production tree.
+prediction reads in any production tree, and
+``test_twin_trees_bind_repeats`` keeps every repeated subtree of 1 KiB
+or more out of them.
 """
 
 from __future__ import annotations
 
+import collections
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -571,19 +575,19 @@ def _production_trees(spark, monkeypatch) -> dict[str, str]:
         )
     )
     D._match_payload()
-    D._MATCH_SQL_CACHE.clear()
-    D.match_condition()
+    D.match_columns()
     monkeypatch.undo()
     trees.update((f"dedup.{i}", t) for i, t in enumerate(seen))
     return trees
 
 
 # The longest SLL lookahead any production tree may make the parser read,
-# in tokens: the matchRecords tree's parenthesized-expression decision.
-# Keyword-form calls (``trim(``, ``substring(``), searched ``CASE WHEN``
-# and ``map(`` as an argument each read to the end of their call, which
-# took ``format`` to 10,926 tokens.
-_MAX_SLL_LOOK = 942
+# in tokens: the parenthesized AND chain that opens matchRecords'
+# ``__m_slow`` part. Keyword-form calls (``trim(``, ``substring(``),
+# searched ``CASE WHEN`` and ``map(`` as an argument each read to the end
+# of their call, which took ``format`` to 10,926 tokens; the whole
+# matchRecords decision in one tree read 942.
+_MAX_SLL_LOOK = 453
 
 
 def _sll_max_look(spark, text: str) -> tuple[int, str]:
@@ -634,3 +638,79 @@ def test_twin_sll_lookahead_ratchet(spark, monkeypatch):
         if look > _MAX_SLL_LOOK:
             over[name] = (look, rule)
     assert not over, over
+
+
+# Text of a string literal, a quoted name, or a lambda variable name.
+_SQL_TOKEN = re.compile(r"'(?:\\.|[^'\\])*'|`[^`]*`|\bV\d+\b")
+
+
+def _repeated_subtrees(text: str, min_len: int = 1024) -> dict[str, int]:
+    """Parenthesized spans of ``text`` at least ``min_len`` characters
+    long that occur more than once, with lambda variables renamed in
+    order of first appearance (the twin names each lambda afresh, so two
+    copies of one subtree differ only in those names) -> count."""
+    spans, stack, i = [], [], 0
+    while i < len(text):
+        ch = text[i]
+        if ch == "'":
+            i += 1
+            while text[i] != "'":
+                i += 2 if text[i] == "\\" else 1
+        elif ch == "`":
+            i = text.index("`", i + 1)
+        elif ch == "(":
+            stack.append(i)
+        elif ch == ")":
+            start = stack.pop()
+            if i + 1 - start >= min_len:
+                spans.append(text[start:i + 1])
+        i += 1
+
+    def canonical(span: str) -> str:
+        names: dict[str, str] = {}
+        return _SQL_TOKEN.sub(
+            lambda m: m.group() if m.group()[0] in "'`"
+            else names.setdefault(m.group(), f"V{len(names)}"),
+            span,
+        )
+
+    counts = collections.Counter(canonical(sp) for sp in spans)
+    return {k: n for k, n in counts.items() if n > 1}
+
+
+# Total SQL text of the production trees, in KiB: 295.6 over 81 trees
+# when repeated values were written out at every reference.
+_MAX_TREES_KIB = 190
+
+
+def test_twin_trees_bind_repeats(spark, monkeypatch):
+    """No production tree writes the same subtree of 1 KiB or more twice:
+    a value read more than once is bound once (``keys.let1``), because
+    every copy is parsed, analysed, optimized and evaluated again. The
+    trees together stay under ``_MAX_TREES_KIB``."""
+    trees = _production_trees(spark, monkeypatch)
+    repeated = {}
+    for name, text in trees.items():
+        rep = _repeated_subtrees(text)
+        if rep:
+            top = max(rep, key=len)
+            repeated[name] = (len(top), rep[top], top[:120])
+    assert not repeated, repeated
+    total = sum(map(len, trees.values())) / 1024
+    assert total <= _MAX_TREES_KIB, total
+
+
+def test_repeated_subtrees_finds_renamed_copies():
+    """The repeat census sees through lambda-variable names and string
+    literals: two renders of one spec repeat, two different ones do
+    not, and a parenthesis inside a literal is not a span."""
+    big = "x" * 1100
+
+    def tree():
+        return S.transform(S.col("arr"), lambda v: S.concat(v, S.lit(big)))
+
+    rep = _repeated_subtrees(str(S.array(tree(), tree())))
+    assert rep and set(rep.values()) == {2}
+    other = S.transform(S.col("arr"), lambda v: S.concat(v, S.lit(big + "y")))
+    assert _repeated_subtrees(str(S.array(tree(), other))) == {}
+    assert _repeated_subtrees(str(S.array(S.lit("(" + big), S.lit("(" + big)))) == {}

@@ -429,11 +429,13 @@ AUDITS = [
 # into every consumer (the forward_film class — 0.36 MB after its
 # single-parse rewrite, >10 MB before), and re-introducing one-DOM-parse-
 # per-column xpath extraction. MARC/linemarc plans are big by nature
-# (fieldspec trees, no xpath) — their caps only catch growth.
+# (fieldspec trees, no xpath); their caps are ~1.1x the 0.77 / 1.23 /
+# 0.49 MB measured with each repeated subtree bound once (written out at
+# every reference they were 3.28 / 11.30 / 3.00 MB).
 SIZE_AUDITS = [
-    ("marc_extract", 7.0, 0),
-    ("marc_rich_extract", 16.0, 0),
-    ("linemarc_extract", 4.5, 0),
+    ("marc_extract", 0.85, 0),
+    ("marc_rich_extract", 1.35, 0),
+    ("linemarc_extract", 0.55, 0),
     ("forward_film_extract", 1.0, 0),
     ("dc_extract", 0.5, 0),
     ("dc_extract_struct", 0.5, 0),
