@@ -2738,6 +2738,8 @@ def streaming_hourly_rollup(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from recordmanager_spark.streaming.pipeline import streaming_events
+
     path = f"{sf}/events.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     static = spark.read.parquet(path)
@@ -2755,19 +2757,11 @@ def streaming_hourly_rollup(spark: SparkSession, sf: str) -> DataFrame:
         # without the nanosAsLong legacy flag; withWatermark requires LTZ
         # (session tz is UTC, so the reinterpretation is value-preserving)
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("hour_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
+    agg = streaming_events(stream, "1 hour").select(
+        F.col("win.start").alias("hour_start"),
+        "event_type",
+        "n",
+        F.round("total_value", 4).alias("total_value"),
     )
     name = "stream_rollup_" + uuid.uuid4().hex[:10]
     q = (
@@ -2892,7 +2886,7 @@ def bpe_tokenize_docs(spark: SparkSession, sf: str) -> DataFrame:
     """BPE subword encoding with a pinned merge table (8 merges,
     applied in training order as global left-to-right pair rewrites —
     the JVM replace-chain encoder). The TRAINER is driver-side over the
-    bounded word-frequency table (functions/bpe.py, pytest-pinned on
+    bounded word-frequency table (tests/oracles.py, pytest-pinned on
     the Sennrich example); this contract query pins the ENCODER, whose
     rewrite semantics the DuckDB oracle reproduces char-for-char."""
     from recordmanager_spark.functions import bpe as B

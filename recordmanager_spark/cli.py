@@ -45,8 +45,6 @@ from pyspark.sql import functions as F
 from . import config as CF
 from .streaming.pipeline import WatermarkStore
 
-__all__ = ["main"]
-
 
 def _spark(app: str) -> SparkSession:
     from .session import get_spark
@@ -1511,7 +1509,7 @@ def cmd_solr_delete_source(args) -> None:
         return
     if not args.update_url:
         raise SystemExit("one of --out / --update-url required")
-    from .examples.solr_pusher import make_urllib_transport
+    from .sinks.solr import make_urllib_transport
 
     transport = make_urllib_transport(timeout=args.timeout)
     for payload in (body, commit):
@@ -1538,7 +1536,7 @@ def cmd_solr_optimize(args) -> None:
         return
     if not args.update_url:
         raise SystemExit("one of --out / --update-url required")
-    from .examples.solr_pusher import make_urllib_transport
+    from .sinks.solr import make_urllib_transport
 
     transport = make_urllib_transport(timeout=args.timeout)
     status, _resp = transport(

@@ -28,14 +28,6 @@ from pyspark.sql import functions as F
 
 from .plans import mapping as MP
 
-__all__ = [
-    "SourceConfig",
-    "CompiledSource",
-    "parse_datasources_ini",
-    "compile_source",
-    "apply_source_pipeline",
-]
-
 
 _SECTION_RE = re.compile(r"^\[([^\]]+)\]\s*$")
 _KV_RE = re.compile(r"^([^=\[\];]+?)(\[([^\]]*)\])?\s*=\s*(.*)$")

@@ -137,13 +137,6 @@ from pyspark.sql import functions as F
 
 from .config import _bool, _parse_php_ini  # the shared ini dialect
 
-__all__ = [
-    "CorpusConfig",
-    "parse_corpus_ini",
-    "load_corpus_source",
-    "apply_corpus_pipeline",
-]
-
 
 @dataclass
 class CorpusConfig:

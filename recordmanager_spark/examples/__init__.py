@@ -6,8 +6,6 @@ client drops into the engine with its side-effecting part injected, so
 tests and offline runs use a fake and a deployment passes a real
 callable.
 
-- ``solr_pusher``: Solr update/delete POSTs for ``solr-*`` commands
-  (injected HTTP transport).
 - ``log_sender``: error-log mail digests for ``logs-send`` (injected
   mailer).
 - ``audio_fingerprint``: energy-delta audio fingerprints and near-dup

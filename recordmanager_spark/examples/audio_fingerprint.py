@@ -16,9 +16,9 @@ Decoding follows the engine's multimodal policy (reference parity:
 RecordManager treats media payloads as opaque and wires external
 tooling per deployment, conf/recordmanager.ini): PCM16 WAV decodes
 with the stdlib/numpy walk already in ``operators/multimodal.py``;
-compressed audio (MP3/AAC/…) needs ffmpeg/PyAV, which is INJECTED —
-:func:`pyav_audio_decoder` builds a decoder when PyAV is importable,
-tests pass a deterministic fake, the engine imports neither.
+compressed audio (MP3/AAC/…) needs ffmpeg/PyAV, which is INJECTED as
+a ``decoder_factory`` — tests pass a deterministic fake, the engine
+imports neither.
 
 Scale shape: fingerprinting is one Arrow-batched Python scan (zero
 shuffles). The fingerprint table is n_segments rows per audio (tiny
@@ -38,15 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from recordmanager_spark.operators.multimodal import wav_meta
-
-__all__ = [
-    "decode_wav_mono",
-    "pyav_audio_decoder",
-    "energy_delta_fp64",
-    "audio_segment_fingerprints",
-    "audio_near_duplicates",
-    "AUDIO_FP_SCHEMA",
-]
 
 # decoder: payload -> (mono float64 samples, sample_rate) or None
 AudioDecoder = Callable[[bytes], Optional[Tuple[np.ndarray, int]]]
@@ -78,36 +69,6 @@ def decode_wav_mono(payload: bytes) -> Optional[Tuple[np.ndarray, int]]:
             return samples, meta["sample_rate"]
         i += 8 + clen + (clen & 1)
     return None
-
-
-def pyav_audio_decoder() -> AudioDecoder:
-    """Build a compressed-audio decoder from PyAV (raises ImportError
-    when PyAV is absent — the caller decides whether that is fatal).
-    Undecodable payloads return None instead of raising, so one corrupt
-    file never kills a stage."""
-    import io
-
-    import av  # noqa: F401 — the injected dependency
-
-    def decode(payload: bytes) -> Optional[Tuple[np.ndarray, int]]:
-        try:
-            with av.open(io.BytesIO(payload)) as container:
-                stream = container.streams.audio[0]
-                rate = int(stream.rate or 0)
-                chunks = []
-                for frame in container.decode(stream):
-                    arr = frame.to_ndarray().astype(np.float64)
-                    # PyAV yields (channels, samples) for planar formats
-                    chunks.append(
-                        arr.mean(axis=0) if arr.ndim > 1 else arr
-                    )
-                if not chunks or rate <= 0:
-                    return None
-                return np.concatenate(chunks), rate
-        except Exception:
-            return None
-
-    return decode
 
 
 def energy_delta_fp64(samples: np.ndarray) -> int:

@@ -15,7 +15,7 @@ Behavioral spec (reference, NOT code): ``Command/Logs/Send.php:73-128``
 - loop until the store is empty, then report the total count.
 
 The mailer is INJECTED as ``mailer(recipient, subject, body) -> bool``
-(the solr_pusher/Nominatim seam pattern): tests pass a recorder,
+(the Solr transport/Nominatim seam pattern): tests pass a recorder,
 deployments pass :func:`make_smtp_mailer` or a file-sink writer. The
 log store is a JSON-lines file (the engine's stores are files; the
 reference reads its database log collection).
@@ -28,8 +28,6 @@ import json
 import os
 import socket
 from typing import Callable
-
-__all__ = ["send_logs", "make_smtp_mailer", "file_log_store"]
 
 TRUNCATE_AT = 4096 + 50
 KEEP = 2048

@@ -1,20 +1,1 @@
 """Format-specific record extractors (reference: src/RecordManager/Base/Record/)."""
-
-from . import (  # noqa: F401
-    dc,
-    doaj,
-    ead,
-    ead3,
-    eaccpf,
-    ese,
-    format_calculator,
-    forward,
-    forward_authority,
-    marc_authority,
-    lido,
-    linemarc,
-    lrmi,
-    marc,
-    marc_normalize,
-    qdc,
-)

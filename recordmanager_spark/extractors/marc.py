@@ -324,12 +324,15 @@ def linked_alt_values(
     tag: str,
     codes: Sequence[str] | None = None,
     split_subfields: bool = False,
+    fields880: Column | None = None,
 ) -> Column:
     """Alt-script values from 880 fields linked to `tag` via $6 occurrences.
 
     Parity with Marc/Marc.php getLinkedSubfieldsFrom880 / parseLinkageField:
     an 880 belongs to (tag, occurrence) when its own $6 is "tag-occ..." and
     some original field of `tag` carries $6 "880-occ...". Pure array exprs.
+    The 880s are looked for in ``fields880`` when given (the record's 880s,
+    bound once by a caller that looks up several tags), else in every field.
     """
     # occurrences referenced by original fields of this tag
     occs = F.transform(
@@ -339,7 +342,7 @@ def linked_alt_values(
         _field_link_occ,
     )
     linked = F.filter(
-        marc["fields"],
+        marc["fields"] if fields880 is None else fields880,
         lambda f: (f["tag"] == "880")
         & F.exists(
             F.coalesce(f["subfields"], F.array()),
@@ -1555,7 +1558,10 @@ _WORK_TITLE_SPECS = {
 }
 
 
-def _work_authors(marc: Column, alt: bool) -> Column:
+def _work_authors(marc: Column, alt: Column | None) -> Column:
+    """Array of author values: of the main fields when ``alt`` is None,
+    else of the 880s linked to them, ``alt`` being the record's 880s
+    (:func:`fields_by_tag` ``(marc, "880")``)."""
     parts = []
     for tag, subs, skip_analytical in _WORK_AUTHOR_SPECS:
         flds = fields_by_tag(marc, tag)
@@ -1563,8 +1569,8 @@ def _work_authors(marc: Column, alt: bool) -> Column:
             # analytical entries (ind2 == '2') form separate work-id sets;
             # excluded by default like work_keys_from_analytical_entries=false
             flds = F.filter(flds, lambda f: F.coalesce(f["ind2"], F.lit(" ")) != "2")
-        if alt:
-            vals = linked_alt_values(marc, tag, subs)
+        if alt is not None:
+            vals = linked_alt_values(marc, tag, subs, fields880=alt)
         else:
             vals = F.filter(
                 F.transform(flds, lambda f: subfield_join(f, subs)),
@@ -1574,8 +1580,9 @@ def _work_authors(marc: Column, alt: bool) -> Column:
     return F.concat(*parts)
 
 
-def _work_titles(marc: Column, alt: bool) -> Column:
-    """Array of struct(uniform boolean, value string) title entries.
+def _work_titles(marc: Column, alt: Column | None) -> Column:
+    """Array of struct(uniform boolean, value string) title entries, of
+    the main fields or (``alt`` as in :func:`_work_authors`) their 880s.
 
     The per-tag title and its non-filing indicator are bound once
     (``keys.let1``) before the stripped/original fan-out, which reads
@@ -1583,9 +1590,10 @@ def _work_titles(marc: Column, alt: bool) -> Column:
     parts = []
     for tag, (extra, nonfiling_ind) in _WORK_TITLE_SPECS.items():
         uniform = tag in ("130", "730")
-        if alt:
-            raw_vals = F.slice(linked_alt_values(marc, tag, ["a"] + extra), 1, 1)
-            vals = raw_vals
+        if alt is not None:
+            vals = F.slice(
+                linked_alt_values(marc, tag, ["a"] + extra, fields880=alt), 1, 1
+            )
         else:
             fld = try_element_at(fields_by_tag(marc, tag), 1)
             a = F.coalesce(try_element_at(_sub_values(fld, ["a"]), 1), F.lit(""))
@@ -1663,14 +1671,16 @@ def _work_keys(marc: Column) -> Column:
             ),
         )
 
+    def engine(alt: Column | None) -> Column:
+        return F.struct(
+            _work_authors(marc, alt).alias("a"),
+            _work_titles(marc, alt).alias("t"),
+        )
+
+    # the alt-script pass binds the record's 880s once: its twelve
+    # per-tag lookups then scan those instead of every field
     engines = F.array(
-        *[
-            F.struct(
-                _work_authors(marc, alt).alias("a"),
-                _work_titles(marc, alt).alias("t"),
-            )
-            for alt in (False, True)
-        ]
+        engine(None), K.let1(fields_by_tag(marc, "880"), engine)
     )
     return F.array_distinct(F.flatten(F.transform(engines, keys_for)))
 

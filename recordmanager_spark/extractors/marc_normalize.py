@@ -182,6 +182,3 @@ def holdings_summary(marc: Column) -> Column:
             (_sub(f, "9") == "1").alias("available"),
         ),
     )
-
-
-__all__ = ["normalize_marc", "holdings_summary", "get_field_subfields"]

@@ -1,3 +1,1 @@
-from . import keys, text
-
-__all__ = ["keys", "text"]
+"""Scalar metadata functions (reference: Base/Utils/MetadataUtils.php)."""

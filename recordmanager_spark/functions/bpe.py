@@ -6,10 +6,10 @@ way a 100 TB corpus actually trains one:
 1. ``word_frequencies`` — the ONLY corpus-scale stage: one distributed
    tokenize-explode-count. Its output is the distinct-word frequency
    table, bounded by vocabulary (millions of rows), not corpus size.
-2. ``bpe_train`` — the merge loop runs DRIVER-SIDE over that collected
+2. Training — the merge loop runs DRIVER-SIDE over that collected
    table (exactly how reference tokenizer trainers work: the corpus
-   pass produces word counts, training is local). Deterministic:
-   ties on pair count break lexicographically.
+   pass produces word counts, training is local); ties on pair count
+   break lexicographically, so a corpus always yields the same merges.
 3. ``bpe_encode`` — applying the learned merges to text, JVM-side: a
    word becomes its space-separated symbols and each merge is one
    boundary-anchored ``regexp_replace`` of ``"a b" -> "ab"`` (the
@@ -17,12 +17,10 @@ way a 100 TB corpus actually trains one:
    pattern can never match ACROSS a symbol boundary — e.g. merges
    ``[(t,h),(h,e)]`` must encode "the" as ``[th, e, ▁]``, never "the";
    a naive un-anchored replace would match the "h e" inside "th e").
-   This makes the inline chain byte-identical to the symbol-list scan
-   ``bpe_train``/``bpe_encode_udf`` run. The expression chain grows one
-   node per merge, so it is capped; past ``max_inline_merges`` use
-   ``bpe_encode_udf`` — an Arrow-batched pandas UDF running the same
-   algorithm for production-size merge lists (32k merges as plan
-   literals would be a plan-size bomb, see PERFORMANCE.md).
+   This makes the inline chain byte-identical to a greedy scan of the
+   symbol list. The expression chain grows one node per merge, so it
+   is capped at ``max_inline_merges`` (32k merges as plan literals
+   would be a plan-size bomb, see PERFORMANCE.md).
 
 No counterpart in the reference (it stops at the Solr sink); this
 extends the engine toward LLM-corpus preparation like text_dedup /
@@ -31,19 +29,10 @@ packing do.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import tokenize
-
-__all__ = [
-    "word_frequencies",
-    "bpe_train",
-    "bpe_encode",
-    "bpe_encode_udf",
-    "END_OF_WORD",
-]
 
 # End-of-word sentinel appended to each word before merging (Sennrich's
 # </w>): lets the model distinguish "est" inside a word from "est</w>"
@@ -73,67 +62,6 @@ def word_frequencies(
     return counts
 
 
-def _symbols(word: str) -> tuple[str, ...]:
-    return tuple(word) + (END_OF_WORD,)
-
-
-def bpe_train(
-    word_counts: list[tuple[str, int]],
-    n_merges: int,
-    max_words: int = 5_000_000,
-) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` merge rules from a (word, count) table.
-
-    Pure driver-side Python over the bounded vocabulary (raises past
-    ``max_words`` rows — prune with ``word_frequencies(min_count=...)``
-    first; a 100 TB corpus's distinct-word table after min_count=2 fits
-    comfortably). Deterministic: each step merges the highest-count
-    adjacent symbol pair, ties broken by lexicographic pair order —
-    so the same corpus always yields the same merges, on any machine.
-
-    Returns the merge list in training order (the order ``bpe_encode``
-    must apply them in).
-    """
-    if len(word_counts) > max_words:
-        raise ValueError(
-            f"word table has {len(word_counts)} rows > max_words="
-            f"{max_words}; prune with word_frequencies(min_count=...)"
-        )
-    vocab: dict[tuple[str, ...], int] = {}
-    for word, count in word_counts:
-        if word:
-            vocab[_symbols(word)] = vocab.get(_symbols(word), 0) + int(count)
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pair_counts: dict[tuple[str, str], int] = {}
-        for syms, count in vocab.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + count
-        if not pair_counts:
-            break
-        top = max(pair_counts.values())
-        best_pair = min(p for p, c in pair_counts.items() if c == top)
-        merges.append(best_pair)
-        a, b = best_pair
-        merged = a + b
-        new_vocab: dict[tuple[str, ...], int] = {}
-        for syms, count in vocab.items():
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            t = tuple(out)
-            new_vocab[t] = new_vocab.get(t, 0) + count
-        vocab = new_vocab
-    return merges
-
-
 def _rx_quote(sym: str) -> str:
     """Quote a literal symbol for a Java regex (\\Q...\\E, \\E-safe)."""
     return "\\Q" + sym.replace("\\E", "\\E\\\\E\\Q") + "\\E"
@@ -159,15 +87,13 @@ def bpe_encode(
     boundary — the left half must BE a whole symbol, not a suffix of
     one — and (b) adjacent occurrences ("a b a b") both merge in one
     pass, exactly the greedy left-to-right non-overlapping scan of the
-    symbol list that :func:`bpe_train` / :func:`bpe_encode_udf` run.
-    One expression node per merge — refuse past ``max_inline_merges``
-    (use :func:`bpe_encode_udf` for real vocabs; a 32k-merge chain is a
-    plan-size bomb).
+    symbol list. One expression node per merge — refuse past
+    ``max_inline_merges`` (a 32k-merge chain is a plan-size bomb).
     """
     if len(merges) > max_inline_merges:
         raise ValueError(
             f"{len(merges)} merges exceed max_inline_merges="
-            f"{max_inline_merges}; use bpe_encode_udf for large vocabs"
+            f"{max_inline_merges}; the inline chain would bloat the plan"
         )
 
     def encode_word(w: Column) -> Column:
@@ -185,46 +111,3 @@ def bpe_encode(
         return F.split(F.trim(s), " ")
 
     return F.flatten(F.transform(tokenize(col), encode_word))
-
-
-def bpe_encode_udf(merges: list[tuple[str, int]] | list[tuple[str, str]]):
-    """Arrow-batched encoder for production-size merge lists.
-
-    Same algorithm and output as :func:`bpe_encode` (word-major, merges
-    applied in training order with left-to-right non-overlapping
-    replacement), but the merge table lives in the closure instead of
-    the plan. Returns a callable usable as ``df.select(enc(F.col(c)))``.
-    """
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    merge_list = [tuple(m) for m in merges]
-
-    @pandas_udf("array<string>")
-    def enc(s: pd.Series) -> pd.Series:
-        def one(text):
-            if text is None:
-                return []
-            out: list[str] = []
-            for w in text.split():
-                syms = list(w) + [END_OF_WORD]
-                for a, b in merge_list:
-                    i = 0
-                    res: list[str] = []
-                    while i < len(syms):
-                        if (
-                            i + 1 < len(syms)
-                            and syms[i] == a
-                            and syms[i + 1] == b
-                        ):
-                            res.append(a + b)
-                            i += 2
-                        else:
-                            res.append(syms[i])
-                            i += 1
-                    syms = res
-                out.extend(syms)
-            return out
-
-        return s.map(one)
-
-    return enc

@@ -29,17 +29,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = [
-    "HTML_ENTITIES",
-    "html_strip_blocks",
-    "html_to_text",
-    "html_title",
-    "link_density",
-    "robots_header_noindex",
-    "robots_meta_noindex",
-    "robots_optout",
-]
-
 # literal entity decode, order is semantic: &amp; must fold LAST
 HTML_ENTITIES: list[tuple[str, str]] = [
     ("&nbsp;", " "),

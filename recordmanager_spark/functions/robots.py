@@ -35,14 +35,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "parse_robots",
-    "robots_path_allowed",
-    "robots_gate",
-    "url_host_expr",
-    "url_path_expr",
-]
-
 # one rule: (pattern_length, allow, compiled_prefix_regex)
 Rule = Tuple[int, bool, "re.Pattern[str]"]
 

@@ -37,12 +37,6 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "DEFAULT_TRACKING_PARAMS",
-    "canonicalize_url",
-    "canonical_url_dedup",
-]
-
 # parameter-name prefixes stripped during canonicalization; '=' anchors
 # exact names, a trailing '_' anchors families
 DEFAULT_TRACKING_PARAMS = (

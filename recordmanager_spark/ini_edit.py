@@ -34,15 +34,6 @@ from __future__ import annotations
 
 import re
 
-__all__ = [
-    "add_setting",
-    "remove_setting",
-    "delete_sources",
-    "show_config",
-    "search_sources",
-    "parse_setting_line",
-]
-
 
 def _commentless(line: str) -> str:
     return line.split(";", 1)[0].strip()

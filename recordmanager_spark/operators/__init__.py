@@ -1,30 +1,2 @@
-from . import (  # noqa: F401
-    bucket_pairs,
-    contamination,
-    count_values,
-    dedup,
-    diagnostics,
-    dsir,
-    enrich,
-    incremental,
-    keywords,
-    merge,
-    multimodal,
-    normalize,
-    packing,
-    pq,
-    preview,
-    quality_classifier,
-    range_query,
-    similarity,
-    substring_dedup,
-    text_dedup,
-)
-
-__all__ = [
-    "bucket_pairs", "contamination", "count_values", "dedup",
-    "diagnostics", "dsir", "enrich", "incremental", "keywords", "merge",
-    "multimodal", "normalize", "packing", "pq", "preview",
-    "quality_classifier", "range_query", "similarity",
-    "substring_dedup", "text_dedup",
-]
+"""Dataflow operators: dedup, merge, normalize, enrich and the corpus
+curation passes (text dedup, similarity, packing, diagnostics)."""

@@ -252,10 +252,11 @@ def blocking_pairs(
 
 
 def _match_parts(ca, cb) -> dict:
-    """matchRecords as three boolean Columns, generic over field access:
+    """matchRecords as five boolean Columns, generic over field access:
     ``__m_hard`` (the hard filters), ``__m_fast`` (a shared ISBN or
-    unique id) and ``__m_slow`` (no conflict, similar title and author).
-    A pair matches when :func:`_match_of` holds.
+    unique id), ``__m_ok`` (no ISSN, year, page or series conflict),
+    ``__m_title`` and ``__m_author`` (similar title, similar author). A
+    pair matches when :func:`_match_of` holds.
 
     ``ca``/``cb`` map a field name to a Column for each side — either
     joined-alias access (``F.col("a.title")``) or struct-lambda access
@@ -301,7 +302,8 @@ def _match_parts(ca, cb) -> dict:
     # it on both title and author). Two cuts, same accept set:
     # 1. length-band reject — |len(x)-len(y)| is a lower bound on edit
     #    distance, so a pair outside the budget can never match; Spark's And
-    #    short-circuits, so rejected pairs never run levenshtein at all.
+    #    short-circuits, so rejected pairs never run levenshtein at all (nor
+    #    do pairs with a conflict: ``_match_of`` puts ``__m_ok`` first).
     # 2. threshold (banded) levenshtein — the 3-arg form computes only a
     #    2k+1 diagonal band, O(n*k) instead of O(n^2), returning -1 past the
     #    budget. The budget is per-row (10%/20% of the shorter key), which
@@ -331,15 +333,20 @@ def _match_parts(ca, cb) -> dict:
     return {
         "__m_hard": fmt_ok & access_ok,
         "__m_fast": isbn_accept | id_accept,
-        "__m_slow": ~issn_reject & ~year_reject & ~pages_reject
-        & ~series_reject & title_ok & author_ok,
+        "__m_ok": ~issn_reject & ~year_reject & ~pages_reject
+        & ~series_reject,
+        "__m_title": title_ok,
+        "__m_author": author_ok,
     }
 
 
 def _match_of(part) -> Column:
     """The matchRecords decision from its :func:`_match_parts` (``part``
     maps a part name to its Column)."""
-    return part("__m_hard") & (part("__m_fast") | part("__m_slow"))
+    return part("__m_hard") & (
+        part("__m_fast")
+        | (part("__m_ok") & part("__m_title") & part("__m_author"))
+    )
 
 
 _MATCH_SQL: dict[str, str] = {}

@@ -1,5 +1,5 @@
-"""Distribution diagnostics: heavy hitters, shuffle-skew reports, and
-a per-group corpus datacard.
+"""Distribution diagnostics: shuffle-skew reports (the heavy hitters
+with their salt) and a per-group corpus datacard.
 
 Operating a shuffle-heavy pipeline at 100 TB starts with knowing the
 key distribution: every groupBy/join in this engine hashes on some key
@@ -17,7 +17,7 @@ re-expressed in operators/count_values.py) — these generalize it from
 recommendations. The datacard composes the same per-row statistics the
 quality/text modules already expose.
 
-Scale shape (all three):
+Scale shape (both):
 
 - One map-side-combinable groupBy over the key columns; every
   downstream step operates on the GROUPED table (bounded by key
@@ -44,8 +44,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, quality_score, token_count
 
-__all__ = ["heavy_hitters", "skew_report", "corpus_datacard", "ann_recall_report", "source_overlap_report", "token_divergence_report"]
-
 
 def _key_counts(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """(keys..., cnt) plus a broadcast 1-row total — grouped once."""
@@ -56,34 +54,14 @@ def _key_counts(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     return g.crossJoin(F.broadcast(tot))
 
 
-def heavy_hitters(
-    df: DataFrame, key_cols: Sequence[str], top_n: int = 20
-) -> DataFrame:
-    """Top ``top_n`` key combinations by row count, with corpus share.
-
-    Deterministic: ties on count break to the ascending key. Output
-    columns: ``*key_cols, cnt, share``.
-    """
-    g = _key_counts(df, key_cols)
-    return (
-        g.withColumn(
-            "share", F.round(F.col("cnt") / F.col("__tot"), 6)
-        )
-        .drop("__tot")
-        .orderBy(
-            F.col("cnt").desc(), *[F.col(c).asc() for c in key_cols]
-        )
-        .limit(top_n)
-    )
-
-
 def skew_report(
     df: DataFrame,
     key_cols: Sequence[str],
     top_n: int = 20,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Heavy hitters annotated with shuffle-skew metrics.
+    """Top ``top_n`` key combinations by row count (ties break to the
+    ascending key), with corpus share and shuffle-skew metrics.
 
     For a shuffle into ``partitions`` reducers (default: the session's
     ``spark.sql.shuffle.partitions``), a key with ``cnt`` rows fills

@@ -39,15 +39,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import let, tokenize
 
-__all__ = [
-    "hashed_ngram_buckets",
-    "ngram_bucket_counts",
-    "tagged_bucket_counts",
-    "dsir_log_ratio_micros",
-    "dsir_score",
-    "dsir_select",
-]
-
 MICRO = 1_000_000
 
 
@@ -88,22 +79,6 @@ def hashed_ngram_buckets(
             ).cast("long"),
             F.lit(n_buckets),
         ).cast("int"),
-    )
-
-
-def ngram_bucket_counts(df: DataFrame, n_buckets: int = 1024) -> DataFrame:
-    """(bucket, cnt) over a corpus — one explode + one map-side-combined
-    groupBy; output bounded by ``n_buckets``, not corpus size."""
-    text_col = "text"
-    salt = "dsir"
-    return (
-        df.select(
-            F.explode(
-                hashed_ngram_buckets(text_col, n_buckets, salt)
-            ).alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -162,22 +137,6 @@ def _log_ratio_micros_from(
         q = (r.get(b, 0) + alpha) / r_tot
         out.append(round(math.log(p / q) * MICRO))
     return out
-
-
-def dsir_log_ratio_micros(
-    target_counts: DataFrame,
-    raw_counts: DataFrame,
-    n_buckets: int = 1024,
-) -> list[int]:
-    """Per-bucket ``round(log(p̂/q̂) * 1e6)`` as ints, Laplace-smoothed
-    (α added per bucket). Two n_buckets-bounded collects; the result is
-    the literal table ``dsir_score`` folds over. (Kept for callers that
-    already hold count DataFrames — :func:`dsir_select` uses the fused
-    :func:`tagged_bucket_counts` single-job path.)"""
-    alpha = 0.5
-    t = {r["bucket"]: r["cnt"] for r in target_counts.collect()}
-    r = {r["bucket"]: r["cnt"] for r in raw_counts.collect()}
-    return _log_ratio_micros_from(t, r, n_buckets, alpha)
 
 
 def _long_array_lit(values: list[int]) -> Column:

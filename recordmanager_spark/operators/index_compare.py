@@ -40,8 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["DEFAULT_IGNORE_FIELDS", "compare_index_docs", "check_index"]
-
 # SolrComparer.php:223-231 $ignoreFields — derived/denormalized fields
 # the indexer recomputes every run; diffing them is pure noise.
 DEFAULT_IGNORE_FIELDS = (

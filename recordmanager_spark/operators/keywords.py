@@ -29,8 +29,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalize_for_fingerprint, tokenize
 
-__all__ = ["tfidf_keywords"]
-
 
 def tfidf_keywords(
     df: DataFrame,

@@ -46,8 +46,6 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["train_hash_lm", "lm_logprob", "LM_SALT1", "LM_SALT2"]
-
 LM_SALT1 = "lm1"
 LM_SALT2 = "lm2"
 MICRO = 1_000_000

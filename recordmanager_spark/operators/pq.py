@@ -10,10 +10,10 @@ precomputed m x k table of subvector distances turns each corpus
 distance into m table lookups, no float multiply per pair.
 
 Spark shapes:
-- ``pq_train``: codebooks come from per-subvector k-means on a
-  DETERMINISTIC driver-side sample (the FAISS practice — codebooks
-  need ~10-100k training points regardless of corpus size, so the
-  collect is bounded and the Lloyd loop is numpy, not jobs).
+- codebooks are an m x k x sub_dim list: the deterministic md5 grid
+  below, or per-subvector k-means centroids trained driver-side on a
+  bounded sample (the FAISS practice — codebooks need ~10-100k
+  training points regardless of corpus size).
 - ``pq_encode``: pure scan-stage projection — the codebooks are plan
   literals (m*k*sub_dim floats, a few KB) and the argmin unrolls to a
   codegen expression; the corpus is read once and never shuffles.
@@ -37,15 +37,6 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = [
-    "md5_grid_codebooks",
-    "pq_train",
-    "pq_encode",
-    "knn_pq",
-    "ivfadc_write_index",
-    "ivfadc_read_index",
-]
-
 
 def md5_grid_codebooks(m: int, k: int, sub_dim: int) -> list:
     """Deterministic codebooks for oracle-checkable contract queries:
@@ -53,7 +44,7 @@ def md5_grid_codebooks(m: int, k: int, sub_dim: int) -> list:
     / 1000 — uniform-ish in [-1, 1], reproducible in any engine with
     md5 (the DuckDB twin uses the same hex15 device as the minhash
     oracle). NOT a trained quantizer — recall is whatever a random
-    grid gives; use :func:`pq_train` for real corpora."""
+    grid gives; pass trained codebooks for real corpora."""
     books = []
     for s in range(m):
         cents = []
@@ -75,54 +66,6 @@ def md5_grid_codebooks(m: int, k: int, sub_dim: int) -> list:
                 ]
             )
         books.append(cents)
-    return books
-
-
-def pq_train(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int = 8,
-    k: int = 16,
-    sample: int = 10_000,
-    iters: int = 10,
-) -> list:
-    """Train per-subvector k-means codebooks on a deterministic sample.
-
-    The sample is the ``sample`` smallest ids (rerun-stable); training
-    is numpy Lloyd on the driver — codebooks saturate at 10-100k
-    training points no matter the corpus size (the FAISS practice), so
-    this is a bounded collect, not a distributed iteration. Empty cells
-    re-seed from the training point farthest from its centroid."""
-    import numpy as np
-
-    assert dim % m == 0, "dim must divide evenly into m subvectors"
-    sub = dim // m
-    rows = (
-        df.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .orderBy("i")
-        .limit(sample)
-        .collect()
-    )
-    mat = np.array([[float(x) for x in r.v] for r in rows], dtype=np.float64)
-    books = []
-    for s in range(m):
-        x = mat[:, s * sub : (s + 1) * sub]
-        # deterministic seeding: the k points with smallest ids
-        cents = x[: min(k, len(x))].copy()
-        while len(cents) < k:  # degenerate tiny sample
-            cents = np.vstack([cents, cents[: k - len(cents)]])
-        for _ in range(iters):
-            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(k):
-                pts = x[assign == j]
-                if len(pts):
-                    cents[j] = pts.mean(axis=0)
-                else:
-                    cents[j] = x[d2.min(axis=1).argmax()]
-        books.append([[float(v) for v in c] for c in cents])
     return books
 
 
@@ -294,7 +237,7 @@ def md5_grid_coarse(n_cells: int, dim: int) -> list:
     :func:`md5_grid_codebooks`, key 'ivf:{cell}:{d}') for the
     oracle-checkable contract; train real ones with
     :func:`~recordmanager_spark.operators.similarity.cluster_corpus`
-    or :func:`pq_train`-style sampling in production."""
+    in production."""
     return [
         [
             (
@@ -349,49 +292,6 @@ def ivfadc_encode(
     return out.select(
         F.col(id_col), F.col("__cell").alias("cell"), "pq_code"
     )
-
-
-def ivfadc_write_index(
-    df: DataFrame,
-    table: str,
-    vec_col: str,
-    coarse: list,
-    codebooks: list,
-    id_col: str = "vec_id",
-) -> None:
-    """Persist the IVFADC index as a catalog table PARTITIONED BY cell.
-
-    The production complement to the per-query-batch inline encode (the
-    FAISS practice of building the IVF index once at ingest): encoding
-    is paid one time, and because the probe join is a broadcast hash
-    join keyed on ``cell``, Spark's dynamic partition pruning turns the
-    query batch's probed-cell set into a partition filter on this
-    table's scan — a search READS only the probed cells' files, never
-    the rest of the corpus (asserted in tests/test_pq.py). Directory
-    partitioning (not bucketBy) is the right mechanism here: there is
-    no shuffle to co-locate away — the query side broadcasts — so the
-    win is scan pruning, which bucket specs don't give.
-
-    The write shuffles once on ``cell`` so
-    each cell is one writer task's output (no small-files explosion
-    from every ingest task writing every cell); AQE splits skewed
-    cells. Stored row = (id, cell, m-byte code): ~3% of a float32
-    corpus at m=8, dim=64."""
-    (
-        ivfadc_encode(df, vec_col, coarse, codebooks, id_col=id_col)
-        .repartition("cell")
-        .write.format("parquet")
-        .mode("overwrite")
-        .partitionBy("cell")
-        .saveAsTable(table)
-    )
-
-
-def ivfadc_read_index(spark, table: str) -> DataFrame:
-    """Read the index back for :func:`knn_ivfadc` — via the catalog
-    (``spark.table``), keeping the partition spec live so the probe
-    join's dynamic partition pruning can prune cell directories."""
-    return spark.table(table)
 
 
 def knn_ivfadc(

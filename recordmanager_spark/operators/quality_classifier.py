@@ -44,8 +44,6 @@ from .dsir import (
     hashed_ngram_buckets,
 )
 
-__all__ = ["train_nb_quality", "nb_quality_score"]
-
 
 def train_nb_quality(
     positive: DataFrame,

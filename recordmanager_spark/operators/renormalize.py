@@ -49,8 +49,6 @@ from ..plans.filter_dsl import suppressed_condition
 from ..sparkcompat import try_element_at
 from .dedup import with_dedup_keys
 
-__all__ = ["renormalize_records", "per_source_xslt"]
-
 
 def _truthy(v) -> bool:
     return str(v).strip().lower() in ("true", "1", "yes", "on")
@@ -71,7 +69,7 @@ def per_source_xslt(stylesheets: Mapping[str, str]):
 
     @pandas_udf(StringType())
     def transform(source: pd.Series, xml: pd.Series) -> pd.Series:
-        from recordmanager_spark.xsl import MiniXSLT
+        from recordmanager_spark.xsl.engine import MiniXSLT
 
         import xml.etree.ElementTree as ET
 

@@ -57,8 +57,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import normalize_for_fingerprint, tokenize
 
-__all__ = ["build_corpus_stats", "build_postings", "bm25_topk", "rrf_fuse"]
-
 
 def build_corpus_stats(
     df: DataFrame, text_col: str = "text"

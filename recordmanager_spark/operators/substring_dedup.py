@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import let
 
-__all__ = ["exact_substring_dedup"]
-
 
 def _gram_hashes(toks: Column, window: int) -> Column:
     """Array of struct(pos, h): md5 of each W-token window, 1-based."""

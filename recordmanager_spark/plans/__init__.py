@@ -1,3 +1,1 @@
-from .filter_dsl import compile_filter, apply_query
-
-__all__ = ["compile_filter", "apply_query"]
+"""Query plans: the filter DSL and the field-mapping tables."""

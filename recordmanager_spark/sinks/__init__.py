@@ -1,3 +1,1 @@
 """Sinks: batched index updates, file export, dumps (SURVEY §2.2)."""
-
-from . import export, solr  # noqa: F401

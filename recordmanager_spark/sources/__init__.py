@@ -1,7 +1,1 @@
-from . import splitter, transforms, upsert  # noqa: F401
-from .files import MARC_IN_JSON_SCHEMA, read_table, read_xml_records
-
-__all__ = [
-    "read_table", "read_xml_records", "MARC_IN_JSON_SCHEMA",
-    "splitter", "transforms", "upsert",
-]
+"""Sources: harvesters, record splitting, transforms and the record store."""

@@ -17,10 +17,9 @@ This module wraps that with the engine's conventions:
 - ``write_bucketed`` — save a DataFrame as a bucketed+sorted catalog
   table (saveAsTable is REQUIRED: a plain .parquet() path write cannot
   record the bucket spec, which lives in the table catalog).
-- ``read_bucketed`` — read it back with the bucket metadata live.
-- ``bucketed_join_ready`` — assert two tables' bucket specs are
-  compatible (same key, same count) before relying on the shuffle-free
-  plan; mismatched counts silently re-introduce the exchange.
+- ``read_bucketed`` — read it back with the bucket metadata live. Two
+  tables join shuffle-free only on the same key and the same count;
+  mismatched counts silently re-introduce the exchange.
 
 Sizing: n_buckets ≈ corpus_size / target_partition_size (128-512 MB);
 at 100 TB and 256 MB targets that is ~400k buckets — set it at ingest
@@ -39,14 +38,6 @@ import json
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
-
-__all__ = [
-    "write_bucketed",
-    "read_bucketed",
-    "bucketed_join_ready",
-    "read_bucket_spec",
-    "write_bucket_spec",
-]
 
 # sidecar recording the bucket spec INSIDE the table location, so a
 # process restart (per-session in-memory catalog) can re-register the
@@ -179,35 +170,3 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     spark.read.parquet(path) — a path read loses the bucket spec and
     with it the shuffle elimination)."""
     return spark.table(table)
-
-
-def bucketed_join_ready(
-    spark: SparkSession, table_a: str, table_b: str, key: str
-) -> bool:
-    """True iff both tables are bucketed on ``key`` with the SAME bucket
-    count — the precondition for a shuffle-free co-located join. Use as
-    a guard in ingest pipelines; a False here means someone rewrote one
-    side with a different spec and every downstream join silently
-    regained its exchange."""
-
-    def spec(table: str) -> tuple[int, tuple[str, ...]] | None:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-        n, cols = None, None
-        for r in rows:
-            if r.col_name == "Num Buckets":
-                n = int(r.data_type)
-            elif r.col_name == "Bucket Columns":
-                cols = tuple(
-                    c.strip(" `")
-                    for c in r.data_type.strip("[]").split(",")
-                )
-        return (n, cols) if n is not None and cols is not None else None
-
-    a, b = spec(table_a), spec(table_b)
-    return (
-        a is not None
-        and b is not None
-        and a[0] == b[0]
-        and a[1] == (key,)
-        and b[1] == (key,)
-    )

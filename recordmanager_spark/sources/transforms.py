@@ -8,7 +8,7 @@ global parameters.
 Spark-first: the stylesheet compiles ONCE per executor (module-level
 lazy cache inside the UDF closure) and applies per record via an
 Arrow-batched pandas UDF — the same shape as the other parse steps.
-The engine is :class:`recordmanager_spark.xsl.MiniXSLT` (stdlib only):
+The engine is :class:`recordmanager_spark.xsl.engine.MiniXSLT` (stdlib only):
 the XSLT subset the reference's shipped stylesheets use, verified
 against all 12 ``transformations/*.xsl`` in the test suite. Records
 parse with the stdlib expat parser, which refuses entity-expansion
@@ -44,7 +44,7 @@ def make_xslt_udf(xsl: str, params: dict[str, object] | None = None,
     @pandas_udf(StringType())
     def transform(xml: pd.Series) -> pd.Series:
         if "t" not in state:
-            from recordmanager_spark.xsl import MiniXSLT
+            from recordmanager_spark.xsl.engine import MiniXSLT
 
             doc_resolver = documents.__getitem__ if documents else None
             state["t"] = MiniXSLT(xsl, document_resolver=doc_resolver)
@@ -90,7 +90,7 @@ def make_solr_fields_udf(xsl: str, params: dict[str, object] | None = None):
     def transform(xml: pd.Series) -> pd.Series:
         import xml.etree.ElementTree as ET
 
-        from recordmanager_spark.xsl import MiniXSLT
+        from recordmanager_spark.xsl.engine import MiniXSLT
 
         if "t" not in state:
             state["t"] = MiniXSLT(xsl)

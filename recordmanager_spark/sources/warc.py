@@ -35,15 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401 (callers compose)
 from pyspark.sql import types as T
 
-__all__ = [
-    "WARC_SCHEMA",
-    "gunzip_members",
-    "parse_warc_bytes",
-    "parse_warc_text",
-    "warc_documents",
-    "warc_records",
-]
-
 WARC_SCHEMA = T.StructType(
     [
         T.StructField("warc_file", T.StringType()),

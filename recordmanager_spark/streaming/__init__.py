@@ -1,3 +1,1 @@
-from .pipeline import incremental_run, streaming_events
-
-__all__ = ["incremental_run", "streaming_events"]
+"""Incremental and streaming pipelines: watermarks and stateful dedup."""

@@ -4,21 +4,20 @@ The reference's "streaming" is incremental batch over monotonically
 increasing ``updated`` timestamps with a persisted watermark per sink
 (SolrUpdater.php:860-903, 1582-1640; ``state`` table). Both forms here:
 
-- ``incremental_run``: the exact reference shape — read watermark, process
-  ``updated >= wm`` rows, persist new watermark. State lives in a tiny
-  single-row parquet table (the ``state`` collection analogue).
-- ``streaming_events``: Structured Streaming over a file source with
-  event-time watermarking + windowed aggregation — the shape late/out-of-
-  order data takes when the engine fronts a real stream.
+- ``WatermarkStore``: the exact reference shape — ``update-index`` reads
+  the watermark, processes ``updated >= wm`` rows, and persists the new
+  watermark (the ``state`` collection analogue).
+- ``streaming_events``: Structured Streaming with event-time
+  watermarking + windowed aggregation — the shape late/out-of-order data
+  takes when the engine fronts a real stream.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -58,51 +57,17 @@ class WatermarkStore:
         self._save(data)
 
 
-def incremental_run(
-    df: DataFrame,
-    ts_col: str,
-    store: WatermarkStore,
-    key: str,
-    process: Callable[[DataFrame], DataFrame],
-) -> DataFrame:
-    """Process only rows newer than the stored watermark, then advance it.
-
-    The 5s slack mirrors the reference's clock-skew allowance
-    (SolrUpdater.php:990-1053)."""
-    slack_seconds = 5
-    wm = store.get(key)
-    batch = df
-    if wm is not None:
-        batch = df.filter(
-            F.col(ts_col)
-            >= (F.lit(wm).cast("timestamp") - F.expr(f"INTERVAL {slack_seconds} SECONDS"))
-        )
-    out = process(batch)
-    new_wm = df.agg(F.max(ts_col)).collect()[0][0]
-    if new_wm is not None:
-        store.set(key, str(new_wm))
-    return out
-
-
-def streaming_events(
-    spark: SparkSession,
-    path: str,
-    schema,
-    window: str = "5 minutes",
-) -> DataFrame:
-    """Windowed event aggregation with late-data watermarking.
-
-    readStream(parquet dir) -> withWatermark -> window agg; callers attach
-    a sink (memory sink in tests via processAllAvailable)."""
+def streaming_events(stream: DataFrame, window: str) -> DataFrame:
+    """Windowed event aggregation with late-data watermarking:
+    ``stream`` (``ts``, ``event_type``, ``value``) -> withWatermark ->
+    per-``window`` (``win``) and ``event_type`` row count ``n`` and
+    ``total_value``; callers attach a sink (memory sink in tests via
+    processAllAvailable)."""
     ts_col = "ts"
     watermark = "10 minutes"
-    stream = spark.readStream.schema(schema).parquet(path)
-    win = (
-        F.window(ts_col, window)
-    )
     return (
         stream.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("win"), "event_type")
+        .groupBy(F.window(ts_col, window).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("value").alias("total_value"),

@@ -14,6 +14,3 @@ Modules:
 - ``engine``: stylesheet compiler + transformer (templates with modes,
   named templates, params/variables, AVTs, copy/copy-of, import).
 """
-
-from .engine import MiniXSLT, XsltError  # noqa: F401
-from .xpath1 import XPath, XPathError, build_tree, parse_xml  # noqa: F401

@@ -42,8 +42,6 @@ from .xpath1 import (
     Context, XNode, XPath, XPathError, xp_boolean, xp_number, xp_string,
 )
 
-__all__ = ["MiniXSLT", "XsltError"]
-
 XSL_NS = "http://www.w3.org/1999/XSL/Transform"
 
 

@@ -23,8 +23,6 @@ import re
 import xml.etree.ElementTree as ET
 from typing import Callable, Iterable
 
-__all__ = ["XNode", "XPath", "XPathError", "build_tree", "parse_xml"]
-
 
 class XPathError(ValueError):
     pass
@@ -137,34 +135,6 @@ def parse_xml(text: str) -> XNode:
                 t = XNode(TEXT, value=obj.tail, parent=cur)
                 t.order = nxt()
                 cur.children.append(t)
-    _renumber(root)
-    return root
-
-
-def build_tree(root_elem: ET.Element) -> XNode:
-    """Build an ``XNode`` tree from an already-parsed ElementTree element.
-
-    Prefix maps are unavailable on this path (ElementTree discards them);
-    unprefixed XPath name tests still work, which covers non-namespaced
-    documents. Use :func:`parse_xml` when prefixes matter.
-    """
-    root = XNode(ROOT)
-
-    def walk(e: ET.Element, parent: XNode):
-        uri, local = _split_tag(e.tag)
-        n = XNode(ELEM, local, uri, parent=parent)
-        for aname, aval in e.attrib.items():
-            auri, alocal = _split_tag(aname)
-            n.attrs.append(XNode(ATTR, alocal, auri, aval, parent=n))
-        parent.children.append(n)
-        if e.text:
-            n.children.append(XNode(TEXT, value=e.text, parent=n))
-        for c in e:
-            walk(c, n)
-            if c.tail:
-                n.children.append(XNode(TEXT, value=c.tail, parent=n))
-
-    walk(root_elem, root)
     _renumber(root)
     return root
 

@@ -1,5 +1,6 @@
-"""BPE subword tokenization: Sennrich-style training on word counts,
-inline (JVM replace-chain) and pandas-UDF encoders agree."""
+"""BPE subword tokenization: Sennrich-style training on word counts
+(the driver-side trainer in tests/oracles.py), and the inline (JVM
+replace-chain) encoder agrees with the symbol-list-walk oracle."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from recordmanager_spark.functions import bpe as B
+from tests.oracles import bpe_encode_udf, bpe_train
 
 
 SENNRICH = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
@@ -16,7 +18,7 @@ def test_bpe_train_sennrich_merges():
     """The classic example: 'es' (count 9) wins the first merge by
     lexicographic tie-break over 'st'/'t▁', then chains to 'est',
     'est▁'; 'lo'/'low' follow at count 7."""
-    merges = B.bpe_train(SENNRICH, n_merges=5)
+    merges = bpe_train(SENNRICH, n_merges=5)
     e = B.END_OF_WORD
     assert merges == [
         ("e", "s"),
@@ -28,18 +30,18 @@ def test_bpe_train_sennrich_merges():
 
 
 def test_bpe_train_deterministic_and_bounded():
-    m1 = B.bpe_train(SENNRICH, n_merges=3)
-    m2 = B.bpe_train(list(reversed(SENNRICH)), n_merges=3)
+    m1 = bpe_train(SENNRICH, n_merges=3)
+    m2 = bpe_train(list(reversed(SENNRICH)), n_merges=3)
     assert m1 == m2  # input order never matters
-    assert B.bpe_train([("ab", 1)], n_merges=50) == [
+    assert bpe_train([("ab", 1)], n_merges=50) == [
         ("a", "b"), ("ab", B.END_OF_WORD)
     ]  # runs dry gracefully
     with pytest.raises(ValueError, match="max_words"):
-        B.bpe_train(SENNRICH, n_merges=1, max_words=2)
+        bpe_train(SENNRICH, n_merges=1, max_words=2)
 
 
 def test_bpe_encode_inline(spark):
-    merges = B.bpe_train(SENNRICH, n_merges=5)
+    merges = bpe_train(SENNRICH, n_merges=5)
     df = spark.createDataFrame(
         [("lowest newest",), ("", ), (None,)], "t string"
     )
@@ -58,7 +60,7 @@ def test_bpe_encode_inline(spark):
 def test_bpe_encode_inline_matches_udf(spark):
     """The JVM replace-chain and the pandas-UDF symbol-walk encoders are
     the same algorithm — outputs must be identical token-for-token."""
-    merges = B.bpe_train(SENNRICH, n_merges=5)
+    merges = bpe_train(SENNRICH, n_merges=5)
     rows = [
         ("lowest newest widest",),
         ("low low lower",),
@@ -72,7 +74,7 @@ def test_bpe_encode_inline_matches_udf(spark):
         .orderBy("t")
         .collect()
     ]
-    enc = B.bpe_encode_udf(merges)
+    enc = bpe_encode_udf(merges)
     udf = [
         r.toks
         for r in df.select(enc(F.col("t")).alias("toks")).orderBy("t").collect()
@@ -97,7 +99,7 @@ def test_bpe_encode_boundary_collision_parity(spark):
         .orderBy("t")
         .collect()
     ]
-    enc = B.bpe_encode_udf(merges)
+    enc = bpe_encode_udf(merges)
     udf = [
         r.toks
         for r in df.select(enc(F.col("t")).alias("toks")).orderBy("t").collect()
@@ -131,7 +133,7 @@ def test_bpe_encode_adjacent_and_regex_special(spark):
             .collect()[0]
             .toks
         )
-        enc = B.bpe_encode_udf(merges)
+        enc = bpe_encode_udf(merges)
         udf = (
             df.where(F.col("t") == text)
             .select(enc(F.col("t")).alias("toks"))

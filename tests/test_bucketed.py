@@ -8,11 +8,8 @@ import io
 import re
 from contextlib import redirect_stdout
 
-from recordmanager_spark.sources.bucketed import (
-    bucketed_join_ready,
-    read_bucketed,
-    write_bucketed,
-)
+from recordmanager_spark.sources.bucketed import read_bucketed, write_bucketed
+from tests.oracles import bucketed_join_ready
 
 
 def _exchanges(df) -> int:

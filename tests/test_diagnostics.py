@@ -1,4 +1,4 @@
-"""Heavy hitters, skew report, corpus datacard.
+"""Skew report (heavy hitters), corpus datacard.
 
 Counts/shares are checked against a Python Counter model; the datacard's
 approx mode is checked for agreement with exact mode on a corpus whose
@@ -29,7 +29,7 @@ def keyed(spark):
 
 
 def test_heavy_hitters_counts_and_ties(spark, keyed):
-    got = DG.heavy_hitters(keyed, ["k"], top_n=3).collect()
+    got = DG.skew_report(keyed, ["k"], top_n=3).collect()
     assert [(r["k"], r["cnt"]) for r in got] == [
         ("hot", 60), ("warm_a", 15), ("warm_b", 15)
     ]
@@ -108,7 +108,7 @@ def test_heavy_hitters_multi_key_and_model(spark):
     rows = [(i % 4, ("a" if i % 2 else "b"), i) for i in range(50)]
     df = spark.createDataFrame(rows, "g long, h string, v long")
     model = Counter(((i % 4, ("a" if i % 2 else "b")) for i in range(50)))
-    got = DG.heavy_hitters(df, ["g", "h"], top_n=100).collect()
+    got = DG.skew_report(df, ["g", "h"], top_n=100).collect()
     assert {(r["g"], r["h"]): r["cnt"] for r in got} == dict(model)
     # ordering: count desc then keys asc
     counts = [r["cnt"] for r in got]

@@ -41,14 +41,9 @@ def test_empty_and_single_token_docs(spark):
         [(1, ""), (2, "   "), (3, "solo"), (4, "aa bb")],
         "doc_id long, text string",
     )
-    scored = DS.dsir_score(
-        df, DS.dsir_log_ratio_micros(
-            DS.ngram_bucket_counts(df, n_buckets=32),
-            DS.ngram_bucket_counts(df, n_buckets=32),
-            n_buckets=32,
-        ),
-        n_buckets=32,
-    ).collect()
+    counts = DS.tagged_bucket_counts([(0, df), (1, df)], n_buckets=32)
+    ratios = DS._log_ratio_micros_from(counts[0], counts[1], 32, 0.5)
+    scored = DS.dsir_score(df, ratios, n_buckets=32).collect()
     by_id = {r.doc_id: r.log_weight for r in scored}
     # identical p and q: every weight is exactly 0; empty docs score 0
     assert all(v == 0.0 for v in by_id.values())
@@ -56,9 +51,9 @@ def test_empty_and_single_token_docs(spark):
 
 def test_bucket_counts_bounded_and_bigrams_present(spark):
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    rows = DS.ngram_bucket_counts(df, n_buckets=16).collect()
-    assert sum(r.cnt for r in rows) == 5  # 3 unigrams + 2 bigrams
-    assert all(0 <= r.bucket < 16 for r in rows)
+    counts = DS.tagged_bucket_counts([(0, df)], n_buckets=16)[0]
+    assert sum(counts.values()) == 5  # 3 unigrams + 2 bigrams
+    assert all(0 <= b < 16 for b in counts)
 
 
 def test_mismatched_ratio_table_raises(spark):

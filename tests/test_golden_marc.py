@@ -367,11 +367,13 @@ def _work_id_data(spark, fixture: str) -> dict:
     df = spark.createDataFrame([(raw,)], "raw string").coalesce(1)
     parsed = df.select(MARC.parse_marcxml("raw").alias("m")).cache()
     parsed.count()
+    m = F.col("m")
+    alt = MARC.fields_by_tag(m, "880")
     out = parsed.select(
-        MARC._work_authors(F.col("m"), False).alias("authors"),
-        MARC._work_authors(F.col("m"), True).alias("authors_alt"),
-        MARC._work_titles(F.col("m"), False).alias("titles"),
-        MARC._work_titles(F.col("m"), True).alias("titles_alt"),
+        MARC._work_authors(m, None).alias("authors"),
+        MARC._work_authors(m, alt).alias("authors_alt"),
+        MARC._work_titles(m, None).alias("titles"),
+        MARC._work_titles(m, alt).alias("titles_alt"),
     ).collect()[0]
     parsed.unpersist()
     return {

@@ -230,7 +230,7 @@ def test_cli_solr_delete_source_file_sink(tmp_path):
 
 
 def test_cli_solr_delete_source_live_posts_delete_then_commit(monkeypatch):
-    import recordmanager_spark.examples.solr_pusher as SP
+    import recordmanager_spark.sinks.solr as SP
 
     calls = []
 

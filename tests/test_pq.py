@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from recordmanager_spark.operators import pq as PQ
 from recordmanager_spark.operators.similarity import knn_bruteforce
+from tests.oracles import pq_train
 
 DIM, M, K = 16, 4, 8
 
@@ -69,11 +70,12 @@ def test_pq_encode_picks_nearest_centroid(spark):
 
 def test_trained_pq_recall_vs_bruteforce(spark):
     """ADC over trained codebooks must recover most exact neighbors on
-    clustered data — the quantization-quality pin for pq_train."""
+    clustered data — the quantization-quality pin for pq_encode/knn_pq
+    over k-means codebooks."""
     rows = _clustered_vectors()
     df = spark.createDataFrame(rows)
-    books = PQ.pq_train(df, "vec_id", "embedding", DIM, m=8, k=16,
-                        sample=1000, iters=8)
+    books = pq_train(df, "vec_id", "embedding", DIM, m=8, k=16,
+                     sample=1000, iters=8)
     codes = PQ.pq_encode(df, "embedding", books)
     queries = df.where(F.col("vec_id") % 45 == 0)
     approx = PQ.knn_pq(codes, queries, books, k=10, rerank=df, shortlist=40)
@@ -116,12 +118,12 @@ def test_ivfadc_residual_encoding_beats_plain_pq(spark):
     all-probe IVFADC recall@10 >= plain-PQ ADC recall@10."""
     rows = _clustered_vectors()
     df = spark.createDataFrame(rows)
-    books = PQ.pq_train(df, "vec_id", "embedding", DIM, m=M, k=K,
-                        sample=1000, iters=6)
+    books = pq_train(df, "vec_id", "embedding", DIM, m=M, k=K,
+                     sample=1000, iters=6)
     # coarse centroids: one per true cluster region, trained via the
     # same deterministic sample (k-means on full vectors, m=1 trick)
-    coarse = PQ.pq_train(df, "vec_id", "embedding", DIM, m=1, k=6,
-                         sample=1000, iters=6)[0]
+    coarse = pq_train(df, "vec_id", "embedding", DIM, m=1, k=6,
+                      sample=1000, iters=6)[0]
     queries = df.where(F.col("vec_id") % 45 == 0)
     exact = knn_bruteforce(df, queries, "vec_id", "embedding", dim=DIM, k=10)
     e = {}
@@ -159,24 +161,22 @@ def test_ivfadc_probe_pruning(spark):
 
 
 def test_ivfadc_indexed_search_prunes_partitions(spark):
-    """The persisted index (ivfadc_write_index: catalog table
-    partitioned by cell): (1) probe results are identical to the
+    """knn_ivfadc over an encoded index persisted as a catalog table
+    partitioned by cell: (1) probe results are identical to the
     inline-encode path; (2) the probe scan carries a dynamic partition
-    pruning filter on cell — a production search READS only the probed
-    cells' directories; (3) the corpus side never shuffles (its only
-    moves are the broadcast-join probe and the ranking window)."""
+    pruning filter on cell — a search READS only the probed cells'
+    directories; (3) the corpus side never shuffles (its only moves are
+    the broadcast-join probe and the ranking window)."""
     df = spark.createDataFrame(_clustered_vectors())
     coarse = PQ.md5_grid_coarse(6, DIM)
     books = PQ.md5_grid_codebooks(M, K, DIM // M)
     table = "ivfadc_idx_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    PQ.ivfadc_write_index(
-        df, table, "embedding", coarse, books, id_col="vec_id"
-    )
-    idx = PQ.ivfadc_read_index(spark, table)
+    inline = PQ.ivfadc_encode(df, "embedding", coarse, books, "vec_id")
+    inline.write.mode("overwrite").partitionBy("cell").saveAsTable(table)
+    idx = spark.table(table)
     queries = df.where(F.col("vec_id") < 5)
 
-    inline = PQ.ivfadc_encode(df, "embedding", coarse, books, "vec_id")
     expect = sorted(
         map(
             tuple,

@@ -1,5 +1,5 @@
-"""Solr live-pusher example: retry, health-pause, batching, commit —
-all against injected fake transports (reference semantics:
+"""Solr update pusher: retry, health-pause, batching, commit — all
+against injected fake transports (reference semantics:
 SolrUpdater.php:1643-1708 solrRequest, :2803-2925 cluster state)."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from recordmanager_spark.examples.solr_pusher import SolrPusher, push_dataframe
+from recordmanager_spark.sinks.solr import SolrPusher, push_dataframe
 
 UPDATE = "http://solr/update"
 ADMIN = "http://solr/admin"

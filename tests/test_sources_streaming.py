@@ -44,7 +44,8 @@ def test_streaming_windowed_agg(spark, tmp_path):
     src = str(tmp_path / "events")
     spark.createDataFrame(rows, schema).write.parquet(src)
 
-    agg = streaming_events(spark, src, schema, window="1 hour")
+    stream = spark.readStream.schema(schema).parquet(src)
+    agg = streaming_events(stream, "1 hour")
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")

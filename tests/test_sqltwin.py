@@ -582,12 +582,13 @@ def _production_trees(spark, monkeypatch) -> dict[str, str]:
 
 
 # The longest SLL lookahead any production tree may make the parser read,
-# in tokens: the parenthesized AND chain that opens matchRecords'
-# ``__m_slow`` part. Keyword-form calls (``trim(``, ``substring(``),
-# searched ``CASE WHEN`` and ``map(`` as an argument each read to the end
-# of their call, which took ``format`` to 10,926 tokens; the whole
-# matchRecords decision in one tree read 942.
-_MAX_SLL_LOOK = 453
+# in tokens: the parenthesized authorMatch disjunction that opens
+# matchRecords' ``__m_author`` part. Keyword-form calls (``trim(``,
+# ``substring(``), searched ``CASE WHEN`` and ``map(`` as an argument each
+# read to the end of their call, which took ``format`` to 10,926 tokens;
+# the whole matchRecords decision in one tree read 942, and the conflict
+# and similarity checks as one part read 453.
+_MAX_SLL_LOOK = 300
 
 
 def _sll_max_look(spark, text: str) -> tuple[int, str]:
@@ -666,28 +667,34 @@ def _repeated_subtrees(text: str, min_len: int = 1024) -> dict[str, int]:
                 spans.append(text[start:i + 1])
         i += 1
 
-    def canonical(span: str) -> str:
-        names: dict[str, str] = {}
-        return _SQL_TOKEN.sub(
-            lambda m: m.group() if m.group()[0] in "'`"
-            else names.setdefault(m.group(), f"V{len(names)}"),
-            span,
-        )
-
-    counts = collections.Counter(canonical(sp) for sp in spans)
+    counts = collections.Counter(_canonical(sp) for sp in spans)
     return {k: n for k, n in counts.items() if n > 1}
 
 
+def _canonical(text: str) -> str:
+    """``text`` with its lambda variables renamed V0, V1, ... in order of
+    first appearance: the twin numbers them from a process-wide counter,
+    so the raw text of a tree grows with every lambda built before it."""
+    names: dict[str, str] = {}
+    return _SQL_TOKEN.sub(
+        lambda m: m.group() if m.group()[0] in "'`"
+        else names.setdefault(m.group(), f"V{len(names)}"),
+        text,
+    )
+
+
 # Total SQL text of the production trees, in KiB: 295.6 over 81 trees
-# when repeated values were written out at every reference.
-_MAX_TREES_KIB = 190
+# when repeated values were written out at every reference; 168.4 over
+# 86 once they were bound, lambda variables numbered per tree.
+_MAX_TREES_KIB = 169
 
 
 def test_twin_trees_bind_repeats(spark, monkeypatch):
     """No production tree writes the same subtree of 1 KiB or more twice:
     a value read more than once is bound once (``keys.let1``), because
     every copy is parsed, analysed, optimized and evaluated again. The
-    trees together stay under ``_MAX_TREES_KIB``."""
+    trees together, lambda variables numbered per tree, stay under
+    ``_MAX_TREES_KIB``."""
     trees = _production_trees(spark, monkeypatch)
     repeated = {}
     for name, text in trees.items():
@@ -696,7 +703,7 @@ def test_twin_trees_bind_repeats(spark, monkeypatch):
             top = max(rep, key=len)
             repeated[name] = (len(top), rep[top], top[:120])
     assert not repeated, repeated
-    total = sum(map(len, trees.values())) / 1024
+    total = sum(len(_canonical(t)) for t in trees.values()) / 1024
     assert total <= _MAX_TREES_KIB, total
 
 

@@ -12,10 +12,8 @@ import xml.etree.ElementTree as ET
 
 import pytest
 
-from recordmanager_spark.xsl import (
-    MiniXSLT, XPath, XsltError, parse_xml,
-)
-from recordmanager_spark.xsl.xpath1 import Context
+from recordmanager_spark.xsl.engine import MiniXSLT, XsltError
+from recordmanager_spark.xsl.xpath1 import Context, XPath, parse_xml
 
 REF = pathlib.Path("/root/reference/transformations")
 HAVE_REF = REF.is_dir()
@@ -100,7 +98,7 @@ class TestXPath:
         assert xp("local-name(main[1]/following-sibling::*[1])", doc) == "sub"
 
     def test_unparseable_raises(self):
-        from recordmanager_spark.xsl import XPathError
+        from recordmanager_spark.xsl.xpath1 import XPathError
 
         with pytest.raises(XPathError):
             XPath("foo(")

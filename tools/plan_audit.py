@@ -189,7 +189,8 @@ AUDITS = [
      "exact oracle variant (broadcast right side)"),
     ("knn_pq_full", 1, True, False,
      "PQ/ADC: encode is a scan-stage projection (codebooks = plan "
-     "literals, zero shuffles — pinned in tests/test_pq.py); scoring "
+     "literals, zero shuffles — pinned by tests/test_pq.py::"
+     "test_pq_encode_deterministic_and_scan_stage); scoring "
      "is a broadcast nested loop of code bytes against the broadcast "
      "query distance tables; the ONE exchange is the per-query "
      "ranking window (sort-based, spills) — the corpus contributes "
