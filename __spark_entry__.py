@@ -2270,10 +2270,11 @@ def export_filtered_orders(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def preview_marc_record(spark: SparkSession, sf: str) -> DataFrame:
-    """PreviewCreator: ONE pasted record through the full production path
-    (extract → mappings → normalization); the preview dict comes back as a
+    """PreviewCreator: ONE pasted record through update-index's
+    record-to-document path; six keys of the preview map come back as a
     1-row DataFrame. sf-independent by design — the preview record is the
     user's paste, not corpus data."""
+    from recordmanager_spark import config as CF
     from recordmanager_spark.operators.preview import preview_record
 
     raw = (
@@ -2286,15 +2287,11 @@ def preview_marc_record(spark: SparkSession, sf: str) -> DataFrame:
         '{"260":{"ind1":" ","ind2":" ","subfields":[{"b":"Press,"},{"c":"c1999."}]}}'
         "]}"
     )
-    d = preview_record(
-        spark,
-        raw,
-        fmt="marc",
-        # the fields this preview surface shows — the cached plan and the
-        # per-job task binary carry only these expressions (sub-second
-        # warm path; the full ~60-column map remains the default)
-        fields=["id", "title", "title_short", "author", "publish_year", "format"],
+    # no source: the record keeps its own id
+    no_source = CF.CompiledSource(
+        CF.SourceConfig(id="", format="marc"), [], {}
     )
+    d = preview_record(spark, raw, no_source)
     return spark.createDataFrame(
         [
             (

@@ -20,7 +20,8 @@ same.
         --out /data/export [--xpath-predicate ...] [--skip N]
     python -m recordmanager_spark count-values --records /data/records \\
         --field format [--top 20]
-    python -m recordmanager_spark preview --file rec.xml --format marc
+    python -m recordmanager_spark preview --file rec.xml \\
+        --config datasources.ini --source lib
     python -m recordmanager_spark index --input /data/docs \\
         --table bm25_idx --buckets 64
     python -m recordmanager_spark search --table bm25_idx \\
@@ -69,39 +70,56 @@ def _php_regex(pat: str) -> tuple[str, bool]:
     return m.group(1), "i" in m.group(2)
 
 
+def marc_parser(fmt: str):
+    """The parse UDF that turns a MARC-family payload into the MARC
+    struct (``marc`` sniffs MARCXML or MARC-in-JSON by the first byte,
+    so a store may mix both), or None for the other formats."""
+    from .extractors.linemarc import parse_line_based_marc
+    from .extractors.marc import parse_marc_any
+
+    return {
+        "marc": parse_marc_any, "marcxml": parse_marc_any,
+        "marcauthority": parse_marc_any, "linemarc": parse_line_based_marc,
+    }.get((fmt or "").lower())
+
+
 def extract_wide(
     df: DataFrame, fmt: str, only: list[str] | None = None
 ) -> DataFrame:
     """Route a record frame's ``original_data`` payload to its format
-    driver (Record/PluginManager analogue). ``marc`` parses each row as
-    MARCXML or MARC-in-JSON by its first byte, so a store may mix both;
-    the rest dispatch on the reference's format names.
+    driver (Record/PluginManager analogue), on the reference's format
+    names.
 
     ``only`` names the Solr columns a caller reads. MARC builds just
     those (each built column costs a cold parse and analysis of its
     twin SQL); the other formats build their full frame regardless."""
     fmt = (fmt or "").lower()
-    if fmt in ("marc", "marcxml"):
+    parse = marc_parser(fmt)
+    if parse is not None:
         from .extractors import marc as M
+        from .extractors import marc_authority
 
-        parsed = df.withColumn("__m", M.parse_marc_any(F.col("original_data")))
-        wide = M.to_solr_columns(parsed, "__m", only=only)
+        parsed = df.withColumn("__m", parse(F.col("original_data")))
+        if fmt == "marcauthority":
+            wide = marc_authority.to_solr_columns(parsed, "__m")
+        else:
+            wide = M.to_solr_columns(parsed, "__m", only=only)
         return wide.drop("__m")
     from .extractors import (  # noqa: PLC0415
         dc, doaj, eaccpf, ead, ead3, ese, forward, forward_authority,
-        lido, linemarc, lrmi, marc_authority, qdc,
+        lido, lrmi, qdc,
     )
 
     table = {
         "dc": dc, "qdc": qdc, "lrmi": lrmi, "ese": ese, "doaj": doaj,
         "lido": lido, "forward": forward,
         "forwardauthority": forward_authority, "eaccpf": eaccpf,
-        "marcauthority": marc_authority, "linemarc": linemarc,
         "ead": ead, "ead3": ead3,
     }
     mod = table.get(fmt)
     if mod is None:
-        raise SystemExit(f"unknown format {fmt!r} (have: {sorted(table)})")
+        have = sorted([*table, "marc", "marcxml", "linemarc", "marcauthority"])
+        raise SystemExit(f"unknown format {fmt!r} (have: {have})")
     if fmt in ("ead", "ead3"):
         return mod.to_solr_columns(
             df, "original_data", archive_id_col=None, archive_title_col=None,
@@ -110,27 +128,29 @@ def extract_wide(
     return mod.to_solr_columns(df, "original_data")
 
 
-def _apply_xslt_chain(df, col, names, cfg, xsl_dir, setting):
-    """Apply a source's stylesheet chain in order to ``col`` with the
-    reference's param set (PreTransformationTrait.php:60-95 — the same
-    shape serves preTransformation and oaipmhTransformation)."""
-    if not names:
-        return df
-    from .sources.transforms import make_xslt_udf
-
-    params = {
+def _stylesheet(cfg, xsl_dir, name, setting):
+    """The text of a source's stylesheet under --xsl-dir and the
+    reference's param set (PreTransformationTrait.php:60-95)."""
+    path = os.path.join(xsl_dir or ".", name)
+    if not os.path.exists(path):
+        raise SystemExit(
+            f"{setting} stylesheet not found: {path} (set --xsl-dir)"
+        )
+    return open(path).read(), {
         "source_id": cfg.id,
         "institution": cfg.institution,
         "format": cfg.format,
         "id_prefix": cfg.id_prefix or "",
     }
+
+
+def _apply_xslt_chain(df, col, names, cfg, xsl_dir, setting):
+    """Apply a source's stylesheet chain in order to ``col`` (the same
+    shape serves preTransformation and oaipmhTransformation)."""
+    from .sources.transforms import make_xslt_udf
+
     for name in names:
-        path = os.path.join(xsl_dir or ".", name)
-        if not os.path.exists(path):
-            raise SystemExit(
-                f"{setting} stylesheet not found: {path} (set --xsl-dir)"
-            )
-        udf = make_xslt_udf(open(path).read(), params=params)
+        udf = make_xslt_udf(*_stylesheet(cfg, xsl_dir, name, setting))
         df = df.withColumn(col, udf(F.col(col)))
     return df
 
@@ -379,6 +399,129 @@ def _apply_enrichments(spark, df, cfg, stage, tables):
     return df
 
 
+def _source_from_args(args) -> CF.CompiledSource:
+    """--config/--source compiled with the mapping files of --mappings
+    (default: ``../mappings`` beside the config file)."""
+    cfg = _load_config(args.config, args.source)
+    mapdir = args.mappings or os.path.join(
+        os.path.dirname(os.path.abspath(args.config)), "..", "mappings"
+    )
+    return CF.compile_source(
+        cfg, lambda name: open(os.path.join(mapdir, name)).read()
+    )
+
+
+def solr_documents(
+    spark, records, source, xsl_dir, hierarchical_facets, enrichment_data
+):
+    """SolrUpdater's processSingleRecord over record-store rows: the
+    format driver (or solrTransformation), the createSolrId id rules,
+    component-part hiding, the source's institution, both enrichment
+    stages, the field pipeline and normalization. ``update-index`` runs
+    it on the selected live rows and ``preview`` on one pasted record.
+
+    A document carries only extractor and pipeline fields. The store
+    columns this path reads (``_id``, ``format``, ``host_record_id``)
+    reach the extractor under private names, and none of the store's
+    bookkeeping (``deleted``, ``created``, ...) reaches the index."""
+    cfg = source.config
+    store = {
+        "_id": "__store_id", "format": "__store_format",
+        "host_record_id": "__store_host",
+    }
+    records = records.select(
+        "original_data",
+        *[F.col(c).alias(a) for c, a in store.items() if c in records.columns],
+    )
+    if cfg.solr_transformation:
+        # solrTransformation (SolrUpdater.php:1407-1419): the Solr doc
+        # comes from the stylesheet's <field name=..> outputs, not a
+        # driver. One Arrow pass builds a field map; the column set is
+        # the distinct key set (one bounded aggregation over the
+        # selected source — the stylesheet's field vocabulary, not the
+        # corpus), then each key projects out as an array column.
+        from .sources.transforms import make_solr_fields_udf
+
+        udf = make_solr_fields_udf(*_stylesheet(
+            cfg, xsl_dir, cfg.solr_transformation, "solrTransformation"
+        ))
+        mapped = records.withColumn(
+            "__solr_map", udf(F.col("original_data"))
+        )
+        keys = mapped.select(F.explode(F.map_keys("__solr_map")).alias("k"))
+        keys = sorted(r["k"] for r in keys.distinct().collect())
+        wide = mapped.select(
+            "__store_id",
+            *[F.col("__solr_map")[k].alias(k) for k in keys],
+        )
+    else:
+        wide = extract_wide(records, cfg.format)
+    from .sparkcompat import try_element_at
+
+    # the indexed id is the STORE's id — already source-prefixed at import
+    # (SolrUpdater indexes $record['_id'], not the driver's local id).
+    # createSolrId (SolrUpdater.php:3145-3165): indexUnprefixedIds wins,
+    # else solrIdPrefix replaces the stored prefix in the INDEX id only
+    doc_id = F.col("__store_id")
+    if cfg.index_unprefixed_ids or cfg.solr_id_prefix:
+        local = try_element_at(F.split(doc_id, "\\.", 2), 2)
+        if not cfg.index_unprefixed_ids:
+            local = F.concat(F.lit(cfg.solr_id_prefix + "."), local)
+        doc_id = F.coalesce(local, doc_id)
+    wide = wide.withColumn("id", doc_id)
+    # indexMergedParts (SolrUpdater.php:1922,2130): merged-away
+    # components either carry hidden_component_boolean=true (default)
+    # or drop out of the index entirely. Only merge modes hide anything
+    # (as_is indexes components plainly — no flag column to emit).
+    merge = cfg.component_parts.startswith("merge")
+    if merge and "__store_host" in wide.columns:
+        from pyspark.sql.types import ArrayType as _AT
+
+        from .operators.merge import is_hidden_component_part
+
+        def first(name):
+            if isinstance(wide.schema[name].dataType, _AT):
+                return try_element_at(F.col(name), F.lit(1))
+            return F.col(name)
+
+        # the driver's format, else the stored one
+        fmt = "format" if "format" in wide.columns else "__store_format"
+        hidden = is_hidden_component_part(
+            first("__store_host"), first(fmt),
+            component_parts=cfg.component_parts,
+        )
+        if cfg.index_merged_parts:
+            wide = wide.withColumn(
+                "hidden_component_boolean", F.when(hidden, F.lit(True))
+            )
+        else:
+            wide = wide.where(~hidden)
+    if cfg.institution and "institution" not in wide.columns:
+        wide = wide.withColumn("institution", F.lit(cfg.institution))
+    enr_tables = {}
+    for spec in enrichment_data or []:
+        name, eq, path = spec.partition("=")
+        if not eq:
+            raise SystemExit(
+                f"--enrichment-data expects NAME=path, got {spec!r}"
+            )
+        enr_tables[name.strip().lower()] = path.strip()
+    wide = _apply_enrichments(spark, wide, cfg, "", enr_tables)
+    out = CF.apply_source_pipeline(
+        wide, source, hierarchical_facets=hierarchical_facets or []
+    )
+    out = _apply_enrichments(spark, out, cfg, "final", enr_tables)
+    from .operators.normalize import normalize_fields
+
+    payload = [
+        c for c in out.columns
+        if c != "original_data" and not c.startswith("__")
+    ]
+    # barrier: the wide frame is raw extractor expressions here, and
+    # Python UDF extraction cannot cross lambda-bearing subtrees
+    return normalize_fields(out.select(*payload), barrier=True)
+
+
 def cmd_update_index(args) -> None:
     """The incremental story mirrors SolrUpdater.php:860-903 +
     getStartTimestamp (:3272): an explicit --from-date wins (empty
@@ -390,17 +533,10 @@ def cmd_update_index(args) -> None:
     same way the reference's --date-per-server appends the update URL
     (SolrUpdater.php:1624)."""
     spark = _spark("rm-update-index")
-    cfg = _load_config(args.config, args.source)
-    mapdir = args.mappings or os.path.join(
-        os.path.dirname(os.path.abspath(args.config)), "..", "mappings"
-    )
-    compiled = CF.compile_source(
-        cfg, lambda name: open(os.path.join(mapdir, name)).read()
-    )
+    compiled = _source_from_args(args)
+    cfg = compiled.config
     state_key = _solr_state_key(False, None, cfg.id)
-    run_start = int(
-        _dt.datetime.now(_dt.timezone.utc).timestamp()
-    )
+    run_start = int(_dt.datetime.now(_dt.timezone.utc).timestamp())
     from_ts = None
     if args.from_date is not None:
         if args.from_date:  # '' = full reindex (getStartTimestamp)
@@ -410,7 +546,6 @@ def cmd_update_index(args) -> None:
     source = read_store(spark, args.records).where(
         F.col("source_id") == cfg.id
     )
-    records = source.where(~F.col("deleted"))
     if from_ts is not None:
         from .operators.incremental import changed_since
 
@@ -419,130 +554,18 @@ def cmd_update_index(args) -> None:
         )
         # 5s slack mirrors the reference's clock-skew guard
         # (SolrUpdater.php:990-1053 via changed_since)
-        records = changed_since(records, "updated", wm, slack_seconds=5)
+        source = changed_since(source, "updated", wm, slack_seconds=5)
         print(f"indexing records updated since {wm}Z")
-    if cfg.solr_transformation:
-        # solrTransformation (SolrUpdater.php:1407-1419): the Solr doc
-        # comes from the stylesheet's <field name=..> outputs, not a
-        # driver. One Arrow pass builds a field map; the column set is
-        # the distinct key set (one bounded aggregation over the
-        # selected source — the stylesheet's field vocabulary, not the
-        # corpus), then each key projects out as an array column.
-        from .sources.transforms import make_solr_fields_udf
-
-        path = os.path.join(
-            getattr(args, "xsl_dir", None) or ".", cfg.solr_transformation
-        )
-        if not os.path.exists(path):
-            raise SystemExit(
-                f"solrTransformation stylesheet not found: {path} "
-                "(set --xsl-dir)"
-            )
-        udf = make_solr_fields_udf(
-            open(path).read(),
-            params={
-                "source_id": cfg.id,
-                "institution": cfg.institution,
-                "format": cfg.format,
-                "id_prefix": cfg.id_prefix or "",
-            },
-        )
-        mapped = records.withColumn(
-            "__solr_map", udf(F.col("original_data"))
-        )
-        keys = sorted(
-            r["k"]
-            for r in mapped.select(
-                F.explode(F.map_keys("__solr_map")).alias("k")
-            ).distinct().collect()
-        )
-        wide = mapped.select(
-            "_id",
-            *[F.col("__solr_map")[k].alias(k) for k in keys],
-        )
-    else:
-        wide = extract_wide(records, cfg.format)
-    # the indexed id is the STORE's id — already source-prefixed at import
-    # (SolrUpdater indexes $record['_id'], not the driver's local id)
-    wide = wide.withColumn("id", F.col("_id"))
-    # createSolrId (SolrUpdater.php:3145-3165): indexUnprefixedIds wins,
-    # else solrIdPrefix replaces the stored prefix in the INDEX id only
-    if cfg.index_unprefixed_ids or cfg.solr_id_prefix:
-        from .sparkcompat import try_element_at
-
-        local = try_element_at(F.split(F.col("_id"), "\\.", 2), 2)
-        if cfg.index_unprefixed_ids:
-            wide = wide.withColumn(
-                "id", F.coalesce(local, F.col("_id"))
-            )
-        else:
-            wide = wide.withColumn(
-                "id",
-                F.when(
-                    local.isNotNull(),
-                    F.concat(F.lit(cfg.solr_id_prefix + "."), local),
-                ).otherwise(F.col("_id")),
-            )
-    # indexMergedParts (SolrUpdater.php:1922,2130): merged-away
-    # components either carry hidden_component_boolean=true (default)
-    # or drop out of the index entirely. Only merge modes hide anything
-    # (as_is indexes components plainly — no flag column to emit).
-    if cfg.component_parts.startswith("merge") and (
-        "host_record_id" in wide.columns
-    ):
-        from pyspark.sql.types import ArrayType as _AT
-
-        from .operators.merge import is_hidden_component_part
-        from .sparkcompat import try_element_at
-
-        host = F.col("host_record_id")
-        if isinstance(wide.schema["host_record_id"].dataType, _AT):
-            host = try_element_at(host, F.lit(1))
-        fmt_col = F.col("format")
-        if "format" in wide.columns and isinstance(
-            wide.schema["format"].dataType, _AT
-        ):
-            fmt_col = try_element_at(fmt_col, F.lit(1))
-        hidden = is_hidden_component_part(
-            host, fmt_col, component_parts=cfg.component_parts
-        )
-        if cfg.index_merged_parts:
-            wide = wide.withColumn(
-                "hidden_component_boolean", F.when(hidden, F.lit(True))
-            )
-        else:
-            wide = wide.where(~hidden)
-    if cfg.institution and "institution" not in wide.columns:
-        wide = wide.withColumn("institution", F.lit(cfg.institution))
-    enr_tables = {}
-    for spec in getattr(args, "enrichment_data", None) or []:
-        if "=" not in spec:
-            raise SystemExit(
-                f"--enrichment-data expects NAME=path, got {spec!r}"
-            )
-        k, v = spec.split("=", 1)
-        enr_tables[k.strip().lower()] = v.strip()
-    wide = _apply_enrichments(spark, wide, cfg, "", enr_tables)
-    out = CF.apply_source_pipeline(
-        wide, compiled, hierarchical_facets=args.hierarchical_facet or []
+    final = solr_documents(
+        spark, source.where(~F.col("deleted")), compiled, args.xsl_dir,
+        args.hierarchical_facet, args.enrichment_data,
     )
-    out = _apply_enrichments(spark, out, cfg, "final", enr_tables)
-    from .operators.normalize import normalize_fields
     from .sinks.solr import write_delete_batches, write_update_batches
 
-    payload_cols = [
-        c for c in out.columns if c not in ("original_data", "__m")
-    ]
-    # barrier: the wide frame is raw extractor expressions here, and
-    # Python UDF extraction cannot cross lambda-bearing subtrees
-    final = normalize_fields(out.select(*payload_cols), barrier=True)
     write_update_batches(final, args.out, max_update_records=args.batch_size)
-    deleted = source.where(F.col("deleted"))
-    if from_ts is not None:
-        from .operators.incremental import changed_since
-
-        deleted = changed_since(deleted, "updated", wm, slack_seconds=5)
-    write_delete_batches(deleted, "_id", args.out + "-deletes")
+    write_delete_batches(
+        source.where(F.col("deleted")), "_id", args.out + "-deletes"
+    )
     if args.state_file and args.from_date is None:
         # store the run-START time so records updated DURING the run
         # are re-examined next time (never lost to the gap)
@@ -790,19 +813,20 @@ def cmd_dump(args) -> None:
 
 
 def cmd_preview(args) -> None:
+    """Controller/CreatePreview.php: one pasted record through
+    update-index's record-to-document path (solr_documents)."""
     spark = _spark("rm-preview")
     from .operators.preview import preview_record
 
-    raw = open(args.file).read()
-    kwargs = {}
     if args.config and args.source:
-        cfg = _load_config(args.config, args.source)
-        kwargs["source_id"] = cfg.id
-        if cfg.institution:
-            kwargs["institution_field"] = cfg.institution
-        if cfg.field_rules:
-            kwargs["field_rules"] = cfg.field_rules
-    out = preview_record(spark, raw, fmt=args.format, **kwargs)
+        source = _source_from_args(args)
+    else:
+        source = CF.CompiledSource(CF.SourceConfig(id=""), [], {})
+    source.config.format = args.format or source.config.format or "marc"
+    out = preview_record(
+        spark, open(args.file).read(), source, args.xsl_dir,
+        args.hierarchical_facet, args.enrichment_data,
+    )
     json.dump(out, sys.stdout, indent=2, sort_keys=True, default=str)
     print()
 
@@ -1582,6 +1606,22 @@ def cmd_logs_send(args) -> None:
     print(f"Completed with {n} message(s) sent")
 
 
+def _add_document_options(s, required: bool) -> None:
+    """The source and pipeline options of solr_documents, shared by
+    update-index and preview."""
+    s.add_argument("--config", required=required)
+    s.add_argument("--source", required=required)
+    s.add_argument("--mappings", help="mapping-file directory")
+    s.add_argument(
+        "--xsl-dir", help="directory holding solrTransformation stylesheets"
+    )
+    s.add_argument("--hierarchical-facet", action="append")
+    s.add_argument(
+        "--enrichment-data", action="append",
+        help="NAME=parquet lookup table for an enrichments[] entry",
+    )
+
+
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(
         prog="recordmanager_spark",
@@ -1623,19 +1663,9 @@ def main(argv: list[str] | None = None) -> None:
         "update-index", help="records table -> Solr JSON update batches"
     )
     s.add_argument("--records", required=True)
-    s.add_argument("--config", required=True)
-    s.add_argument("--source", required=True)
+    _add_document_options(s, required=True)
     s.add_argument("--out", required=True)
-    s.add_argument("--mappings", help="mapping-file directory")
     s.add_argument("--batch-size", type=int, default=5000)
-    s.add_argument("--hierarchical-facet", action="append")
-    s.add_argument(
-        "--xsl-dir", help="directory holding solrTransformation stylesheets"
-    )
-    s.add_argument(
-        "--enrichment-data", action="append",
-        help="NAME=parquet lookup table for an enrichments[] entry",
-    )
     s.add_argument(
         "--from-date",
         help="ISO datetime (UTC): index records updated since; '' "
@@ -1729,9 +1759,8 @@ def main(argv: list[str] | None = None) -> None:
 
     s = sub.add_parser("preview", help="one record -> field map JSON")
     s.add_argument("--file", required=True)
-    s.add_argument("--format", default="marc")
-    s.add_argument("--config")
-    s.add_argument("--source")
+    s.add_argument("--format", help="default: the source's format, else marc")
+    _add_document_options(s, required=False)
     s.set_defaults(fn=cmd_preview)
 
     s = sub.add_parser(

@@ -281,8 +281,7 @@ def apply_source_pipeline(
 
     cfg = compiled.config
     out = df
-    if cfg.field_rules:
-        out = MP.apply_field_rules(out, cfg.field_rules)
+    out = MP.apply_field_rules(out, compiled.field_rules)
     for fld, mapping in compiled.mappings.items():
         if fld in out.columns:
             if dict(out.dtypes)[fld].startswith("array"):

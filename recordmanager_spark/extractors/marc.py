@@ -230,21 +230,6 @@ def _parse_one_xml(raw: str | None):
     return (leader, out)
 
 
-@pandas_udf(MARC_SCHEMA)
-def parse_marcxml(raw: pd.Series) -> pd.DataFrame:
-    """MARCXML → the same parsed struct as :func:`parse_marc_in_json`,
-    so every downstream fieldspec/Solr-column expression applies
-    unchanged (the reference's primary record serialization;
-    tests/fixtures/Base/record/marc*.xml are this format)."""
-    parsed = raw.map(_parse_one_xml)
-    return pd.DataFrame(
-        {
-            "leader": parsed.map(lambda p: p[0] if p else None),
-            "fields": parsed.map(lambda p: p[1] if p else None),
-        }
-    )
-
-
 # ---------------------------------------------------------------------------
 # Fieldspec engine — pure JVM expressions over the parsed struct
 # ---------------------------------------------------------------------------

@@ -94,6 +94,11 @@ def test_cli_lifecycle(workspace, spark, capsys):
     assert d["format"] == "Book"  # mapped (scalar format column for dc)
     assert d["sector_str_mv"] == ["library"]
     assert d["institution"] == "InstA"
+    # the store's bookkeeping columns never reach a document
+    store_cols = {"_id", "source_id", "deleted", "created", "updated",
+                  "update_needed"}
+    for line in _part_lines(f"{ws}/solr"):
+        assert not store_cols & set(json.loads(line))
 
     main(["export", "--records", records, "--out", f"{ws}/export"])
     exported = spark.read.json(f"{ws}/export")
@@ -109,6 +114,82 @@ def test_cli_lifecycle(workspace, spark, capsys):
     main(["preview", "--file", rec, "--format", "dc"])
     payload = json.loads(capsys.readouterr().out)
     assert payload["title"] == "Preview Me"
+
+
+def _part_lines(path: str) -> list[str]:
+    return [
+        line
+        for name in sorted(os.listdir(path)) if name.startswith("part-")
+        for line in open(os.path.join(path, name)) if line.strip()
+    ]
+
+
+def _preview_and_document(tmp_path, capsys, ini, record, id_tag):
+    """(preview map, update-index document) of one imported record."""
+    from recordmanager_spark.operators.preview import _empty
+
+    (tmp_path / "conf").mkdir()
+    (tmp_path / "mappings").mkdir()
+    (tmp_path / "mappings" / "formats.map").write_text("Text = Book\n")
+    cfg = str(tmp_path / "conf" / "ds.ini")
+    open(cfg, "w").write(ini)
+    dump, rec = str(tmp_path / "dump.xml"), str(tmp_path / "rec.xml")
+    open(dump, "w").write(f"<collection>{record}</collection>")
+    open(rec, "w").write(record)
+    records, out = str(tmp_path / "records"), str(tmp_path / "solr")
+    common = ["--config", cfg, "--source", "src"]
+    main(["import", *common, "--file", dump, "--records", records,
+          "--id-tag", id_tag])
+    main(["update-index", "--records", records, *common, "--out", out])
+    capsys.readouterr()
+    main(["preview", "--file", rec, *common])
+    preview = json.loads(capsys.readouterr().out)
+    (doc,) = [json.loads(line) for line in _part_lines(out)]
+    return preview, {k: v for k, v in doc.items() if not _empty(v)}
+
+
+def test_preview_is_update_index_document_dc(tmp_path, spark, capsys):
+    """preview --config --source prints the update-index document of
+    the same record (empty fields dropped), plus the epoch indexed
+    timestamps every preview carries."""
+    preview, doc = _preview_and_document(
+        tmp_path, capsys,
+        "[src]\ninstitution = I\nformat = dc\nidPrefix = A\n"
+        "format_mapping = formats.map\n"
+        "extraFields[] = sector_str_mv:library\n",
+        _dc("a1", "Parity", "Author, A."), "recordID",
+    )
+    assert doc["id"] == "A.a1"
+    assert doc["format"] == "Book"
+    assert doc["sector_str_mv"] == ["library"]
+    epoch = "1970-01-01T00:00:00Z"
+    assert preview == {**doc, "first_indexed": epoch, "last_indexed": epoch}
+
+
+def test_preview_is_update_index_document_marc(tmp_path, spark, capsys):
+    """The MARC preview differs from the update-index document only by
+    the fields update-index does not emit yet: work keys and the epoch
+    indexed timestamps."""
+    marcxml = (
+        '<record><leader>00000cam a22000004i 4500</leader>'
+        '<controlfield tag="001">m1</controlfield>'
+        '<controlfield tag="008">970101s1999    xxu           '
+        '      eng d</controlfield>'
+        '<datafield tag="100" ind1="1" ind2=" ">'
+        '<subfield code="a">Writer, W.</subfield></datafield>'
+        '<datafield tag="245" ind1="1" ind2="0">'
+        '<subfield code="a">Parity title</subfield></datafield>'
+        '</record>'
+    )
+    preview, doc = _preview_and_document(
+        tmp_path, capsys,
+        "[src]\ninstitution = I\nformat = marc\nidPrefix = M\n",
+        marcxml, "controlfield",
+    )
+    assert doc["id"] == "M.m1"
+    extra = {"work_keys_str_mv", "first_indexed", "last_indexed"}
+    assert extra <= set(preview)
+    assert {k: v for k, v in preview.items() if k not in extra} == doc
 
 
 def test_cli_harvest_and_deletions(tmp_path, spark):

@@ -297,7 +297,7 @@ def test_resolve_links_003_ladder_reference_golden(spark):
         "/root/reference/tests/fixtures/Base/record/marc_links.xml"
     ).read()
     rec = spark.createDataFrame([(raw,)], "xml string").select(
-        M.parse_marcxml("xml").alias("m")
+        M.parse_marc_any("xml").alias("m")
     )
     # requester side: each 776$w with both linking-id candidates
     links = rec.select(
@@ -346,7 +346,7 @@ def test_linking_ids_own_side(spark):
         "/root/reference/tests/fixtures/Base/record/marc_links.xml"
     ).read()
     rec = spark.createDataFrame([(raw,)], "xml string").select(
-        M.parse_marcxml("xml").alias("m")
+        M.parse_marc_any("xml").alias("m")
     )
     plain = rec.select(M.linking_ids(F.col("m")).alias("ids")).collect()[0].ids
     assert plain == ["1013809", "FCC006141444", "1013809"]

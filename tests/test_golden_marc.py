@@ -337,7 +337,7 @@ MARC_DEWEY = {
 def _extract(spark, fname: str, cols: list[str]) -> dict:
     raw = open(f"{FIXDIR}/{fname}").read()
     df = spark.createDataFrame([(raw,)], "raw string").coalesce(1)
-    parsed = df.select(MARC.parse_marcxml("raw").alias("m")).cache()
+    parsed = df.select(MARC.parse_marc_any("raw").alias("m")).cache()
     parsed.count()
     wide = MARC.to_solr_columns(parsed, "m", only=cols).drop("m")
     row = _collect_interpreted(spark, wide).asDict()
@@ -365,7 +365,7 @@ def test_golden_solr_array(spark, fixture, expected):
 def _work_id_data(spark, fixture: str) -> dict:
     raw = open(f"{FIXDIR}/{fixture}").read()
     df = spark.createDataFrame([(raw,)], "raw string").coalesce(1)
-    parsed = df.select(MARC.parse_marcxml("raw").alias("m")).cache()
+    parsed = df.select(MARC.parse_marc_any("raw").alias("m")).cache()
     parsed.count()
     m = F.col("m")
     alt = MARC.fields_by_tag(m, "880")
@@ -441,7 +441,7 @@ def test_golden_solr_updater_single_record(spark):
 
     raw = open(f"{FIXDIR}/marc-broken.xml").read()
     df = spark.createDataFrame([(raw,)], "raw string").coalesce(1)
-    parsed = df.select(MARC.parse_marcxml("raw").alias("m")).cache()
+    parsed = df.select(MARC.parse_marc_any("raw").alias("m")).cache()
     parsed.count()
     limits = {
         "__default__": 1024, "fullrecord": 32766, "fulltext": 0,
@@ -481,17 +481,17 @@ def test_golden_create_preview(spark):
     shape); publishDateSort is this engine's publish_year."""
     import json
 
+    from recordmanager_spark import config as CF
     from recordmanager_spark.operators.preview import preview_record
 
     fixdir = "/root/reference/tests/fixtures/Base/Controller/CreatePreview"
     raw = open(f"{fixdir}/preview_marc.xml").read()
     want = json.load(open(f"{fixdir}/preview_result.json"))
-    got = dict(
-        preview_record(
-            spark, raw, fmt="marcxml", source_id="test",
-            institution_field="Test",
-        )
+    source = CF.CompiledSource(
+        CF.SourceConfig(id="test", institution="Test", format="marcxml"),
+        [], {},
     )
+    got = dict(preview_record(spark, raw, source))
     got["publishDateSort"] = got.pop("publish_year")
     mism = {
         k: (got.get(k), v)
@@ -546,7 +546,7 @@ def test_marcxml_parse_roundtrip(spark):
     df = spark.createDataFrame(
         [(rec,), (wrapped,), ("<nope", ), (None,)], "raw string"
     ).coalesce(1)
-    rows = df.select(MARC.parse_marcxml("raw").alias("m")).collect()
+    rows = df.select(MARC.parse_marc_any("raw").alias("m")).collect()
     assert rows[0]["m"]["leader"] == "01x"
     assert rows[1]["m"]["fields"][1]["subfields"][0]["value"] == "T"
     # Arrow returns a struct of nulls (not a null struct) for failed rows,

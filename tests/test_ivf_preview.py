@@ -4,9 +4,11 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
+from recordmanager_spark import config as CF
 from recordmanager_spark.operators import preview as PV
 from recordmanager_spark.operators import similarity as SIM
-from recordmanager_spark.plans import mapping as MP
 
 
 def _emb(spark, sf="/root/testdata/sf0.001"):
@@ -40,6 +42,13 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     assert approx == exact
 
 
+def _source(**settings):
+    """A compiled source whose mapping files are read from
+    ``settings["maps"]`` (file name -> text)."""
+    maps = settings.pop("maps", {})
+    return CF.compile_source(CF.SourceConfig(**settings), maps.__getitem__)
+
+
 def test_preview_marc(spark):
     raw = json.dumps(
         {
@@ -56,33 +65,34 @@ def test_preview_marc(spark):
     out = PV.preview_record(
         spark,
         raw,
-        fmt="marc",
-        field_rules=["copy building building2"],
-        institution="INST",
+        _source(
+            id="t", format="marc", institution="INST",
+            field_rules=["copy building building2"],
+        ),
         hierarchical_facets=["building"],
     )
-    assert out["id"] == "p1"
+    assert out["id"] == "t.p1"
     assert out["title"] == "Preview title"
     assert out["building"] == ["0/INST/", "1/INST/MAIN/"]
     assert out["building2"] == ["MAIN"]
+    assert out["institution"] == "INST"
 
 
 def test_preview_dc_with_mapping(spark):
-    m = MP.parse_map_file("fmt", "Text = Published")
     out = PV.preview_record(
         spark,
         "<dc><recordID>d1</recordID><title>T</title><type>Text</type>"
         "<subject>Text</subject></dc>",
-        fmt="dc",
-        mappings={"topic": m},
+        _source(
+            id="t", format="dc", mappings={"topic": [("fmt.map", "normal")]},
+            maps={"fmt.map": "Text = Published"},
+        ),
     )
+    assert out["id"] == "t.d1"
     assert out["topic"] == ["Published"]
     assert out["format"] == "Text"  # scalar col untouched by array mapping
 
 
 def test_preview_unknown_format(spark):
-    try:
-        PV.preview_record(spark, "x", fmt="nope")
-        assert False
-    except ValueError as e:
-        assert "nope" in str(e)
+    with pytest.raises(SystemExit, match="nope"):
+        PV.preview_record(spark, "x", _source(id="t", format="nope"))

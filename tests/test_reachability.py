@@ -36,7 +36,6 @@ PKG = "recordmanager_spark"
 
 DEFINITION_ALLOWLIST = {
     f"{PKG}.__version__": "package metadata",
-    f"{PKG}.operators.preview._cleanup_scratch_files": "atexit hook",
     f"{PKG}.functions.bpe.word_frequencies":
         "floor test: test_bpe::test_word_frequencies",
     f"{PKG}.sinks.solr.SolrPusher": "floor test: test_solr_pusher",
